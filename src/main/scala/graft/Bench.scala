@@ -1,19 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // TIMESTAMP_NTZ-normalized events are session-TZ-dependent; pin UTC so
-      // unix_micros/hour/window math matches the oracle on any host (every
-      // other entrypoint — Verify/ReportMain/HealthMain/tests — already pins).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Executor TASK time per query (r14 verdict #8): at sf0.1 the walls
     // are dominated by per-query constants (plan/codegen/scheduling), so
     // 8- vs 32-core walls cannot separate compute-bound queries. Sum of
@@ -27,24 +17,12 @@ object Bench {
         if (m != null) taskTimeMs.addAndGet(m.executorRunTime)
       }
     })
-    // Untimed warmups so the first timed queries don't pay JIT/codegen/
-    // shuffle-service startup (r1 showed 10x inflation on the first few;
-    // one warmup was not enough — whichever queries ran 2nd-4th still
-    // absorbed the compiler lottery). Three shapes: broadcast join,
-    // shuffle agg+window, scan projection.
-    Seq("j01_broadcast_star", "w01_topn_per_group", "t01_token_stats")
-      .foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          try fn(spark, sfDir).queryExecution.toRdd.count()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-          }
-        }
-      }
+    GraftSession.warmUp(spark, sfDir)
     // per-query sum-of-task-time (ms), accumulated across first pass AND
     // any rerun — the scaling probe reads it as "executor work done"
     val taskTimes = scala.collection.mutable.Map.empty[String, Long]
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // (wall s, task ms) of one run
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long) = {
       val k0 = taskTimeMs.get
       val t0 = System.nanoTime()
       val ok =
@@ -55,13 +33,18 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
       val w = (System.nanoTime() - t0) / 1e9
-      taskTimes(name) = taskTimes.getOrElse(name, 0L) + (taskTimeMs.get - k0)
+      // outside the timed region: deliver this query's trailing task-end
+      // events now, so they are not charged to the next query
+      GraftPlanBridge.drain(spark.sparkContext)
+      val taskMs = taskTimeMs.get - k0
+      taskTimes(name) = taskTimes.getOrElse(name, 0L) + taskMs
       // failed query → -1 so a failure is visible, never a fast time
-      if (ok) w else -1.0
+      (if (ok) w else -1.0, taskMs)
     }
-    val firstPass = SparkEntry.queries.map { case (name, fn) =>
+    val firstRuns = SparkEntry.queries.map { case (name, fn) =>
       name -> timeOne(name, fn)
     }
+    val firstPass = firstRuns.map { case (name, (w, _)) => name -> w }
     // REPEAT PROTOCOL folded into the official artifact (r7/r8 lesson:
     // single-run walls on this box spike 5-25x on byte-identical plans —
     // a12 read 33.9 s in BENCH_r08 and 1.4 s on repeat). Any query whose
@@ -75,18 +58,18 @@ object Bench {
     // rerun ledger (r14 verdict #7): a memoized stored-index query whose
     // FIRST pass pays the one-time build can re-run warm and report the
     // min — the build cost would silently vanish from the artifact. Keep
-    // both walls for every re-run query in target/bench.json so
-    // build-vs-probe is always reconstructible (first ≈ build+probe,
-    // rerun ≈ probe). Additions-only: stdout line and `queries` values
-    // are unchanged.
-    val rerunLedger = scala.collection.mutable.Map.empty[String, (Double, Double)]
+    // both walls and both task times for every re-run query in
+    // target/bench.json so build-vs-probe is always reconstructible
+    // (first ≈ build+probe, rerun ≈ probe). Additions-only: stdout line
+    // and `queries` values are unchanged.
+    val rerunLedger = scala.collection.mutable.Map.empty[String, (Double, Double, Long, Long)]
     val results = firstPass.map { case (name, t) =>
       if (t <= bar) name -> t
       else {
-        val t2 = timeOne(name, SparkEntry.queries(name))
+        val (t2, k2) = timeOne(name, SparkEntry.queries(name))
         val best = if (t2 < 0) t else math.min(t, t2)
         System.err.println(f"[bench] $name rerun: $t%.2f s -> $t2%.2f s (report ${best}%.2f)")
-        rerunLedger(name) = (t, t2)
+        rerunLedger(name) = (t, t2, firstRuns(name)._2, k2)
         name -> best
       }
     }
@@ -120,13 +103,14 @@ object Bench {
       }
     // The file always holds the FULL per-query map, one JSON line — plus
     // two additions-only diagnostic maps (r14 verdict #7/#8): `rerun`
-    // records both walls of every min-of-two re-run (so a stored-index
-    // build cost never silently vanishes), `task_time_ms` the per-query
+    // records both walls and task times of every min-of-two re-run (so a
+    // stored-index build cost never silently vanishes), `task_time_ms` the per-query
     // sum of executor task run times (the core-scaling signal sf0.1
     // walls cannot carry). `queries` itself is byte-compatible with
     // every earlier round.
-    val rerunJson = rerunLedger.toSeq.sortBy(_._1).map { case (k, (a, b)) =>
-      s"\"$k\":{\"first\":${r3(a)},\"rerun\":${r3(b)}}"
+    val rerunJson = rerunLedger.toSeq.sortBy(_._1).map { case (k, (a, b, ka, kb)) =>
+      s"\"$k\":{\"first\":${r3(a)},\"rerun\":${r3(b)}," +
+        s"\"first_task_ms\":$ka,\"rerun_task_ms\":$kb}"
     }.mkString("{", ",", "}")
     val taskJson = taskTimes.toSeq.sortBy(_._1).map { case (k, v) =>
       s"\"$k\":$v"

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-stage shuffle-byte attribution for the ep02 incremental build
   * (VERDICT r11 #1): runs one fresh funnel per dir under a listener
   * that attributes every completed Spark stage to the pipeline stage
@@ -25,7 +23,6 @@ object CorpusBuildBytes {
   final class TagBytes extends org.apache.spark.scheduler.SparkListener {
     private val stageTag = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val byTag = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    val stages = new java.util.concurrent.atomic.AtomicLong(0L)
     override def onJobStart(
         e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
       val desc = Option(e.properties)
@@ -42,13 +39,9 @@ object CorpusBuildBytes {
             _ => new java.util.concurrent.atomic.AtomicLong(0L))
           .addAndGet(m.shuffleWriteMetrics.bytesWritten)
       }
-      stages.incrementAndGet()
     }
-    def settled(): Map[String, Long] = {
-      var prev = -1L; var cur = stages.get(); var spins = 0
-      while (cur != prev && spins < 50) {
-        Thread.sleep(100); prev = cur; cur = stages.get(); spins += 1
-      }
+    def settled(sc: org.apache.spark.SparkContext): Map[String, Long] = {
+      org.apache.spark.sql.GraftPlanBridge.drain(sc)
       import scala.jdk.CollectionConverters._
       byTag.asScala.map { case (k, v) => (k, v.get()) }.toMap
     }
@@ -57,14 +50,7 @@ object CorpusBuildBytes {
   def main(args: Array[String]): Unit = {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val scaledDir = args.lift(1).getOrElse("/tmp/graft_scale_x10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def run(dir: String): Map[String, Long] = {
       // warm the once-per-JVM index + chooser so the funnel is
@@ -74,7 +60,7 @@ object CorpusBuildBytes {
       spark.sparkContext.addSparkListener(l)
       graft.operators.CorpusBuild.ep02IncrementalBuild(spark, dir)
         .queryExecution.toRdd.count()
-      val out = l.settled()
+      val out = l.settled(spark.sparkContext)
       spark.sparkContext.removeSparkListener(l)
       out
     }

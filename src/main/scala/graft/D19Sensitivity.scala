@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the d19 miss-budget sensitivity table (VERDICT r13 #5) for
   * each corpus dir given: per LSH layout, the analytic miss probability
   * at the 0.8 contract threshold, whether a 5% and a 1% budget admit
@@ -15,14 +13,7 @@ import org.apache.spark.sql.SparkSession
 object D19Sensitivity {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     dirs.foreach { dir =>
       println(s"\n### d19 miss-budget sensitivity — $dir\n")
       println("| r | b | miss@0.8 | n_candidates | 5% admits | 1% admits | chosen (5% default) |")

@@ -1,47 +1,29 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{ByteSurprisal, NfcNormalize, PyCapWords, PyCapitalize, PyTitle, VecDotLong}
+import graft.functions.GraftFunctions
+import graft.plans.{AsOfJoinStrategy, CollapseNfcNormalize}
 
-/** Spark-native installation point for the engine's custom expressions:
+/** Spark-native installation point for everything a graft session adds
+  * to Spark: every function of [[GraftFunctions.table]], the
+  * `CollapseNfcNormalize` optimizer rule and the `AsOfJoinStrategy`
+  * planner strategy. [[GraftSession.local]] sets
   *
   * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
+  *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * makes `vec_dot`, `py_title`, `py_capitalize`, `py_cap_words` available
-  * in every session (including pure-SQL clients) without any per-session
-  * registration call. The imperative `GraftFunctions.register` /
-  * `PyText.register` paths remain for sessions created without the
-  * extension.
+  * so each of its sessions (pure-SQL clients included) starts with them.
+  * A session built without the extension gets the same set from
+  * [[GraftSession.ensure]] when it first enters the engine.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDotLong].getName, "vec_dot"),
-      es => VecDotLong(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("py_title"),
-      new ExpressionInfo(classOf[PyTitle].getName, "py_title"),
-      es => PyTitle(es.head)))
-    ext.injectFunction((FunctionIdentifier("py_capitalize"),
-      new ExpressionInfo(classOf[PyCapitalize].getName, "py_capitalize"),
-      es => PyCapitalize(es.head)))
-    ext.injectFunction((FunctionIdentifier("py_cap_words"),
-      new ExpressionInfo(classOf[PyCapWords].getName, "py_cap_words"),
-      es => PyCapWords(es.head)))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      es => NfcNormalize(es.head)))
-    ext.injectFunction((FunctionIdentifier("byte_surprisal"),
-      new ExpressionInfo(classOf[ByteSurprisal].getName, "byte_surprisal"),
-      es => ByteSurprisal(es.head)))
+    GraftFunctions.table.foreach(ext.injectFunction)
     // Rule tier: idempotence collapse for nfc_normalize chains
-    ext.injectOptimizerRule(s => graft.plans.CollapseNfcNormalize(s))
+    ext.injectOptimizerRule(s => CollapseNfcNormalize(s))
     // Whole-operator tier: the native as-of join (logical node + merge exec)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registry queries to files —
   * the optimization-round evidence artifact (plans/r<N>/<query>_<tag>.txt).
   * Bench-identical session config so the dumped plan is the measured one.
@@ -20,16 +18,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanDump <queryName> [more…]")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val out = sys.env.getOrElse("GRAFT_PLAN_OUT", "plans/r14")
     val tag = sys.env.getOrElse("GRAFT_PLAN_TAG", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     Files.createDirectories(Paths.get(out))
     args.foreach { name =>
       val q = Registry.byName.getOrElse(name,

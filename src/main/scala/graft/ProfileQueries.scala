@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftPlanBridge
 
 /** Per-query profiling micro-harness: time NAMED registry queries K
   * times each in one warm JVM (bench-identical session config +
@@ -17,16 +17,9 @@ object ProfileQueries {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileQueries <queryName> [more…]")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("GRAFT_PROF_REPS", "5").toInt
     val showPlan = sys.env.contains("GRAFT_PROF_PLAN")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Jobs/stages/tasks per rep: driver-side job count is a first-class
     // cost at bench scale (each job pays scheduling + result handling),
     // so the profile prints it next to the wall.
@@ -40,10 +33,7 @@ object ProfileQueries {
         stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks)
       }
     })
-    Seq("j01_broadcast_star", "w01_topn_per_group", "t01_token_stats")
-      .foreach(n => Registry.byName.get(n).foreach(d =>
-        try d.fn(spark, dir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }))
+    GraftSession.warmUp(spark, dir)
     args.foreach { name =>
       val q = Registry.byName.getOrElse(name,
         sys.error(s"unknown query $name — see docs/INVENTORY.md"))
@@ -53,7 +43,7 @@ object ProfileQueries {
         val df = q.fn(spark, dir)
         df.queryExecution.toRdd.count()
         val w = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(150) // let listener events drain so counts are stable
+        GraftPlanBridge.drain(spark.sparkContext) // counts are final
         (w, df, jobs.get - j0, stages.get - s0, tasks.get - k0)
       }
       val ts = walls.map(_._1)

@@ -31,7 +31,12 @@ object Registry {
     "graft/streaming/EventStream.scala" -> streaming.EventStream.defs,
     "graft/health/HealthQueries.scala" -> health.HealthQueries.defs)
 
-  def all: Seq[QueryDef] = families.flatMap(_._2)
+  /** Every query, its `fn` wrapped to run [[GraftSession.ensure]] first:
+    * the registry is the door through which sessions the engine did not
+    * build (a contract client's, the benchmark's) reach it. */
+  def all: Seq[QueryDef] = families.flatMap(_._2).map { d =>
+    d.copy(fn = (spark, dir) => { GraftSession.ensure(spark); d.fn(spark, dir) })
+  }
 
   lazy val byName: Map[String, QueryDef] = all.map(d => d.name -> d).toMap
 }

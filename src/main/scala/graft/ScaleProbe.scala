@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-probe harness: replicate the sf0.1 tables K× (default 10) under
@@ -224,14 +224,7 @@ object ScaleProbe {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outDir = args.lift(2).getOrElse(s"/tmp/graft_scale_x$factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val t0 = System.nanoTime()
     buildScaled(spark, baseDir, outDir, factor)
@@ -267,32 +260,18 @@ object ScaleProbe {
       * executed-plan metric walk above cannot see. This closes the g04
       * blind spot (its recursive-CTE work runs against a checkpointed
       * RDD, so the final plan reported shuffle 0 for two rounds). The
-      * listener bus is async; [[settled]] polls until the stage counter
-      * stops moving before reading the total.
+      * listener bus is async; [[settled]] drains it before reading the
+      * total (a drain timeout throws, and the row records -1).
       */
     final class StageByteListener extends org.apache.spark.scheduler.SparkListener {
       val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-      val stages = new java.util.concurrent.atomic.AtomicLong(0L)
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val m = e.stageInfo.taskMetrics
         if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        stages.incrementAndGet()
       }
       def settled(): Long = {
-        var prev = -1L
-        var cur = stages.get()
-        var spins = 0
-        while (cur != prev && spins < 50) {
-          Thread.sleep(100); prev = cur; cur = stages.get(); spins += 1
-        }
-        // a spin-cap exit means stages were STILL completing when we gave
-        // up — the total below may be partial; say so instead of silently
-        // recording a low number (ADVICE r11)
-        if (cur != prev)
-          System.err.println(s"[probe] WARNING settled() exited on the " +
-            s"spin cap with the stage counter still moving ($prev -> $cur)" +
-            " — job_mb may be partial")
+        GraftPlanBridge.drain(spark.sparkContext)
         bytes.get()
       }
     }
@@ -327,11 +306,7 @@ object ScaleProbe {
     }
     def timeAt(name: String, dir: String): (Double, Long, Long, Boolean) =
       timeBuild(s"$name at $dir", () => Registry.byName(name).fn(spark, dir))
-    // JIT/codegen warmup, untimed
-    Seq("j01_broadcast_star", "w01_topn_per_group", "t01_token_stats")
-      .foreach(n => Registry.byName.get(n).foreach(d =>
-        try d.fn(spark, baseDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }))
+    GraftSession.warmUp(spark, baseDir)
     // Warm the once-per-JVM shared artifact caches (stored LSH index,
     // d19 chooser decision, IVF assignment memo) for BOTH dirs BEFORE
     // any listener attaches: otherwise whichever probed query first

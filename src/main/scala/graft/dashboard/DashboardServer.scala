@@ -273,13 +273,7 @@ final class DashboardServer(spark: SparkSession,
 
 object DashboardMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val port = args.headOption.flatMap(_.toIntOption).getOrElse(8080)
     new DashboardServer(spark, corpusDir = args.lift(1)).start(port)
     println(s"dashboard: http://127.0.0.1:$port/  (ctrl-c to stop)")

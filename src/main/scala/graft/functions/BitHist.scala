@@ -2,10 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -152,18 +150,5 @@ object BitHistAgg {
   def keyToDouble(u: Long): Double = {
     val raw = if (u < 0) u & Long.MaxValue else ~u
     java.lang.Double.longBitsToDouble(raw)
-  }
-
-  /** Register `bithist` (row counts) and `bithistw` (weight sums — the
-    * weight is the SECOND argument) as SQL aggregates on the session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bithist"),
-      new ExpressionInfo(classOf[BitHistAgg].getName, "bithist"),
-      (es: Seq[Expression]) => BitHistAgg(es(0), es(1), es(2), es(3), es(4)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bithistw"),
-      new ExpressionInfo(classOf[BitHistAgg].getName, "bithistw"),
-      (es: Seq[Expression]) => BitHistAgg(es(0), es(2), es(3), es(4), es(5), es(1)))
   }
 }

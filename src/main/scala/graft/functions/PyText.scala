@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -115,20 +114,8 @@ case class PyCapWords(child: Expression) extends PyStringExpression {
 
 object PyText {
   import org.apache.spark.sql.functions.call_function
-  // Column builders; PyText.register(spark) must have run on the session
+  // Column builders over the session functions of graft.functions.GraftFunctions
   def pyTitle(c: Column): Column = call_function("py_title", c)
   def pyCapitalize(c: Column): Column = call_function("py_capitalize", c)
   def pyCapWords(c: Column): Column = call_function("py_cap_words", c)
-
-  /** Register py_title / py_capitalize / py_cap_words as SQL functions. */
-  def register(spark: SparkSession): Unit = {
-    def reg(name: String, builder: Seq[Expression] => Expression): Unit =
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[PyTitle].getName, name),
-        builder)
-    reg("py_title", es => PyTitle(es.head))
-    reg("py_capitalize", es => PyCapitalize(es.head))
-    reg("py_cap_words", es => PyCapWords(es.head))
-  }
 }

@@ -2,10 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -86,13 +84,4 @@ case class TopKAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): TopKAgg =
     copy(child = newChildren(0), kExpr = newChildren(1))
-}
-
-object TopKAgg {
-  /** Register `topk` as a SQL aggregate on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("topk"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "topk"),
-      (es: Seq[Expression]) => TopKAgg(es(0), es(1)))
 }

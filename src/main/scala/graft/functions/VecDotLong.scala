@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -69,36 +67,4 @@ case class VecDotLong(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDotLong =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session registration for graft's native SQL functions. Idempotent —
-  * query builders call this so `expr("vec_dot(a, b)")` resolves.
-  */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDotLong].getName, "vec_dot"),
-      (children: Seq[Expression]) => VecDotLong(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (children: Seq[Expression]) => NfcNormalize(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("byte_surprisal"),
-      new ExpressionInfo(classOf[ByteSurprisal].getName, "byte_surprisal"),
-      (children: Seq[Expression]) => ByteSurprisal(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (children: Seq[Expression]) => SortedIntersectCount(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("winnow_mins"),
-      new ExpressionInfo(classOf[WinnowMins].getName, "winnow_mins"),
-      (children: Seq[Expression]) => WinnowMins(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (children: Seq[Expression]) => ShingleHashes(children(0), children(1)))
-  }
 }

@@ -186,7 +186,7 @@ object HealthEtl {
 
   /** The full pipeline: raw string frame → cleaned 35-column frame. */
   def clean(spark: SparkSession, path: String = defaultCsvPath): DataFrame = {
-    PyText.register(spark)
+    graft.GraftSession.ensure(spark)
     var df = readRaw(spark, path)
 
     // 2a/2b — names

@@ -1,7 +1,5 @@
 package graft.health
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the reference's EP1 batch path: read the dirty CSV, run
   * the full cleaning pipeline, write cleaned parquet (+ optional CSV like
   * the reference's S2 sink).
@@ -12,14 +10,7 @@ object HealthMain {
   def main(args: Array[String]): Unit = {
     val csv = if (args.length > 0) args(0) else HealthEtl.defaultCsvPath
     val out = if (args.length > 1) args(1) else "/tmp/health_cleaned.parquet"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val cleaned = HealthEtl.clean(spark, csv)
     // parquet forbids ' ,;{}()=' etc. in column names; the cleaned table
     // keeps the reference's names ('Population Coverage (%)'), so dump

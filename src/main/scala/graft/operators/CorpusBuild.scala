@@ -76,7 +76,6 @@ object CorpusBuild {
   def ep01CorpusBuild(spark: SparkSession, dir: String,
                       packBudget: Long = 512L,
                       packsPerShard: Long = 32L): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"))
 
@@ -466,7 +465,6 @@ object CorpusBuild {
 
   private[graft] def ep02StageFrames(spark: SparkSession, dir: String,
       packBudget: Long = 512L): (Seq[(String, DataFrame, String)], DataFrame) = {
-    graft.functions.GraftFunctions.register(spark)
     // Tag every job a stage's construction submits (under AQE a lazy
     // localCheckpoint still materializes its upstream exchanges at
     // construction, on pool threads that capture this thread-local)
@@ -806,7 +804,6 @@ object CorpusBuild {
                              checkpoint: Option[String] = None,
                              reuseStore: Boolean = false): (DataFrame, String) = {
     import java.nio.file.{Files, Paths}
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"))
     val root = stateRoot.getOrElse(

@@ -210,7 +210,6 @@ object Dedup {
 
   def d01MinHashLsh(spark: SparkSession, dir: String,
                     rowsPerBand: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val idx = neutralLshIndex(spark, dir)
     val sets = spark.read.parquet(s"$idx/sets")
     // The verify layer below is IDENTICAL at every layout: values cannot
@@ -394,7 +393,6 @@ object Dedup {
     * as d01).
     */
   def d04EmbeddingNearDup(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
     // planted ids offset by max(vec_id)+1, derived in-plan (1-row
@@ -514,7 +512,6 @@ object Dedup {
     * by nlist ~ √n.
     */
   def d07SemanticDedup(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
     // planted-id offset derived from the corpus (the d04 convention)
@@ -889,7 +886,6 @@ object Dedup {
     * probe-side band join. Driver state: six layout rows.
     */
   def d19LshRetune(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val idx = neutralLshIndex(spark, dir)
     val sets = spark.read.parquet(s"$idx/sets")
     // the stored 60-wide signature table — measurement is band
@@ -1332,7 +1328,6 @@ object Dedup {
     // construction, and sample-sample pairs keep only the doc_id > sid
     // direction inside the join condition. At 100 TB this is one linear
     // pass over the stored index with a 50-row broadcast.
-    graft.functions.GraftFunctions.register(spark)
     val sampleSets = sets.filter(inSample(col("doc_id")))
       .select(col("doc_id").as("sid"), col("g").as("gs"))
     sets
@@ -1961,7 +1956,6 @@ object Dedup {
   def d16PrefixFilterJoin(spark: SparkSession, dir: String,
                           maxCandidates: Long = 1L << 26,
                           priceAboveRows: Long = 200000L): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     // r15 (guide §2.4): the RANKED rows are checkpointed ONCE and feed
     // everything downstream. The r14 form left the frame inline and let
@@ -2073,7 +2067,6 @@ object Dedup {
     * zip_with runs on candidate pairs only — never corpus-scale.
     */
   def d17BbitMinhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val idx = neutralLshIndex(spark, dir)
     val sets = spark.read.parquet(s"$idx/sets")
     // candidates at the d19-CHOSEN band layout (VERDICT r11 #2 — the

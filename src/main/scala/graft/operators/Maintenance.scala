@@ -339,7 +339,6 @@ object Maintenance {
     * no tolerance bands anywhere.
     */
   def a37KmvSetOps(spark: SparkSession, dir: String, k: Int = 16): DataFrame = {
-    graft.functions.TopKAgg.register(spark)
     val P = 2147483647L
     val full = (k - 1).toLong * P
     val du = Tables.events(spark, dir)

@@ -449,7 +449,6 @@ object Multimodal {
     * no per-row allocation (the histogram lives in the generated class).
     */
   def m09PayloadEntropy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         expr("cast(concat('IMG0', text) AS BINARY)").as("payload"))

@@ -121,7 +121,6 @@ object Similarity {
     */
   def v01CosineTopK(spark: SparkSession, dir: String,
                     maxPairs: Long = 1L << 28): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     requirePairsBounded(spark, dir, "v01", maxPairs)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
@@ -169,7 +168,6 @@ object Similarity {
     * [[graft.operators.Dedup]].
     */
   def v02IvfTopK(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
       .withColumn("nrm", expr(dot("q", "q")))
@@ -244,7 +242,6 @@ object Similarity {
     * data motion beyond the sums.
     */
   def v03KmeansStep(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
       .withColumn("nrm", expr(dot("q", "q")))
@@ -323,7 +320,6 @@ object Similarity {
     * SimilaritySpec's recall assertion against v01, not assumed.
     */
   def v04Int8TopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val q8 = "transform(embedding, x -> CASE WHEN m = 0D THEN CAST(0 AS BIGINT)" +
       " ELSE CAST(round(CAST(x AS DOUBLE) / m * 127) AS BIGINT) END)"
     val vecs = Tables.embeddings(spark, dir)
@@ -382,7 +378,6 @@ object Similarity {
     * is the same computation in SQL.
     */
   def v05IvfIndexLifecycle(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val idx = graft.util.Scratch.dir("graft_v05_idx_")
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
@@ -429,7 +424,6 @@ object Similarity {
     * which v02/v05's IVF index applies unchanged.
     */
   def v06MipsTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
     val queries = vecs.filter(col("vec_id") % 25 === 0)
@@ -615,7 +609,6 @@ object Similarity {
   private def pqCodeArrays(spark: SparkSession, dir: String, nSub: Int,
                            subDim: Int, nCodes: Int)
       : (DataFrame, DataFrame, String) = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
     // (vector, subspace) subvectors — slice is 1-based
@@ -672,7 +665,6 @@ object Similarity {
     * other labels.
     */
   def v10FilteredTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), expr(quantize).as("q"))
       .withColumn("nrm", expr(dot("q", "q")))
@@ -874,7 +866,6 @@ object Similarity {
     */
   def v11PrefixRerank(spark: SparkSession, dir: String, prefixDim: Int = 16,
                       shortlist: Int = 32): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
       .withColumn("p", expr(s"slice(q, 1, $prefixDim)"))
@@ -969,7 +960,6 @@ object Similarity {
     */
   def v12BinaryTopK(spark: SparkSession, dir: String, shortlist: Int = 32,
                     maxPairs: Long = 1L << 33): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val flat = pairsWithinBound(spark, dir, maxPairs)
     if (!flat)
       System.err.println(s"[v12] pair bound $maxPairs exceeded - restricting " +
@@ -1163,7 +1153,6 @@ object Similarity {
 
   def v18IvfPqRerank(spark: SparkSession, dir: String, nlist: Int = 0,
                      nprobe: Int = 2, shortlist: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val nl = if (nlist > 0) nlist
              else defaultNlist(Tables.footerRowCount(spark, dir, "embeddings"))
     val vecs = Tables.embeddings(spark, dir)
@@ -1293,7 +1282,6 @@ object Similarity {
     */
   def v34IvfServe(spark: SparkSession, dir: String, nlist: Int = 0,
                   nprobe: Int = 2, k: Int = 3, maxQid: Long = 250L): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val nl = if (nlist > 0) nlist
              else defaultNlist(Tables.footerRowCount(spark, dir, "embeddings"))
     val (homes, probes) = ivfAssignment(spark, dir, nl, nprobe)
@@ -1375,7 +1363,6 @@ object Similarity {
     */
   def v13MrrEval(spark: SparkSession, dir: String, topK: Int = 10,
                  maxPairs: Long = 1L << 28): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     requirePairsBounded(spark, dir, "v13", maxPairs)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), expr(quantize).as("q"))
@@ -1446,7 +1433,6 @@ object Similarity {
     * row_number window), the a24 convention.
     */
   def v14CentroidOutliers(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
       .withColumn("nrm", expr(dot("q", "q")))
@@ -1517,7 +1503,6 @@ object Similarity {
     */
   def v15PrfRerank(spark: SparkSession, dir: String,
                    maxPairs: Long = 1L << 28): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     requirePairsBounded(spark, dir, "v15", maxPairs, multiplier = 3L)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
@@ -1662,7 +1647,6 @@ object Similarity {
     */
   def v17ShortlistSweep(spark: SparkSession, dir: String,
                         maxPairs: Long = 1L << 28): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // one exact all-pairs pass + one Hamming all-pairs pass
     requirePairsBounded(spark, dir, "v17", maxPairs, multiplier = 2L)
     def packWord(w: Int): String =
@@ -1765,7 +1749,6 @@ object Similarity {
     */
   def v19MaxsimTopK(spark: SparkSession, dir: String,
                     maxPairs: Long = 1L << 28): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     requirePairsBounded(spark, dir, "v19", maxPairs, multiplier = 8,
       routes = "generate candidates with v12 (binary Hamming shortlist) or " +
         "v05 (stored IVF index) and MaxSim-score only the shortlist")
@@ -1837,7 +1820,6 @@ object Similarity {
     */
   def v20RrfFusion(spark: SparkSession, dir: String,
                    maxPairs: Long = 1L << 28): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // dense arm: under the pair bound, v01's exact quantized cosine
     // top-10 — the recall baseline the sf0.01 oracle prices. Past the
     // bound the arm ROUTES through the shared IVF assignment (the
@@ -1975,7 +1957,6 @@ object Similarity {
     */
   def v21CentroidDrift(spark: SparkSession, dir: String,
                        nlist: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
       .withColumn("nrm", expr(dot("q", "q")))
@@ -2056,7 +2037,6 @@ object Similarity {
     * engine parity, not fantasy recall.
     */
   def v22FilteredIvf(spark: SparkSession, dir: String, nprobe: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val nl = defaultNlist(Tables.footerRowCount(spark, dir, "embeddings"))
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), expr(quantize).as("q"))
@@ -2135,7 +2115,6 @@ object Similarity {
     */
   def v23NprobeSweep(spark: SparkSession, dir: String,
                      maxPairs: Long = 1L << 28): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     requirePairsBounded(spark, dir, "v23", maxPairs)
     val nl = defaultNlist(Tables.footerRowCount(spark, dir, "embeddings"))
     val vecs = Tables.embeddings(spark, dir)
@@ -2225,7 +2204,6 @@ object Similarity {
     * corpus-linear, output constant.
     */
   def v24PqDistortion(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
     val sub = vecs
@@ -2305,7 +2283,6 @@ object Similarity {
     */
   private def lshSignature(spark: SparkSession, dir: String,
                            tables: Int): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(spark)
     val n = Tables.footerRowCount(spark, dir, "embeddings")
     val b = math.max(6, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)))
     val nh = tables * b
@@ -2514,7 +2491,6 @@ object Similarity {
                 maxPairs: Long = 1L << 31): DataFrame = {
     requirePairsBounded(spark, dir, "v27", maxPairs,
       routes = "route through v18 (IVF-PQ: cell-restricted ADC + exact refine)")
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
     val cb1 = vecs.filter(col("vec_id") < 16)
@@ -2637,7 +2613,6 @@ object Similarity {
     */
   def v28MmrDiversify(spark: SparkSession, dir: String,
                       maxPairs: Long = 1L << 28): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
       .withColumn("nrm", expr(dot("q", "q")))
@@ -2799,7 +2774,6 @@ object Similarity {
     * apply because the join side is k, never the corpus.
     */
   def v29FarthestInit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
       .withColumn("nrm", expr(dot("q", "q")))
@@ -2887,7 +2861,6 @@ object Similarity {
   def v30NdcgEval(spark: SparkSession, dir: String,
                   maxPairs: Long = 1L << 28,
                   evalIvfFunnel: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // An EVAL metric must never silently approximate (the family rule on
     // [[pairsWithinBound]]): the flat form evaluates the EXACT retriever
     // and keeps the hard refusal past the bound. `evalIvfFunnel = true`
@@ -2999,7 +2972,6 @@ object Similarity {
     * funnel with a data-dependent probe set, never a flat scan.
     */
   def v31AdaptiveProbe(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(quantize).as("q"))
       .withColumn("nrm", expr(dot("q", "q")))

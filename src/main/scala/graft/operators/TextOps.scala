@@ -568,7 +568,6 @@ object TextOps {
     * identically on both engines. Pure per-row projection, no shuffle.
     */
   def t13NfcNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .withColumn("aug",
         // explicit \u escapes: DECOMPOSED combining marks (U+0301 acute,
@@ -1978,7 +1977,6 @@ object TextOps {
     * (doc_id, text) input; public so the guarantee is property-testable
     * on crafted documents. */
   def winnow(docs: DataFrame, w: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       // native one-pass md5 shingle hashing; semantically identical to
       // transform(sequence(1, greatest(1, length(text) - 4)),

@@ -175,7 +175,6 @@ object Windows {
     * full fact table. Output exploded to (segment, rank, price).
     */
   def w06TopKAggregate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKAgg.register(spark)
     val cus = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     Tables.orders(spark, dir)

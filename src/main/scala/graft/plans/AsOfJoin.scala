@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.LongType
 
 /** Native as-of join — the whole-operator custom tier (SURVEY §7 build
   * plan, option (c)): a LogicalPlan node, a planner strategy, and a
-  * physical merge exec registered through `SparkSessionExtensions` /
-  * `spark.experimental.extraStrategies`.
+  * physical merge exec, installed by `graft.GraftExtensions` (or by
+  * `graft.GraftSession.ensure` on a session built without it).
   *
   * Semantics: left-outer point-in-time enrichment. For every left row,
   * emit the single LATEST right row with the same key whose time is
@@ -200,17 +200,12 @@ final case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Public API: `AsOfJoin.asof(left, right, ...)`. Installs the strategy
-  * into the session on first use (idempotent); sessions configured with
-  * `spark.sql.extensions=graft.GraftExtensions` get it at startup.
+/** Public API: `AsOfJoin.asof(left, right, ...)`. Sessions built with
+  * `graft.GraftExtensions` plan the node through the injected strategy;
+  * for any other session `asof` first runs `graft.GraftSession.ensure`,
+  * which adds the strategy once.
   */
 object AsOfJoin {
-
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
 
   /** Left-outer as-of join of `right` onto `left`. Time columns must be
     * LongType (epoch micros). `rightTieBreak` totalizes the order among
@@ -238,7 +233,7 @@ object AsOfJoin {
       s"as-of direction must be backward|forward, got $direction")
     require(toleranceUs.forall(_ >= 0), "as-of tolerance must be >= 0 micros")
     val spark = left.sparkSession
-    install(spark)
+    graft.GraftSession.ensure(spark)
     val lPlan = left.queryExecution.analyzed
     // re-alias every right attribute: a self-as-of (right derived from
     // left) would otherwise carry duplicate expression ids across the

@@ -1,7 +1,5 @@
 package graft.report
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the EP3 weekly report job. The DEFAULT sink is the S8
   * PDF renderer (the reference's reportlab path, Health_Jim.py:1044-1136);
   * a non-.pdf outFile gets the plain-text rendering instead.
@@ -12,14 +10,7 @@ object ReportMain {
   def main(args: Array[String]): Unit = {
     val csv = if (args.length > 0) args(0) else graft.health.HealthEtl.defaultCsvPath
     val outFile = if (args.length > 1) args(1) else "target/weekly_report.pdf"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     if (outFile.endsWith(".pdf")) {
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(outFile).toAbsolutePath.getParent)

@@ -53,7 +53,6 @@ object ScalableQuantile {
     */
   def quantiles(df: DataFrame, specs: Seq[(String, Seq[Double])])
       : Map[(String, Double), Option[Double]] = {
-    BitHistAgg.register(df.sparkSession)
     val cols = specs.map(_._1)
 
     // Round 1: unconditional histogram per column; bucket sums double as
@@ -142,7 +141,6 @@ object ScalableQuantile {
     */
   def weightedLowerMedians(df: DataFrame, valueCol: String, weightCol: String,
       slices: Seq[(String, org.apache.spark.sql.Column)]): Map[String, Option[Double]] = {
-    BitHistAgg.register(df.sparkSession)
     val sels = slices.map { case (l, c) => new WSel(l, c) }
 
     def hist(needs: Seq[WSel]): Map[WSel, Array[Long]] = {

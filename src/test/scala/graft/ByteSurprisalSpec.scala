@@ -22,7 +22,6 @@ class ByteSurprisalSpec extends AnyFunSuite {
   }
 
   test("SQL surface, null propagation, and codegen") {
-    graft.functions.GraftFunctions.register(spark)
     val row = spark.sql(
       "SELECT byte_surprisal(cast('abab' AS BINARY)), byte_surprisal(CAST(NULL AS BINARY))").head()
     assert(row.getLong(0) === 4 * Math.round(Math.log(2.0) * 1e6))

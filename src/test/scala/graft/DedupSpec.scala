@@ -13,7 +13,6 @@ class DedupSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("d04 IVF-sourced pairs == brute-force pairs (100% recall)") {
-    graft.functions.GraftFunctions.register(spark)
     val quantize =
       "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
     val base = Tables.embeddings(spark, sf)

@@ -191,14 +191,9 @@ class HealthSpec extends AnyFunSuite {
   * against CPython 3.11 str.title/str.capitalize). */
 class PyTextSpec extends AnyFunSuite {
   import SparkTestSession._
-  import graft.functions.PyText
 
-  lazy val _ = PyText.register(spark)
-
-  private def one(fn: String, in: String): String = {
-    PyText.register(spark)
+  private def one(fn: String, in: String): String =
     spark.sql(s"SELECT $fn('${in.replace("'", "\\'")}')").head().getString(0)
-  }
 
   test("py_title matches CPython str.title()") {
     assert(one("py_title", "parkinson's disease") == "Parkinson'S Disease")

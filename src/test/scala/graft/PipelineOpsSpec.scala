@@ -120,7 +120,6 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("nfc_normalize: matches java.text.Normalizer and stays in whole-stage codegen") {
-    functions.GraftFunctions.register(spark)
     // explicit escapes: decomposed inputs that NFC must compose, plus
     // already-NFC inputs that must pass through untouched
     val cases = Seq("cafe\u0301", "A\u030Angstro\u0308m", "plain ascii",

@@ -16,7 +16,6 @@ class PropertySpec extends AnyFunSuite {
   private def evalCleaner(inputs: Seq[String],
                           fn: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Seq[String] = {
     import spark.implicits._
-    graft.functions.PyText.register(spark)
     inputs.toDF("c").select(fn(col("c")).as("r")).collect().map(r =>
       if (r.isNullAt(0)) null else r.getString(0)).toSeq
   }
@@ -37,7 +36,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("nfc_normalize agrees with java.text.Normalizer and is idempotent") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val inputs = Seq.fill(300)(nfcWeird.sample).flatten
     val out = inputs.toDF("s")
       .selectExpr("nfc_normalize(s) AS once", "nfc_normalize(nfc_normalize(s)) AS twice")

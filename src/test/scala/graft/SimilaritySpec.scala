@@ -140,7 +140,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("v04: int8 quantized ranking recalls the exact float top-3") {
-    graft.functions.GraftFunctions.register(spark)
     // exact float-cosine top-3 per query, computed independently of the
     // ×1000-int64 path the other queries share
     val vecs = Tables.embeddings(spark, sf)

@@ -6,7 +6,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("sorted_intersect_count agrees with array_intersect across random sorted sets") {
-    graft.functions.GraftFunctions.register(spark)
     val rng = new scala.util.Random(7)
     val cases = Seq(
       (Seq.empty[Long], Seq.empty[Long]),
@@ -26,7 +25,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("shingle_hashes and winnow_mins equal their SQL lambda forms on the real corpus") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val mismatches = Tables.documents(spark, sf).selectExpr(
       "doc_id",
@@ -51,7 +49,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("winnow_mins empty input: documented deviation from the SQL lambda form") {
-    graft.functions.GraftFunctions.register(spark)
     // winnow_mins([]) = [] (containsNull=false element type), while the
     // SQL form it otherwise replicates yields [null] — pinned here so the
     // divergence stays a documented decision, not an accident
@@ -71,7 +68,6 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("null propagation and codegen") {
-    graft.functions.GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT sorted_intersect_count(array(1L, 2L), CAST(NULL AS ARRAY<BIGINT>)),
         |       sorted_intersect_count(CAST(NULL AS ARRAY<BIGINT>), array(1L))""".stripMargin).head()
