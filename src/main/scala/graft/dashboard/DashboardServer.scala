@@ -42,10 +42,12 @@ final class DashboardServer(spark: SparkSession,
       graft.operators.CorpusBuild.st17IncrementalStream(spark, d).collect()
         .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
     }
-  private val years: Seq[Long] = cleaned.select(col("Year")).distinct()
-    .collect().map(_.getLong(0)).sorted.toSeq
-  private val countries: Seq[String] = cleaned.select(col("Country")).distinct()
-    .collect().map(_.getString(0)).sorted.toSeq
+  // both filter lists from one aggregate; each is bounded by its
+  // category domain
+  private val (years, countries): (Seq[Long], Seq[String]) = {
+    val r = cleaned.agg(collect_set(col("Year")), collect_set(col("Country"))).head()
+    (r.getSeq[Long](0).sorted.toSeq, r.getSeq[String](1).sorted.toSeq)
+  }
   private lazy val fitted = MortalityModel.fit(cleaned)
 
   // ---------- rendering helpers ----------
@@ -220,12 +222,12 @@ final class DashboardServer(spark: SparkSession,
       "Hospital_Beds_per_1000" -> p("beds", 2.0),
       "Avg_Treatment_Cost_USD" -> p("cost", 500.0),
       "Per_Capita_Income_USD" -> p("income", 1000.0)))
-    val m = MortalityModel.metrics(fitted).head()
+    val m = fitted.testScores
     f"""<!DOCTYPE html><html><body style="font-family:sans-serif">
        |<h1>Mortality Prediction</h1>
        |<p>Predicted mortality rate: <b>$pred%.6f</b></p>
-       |<p>Model (RandomForest 300x3, seed 42): r2=${m.getDouble(0)}%.4f
-       | mse=${m.getDouble(1)}%.6f mae=${m.getDouble(2)}%.6f</p>
+       |<p>Model (RandomForest 300x3, seed 42): r2=${m.r2}%.4f
+       | mse=${m.mse}%.6f mae=${m.mae}%.6f</p>
        |<a href="/">back</a></body></html>""".stripMargin
   }
 

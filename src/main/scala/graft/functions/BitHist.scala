@@ -16,11 +16,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Why it exists: Spark's exact `percentile` is an ObjectHashAggregate
   * whose final state holds a counts-map over EVERY distinct value — a
   * single-reducer memory bottleneck that OOMs a global quantile at 100 TB.
-  * This aggregate's state is a FIXED 3×nBuckets long array (≤ ~100 KB at
-  * the default 4096 buckets) regardless of input size: counts, plus the
-  * min/max bit-key actually seen per bucket (the min==max case lets the
-  * driver-side selection terminate as soon as a bucket holds one distinct
-  * value — 2–3 passes in practice on real data).
+  * This aggregate's state never exceeds 3×nBuckets longs (~100 KB at the
+  * default 4096 buckets) regardless of input size. It has two forms:
+  *
+  *  - EXACT, while the contributing rows carry at most
+  *    [[BitHistAgg.exactCap]] (6,143 at 4096 buckets) distinct keys: one
+  *    negative header long `~n`, then the n (bit key, weight) pairs,
+  *    sorted by unsigned key. Dense counts are never negative, so the
+  *    header's sign tells the forms apart. Only the used part is
+  *    serialized, and the driver finishes a selection from it directly;
+  *  - DENSE: counts, plus the min/max bit key actually seen per bucket
+  *    (the min==max case lets the driver-side selection terminate as soon
+  *    as a bucket holds one distinct value).
+  *
+  * A buffer starts exact and turns dense, for good, when an update adds a
+  * key past the cap or a merge's union of keys would exceed it; the dense
+  * result is the same histogram the rows would have built directly.
   *
   * The bit image `u` of a double is the classic monotone map (flip all
   * bits of negatives, set the sign bit of positives): unsigned order on
@@ -34,10 +45,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Nulls are skipped, mirroring `percentile`.
   *
   * The weighted form `bithistw(value, weight, ...)` accumulates int64
-  * WEIGHT per bucket instead of row counts (rows with null or ≤0 weight
-  * are skipped) — the building block of the exact weighted quantile,
-  * where `percentile(value, p, freq)`'s counts-map state has the same
-  * single-reducer bottleneck as the unweighted one.
+  * WEIGHT per key or bucket instead of row counts (rows with null or ≤0
+  * weight are skipped) — the building block of the exact weighted
+  * quantile, where `percentile(value, p, freq)`'s counts-map state has the
+  * same single-reducer bottleneck as the unweighted one.
   */
 case class BitHistAgg(
     child: Expression,
@@ -65,60 +76,118 @@ case class BitHistAgg(
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "bithist"
 
-  // layout: [counts | minKeys | maxKeys], each nBuckets long
+  private lazy val cap: Int = BitHistAgg.exactCap(nBuckets)
+
   override def createAggregationBuffer(): Array[Long] = {
-    val a = new Array[Long](3 * nBuckets)
-    java.util.Arrays.fill(a, nBuckets, 2 * nBuckets, -1L)        // min = unsigned max
-    // max block stays 0 = unsigned min
+    val a = new Array[Long](1 + 2 * 8)
+    a(0) = ~0L
     a
   }
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
-    if (v != null) {
-      val wAny = weightE.eval(input)
-      val w = if (wAny == null) 0L else wAny.asInstanceOf[Number].longValue()
-      if (w > 0) {
-        val u = BitHistAgg.keyOf(v.asInstanceOf[Double])
-        if (prefixShift >= 64 || (u >>> prefixShift) == prefix) {
-          val b = ((u >>> bucketShift) & (nBuckets - 1)).toInt
-          val first = buf(b) == 0
-          buf(b) += w
-          if (first || java.lang.Long.compareUnsigned(u, buf(nBuckets + b)) < 0)
-            buf(nBuckets + b) = u
-          if (first || java.lang.Long.compareUnsigned(u, buf(2 * nBuckets + b)) > 0)
-            buf(2 * nBuckets + b) = u
-        }
-      }
-    }
-    buf
+    if (v == null) return buf
+    val wAny = weightE.eval(input)
+    val w = if (wAny == null) 0L else wAny.asInstanceOf[Number].longValue()
+    val u = BitHistAgg.keyOf(v.asInstanceOf[Double])
+    if (w > 0 && (prefixShift >= 64 || (u >>> prefixShift) == prefix)) add(buf, u, w)
+    else buf
   }
 
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var b = 0
-    while (b < nBuckets) {
-      if (other(b) > 0) {
-        if (buf(b) == 0) {
-          buf(nBuckets + b) = other(nBuckets + b)
-          buf(2 * nBuckets + b) = other(2 * nBuckets + b)
-        } else {
-          if (java.lang.Long.compareUnsigned(other(nBuckets + b), buf(nBuckets + b)) < 0)
-            buf(nBuckets + b) = other(nBuckets + b)
-          if (java.lang.Long.compareUnsigned(other(2 * nBuckets + b), buf(2 * nBuckets + b)) > 0)
-            buf(2 * nBuckets + b) = other(2 * nBuckets + b)
-        }
-        buf(b) += other(b)
+  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] =
+    if (!BitHistAgg.isExact(other)) {
+      val dense = if (BitHistAgg.isExact(buf)) toDense(buf) else buf
+      var b = 0
+      while (b < nBuckets) {
+        if (other(b) > 0) addDense(dense, b, other(b), other(nBuckets + b), other(2 * nBuckets + b))
+        b += 1
       }
-      b += 1
+      dense
+    } else if (!BitHistAgg.isExact(buf)) {
+      addPairs(buf, other)
+    } else mergeExact(buf, other)
+
+  /** Adds weight `w` at key `u`: in place, or in a grown or dense copy. */
+  private def add(buf: Array[Long], u: Long, w: Long): Array[Long] = {
+    if (!BitHistAgg.isExact(buf)) {
+      addDense(buf, bucketOf(u), w, u, u)
+      return buf
     }
-    buf
+    val n = BitHistAgg.exactSize(buf)
+    val i = BitHistAgg.search(buf, n, u)
+    if (i >= 0) { buf(2 + 2 * i) += w; buf }
+    else if (n == cap) { val d = toDense(buf); addDense(d, bucketOf(u), w, u, u); d }
+    else {
+      val at = -i - 1
+      val out =
+        if (buf.length >= 3 + 2 * n) buf
+        else java.util.Arrays.copyOf(buf, math.min(1 + 2 * cap, math.max(3 + 2 * n, 2 * buf.length)))
+      System.arraycopy(out, 1 + 2 * at, out, 3 + 2 * at, 2 * (n - at))
+      out(1 + 2 * at) = u
+      out(2 + 2 * at) = w
+      out(0) = ~(n + 1).toLong
+      out
+    }
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
+  private def bucketOf(u: Long): Int = ((u >>> bucketShift) & (nBuckets - 1)).toInt
+
+  // dense layout: [counts | minKeys | maxKeys], each nBuckets long
+  private def addDense(dense: Array[Long], b: Int, w: Long, minU: Long, maxU: Long): Unit = {
+    val first = dense(b) == 0
+    dense(b) += w
+    if (first || java.lang.Long.compareUnsigned(minU, dense(nBuckets + b)) < 0)
+      dense(nBuckets + b) = minU
+    if (first || java.lang.Long.compareUnsigned(maxU, dense(2 * nBuckets + b)) > 0)
+      dense(2 * nBuckets + b) = maxU
+  }
+
+  private def addPairs(dense: Array[Long], exact: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < BitHistAgg.exactSize(exact)) {
+      val u = exact(1 + 2 * i)
+      addDense(dense, bucketOf(u), exact(2 + 2 * i), u, u)
+      i += 1
+    }
+    dense
+  }
+
+  private def toDense(exact: Array[Long]): Array[Long] = {
+    val a = new Array[Long](3 * nBuckets)
+    java.util.Arrays.fill(a, nBuckets, 2 * nBuckets, -1L)        // min = unsigned max
+    // max block stays 0 = unsigned min
+    addPairs(a, exact)
+  }
+
+  /** Sorted union of two exact forms, or the dense form once the union
+    * passes the cap. */
+  private def mergeExact(a: Array[Long], b: Array[Long]): Array[Long] = {
+    val na = BitHistAgg.exactSize(a)
+    val nb = BitHistAgg.exactSize(b)
+    val out = new Array[Long](1 + 2 * math.min(na + nb, cap))
+    var i = 0
+    var j = 0
+    var k = 0
+    while (i < na || j < nb) {
+      if (k == cap) return addPairs(toDense(a), b)
+      val c =
+        if (i == na) 1 else if (j == nb) -1
+        else java.lang.Long.compareUnsigned(a(1 + 2 * i), b(1 + 2 * j))
+      out(1 + 2 * k) = if (c <= 0) a(1 + 2 * i) else b(1 + 2 * j)
+      if (c <= 0) { out(2 + 2 * k) += a(2 + 2 * i); i += 1 }
+      if (c >= 0) { out(2 + 2 * k) += b(2 + 2 * j); j += 1 }
+      k += 1
+    }
+    out(0) = ~k.toLong
+    BitHistAgg.used(out)
+  }
+
+  override def eval(buf: Array[Long]): Any = new GenericArrayData(BitHistAgg.used(buf))
 
   override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
+    val used = BitHistAgg.used(buf)
+    val bb = ByteBuffer.allocate(used.length * 8)
+    used.foreach(bb.putLong)
     bb.array()
   }
 
@@ -138,6 +207,34 @@ case class BitHistAgg(
 }
 
 object BitHistAgg {
+
+  /** Most distinct keys the exact form holds: its header plus two longs
+    * per key stay below the dense form's 3×nBuckets longs. */
+  def exactCap(nBuckets: Int): Int = (3 * nBuckets - 1) / 2
+
+  /** True for the exact (key, weight) form, false for the dense histogram. */
+  def isExact(h: Array[Long]): Boolean = h(0) < 0
+
+  /** Number of (key, weight) pairs in an exact form. */
+  def exactSize(h: Array[Long]): Int = (~h(0)).toInt
+
+  /** The state without an exact form's unused capacity. */
+  private def used(h: Array[Long]): Array[Long] =
+    if (isExact(h) && h.length > 1 + 2 * exactSize(h)) java.util.Arrays.copyOf(h, 1 + 2 * exactSize(h))
+    else h
+
+  /** Binary search for key `u` among an exact form's n keys (unsigned
+    * order): its index, or `-(insertion point) - 1`. */
+  private def search(h: Array[Long], n: Int, u: Long): Int = {
+    var lo = 0
+    var hi = n - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val c = java.lang.Long.compareUnsigned(h(1 + 2 * mid), u)
+      if (c < 0) lo = mid + 1 else if (c > 0) hi = mid - 1 else return mid
+    }
+    -lo - 1
+  }
 
   /** Monotone bit image: unsigned order on the result == IEEE-754 total
     * order on the double (java.lang.Double.compare semantics). */

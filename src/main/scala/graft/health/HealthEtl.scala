@@ -28,9 +28,11 @@ import graft.functions.PyText
   * Scale notes: grouped medians are window aggregates (one shuffle per
   * key-set); global medians/quantiles resolve through
   * [[graft.util.ScalableQuantile]] (bounded-state radix selection, map-side
-  * combinable — the driver walks 4096-bucket histograms, never rows) and
-  * are folded back as literals; `bround` = numpy/pandas HALF_EVEN
-  * rounding; exact percentile semantics, never approx.
+  * combinable — the driver reads a column's exact (value, count) list
+  * while it has at most 6,143 distinct candidates and walks 4096-bucket
+  * histograms past that, never rows) and are folded back as literals;
+  * `bround` = numpy/pandas HALF_EVEN rounding; exact percentile
+  * semantics, never approx.
   */
 object HealthEtl {
 
@@ -193,12 +195,14 @@ object HealthEtl {
     df = df.withColumn("Country", cleanCountry(col("Country")))
       .withColumn("Disease Name", cleanDisease(col("Disease Name")))
 
-    // the pipeline runs SIX scalar-quantile selections (year median, pop
-    // median, rate medians, IQR quantiles, sweep medians), each of which
-    // re-reads its upstream; persist the scrubbed base once so every
-    // selection pass (and the final result) reads the cached columns
-    // instead of re-scanning + re-parsing the CSV — at 100 TB this is
-    // the difference between one source scan and a dozen
+    // the pipeline makes five scalar-quantile calls (year median, pop
+    // median, rate medians, IQR quantiles, sweep medians). Each is one
+    // pass while every column it reads has at most 6,143 distinct
+    // values, and up to six past that; every pass re-reads its upstream.
+    // Persist the scrubbed base once so every pass (and the final
+    // result) reads the cached columns instead of re-scanning +
+    // re-parsing the CSV — at 100 TB this is the difference between one
+    // source scan and a dozen
     val scrubbed = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df = scrubbed
 

@@ -33,11 +33,40 @@ object MortalityModel {
   val catCols: Seq[String] = Seq(
     "Disease Name", "Vaccine_Treatment_Availability", "Treatment_Type")
 
+  /** r2 / mse / mae of the model on one split. */
+  final case class Scores(r2: Double, mse: Double, mae: Double)
+
+  /** A fitted model and its splits. The constants derived from them are
+    * computed once, on first use, and then shared by every caller. */
   final case class Fitted(
       model: RandomForestRegressionModel,
       featureNames: Seq[String],
       train: DataFrame,
-      test: DataFrame)
+      test: DataFrame) {
+
+    lazy val testScores: Scores = score(model, test)
+    lazy val trainScores: Scores = score(model, train)
+
+    /** Each feature's training median, in feature order: one 1-row
+      * exact `percentile` aggregate over the training frame. */
+    lazy val trainMedians: Seq[Double] = {
+      val arr = org.apache.spark.ml.functions.vector_to_array(col("features"))
+      val medianExprs = featureNames.indices.map { i =>
+        expr(s"percentile(`f$i`, 0.5)").as(s"m$i")
+      }
+      val row = train.select(featureNames.indices.map(i => element_at(arr, i + 1).as(s"f$i")): _*)
+        .agg(medianExprs.head, medianExprs.tail: _*).head()
+      featureNames.indices.map(row.getDouble)
+    }
+  }
+
+  /** M5 — all three metrics from one `RegressionMetrics` summary pass
+    * (the one `RegressionEvaluator.evaluate` computes per metric name). */
+  private def score(model: RandomForestRegressionModel, data: DataFrame): Scores = {
+    val m = new RegressionEvaluator().setLabelCol("label").setPredictionCol("prediction")
+      .getMetrics(model.transform(data))
+    Scores(m.r2, m.meanSquaredError, m.meanAbsoluteError)
+  }
 
   /** pandas get_dummies(drop_first=True): alphabetical levels minus the
     * first, as explicit 0/1 double columns named `col_level`. The level
@@ -130,20 +159,6 @@ object MortalityModel {
     Fitted(rf.fit(train), names, train, test)
   }
 
-  /** M5 — r2 / mae / mse on a split, as a 1-row DataFrame. */
-  def metrics(fitted: Fitted, onTest: Boolean = true): DataFrame = {
-    val data = if (onTest) fitted.test else fitted.train
-    val pred = fitted.model.transform(data)
-    val spark = data.sparkSession
-    import spark.implicits._
-    val ev = new RegressionEvaluator().setLabelCol("label").setPredictionCol("prediction")
-    Seq((
-      ev.setMetricName("r2").evaluate(pred),
-      ev.setMetricName("mse").evaluate(pred),
-      ev.setMetricName("mae").evaluate(pred)
-    )).toDF("r2", "mse", "mae")
-  }
-
   /** M6 — feature importances, sorted desc (Health_Jim.py:713-722). */
   def featureImportances(fitted: Fitted): DataFrame = {
     val spark = fitted.train.sparkSession
@@ -156,28 +171,14 @@ object MortalityModel {
   /** M7 — single-row scoring with median fallback for unspecified
     * features (Health_Jim.py:728-744): absent keys default to the
     * TRAINING median of that feature; column order matches training.
+    * Scores on the driver with `model.predict`, the function `transform`
+    * applies per row, so after the first call (which computes the
+    * medians) it submits no Spark job.
     */
   def predictOne(fitted: Fitted, inputs: Map[String, Double]): Double = {
-    val spark = fitted.train.sparkSession
-    val medianExprs = fitted.featureNames.zipWithIndex.map { case (c, i) =>
-      expr(s"percentile(`$c`, 0.5)").as(s"m$i")
+    val values = fitted.featureNames.zip(fitted.trainMedians).map { case (c, m) =>
+      inputs.getOrElse(c, m)
     }
-    // medians come from one 1-row aggregate over the training frame
-    val meds = {
-      val arr = org.apache.spark.ml.functions.vector_to_array(col("features"))
-      val flat = fitted.train.select(fitted.featureNames.zipWithIndex.map {
-        case (c, i) => element_at(arr, i + 1).as(c)
-      }: _*)
-      flat.agg(medianExprs.head, medianExprs.tail: _*).head()
-    }
-    val values = fitted.featureNames.zipWithIndex.map { case (c, i) =>
-      inputs.getOrElse(c, meds.getDouble(i))
-    }
-    val row = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(
-        org.apache.spark.ml.linalg.Vectors.dense(values.toArray))),
-      new org.apache.spark.sql.types.StructType()
-        .add("features", org.apache.spark.ml.linalg.SQLDataTypes.VectorType))
-    fitted.model.transform(row).select("prediction").head().getDouble(0)
+    fitted.model.predict(org.apache.spark.ml.linalg.Vectors.dense(values.toArray))
   }
 }

@@ -67,7 +67,7 @@ object WeeklyReport {
     * aggregate results — every input to `fmt` is ≤ a few dozen rows). */
   def sections(spark: SparkSession, cleaned: DataFrame): Seq[(String, String)] = {
     val fitted = MortalityModel.fit(cleaned)
-    val m = MortalityModel.metrics(fitted).head()
+    val m = fitted.testScores
     val prediction = MortalityModel.predictOne(fitted, Map(
       "Healthcare_Access_Pct" -> 0.5, "Doctors_per_1000" -> 1.0,
       "Hospital_Beds_per_1000" -> 2.0, "Avg_Treatment_Cost_USD" -> 500.0,
@@ -77,7 +77,7 @@ object WeeklyReport {
       "Overview" -> fmt(HealthQueries.overview(cleaned)),
       "Data quality (key metric ranges)" -> fmt(metricStats),
       "Model quality (RandomForest 300x3, seed 42)" ->
-        f"r2=${m.getDouble(0)}%.4f mse=${m.getDouble(1)}%.6f mae=${m.getDouble(2)}%.6f",
+        f"r2=${m.r2}%.4f mse=${m.mse}%.6f mae=${m.mae}%.6f",
       "Top 5 deadliest diseases" -> fmt(HealthQueries.topDeadliest(cleaned, 5)),
       "Top 5 costliest diseases" -> fmt(HealthQueries.avgCostPerDisease(cleaned, 5)),
       "Feature importances (top 10)" -> fmt(MortalityModel.featureImportances(fitted), 10),

@@ -15,15 +15,19 @@ import graft.functions.BitHistAgg
   * Percentile.getPercentile, hence bit-identical output) by driver-
   * orchestrated radix selection instead:
   *
-  *   1. one `bithist` pass partitions each column's values into 4096
-  *      buckets of the order-isomorphic bit key (fixed ~100 KB state per
-  *      aggregate, map-side combinable — no value buffering anywhere);
-  *   2. the driver walks the cumulative counts to locate the bucket
+  *   1. one `bithist` pass summarizes each column's candidate values in
+  *      bounded state (≤ 3×4096 longs per aggregate, map-side
+  *      combinable — no unbounded value buffering anywhere). While the
+  *      candidates hold at most 6,143 distinct values the state is their
+  *      exact (key, weight) list, sorted, and the driver reads every
+  *      order statistic straight off it: such a selection finishes in the
+  *      pass that sees it;
+  *   2. past that the state is a 4096-bucket histogram of the bit key;
+  *      the driver walks the cumulative counts to locate the bucket
   *      holding each target rank, then re-histograms WITHIN that bucket
   *      (12 more bits per pass). A bucket whose min==max key is resolved
-  *      immediately — on real (clustered, duplicate-heavy) data most
-  *      selections finish in 2–3 passes; 6 passes is the worst-case
-  *      bound (64 bits / 12 per pass).
+  *      immediately, and so is one whose next pass comes back exact;
+  *      6 passes is the worst-case bound (64 bits / 12 per pass).
   *
   * All requested (column, probability) pairs share the same passes: one
   * job per round regardless of how many quantiles are in flight, and
@@ -38,12 +42,53 @@ object ScalableQuantile {
   private val Width = 12            // bits refined per pass
   private val NBuckets = 1 << Width // 4096
 
-  private final case class Sel(colIdx: Int, rank: Long) {
-    var remaining: Long = rank  // rank within the current candidate set
-    var prefix: Long = 0L       // resolved high bits of the bit key
+  /** One order-statistic selection in progress: the 0-based rank still
+    * to skip among the candidates, the candidates being the keys whose
+    * high `64 - prefixShift` bits equal `prefix`. */
+  private class Cursor {
+    var remaining: Long = 0L
+    var prefix: Long = 0L
     var prefixShift: Int = 64   // bits NOT yet resolved
     var done: Option[Long] = None
+
+    /** Walks one `bithist` result over this cursor's candidates to its
+      * rank: an exact-form result, a single-key bucket or the last 12
+      * bits finish the selection; otherwise the prefix narrows to the
+      * rank's bucket. */
+    def advance(h: Array[Long], what: => String): Unit = {
+      var rem = remaining
+      if (BitHistAgg.isExact(h)) {
+        val n = BitHistAgg.exactSize(h)
+        var i = 0
+        while (i < n && rem >= h(2 + 2 * i)) { rem -= h(2 + 2 * i); i += 1 }
+        require(i < n, s"rank not found in $what")
+        done = Some(h(1 + 2 * i))
+        return
+      }
+      val bucketShift = math.max(prefixShift - Width, 0)
+      var b = 0
+      while (b < NBuckets && rem >= h(b)) { rem -= h(b); b += 1 }
+      require(b < NBuckets, s"rank not found in $what")
+      val minU = h(NBuckets + b)
+      // single distinct key, or all 64 bits resolved (bucketShift==0
+      // buckets are singleton key values by construction)
+      if (minU == h(2 * NBuckets + b) || bucketShift == 0) done = Some(minU)
+      else {
+        prefix = (prefix << (prefixShift - bucketShift)) | b.toLong
+        prefixShift = bucketShift
+        remaining = rem
+      }
+    }
   }
+
+  private final class Sel(val colIdx: Int, val rank: Long) extends Cursor {
+    remaining = rank
+  }
+
+  /** Total weight in a `bithist` result (the non-null count for `bithist`). */
+  private def total(h: Array[Long]): Long =
+    if (BitHistAgg.isExact(h)) (0 until BitHistAgg.exactSize(h)).map(i => h(2 + 2 * i)).sum
+    else h.take(NBuckets).sum
 
   /** Exact interpolated quantiles for many (column, probs) pairs in ≤6
     * shared aggregate passes. Returns (column, prob) → value; None when
@@ -55,14 +100,12 @@ object ScalableQuantile {
       : Map[(String, Double), Option[Double]] = {
     val cols = specs.map(_._1)
 
-    // Round 1: unconditional histogram per column; bucket sums double as
-    // the non-null counts, so no separate count pass is needed.
+    // Round 1: unconditional histogram per column; its total weight is
+    // the non-null count, so no separate count pass is needed.
     val first = histPass(df, cols.zipWithIndex.map { case (c, i) =>
       (i, c, 64, 0L)
     })
-    val counts: Map[Int, Long] = first.map { case ((i, _, _), h) =>
-      i -> h.take(NBuckets).sum
-    }
+    val counts: Map[Int, Long] = first.map { case ((i, _, _), h) => i -> total(h) }
 
     // Target positions and the order-statistic ranks they need.
     val positions: Seq[((String, Double), Int, Option[(Double, Long, Long)])] =
@@ -83,13 +126,13 @@ object ScalableQuantile {
       if (n > 0) ps.foreach { p =>
         val pos = p * (n - 1)
         Seq(pos.floor.toLong, pos.ceil.toLong).foreach { r =>
-          selMap.getOrElseUpdate((i, r), Sel(i, r))
+          selMap.getOrElseUpdate((i, r), new Sel(i, r))
         }
       }
     }
 
     // Resolve round 1 from the already-computed histograms, then iterate.
-    advance(selMap.values.toSeq, first.map { case ((i, _, _), h) => (i, 64, 0L) -> h }.toMap, cols)
+    advance(selMap.values.toSeq, first, cols)
     var round = 1
     while (selMap.values.exists(_.done.isEmpty)) {
       round += 1
@@ -120,11 +163,8 @@ object ScalableQuantile {
   def medians(df: DataFrame, cols: Seq[String]): Map[String, Option[Double]] =
     quantiles(df, cols.map(c => c -> Seq(0.5))).map { case ((c, _), v) => c -> v }
 
-  private final class WSel(val label: String, val cond: org.apache.spark.sql.Column) {
-    var remaining: Long = 0L
-    var prefix: Long = 0L
-    var prefixShift: Int = 64
-    var done: Option[Long] = None
+  private final class WSel(val label: String, val cond: org.apache.spark.sql.Column)
+      extends Cursor {
     var empty: Boolean = false
   }
 
@@ -155,51 +195,28 @@ object ScalableQuantile {
       needs.zipWithIndex.map { case (s, j) => s -> row.getSeq[Long](j).toArray }.toMap
     }
 
-    def advance(s: WSel, h: Array[Long]): Unit = {
-      val bucketShift = math.max(s.prefixShift - Width, 0)
-      val width = s.prefixShift - bucketShift
-      var b = 0
-      var rem = s.remaining
-      var found = false
-      while (!found && b < NBuckets) {
-        val c = h(b)
-        if (rem < c) {
-          found = true
-          val minU = h(NBuckets + b)
-          val maxU = h(2 * NBuckets + b)
-          if (minU == maxU || bucketShift == 0) s.done = Some(minU)
-          else {
-            s.prefix = (s.prefix << width) | b.toLong
-            s.prefixShift = bucketShift
-            s.remaining = rem
-          }
-        } else { rem -= c; b += 1 }
-      }
-      require(found, s"weighted rank not found for slice ${s.label}")
-    }
-
     val first = hist(sels)
     sels.foreach { s =>
-      val w = first(s).take(NBuckets).sum
+      val w = total(first(s))
       if (w == 0) s.empty = true
       // lower median = weighted 0-based rank ceil(W/2) - 1
       else s.remaining = (w + 1) / 2 - 1
     }
-    sels.filterNot(_.empty).foreach(s => advance(s, first(s)))
+    sels.filterNot(_.empty).foreach(s => s.advance(first(s), s"slice ${s.label}"))
     var round = 1
     while (sels.exists(s => !s.empty && s.done.isEmpty)) {
       round += 1
       require(round <= 6, "weighted bit selection failed to terminate")
       val running = sels.filter(s => !s.empty && s.done.isEmpty)
       val hs = hist(running)
-      running.foreach(s => advance(s, hs(s)))
+      running.foreach(s => s.advance(hs(s), s"slice ${s.label}"))
     }
     sels.map(s => s.label -> (if (s.empty) None
                               else s.done.map(BitHistAgg.keyToDouble))).toMap
   }
 
   /** One aggregate job computing a `bithist` per (colIdx, col, prefixShift,
-    * prefix) need. Returns each need's 3×NBuckets array.
+    * prefix) need. Returns each need's state: exact or dense.
     */
   private def histPass(df: DataFrame,
       needs: Seq[(Int, String, Int, Long)]): Map[(Int, Int, Long), Array[Long]] = {
@@ -213,36 +230,10 @@ object ScalableQuantile {
     }.toMap
   }
 
-  /** Walk each running selection's histogram: locate the bucket holding
-    * its rank, finish if the bucket has one distinct key, else narrow the
-    * prefix by one level.
-    */
   private def advance(running: Seq[Sel],
       hists: Map[(Int, Int, Long), Array[Long]], cols: Seq[String]): Unit =
     running.foreach { s =>
-      val h = hists((s.colIdx, s.prefixShift, s.prefix))
-      val bucketShift = math.max(s.prefixShift - Width, 0)
-      val width = s.prefixShift - bucketShift
-      var b = 0
-      var rem = s.remaining
-      var found = false
-      while (!found && b < NBuckets) {
-        val c = h(b)
-        if (rem < c) {
-          found = true
-          val minU = h(NBuckets + b)
-          val maxU = h(2 * NBuckets + b)
-          if (minU == maxU || bucketShift == 0) {
-            // single distinct key, or all 64 bits resolved (bucketShift==0
-            // buckets are singleton key values by construction)
-            s.done = Some(minU)
-          } else {
-            s.prefix = (s.prefix << width) | b.toLong
-            s.prefixShift = bucketShift
-            s.remaining = rem
-          }
-        } else { rem -= c; b += 1 }
-      }
-      require(found, s"rank ${s.rank} not found in histogram of ${cols(s.colIdx)}")
+      s.advance(hists((s.colIdx, s.prefixShift, s.prefix)),
+        s"histogram of ${cols(s.colIdx)} at rank ${s.rank}")
     }
 }

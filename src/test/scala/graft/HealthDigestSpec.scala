@@ -1,0 +1,68 @@
+package graft
+
+import java.security.MessageDigest
+
+import org.apache.spark.sql.Row
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.health.HealthEtl
+import graft.ml.MortalityModel
+
+/** Pins the health ETL and the mortality model on a committed seeded CSV
+  * (`health_dirty_500.csv`: 500 dirty rows written by
+  * `perfbench/datagen.py`'s `health_csv(path, 500, 1)`), so the pipeline
+  * is covered without the reference dataset. The pinned values came from
+  * the histogram-only quantile state and three `RegressionEvaluator.
+  * evaluate` passes, so they also hold the exact-form state and the
+  * one-pass `getMetrics` scores to bit-identical results. Any change to
+  * the cleaned rows, the model metrics or the what-if prediction shows
+  * up here bit-for-bit.
+  */
+class HealthDigestSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  private val csv = getClass.getResource("/health_dirty_500.csv").getPath
+
+  private lazy val (cleaned, cleanJobs) = JobCount(spark)(HealthEtl.clean(spark, csv))
+  private lazy val fitted = MortalityModel.fit(cleaned)
+
+  private val cannedInputs = Map(
+    "Healthcare_Access_Pct" -> 0.5, "Doctors_per_1000" -> 1.0,
+    "Hospital_Beds_per_1000" -> 2.0, "Avg_Treatment_Cost_USD" -> 500.0,
+    "Per_Capita_Income_USD" -> 1000.0)
+
+  private def bits(d: Double): String =
+    java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
+
+  /** Doubles by their raw bits, rows sorted, schema as the first line. */
+  private def digest(schema: String, rows: Seq[Row]): String = {
+    val lines = rows.map(_.toSeq.map {
+      case null => "∅"
+      case d: Double => "d" + bits(d)
+      case x => x.toString
+    }.mkString("\u0001")).sorted
+    MessageDigest.getInstance("SHA-256")
+      .digest((schema +: lines).mkString("\n").getBytes("UTF-8"))
+      .map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("cleaned rows match the pinned digest") {
+    val got = digest(cleaned.schema.simpleString, cleaned.collect().toSeq)
+    assert(cleaned.count() == 498)
+    assert(got == "4efd989d0dfcc40ffb0d0f8bbcaa014b7b726031f2a531676ed04c4c42fba70f", s"digest $got")
+  }
+
+  test("model metrics and the canned prediction match the pinned bits") {
+    val m = fitted.testScores
+    val got = Seq(m.r2, m.mse, m.mae, MortalityModel.predictOne(fitted, cannedInputs)).map(bits)
+    assert(got == Seq("3f73f5aa2d187600", "3fbb9771b6a14765", "3fd1234e49a1dff9",
+      "3fe2f4312f1f22d8"), s"bits $got")
+  }
+
+  test("clean submits at most the pinned job count; a repeat predictOne submits none") {
+    assert(cleanJobs <= 23, s"clean ran $cleanJobs jobs")
+    MortalityModel.predictOne(fitted, cannedInputs)
+    val (_, again) = JobCount(spark)(MortalityModel.predictOne(fitted, cannedInputs))
+    assert(again == 0, s"second predictOne ran $again jobs")
+  }
+}

@@ -32,8 +32,7 @@ class MortalityModelSpec extends AnyFunSuite {
   }
 
   test("test R2 in the reference band [0.70, 0.85] (published 0.7855)") {
-    val m = MortalityModel.metrics(fitted, onTest = true).head()
-    val (r2, mse, mae) = (m.getDouble(0), m.getDouble(1), m.getDouble(2))
+    val MortalityModel.Scores(r2, mse, mae) = fitted.testScores
     info(f"notebook-variant test r2 = $r2%.4f mse = $mse%.6f mae = $mae%.6f")
     assert(r2 > 0.70 && r2 < 0.85, s"test r2=$r2 outside band")
     assert(mse < 2e-3, s"mse=$mse") // published 8.2e-4
@@ -41,8 +40,8 @@ class MortalityModelSpec extends AnyFunSuite {
   }
 
   test("train R2 close to test R2 (no overfit at depth 3; published 0.7774)") {
-    val tr = MortalityModel.metrics(fitted, onTest = false).head().getDouble(0)
-    val te = MortalityModel.metrics(fitted, onTest = true).head().getDouble(0)
+    val tr = fitted.trainScores.r2
+    val te = fitted.testScores.r2
     assert(tr > 0.70 && tr < 0.88, s"train r2=$tr")
     assert(math.abs(tr - te) < 0.08, s"train/test gap ${tr - te}")
   }
@@ -70,7 +69,7 @@ class MortalityModelSpec extends AnyFunSuite {
     val app = MortalityModel.fitAppVariant(
       graft.health.HealthEtl.clean(spark, graft.health.HealthEtl.defaultCsvPath))
     assert(app.featureNames.contains("Severity Score"))
-    val r2 = MortalityModel.metrics(app).head().getDouble(0)
+    val r2 = app.testScores.r2
     info(f"app-variant test r2 = $r2%.4f")
     // observed 0.5673 with the deterministic split; band ±0.07 for MLlib
     // version drift (the value itself cannot drift run-to-run anymore)

@@ -20,6 +20,20 @@ class QuantileSpec extends AnyFunSuite {
     if (r.isNullAt(0)) None else Some(r.getDouble(0))
   }
 
+  // the exact form's cap at ScalableQuantile's 4096 buckets (6,143)
+  private val cap = BitHistAgg.exactCap(4096)
+  private val probs = Seq(0.0, 0.25, 0.5, 0.75, 1.0)
+
+  /** `n` distinct doubles, bit-adjacent in steps of 3 above 1.0 so they
+    * share one bucket down to the last radix passes, every 7th one twice
+    * and a null: a candidate set of exactly `n` keys on every pass until
+    * the rank's bucket falls under the cap. */
+  private def boundaryValues(n: Int): Seq[java.lang.Double] = {
+    val base = java.lang.Double.doubleToLongBits(1.0)
+    val vs = (0 until n).map(k => java.lang.Double.longBitsToDouble(base + 3L * k))
+    (vs ++ vs.indices.filter(_ % 7 == 0).map(vs)).map(Double.box) :+ null
+  }
+
   test("bit key is order-isomorphic and invertible") {
     val vals = Seq(Double.NegativeInfinity, -1e300, -2.5, -1.0, -Double.MinPositiveValue,
       -0.0, 0.0, Double.MinPositiveValue, 0.1, 1.0, 2.5, 1e300, Double.PositiveInfinity,
@@ -119,5 +133,101 @@ class QuantileSpec extends AnyFunSuite {
           want.map(java.lang.Double.doubleToLongBits), s"$vs @ $p: $got vs $want")
       }
     }
+  }
+
+  test("exact and dense forms agree with percentile across the cap, under 1 and 13 partitions") {
+    val s = spark
+    import s.implicits._
+    for (n <- Seq(cap - 1, cap, cap + 1, 2 * cap); parts <- Seq(1, 13)) {
+      val df = boundaryValues(n).toDF("v").repartition(parts)
+      val got = ScalableQuantile.quantiles(df, Seq("v" -> probs))
+      val want = df.agg(expr(s"percentile(v, array(${probs.mkString(", ")}))")).head()
+        .getSeq[Double](0)
+      probs.zip(want).foreach { case (p, w) =>
+        assert(got(("v", p)).map(java.lang.Double.doubleToLongBits) ==
+          Some(java.lang.Double.doubleToLongBits(w)), s"n=$n parts=$parts @ $p")
+      }
+    }
+  }
+
+  test("every update and merge path gives the histogram the rows build directly") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.types.DoubleType
+    val agg = BitHistAgg(BoundReference(0, DoubleType, nullable = true),
+      Literal(64), Literal(0L), Literal(52), Literal(4096))
+    def build(vs: Seq[Double]): Array[Long] =
+      vs.foldLeft(agg.createAggregationBuffer())((b, v) => agg.update(b, InternalRow(v)))
+    // a shuffle hands partial states over in serialized form
+    def ship(h: Array[Long]): Array[Long] = agg.deserialize(agg.serialize(h))
+    def dense(h: Array[Long]): Seq[Long] =
+      if (!BitHistAgg.isExact(h)) h.toSeq
+      else {
+        val pairs = (0 until BitHistAgg.exactSize(h)).map(i => (h(1 + 2 * i), h(2 + 2 * i)))
+        val byBucket = pairs.groupBy { case (u, _) => ((u >>> 52) & 4095).toInt }
+        val (counts, mins, maxs) = (0 until 4096).map { b =>
+          byBucket.get(b).fold((0L, -1L, 0L)) { ps =>
+            (ps.map(_._2).sum, ps.head._1, ps.last._1)
+          }
+        }.unzip3
+        counts ++ mins ++ maxs
+      }
+    val vs = boundaryValues(2 * cap + 2).filter(_ != null).map(_.doubleValue) ++
+      Seq(-1e300, -0.0, 0.0, 7.5, 7.5, Double.PositiveInfinity)
+    val (small1, small2) = (vs.take(cap / 2), vs.slice(cap / 4, cap))
+    val (big1, big2) = (vs.take(cap + 5), vs.drop(cap - 3))
+    val cases = Seq(
+      "exact+exact" -> (small1, small2),
+      "exact+exact, union at the cap" -> (vs.take(cap - 3), vs.slice(cap - 10, cap)),
+      "exact+exact, union one past the cap" -> (vs.take(cap - 3), vs.slice(cap - 10, cap + 1)),
+      "exact+dense" -> (small1, big2),
+      "dense+exact" -> (big1, small2),
+      "dense+dense" -> (big1, big2))
+    for ((name, (a, b)) <- cases) {
+      val merged = agg.merge(ship(build(a)), ship(build(b)))
+      val direct = build(a ++ b)
+      val distinct = (a ++ b).map(BitHistAgg.keyOf).distinct.size
+      assert(BitHistAgg.isExact(merged) == (distinct <= cap), s"$name form")
+      assert(BitHistAgg.isExact(direct) == (distinct <= cap), s"$name direct form")
+      assert(dense(merged) == dense(direct), s"$name histogram")
+      if (BitHistAgg.isExact(merged))
+        assert(agg.eval(merged).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+          .toLongArray().toSeq == merged.take(1 + 2 * distinct).toSeq, s"$name exact state")
+    }
+    // the empty state is exact with no keys and serializes to one long
+    assert(agg.serialize(agg.createAggregationBuffer()).length == 8)
+    assert(agg.serialize(build(vs)).length == 8 * 3 * 4096)
+  }
+
+  test("weighted lower median == brute-force expansion across the cap") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    for (n <- Seq(cap - 1, cap, cap + 1, 2 * cap)) {
+      val rows = boundaryValues(n).zipWithIndex.map { case (v, k) =>
+        (v, Long.box(if (k % 11 == 0) 0L else 1L + (k * 7) % 5))
+      }
+      val df = rows.toDF("v", "w").repartition(13)
+      val got = ScalableQuantile.weightedLowerMedians(
+        df, "v", "w", Seq("all" -> lit(true), "heavy" -> (col("w") >= 3)))
+      def brute(f: Long => Boolean): Double = {
+        val expanded = rows.filter(r => r._1 != null && r._2 > 0 && f(r._2))
+          .flatMap { case (v, w) => Seq.fill(w.toInt)(v.doubleValue) }.sorted
+        expanded((expanded.size + 1) / 2 - 1)
+      }
+      assert(got("all") == Some(brute(_ => true)), s"n=$n all")
+      assert(got("heavy") == Some(brute(_ >= 3)), s"n=$n heavy")
+    }
+  }
+
+  test("a quantile over at most cap values resolves in one pass, one job") {
+    val s = spark
+    import s.implicits._
+    def jobs(n: Int): Int = {
+      val df = boundaryValues(n).toDF("v").coalesce(1)
+      JobCount(spark)(ScalableQuantile.quantiles(df, Seq("v" -> probs)))._2
+    }
+    assert(jobs(cap) == 1)
+    assert(jobs(cap + 1) > 1)
   }
 }
