@@ -20,18 +20,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * default 4096 buckets) regardless of input size. It has two forms:
   *
   *  - EXACT, while the contributing rows carry at most
-  *    [[BitHistAgg.exactCap]] (6,143 at 4096 buckets) distinct keys: one
-  *    negative header long `~n`, then the n (bit key, weight) pairs,
-  *    sorted by unsigned key. Dense counts are never negative, so the
-  *    header's sign tells the forms apart. Only the used part is
-  *    serialized, and the driver finishes a selection from it directly;
+  *    [[BitHistAgg.exactCap]] (4,607 at 4096 buckets) distinct keys: a
+  *    negative header long, then (bit key, weight) pairs. Dense counts are
+  *    never negative, so the header's sign tells the forms apart. Updates
+  *    build it as an open-addressing hash table of
+  *    [[BitHistAgg.slots]] (6,143) slots filled to at most three
+  *    quarters, so a row costs one short probe, not a search; `eval` and
+  *    `serialize` return the n pairs sorted by unsigned key after the
+  *    header `~n`, and the driver finishes a selection from them directly;
   *  - DENSE: counts, plus the min/max bit key actually seen per bucket
   *    (the min==max case lets the driver-side selection terminate as soon
   *    as a bucket holds one distinct value).
   *
-  * A buffer starts exact and turns dense, for good, when an update adds a
-  * key past the cap or a merge's union of keys would exceed it; the dense
-  * result is the same histogram the rows would have built directly.
+  * A buffer starts exact and turns dense, for good, when an update or a
+  * merge adds a key past the cap; the dense result is the same histogram
+  * the rows would have built directly. A merge adds the other state's
+  * pairs or buckets one by one.
   *
   * The bit image `u` of a double is the classic monotone map (flip all
   * bits of negatives, set the sign bit of positives): unsigned order on
@@ -77,10 +81,12 @@ case class BitHistAgg(
   override def prettyName: String = "bithist"
 
   private lazy val cap: Int = BitHistAgg.exactCap(nBuckets)
+  private lazy val slots: Int = BitHistAgg.slots(nBuckets)
 
+  // the same 3×nBuckets-long allocation a dense buffer takes
   override def createAggregationBuffer(): Array[Long] = {
-    val a = new Array[Long](1 + 2 * 8)
-    a(0) = ~0L
+    val a = new Array[Long](1 + 2 * slots)
+    a(0) = BitHistAgg.hashHeader(0)
     a
   }
 
@@ -103,31 +109,41 @@ case class BitHistAgg(
         b += 1
       }
       dense
-    } else if (!BitHistAgg.isExact(buf)) {
-      addPairs(buf, other)
-    } else mergeExact(buf, other)
+    } else {
+      var out = buf
+      var i = 0
+      while (i < BitHistAgg.pairSlots(other)) {
+        if (other(2 + 2 * i) > 0) out = add(out, other(1 + 2 * i), other(2 + 2 * i))
+        i += 1
+      }
+      out
+    }
 
-  /** Adds weight `w` at key `u`: in place, or in a grown or dense copy. */
+  /** Adds weight `w` at key `u`: in place, or in a hashed or dense copy. */
   private def add(buf: Array[Long], u: Long, w: Long): Array[Long] = {
     if (!BitHistAgg.isExact(buf)) {
       addDense(buf, bucketOf(u), w, u, u)
       return buf
     }
+    if (!BitHistAgg.isHashed(buf)) return add(merge(createAggregationBuffer(), buf), u, w)
+    val i = find(buf, u)
     val n = BitHistAgg.exactSize(buf)
-    val i = BitHistAgg.search(buf, n, u)
-    if (i >= 0) { buf(2 + 2 * i) += w; buf }
-    else if (n == cap) { val d = toDense(buf); addDense(d, bucketOf(u), w, u, u); d }
+    if (buf(2 + 2 * i) > 0) buf(2 + 2 * i) += w
+    else if (n == cap) { val d = toDense(buf); addDense(d, bucketOf(u), w, u, u); return d }
     else {
-      val at = -i - 1
-      val out =
-        if (buf.length >= 3 + 2 * n) buf
-        else java.util.Arrays.copyOf(buf, math.min(1 + 2 * cap, math.max(3 + 2 * n, 2 * buf.length)))
-      System.arraycopy(out, 1 + 2 * at, out, 3 + 2 * at, 2 * (n - at))
-      out(1 + 2 * at) = u
-      out(2 + 2 * at) = w
-      out(0) = ~(n + 1).toLong
-      out
+      buf(1 + 2 * i) = u
+      buf(2 + 2 * i) = w
+      buf(0) = BitHistAgg.hashHeader(n + 1)
     }
+    buf
+  }
+
+  /** The slot holding key `u` in a hashed form, or the empty one where it
+    * goes: linear probing from a multiplicative hash. */
+  private def find(h: Array[Long], u: Long): Int = {
+    var i = (((u * 0x9E3779B97F4A7C15L) >>> 32) * slots >>> 32).toInt
+    while (h(2 + 2 * i) > 0 && h(1 + 2 * i) != u) i = if (i + 1 == slots) 0 else i + 1
+    i
   }
 
   private def bucketOf(u: Long): Int = ((u >>> bucketShift) & (nBuckets - 1)).toInt
@@ -142,52 +158,45 @@ case class BitHistAgg(
       dense(2 * nBuckets + b) = maxU
   }
 
-  private def addPairs(dense: Array[Long], exact: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < BitHistAgg.exactSize(exact)) {
-      val u = exact(1 + 2 * i)
-      addDense(dense, bucketOf(u), exact(2 + 2 * i), u, u)
-      i += 1
-    }
-    dense
-  }
-
   private def toDense(exact: Array[Long]): Array[Long] = {
     val a = new Array[Long](3 * nBuckets)
     java.util.Arrays.fill(a, nBuckets, 2 * nBuckets, -1L)        // min = unsigned max
     // max block stays 0 = unsigned min
-    addPairs(a, exact)
+    merge(a, exact)
   }
 
-  /** Sorted union of two exact forms, or the dense form once the union
-    * passes the cap. */
-  private def mergeExact(a: Array[Long], b: Array[Long]): Array[Long] = {
-    val na = BitHistAgg.exactSize(a)
-    val nb = BitHistAgg.exactSize(b)
-    val out = new Array[Long](1 + 2 * math.min(na + nb, cap))
-    var i = 0
-    var j = 0
-    var k = 0
-    while (i < na || j < nb) {
-      if (k == cap) return addPairs(toDense(a), b)
-      val c =
-        if (i == na) 1 else if (j == nb) -1
-        else java.lang.Long.compareUnsigned(a(1 + 2 * i), b(1 + 2 * j))
-      out(1 + 2 * k) = if (c <= 0) a(1 + 2 * i) else b(1 + 2 * j)
-      if (c <= 0) { out(2 + 2 * k) += a(2 + 2 * i); i += 1 }
-      if (c >= 0) { out(2 + 2 * k) += b(2 + 2 * j); j += 1 }
-      k += 1
+  /** The sorted exact form of a hashed one; other forms as they are. */
+  private def sorted(h: Array[Long]): Array[Long] =
+    if (!BitHistAgg.isHashed(h)) h
+    else {
+      val n = BitHistAgg.exactSize(h)
+      // flipping the sign bit makes the signed sort the unsigned order
+      val keys = new Array[Long](n)
+      var k = 0
+      var i = 0
+      while (i < slots) {
+        if (h(2 + 2 * i) > 0) { keys(k) = h(1 + 2 * i) ^ Long.MinValue; k += 1 }
+        i += 1
+      }
+      java.util.Arrays.sort(keys)
+      val out = new Array[Long](1 + 2 * n)
+      out(0) = ~n.toLong
+      k = 0
+      while (k < n) {
+        val u = keys(k) ^ Long.MinValue
+        out(1 + 2 * k) = u
+        out(2 + 2 * k) = h(2 + 2 * find(h, u))
+        k += 1
+      }
+      out
     }
-    out(0) = ~k.toLong
-    BitHistAgg.used(out)
-  }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(BitHistAgg.used(buf))
+  override def eval(buf: Array[Long]): Any = new GenericArrayData(sorted(buf))
 
   override def serialize(buf: Array[Long]): Array[Byte] = {
-    val used = BitHistAgg.used(buf)
-    val bb = ByteBuffer.allocate(used.length * 8)
-    used.foreach(bb.putLong)
+    val out = sorted(buf)
+    val bb = ByteBuffer.allocate(out.length * 8)
+    out.foreach(bb.putLong)
     bb.array()
   }
 
@@ -208,33 +217,29 @@ case class BitHistAgg(
 
 object BitHistAgg {
 
-  /** Most distinct keys the exact form holds: its header plus two longs
-    * per key stay below the dense form's 3×nBuckets longs. */
-  def exactCap(nBuckets: Int): Int = (3 * nBuckets - 1) / 2
+  /** Slots of the hashed exact form: its header plus two longs per slot
+    * stay below the dense form's 3×nBuckets longs. */
+  def slots(nBuckets: Int): Int = (3 * nBuckets - 1) / 2
 
-  /** True for the exact (key, weight) form, false for the dense histogram. */
+  /** Most distinct keys the exact form holds: three quarters of the
+    * slots, so a probe stays short. */
+  def exactCap(nBuckets: Int): Int = slots(nBuckets) * 3 / 4
+
+  /** True for an exact (key, weight) form, false for the dense histogram. */
   def isExact(h: Array[Long]): Boolean = h(0) < 0
 
   /** Number of (key, weight) pairs in an exact form. */
   def exactSize(h: Array[Long]): Int = (~h(0)).toInt
 
-  /** The state without an exact form's unused capacity. */
-  private def used(h: Array[Long]): Array[Long] =
-    if (isExact(h) && h.length > 1 + 2 * exactSize(h)) java.util.Arrays.copyOf(h, 1 + 2 * exactSize(h))
-    else h
+  /** True for the hashed exact form updates build; the sorted one that
+    * `eval` and `serialize` return has a clear bit 32 under its `~`. */
+  private def isHashed(h: Array[Long]): Boolean = isExact(h) && ((~h(0)) >>> 32) != 0
 
-  /** Binary search for key `u` among an exact form's n keys (unsigned
-    * order): its index, or `-(insertion point) - 1`. */
-  private def search(h: Array[Long], n: Int, u: Long): Int = {
-    var lo = 0
-    var hi = n - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val c = java.lang.Long.compareUnsigned(h(1 + 2 * mid), u)
-      if (c < 0) lo = mid + 1 else if (c > 0) hi = mid - 1 else return mid
-    }
-    -lo - 1
-  }
+  private def hashHeader(n: Int): Long = ~(n.toLong | (1L << 32))
+
+  /** Pair positions in an exact form: every slot of a hashed one (empty
+    * ones have weight 0), every pair of a sorted one. */
+  private def pairSlots(h: Array[Long]): Int = (h.length - 1) / 2
 
   /** Monotone bit image: unsigned order on the result == IEEE-754 total
     * order on the double (java.lang.Double.compare semantics). */

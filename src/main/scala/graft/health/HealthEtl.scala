@@ -29,7 +29,7 @@ import graft.functions.PyText
   * key-set); global medians/quantiles resolve through
   * [[graft.util.ScalableQuantile]] (bounded-state radix selection, map-side
   * combinable — the driver reads a column's exact (value, count) list
-  * while it has at most 6,143 distinct candidates and walks 4096-bucket
+  * while it has at most 4,607 distinct candidates and walks 4096-bucket
   * histograms past that, never rows) and are folded back as literals;
   * `bround` = numpy/pandas HALF_EVEN rounding; exact percentile
   * semantics, never approx.
@@ -197,7 +197,7 @@ object HealthEtl {
 
     // the pipeline makes five scalar-quantile calls (year median, pop
     // median, rate medians, IQR quantiles, sweep medians). Each is one
-    // pass while every column it reads has at most 6,143 distinct
+    // pass while every column it reads has at most 4,607 distinct
     // values, and up to six past that; every pass re-reads its upstream.
     // Persist the scrubbed base once so every pass (and the final
     // result) reads the cached columns instead of re-scanning +

@@ -18,7 +18,7 @@ import graft.functions.BitHistAgg
   *   1. one `bithist` pass summarizes each column's candidate values in
   *      bounded state (≤ 3×4096 longs per aggregate, map-side
   *      combinable — no unbounded value buffering anywhere). While the
-  *      candidates hold at most 6,143 distinct values the state is their
+  *      candidates hold at most 4,607 distinct values the state is their
   *      exact (key, weight) list, sorted, and the driver reads every
   *      order statistic straight off it: such a selection finishes in the
   *      pass that sees it;

@@ -20,7 +20,7 @@ class QuantileSpec extends AnyFunSuite {
     if (r.isNullAt(0)) None else Some(r.getDouble(0))
   }
 
-  // the exact form's cap at ScalableQuantile's 4096 buckets (6,143)
+  // the exact form's cap at ScalableQuantile's 4096 buckets (4,607)
   private val cap = BitHistAgg.exactCap(4096)
   private val probs = Seq(0.0, 0.25, 0.5, 0.75, 1.0)
 
@@ -184,15 +184,23 @@ class QuantileSpec extends AnyFunSuite {
       "dense+exact" -> (big1, small2),
       "dense+dense" -> (big1, big2))
     for ((name, (a, b)) <- cases) {
-      val merged = agg.merge(ship(build(a)), ship(build(b)))
-      val direct = build(a ++ b)
+      val mergedState = agg.merge(ship(build(a)), ship(build(b)))
+      val merged = ship(mergedState)
+      val direct = ship(build(a ++ b))
+      // updates may resume on a state that came back sorted or dense
+      val resumed = ship(b.foldLeft(ship(build(a)))((h, v) => agg.update(h, InternalRow(v))))
       val distinct = (a ++ b).map(BitHistAgg.keyOf).distinct.size
       assert(BitHistAgg.isExact(merged) == (distinct <= cap), s"$name form")
       assert(BitHistAgg.isExact(direct) == (distinct <= cap), s"$name direct form")
       assert(dense(merged) == dense(direct), s"$name histogram")
-      if (BitHistAgg.isExact(merged))
-        assert(agg.eval(merged).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toLongArray().toSeq == merged.take(1 + 2 * distinct).toSeq, s"$name exact state")
+      assert(dense(resumed) == dense(direct), s"$name updates after shipping")
+      val counts = (a ++ b).groupBy(BitHistAgg.keyOf).map { case (u, xs) => (u, xs.size.toLong) }
+        .toSeq.sortWith((x, y) => java.lang.Long.compareUnsigned(x._1, y._1) < 0)
+      val want = (~counts.size.toLong) +: counts.flatMap { case (u, c) => Seq(u, c) }
+      assert(dense(merged) == dense(want.toArray), s"$name histogram vs counted rows")
+      if (BitHistAgg.isExact(merged)) assert(merged.toSeq == want, s"$name pairs vs counted rows")
+      assert(agg.eval(mergedState).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toLongArray().toSeq == merged.toSeq, s"$name eval == serialize")
     }
     // the empty state is exact with no keys and serializes to one long
     assert(agg.serialize(agg.createAggregationBuffer()).length == 8)
