@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.{QueryDef, Tables}
 import graft.util.Exact._
+import graft.util.Overlap
 
 /** Scale techniques the judge's 100 TB scenario calls for, demonstrated
   * as oracle-checked operators:
@@ -97,20 +98,15 @@ object Bucketing {
       val p = new org.apache.hadoop.fs.Path(s"$warehouse/$t")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
-    // the two layout writes are independent — run them as concurrent
-    // jobs so one write's task tail back-fills the other (guide §2.6);
-    // j14's wall was the two writes run end-to-end
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val wo = Future(Tables.orders(spark, dir).write
-      .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-      .mode("overwrite").saveAsTable("b_orders"))
-    val wl = Future(Tables.lineitem(spark, dir).write
-      .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
-      .mode("overwrite").saveAsTable("b_lineitem"))
-    Await.result(wo, Duration.Inf); Await.result(wl, Duration.Inf)
+    // the two layout writes are independent (see graft.util.Overlap)
+    Overlap(spark) { o =>
+      o.fork(Tables.orders(spark, dir).write
+        .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
+        .mode("overwrite").saveAsTable("b_orders"))
+      Tables.lineitem(spark, dir).write
+        .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
+        .mode("overwrite").saveAsTable("b_lineitem")
+    }
   }
 
   /** The co-located join over the bucketed tables. */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.{QueryDef, Tables}
+import graft.util.{Overlap, Scratch}
 
 /** The capstone: ONE orchestrated corpus-build job composing the engine's
   * already-proven stage families end-to-end — the deliverable the solo
@@ -113,7 +114,7 @@ object CorpusBuild {
     // newlines under the legacy chunking conf — the exact corruption
     // this encoding exists to prevent.) doc_id and lang stay plain so
     // byte-range splits still cut on real row boundaries.
-    val scratch = graft.util.Scratch.dir("graft_ep01_")
+    val scratch = Scratch.dir("graft_ep01_")
     ingestRows
       .select(concat(col("doc_id").cast("string"), lit("\t"),
         col("lang"), lit("\t"),
@@ -803,11 +804,9 @@ object CorpusBuild {
                              packBudget: Long = 512L,
                              checkpoint: Option[String] = None,
                              reuseStore: Boolean = false): (DataFrame, String) = {
-    import java.nio.file.{Files, Paths}
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"))
-    val root = stateRoot.getOrElse(
-      Files.createTempDirectory("graft_st17_").toString)
+    val root = stateRoot.getOrElse(Scratch.dir("graft_st17_"))
     val stage = s"$root/stage"
     val store = s"$root/store"
     val acct = s"$root/acct"
@@ -819,62 +818,41 @@ object CorpusBuild {
     // contract/replay paths keep the idempotent overwrite
     val metaPath = new org.apache.hadoop.fs.Path(s"$store/corpus_meta")
     val metaFs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Setup concurrency (r15, guide §2.6): the store's corpus_meta
-    // build, the three wave stagings and the eval-gram table are
-    // mutually independent jobs previously run end-to-end; overlapping
-    // them back-fills each job's task tail. Each future is itself the
-    // exact job sequence the serial form ran (byte-identical outputs:
-    // same writes, same paths, same mtimes).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val metaF = Future {
-      if (!(reuseStore && metaFs.exists(metaPath)))
-        cleanColsOf(Tables.fanOut(base
-            .filter(col("doc_id") % 10 =!= 7 && col("doc_id") % 50 =!= 0),
-            spark, dir, "documents")
-            .withColumn("raw", col("text")))
-          .select(md5(lower(col("cleaned"))).as("fp"), col("lang"), col("n_tok"))
-          .write.mode("overwrite").parquet(s"$store/corpus_meta")
-      val cm = spark.read.parquet(s"$store/corpus_meta")
-      val off = cm.filter(col("lang") === "en" && col("n_tok") >= 50)
-        .agg(coalesce(sum(col("n_tok")), lit(0L)).as("off")).head().getLong(0)
-      (cm, off)
-    }
-    // ---- stage the arrival waves: one parquet file per wave, strictly
-    // increasing mtimes (FileStreamSource delivers in mtime order; the
-    // mtimes are SET explicitly after each move, so staging the three
-    // waves concurrently cannot reorder delivery) ----
-    val stageF = Future {
-      if (!Files.exists(Paths.get(stage))) {
-        Files.createDirectories(Paths.get(stage))
-        val waves = (0 until 3).map { wv => Future {
-          val tmp = Files.createTempDirectory("graft_st17_w_")
-          ep02ArrivalRows(base).filter(col("doc_id") % 3 === wv)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).toArray.map(_.toString)
-            .filter(_.endsWith(".parquet")).head
-          val target = Paths.get(stage, f"wave_$wv%02d.parquet")
-          Files.move(Paths.get(part), target)
-          Files.setLastModifiedTime(target,
-            java.nio.file.attribute.FileTime.fromMillis(1000000L + wv * 60000L))
-        }}
-        waves.foreach(Await.result(_, Duration.Inf))
+    val stageWaves = new java.io.File(stage).mkdirs() // false: already staged
+    // corpus_meta, the wave stagings and the index/eval-gram builds are
+    // independent (see graft.util.Overlap); each branch runs the serial jobs
+    val (meta, chosenR, evalGrams, corpusBands, corpusSets) = Overlap(spark) { o =>
+      val meta = o.fork {
+        if (!(reuseStore && metaFs.exists(metaPath)))
+          cleanColsOf(Tables.fanOut(base
+              .filter(col("doc_id") % 10 =!= 7 && col("doc_id") % 50 =!= 0),
+              spark, dir, "documents")
+              .withColumn("raw", col("text")))
+            .select(md5(lower(col("cleaned"))).as("fp"), col("lang"), col("n_tok"))
+            .write.mode("overwrite").parquet(s"$store/corpus_meta")
+        val cm = spark.read.parquet(s"$store/corpus_meta")
+        val off = cm.filter(col("lang") === "en" && col("n_tok") >= 50)
+          .agg(coalesce(sum(col("n_tok")), lit(0L)).as("off")).head().getLong(0)
+        (cm, off)
       }
+      // ---- the arrival waves: one parquet file per wave, strictly
+      // increasing mtimes (FileStreamSource delivers in mtime order; the
+      // mtimes are SET explicitly, so staging the three waves
+      // concurrently cannot reorder delivery) ----
+      if (stageWaves) for (wv <- 0 until 3) o.fork {
+        Scratch.oneFile(ep02ArrivalRows(base).filter(col("doc_id") % 3 === wv),
+          f"$stage/wave_$wv%02d.parquet", 1000000L + wv * 60000L)
+      }
+      // the memoized stored-index builds (one-time per corpus per JVM)
+      val idx = Dedup.neutralLshIndex(spark, dir)
+      val chosenR = Dedup.chosenRowsPerBand(spark, dir)
+      (meta, chosenR, evalGramRows(base).localCheckpoint(false),
+        Dedup.sigBandsAt(spark, dir, chosenR)
+          .filter(col("doc_id") % 10 =!= 7 && col("doc_id") % 50 =!= 0)
+          .select(col("doc_id").as("cid"), explode(col("bands")).as("bk")),
+        spark.read.parquet(s"$idx/sets"))
     }
-    // the memoized stored-index builds (one-time per corpus per JVM)
-    // and the eval-gram table run on the main thread while the two
-    // futures above fill the cluster
-    val idx = Dedup.neutralLshIndex(spark, dir)
-    val chosenR = Dedup.chosenRowsPerBand(spark, dir)
-    val evalGrams = evalGramRows(base).localCheckpoint(false)
-    val corpusBands = Dedup.sigBandsAt(spark, dir, chosenR)
-      .filter(col("doc_id") % 10 =!= 7 && col("doc_id") % 50 =!= 0)
-      .select(col("doc_id").as("cid"), explode(col("bands")).as("bk"))
-    val corpusSets = spark.read.parquet(s"$idx/sets")
-    val (corpusMeta, poff) = Await.result(metaF, Duration.Inf)
-    Await.result(stageF, Duration.Inf)
+    val (corpusMeta, poff) = meta.join()
 
     def earlier(kind: String, bid: Long): Option[DataFrame] = {
       val dirs = (0L until bid).map(i => s"$store/$kind/b$i").filter { d =>
@@ -889,7 +867,7 @@ object CorpusBuild {
       .option("maxFilesPerTrigger", "1").parquet(stage)
       .writeStream
       .option("checkpointLocation",
-        checkpoint.getOrElse(Files.createTempDirectory("graft_st17_ckpt_").toString))
+        checkpoint.getOrElse(Scratch.dir("graft_st17_ckpt_")))
       .foreachBatch { (wave: DataFrame, bid: Long) =>
         // The wave LABEL is carried by the DATA (wave = doc_id mod 3 by
         // staging construction), never by the micro-batch id (ADVICE
@@ -900,18 +878,16 @@ object CorpusBuild {
         // the thing being keyed on. One 1-row aggregate per batch;
         // empty-batch fallback keeps the bid label.
         //
-        // Optimization r14 (guide §1.2/§2.4/§2.6 — this query was the
+        // Optimization r14 (guide §1.2/§2.4 — this query was the
         // fleet's #1 wall at 15.4 s with 187 driver jobs): the stage
         // chain is now carried as PER-DOC FLAGS on two checkpointed
         // frames instead of eight checkpointed stage frames, the wave's
         // signatures are computed ONCE (the old body signed the wave
         // twice: batchSig over s5 + the seen_sigs store write over w),
         // the ten union-branch funnel aggregates collapse into ONE
-        // aggregate + a stack(), and the four independent per-batch
-        // store writes run concurrently (guide §2.6 — independent jobs
-        // back-fill each other's task tails). Stage predicates are
-        // byte-identical to the old chain; the funnel parquet a
-        // replayed batch rewrites is byte-identical (Round12OpsSpec).
+        // aggregate + a stack(). Stage predicates are byte-identical to
+        // the old chain; the funnel parquet a replayed batch rewrites is
+        // byte-identical (Round12OpsSpec).
         val waveId = wave.agg(coalesce(min(pmod(col("doc_id"), lit(3))),
           lit(bid))).head().getLong(0).toInt
         // adaptive wave fan-out: a staged wave arrives as ONE file (one
@@ -927,175 +903,158 @@ object CorpusBuild {
           .select(col("doc_id"), col("lang"), col("n_tok0"),
             col("cleaned"), col("n_tok"))
           .localCheckpoint(true)
-        // r15 (guide §2.6): each store write launches the moment its
-        // (checkpointed) input exists instead of queueing behind the
-        // whole gate chain — seen_fps needs only `w`, seen_sigs only
-        // `sigAll`, so both overlap the batch's remaining jobs; the
-        // funnel/wave_mass writes still launch last and everything is
-        // awaited before the batch commits (the replay fence is the
-        // foreachBatch return, unchanged)
-        val writeEc: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        val wFpsWrite = scala.concurrent.Future(
-          w.select(md5(lower(col("cleaned"))).as("fp"))
-            .write.mode("overwrite").parquet(s"$store/seen_fps/b$bid"))(writeEc)
-        // one sig pass per wave, shared by the near-dup probe (p5 subset)
-        // and the seen_sigs store write (all wave docs)
-        val sigAll = Dedup.inPlanSigAndSets(
-          w.select(col("doc_id"), col("cleaned").as("text")), chosenR)
-          .localCheckpoint(true)
-        val wSigsWrite = scala.concurrent.Future(
-          sigAll.write.mode("overwrite")
-            .parquet(s"$store/seen_sigs/b$bid"))(writeEc)
-        // flags frame 1: clean/langid/length gates + exact dedup within
-        // the wave (rn among p3 docs of the same fp) + vs the store
-        val seenFps = earlier("seen_fps", bid)
-          .map(corpusMeta.select(col("fp")).unionByName(_))
-          .getOrElse(corpusMeta.select(col("fp")))
-        val wFlag = w
-          .withColumn("p3", col("lang") === "en" && col("n_tok") >= 50)
-          .withColumn("fp", md5(lower(col("cleaned"))))
-        val wFp = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val f1 = wFlag
-          .withColumn("rn3", sum(when(col("p3"), 1L).otherwise(0L)).over(wFp))
-          .withColumn("p4", col("p3") && col("rn3") === 1L)
-        val batchFps = f1.filter(col("p4")).select(col("fp")).distinct()
-        val fpHits = seenFps.join(broadcast(batchFps), Seq("fp"), "left_semi")
-          .select(col("fp")).distinct().withColumn("hit5", lit(true))
-        val frame1 = f1.join(broadcast(fpHits), Seq("fp"), "left")
-          .withColumn("p5", col("p4") && col("hit5").isNull)
-          .select(col("doc_id"), col("lang"), col("n_tok0"), col("n_tok"),
-            col("cleaned"), col("p3"), col("p4"), col("p5"))
-          .localCheckpoint(true)
-        // near-dup probe: stored corpus index ∪ seen-wave signatures,
-        // batch side = sigAll restricted to p5 survivors
-        val p5Ids = frame1.filter(col("p5")).select(col("doc_id"))
-        val batchSig = sigAll.join(broadcast(p5Ids), Seq("doc_id"), "left_semi")
-        val batchBands = batchSig
-          .select(col("doc_id").as("bid"), explode(col("bands")).as("bk"))
-        val seenSig = earlier("seen_sigs", bid)
-        val rhsBands = seenSig
-          .map(ss => corpusBands.unionByName(
-            ss.select(col("doc_id").as("cid"), explode(col("bands")).as("bk"))))
-          .getOrElse(corpusBands)
-        val rhsSets = seenSig
-          .map(ss => corpusSets.unionByName(ss.select(col("doc_id"), col("hs"))))
-          .getOrElse(corpusSets)
-        // r15 (guide §3.1/§2.4): the candidate pair list is batch-
-        // bounded (the incremental premise), so it BROADCASTS into the
-        // stored-sets scan and the batch signatures broadcast on top —
-        // the verify is two map-side hash joins over one rhsSets pass.
-        // The old form checkpointed cand (one extra job), built a
-        // second broadcast (candIds) to slim the sets, then ran two
-        // shuffle joins; rows produced are identical (inner joins on
-        // the same keys, same filter). cand itself now has a single
-        // consumer, so the checkpoint is gone.
-        val cand = rhsBands.join(broadcast(batchBands), Seq("bk"))
-          .select(col("bid"), col("cid")).distinct()
-        val nearDrops = rhsSets
-          .select(col("doc_id").as("cid"), col("hs").as("hc"))
-          .join(broadcast(cand), Seq("cid"))
-          .join(broadcast(batchSig
-            .select(col("doc_id").as("bid"), col("hs").as("hb"))), Seq("bid"))
-          .withColumn("inter",
-            expr("CAST(sorted_intersect_count(hb, hc) AS DOUBLE)"))
-          .filter(col("inter") /
-            (size(col("hb")) + size(col("hc")) - col("inter")).cast("double")
-            >= 0.8)
-          .select(col("bid").as("doc_id")).distinct()
-          .withColumn("nd", lit(true))
-        // flags frame 2: near-dup, decontam, quality — each former
-        // inner-join-then-filter becomes a left join + null-safe flag
-        // (the old inner joins kept exactly the rows the flag keeps:
-        // overlap/qstats emit a row for every surviving doc by
-        // construction, so `isNotNull` guards change nothing)
-        val f2 = frame1.join(nearDrops, Seq("doc_id"), "left")
-          .withColumn("p6", col("p5") && col("nd").isNull)
-        val grams3 = expr(
-          "transform(sequence(1, size(w) - 2), i -> array_join(slice(w, i, 3), ' '))")
-        val overlap = f2.filter(col("p6"))
-          .withColumn("w", split(lower(col("cleaned")), "\\s+"))
-          .filter(size(col("w")) >= 3)
-          .select(col("doc_id"), explode(grams3).as("gram"))
-          .join(broadcast(evalGrams), Seq("gram"), "left")
-          .groupBy(col("doc_id"))
-          .agg(countDistinct(col("gram")).as("own"),
-            countDistinct(when(col("hit"), col("gram"))).as("shared"))
-        val f3 = f2.join(overlap, Seq("doc_id"), "left")
-          .withColumn("p7",
-            col("p6") && col("own").isNotNull && col("shared") * 2 < col("own"))
-        val qstats = f3.filter(col("p7"))
-          .select(col("doc_id"),
-            explode(split(lower(col("cleaned")), "\\s+")).as("w"))
-          .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-          .groupBy(col("doc_id"))
-          .agg(sum(col("tf")).as("nt"), max(col("tf")).as("mx"))
-        val frame2 = f3.join(qstats, Seq("doc_id"), "left")
-          .withColumn("p8", col("p7") && col("nt").isNotNull &&
-            !(col("nt") < 10) && !(col("mx") * 5 > col("nt")))
-          .select(col("doc_id"), col("n_tok0"), col("n_tok"), col("lang"),
-            col("p3"), col("p4"), col("p5"), col("p6"), col("p7"), col("p8"))
-          .localCheckpoint(true)
-        val s8 = frame2.filter(col("p8")).select(col("doc_id"), col("n_tok"))
-        // r15 (guide §2.4/§5): the pack offset rides the plan as a
-        // broadcast 1-row aggregate (ep02's packedOffset pattern)
-        // instead of a blocking driver head() per batch — same value,
-        // one fewer sequential driver job in the batch chain
-        val offAgg = earlier("wave_mass", bid)
-          .map(_.agg((lit(poff) + coalesce(sum(col("mass")), lit(0L))).as("off")))
-          .getOrElse(spark.range(1).select(lit(poff).as("off")))
-        val packed = ScaleOps.prefixSum(s8, Seq("doc_id"), "n_tok", "cum")
-          .crossJoin(broadcast(offAgg))
-          .select(expr(s"(off + cum - n_tok) div $packBudget").as("pack_id"),
-            col("n_tok"))
+        // the four store writes overlap the batch (see graft.util.Overlap):
+        // each launches as soon as its checkpointed input exists, and the
+        // scope joins them all before the batch returns (the replay fence)
+        // or fails
+        Overlap(spark) { o =>
+          o.fork(w.select(md5(lower(col("cleaned"))).as("fp"))
+            .write.mode("overwrite").parquet(s"$store/seen_fps/b$bid"))
+          // one sig pass per wave, shared by the near-dup probe (p5 subset)
+          // and the seen_sigs store write (all wave docs)
+          val sigAll = Dedup.inPlanSigAndSets(
+            w.select(col("doc_id"), col("cleaned").as("text")), chosenR)
+            .localCheckpoint(true)
+          o.fork(sigAll.write.mode("overwrite").parquet(s"$store/seen_sigs/b$bid"))
+          // flags frame 1: clean/langid/length gates + exact dedup within
+          // the wave (rn among p3 docs of the same fp) + vs the store
+          val seenFps = earlier("seen_fps", bid)
+            .map(corpusMeta.select(col("fp")).unionByName(_))
+            .getOrElse(corpusMeta.select(col("fp")))
+          val wFlag = w
+            .withColumn("p3", col("lang") === "en" && col("n_tok") >= 50)
+            .withColumn("fp", md5(lower(col("cleaned"))))
+          val wFp = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+          val f1 = wFlag
+            .withColumn("rn3", sum(when(col("p3"), 1L).otherwise(0L)).over(wFp))
+            .withColumn("p4", col("p3") && col("rn3") === 1L)
+          val batchFps = f1.filter(col("p4")).select(col("fp")).distinct()
+          val fpHits = seenFps.join(broadcast(batchFps), Seq("fp"), "left_semi")
+            .select(col("fp")).distinct().withColumn("hit5", lit(true))
+          val frame1 = f1.join(broadcast(fpHits), Seq("fp"), "left")
+            .withColumn("p5", col("p4") && col("hit5").isNull)
+            .select(col("doc_id"), col("lang"), col("n_tok0"), col("n_tok"),
+              col("cleaned"), col("p3"), col("p4"), col("p5"))
+            .localCheckpoint(true)
+          // near-dup probe: stored corpus index ∪ seen-wave signatures,
+          // batch side = sigAll restricted to p5 survivors
+          val p5Ids = frame1.filter(col("p5")).select(col("doc_id"))
+          val batchSig = sigAll.join(broadcast(p5Ids), Seq("doc_id"), "left_semi")
+          val batchBands = batchSig
+            .select(col("doc_id").as("bid"), explode(col("bands")).as("bk"))
+          val seenSig = earlier("seen_sigs", bid)
+          val rhsBands = seenSig
+            .map(ss => corpusBands.unionByName(
+              ss.select(col("doc_id").as("cid"), explode(col("bands")).as("bk"))))
+            .getOrElse(corpusBands)
+          val rhsSets = seenSig
+            .map(ss => corpusSets.unionByName(ss.select(col("doc_id"), col("hs"))))
+            .getOrElse(corpusSets)
+          // r15 (guide §3.1/§2.4): the candidate pair list is batch-
+          // bounded (the incremental premise), so it BROADCASTS into the
+          // stored-sets scan and the batch signatures broadcast on top —
+          // the verify is two map-side hash joins over one rhsSets pass.
+          // The old form checkpointed cand (one extra job), built a
+          // second broadcast (candIds) to slim the sets, then ran two
+          // shuffle joins; rows produced are identical (inner joins on
+          // the same keys, same filter). cand itself now has a single
+          // consumer, so the checkpoint is gone.
+          val cand = rhsBands.join(broadcast(batchBands), Seq("bk"))
+            .select(col("bid"), col("cid")).distinct()
+          val nearDrops = rhsSets
+            .select(col("doc_id").as("cid"), col("hs").as("hc"))
+            .join(broadcast(cand), Seq("cid"))
+            .join(broadcast(batchSig
+              .select(col("doc_id").as("bid"), col("hs").as("hb"))), Seq("bid"))
+            .withColumn("inter",
+              expr("CAST(sorted_intersect_count(hb, hc) AS DOUBLE)"))
+            .filter(col("inter") /
+              (size(col("hb")) + size(col("hc")) - col("inter")).cast("double")
+              >= 0.8)
+            .select(col("bid").as("doc_id")).distinct()
+            .withColumn("nd", lit(true))
+          // flags frame 2: near-dup, decontam, quality — each former
+          // inner-join-then-filter becomes a left join + null-safe flag
+          // (the old inner joins kept exactly the rows the flag keeps:
+          // overlap/qstats emit a row for every surviving doc by
+          // construction, so `isNotNull` guards change nothing)
+          val f2 = frame1.join(nearDrops, Seq("doc_id"), "left")
+            .withColumn("p6", col("p5") && col("nd").isNull)
+          val grams3 = expr(
+            "transform(sequence(1, size(w) - 2), i -> array_join(slice(w, i, 3), ' '))")
+          val overlap = f2.filter(col("p6"))
+            .withColumn("w", split(lower(col("cleaned")), "\\s+"))
+            .filter(size(col("w")) >= 3)
+            .select(col("doc_id"), explode(grams3).as("gram"))
+            .join(broadcast(evalGrams), Seq("gram"), "left")
+            .groupBy(col("doc_id"))
+            .agg(countDistinct(col("gram")).as("own"),
+              countDistinct(when(col("hit"), col("gram"))).as("shared"))
+          val f3 = f2.join(overlap, Seq("doc_id"), "left")
+            .withColumn("p7",
+              col("p6") && col("own").isNotNull && col("shared") * 2 < col("own"))
+          val qstats = f3.filter(col("p7"))
+            .select(col("doc_id"),
+              explode(split(lower(col("cleaned")), "\\s+")).as("w"))
+            .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
+            .groupBy(col("doc_id"))
+            .agg(sum(col("tf")).as("nt"), max(col("tf")).as("mx"))
+          val frame2 = f3.join(qstats, Seq("doc_id"), "left")
+            .withColumn("p8", col("p7") && col("nt").isNotNull &&
+              !(col("nt") < 10) && !(col("mx") * 5 > col("nt")))
+            .select(col("doc_id"), col("n_tok0"), col("n_tok"), col("lang"),
+              col("p3"), col("p4"), col("p5"), col("p6"), col("p7"), col("p8"))
+            .localCheckpoint(true)
+          val s8 = frame2.filter(col("p8")).select(col("doc_id"), col("n_tok"))
+          // r15 (guide §2.4/§5): the pack offset rides the plan as a
+          // broadcast 1-row aggregate (ep02's packedOffset pattern)
+          // instead of a blocking driver head() per batch — same value,
+          // one fewer sequential driver job in the batch chain
+          val offAgg = earlier("wave_mass", bid)
+            .map(_.agg((lit(poff) + coalesce(sum(col("mass")), lit(0L))).as("off")))
+            .getOrElse(spark.range(1).select(lit(poff).as("off")))
+          val packed = ScaleOps.prefixSum(s8, Seq("doc_id"), "n_tok", "cum")
+            .crossJoin(broadcast(offAgg))
+            .select(expr(s"(off + cum - n_tok) div $packBudget").as("pack_id"),
+              col("n_tok"))
 
-        // the 10-stage funnel as ONE aggregate over the flag frame
-        // (stage 9 keeps its own distinct-count over the packed frame)
-        def cnt(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = coalesce(sum(when(c, 1L)), lit(0L))
-        def tok(c: org.apache.spark.sql.Column, t: String): org.apache.spark.sql.Column =
-          coalesce(sum(when(c, col(t))), lit(0L)).cast(LongType)
-        val all = lit(true)
-        val g = frame2.agg(
-          cnt(all).as("n0"), tok(all, "n_tok0").as("t0"),
-          cnt(all).as("n1"), tok(all, "n_tok").as("t1"),
-          cnt(col("lang") === "en").as("n2"), tok(col("lang") === "en", "n_tok").as("t2"),
-          cnt(col("p3")).as("n3"), tok(col("p3"), "n_tok").as("t3"),
-          cnt(col("p4")).as("n4"), tok(col("p4"), "n_tok").as("t4"),
-          cnt(col("p5")).as("n5"), tok(col("p5"), "n_tok").as("t5"),
-          cnt(col("p6")).as("n6"), tok(col("p6"), "n_tok").as("t6"),
-          cnt(col("p7")).as("n7"), tok(col("p7"), "n_tok").as("t7"),
-          cnt(col("p8")).as("n8"), tok(col("p8"), "n_tok").as("t8"))
-        val funnel = g.selectExpr(
-          s"""stack(9,
-             |'0_arrivals', n0, t0, '1_clean', n1, t1, '2_langid', n2, t2,
-             |'3_length', n3, t3, '4_dedup_batch', n4, t4,
-             |'5_dedup_store', n5, t5, '6_neardup_store', n6, t6,
-             |'7_decontam', n7, t7, '8_quality', n8, t8)
-             |AS (stage, n_docs, n_tokens)""".stripMargin)
-          .select(lit(waveId).as("wave"), col("stage"),
-            col("n_docs"), col("n_tokens"))
-          .unionByName(packed
-            .agg(countDistinct(col("pack_id")).as("n_docs"),
-              coalesce(sum(col("n_tok")), lit(0L)).cast(LongType).as("n_tokens"))
-            .select(lit(waveId).as("wave"), lit("9_appended").as("stage"),
-              col("n_docs"), col("n_tokens")))
-        // every write below is per-batchId + overwrite: a replayed batch
-        // rewrites its own directories byte-identically (st16 discipline);
-        // the four writes are independent (all inputs checkpointed), so
-        // they run concurrently (guide §2.6)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext = writeEc
-        val writes = Seq(
-          Future(funnel.coalesce(1).write.mode("overwrite")
-            .parquet(s"$acct/b$bid")),
-          wFpsWrite,  // launched right after `w` materialized
-          wSigsWrite, // launched right after `sigAll` materialized
-          Future(s8.agg(coalesce(sum(col("n_tok")), lit(0L)).as("mass"))
-            .write.mode("overwrite").parquet(s"$store/wave_mass/b$bid")))
-        writes.foreach(Await.result(_, Duration.Inf))
-        ()
+          // the 10-stage funnel as ONE aggregate over the flag frame
+          // (stage 9 keeps its own distinct-count over the packed frame)
+          def cnt(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = coalesce(sum(when(c, 1L)), lit(0L))
+          def tok(c: org.apache.spark.sql.Column, t: String): org.apache.spark.sql.Column =
+            coalesce(sum(when(c, col(t))), lit(0L)).cast(LongType)
+          val all = lit(true)
+          val g = frame2.agg(
+            cnt(all).as("n0"), tok(all, "n_tok0").as("t0"),
+            cnt(all).as("n1"), tok(all, "n_tok").as("t1"),
+            cnt(col("lang") === "en").as("n2"), tok(col("lang") === "en", "n_tok").as("t2"),
+            cnt(col("p3")).as("n3"), tok(col("p3"), "n_tok").as("t3"),
+            cnt(col("p4")).as("n4"), tok(col("p4"), "n_tok").as("t4"),
+            cnt(col("p5")).as("n5"), tok(col("p5"), "n_tok").as("t5"),
+            cnt(col("p6")).as("n6"), tok(col("p6"), "n_tok").as("t6"),
+            cnt(col("p7")).as("n7"), tok(col("p7"), "n_tok").as("t7"),
+            cnt(col("p8")).as("n8"), tok(col("p8"), "n_tok").as("t8"))
+          val funnel = g.selectExpr(
+            s"""stack(9,
+               |'0_arrivals', n0, t0, '1_clean', n1, t1, '2_langid', n2, t2,
+               |'3_length', n3, t3, '4_dedup_batch', n4, t4,
+               |'5_dedup_store', n5, t5, '6_neardup_store', n6, t6,
+               |'7_decontam', n7, t7, '8_quality', n8, t8)
+               |AS (stage, n_docs, n_tokens)""".stripMargin)
+            .select(lit(waveId).as("wave"), col("stage"),
+              col("n_docs"), col("n_tokens"))
+            .unionByName(packed
+              .agg(countDistinct(col("pack_id")).as("n_docs"),
+                coalesce(sum(col("n_tok")), lit(0L)).cast(LongType).as("n_tokens"))
+              .select(lit(waveId).as("wave"), lit("9_appended").as("stage"),
+                col("n_docs"), col("n_tokens")))
+          // every write is per-batchId + overwrite: a replayed batch
+          // rewrites its own directories byte-identically (st16 discipline)
+          o.fork(funnel.coalesce(1).write.mode("overwrite").parquet(s"$acct/b$bid"))
+          s8.agg(coalesce(sum(col("n_tok")), lit(0L)).as("mass"))
+            .write.mode("overwrite").parquet(s"$store/wave_mass/b$bid")
+        }
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -1123,8 +1082,7 @@ object CorpusBuild {
     * pays — not the r12 probe's staging-tagged full-demo number.
     */
   private[graft] def st17PrepareMarginal(spark: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_st17_marg_").toString
+    val root = Scratch.dir("graft_st17_marg_")
     st17Run(spark, dir, Some(root), checkpoint = Some(s"$root/ckpt"))
       ._1.queryExecution.toRdd.count()
     val base = Tables.documents(spark, dir)
@@ -1138,14 +1096,7 @@ object CorpusBuild {
     val wave3 = ep02ArrivalRows(base).filter(col("doc_id") % 3 === 0)
       .select((col("doc_id") + off).as("doc_id"), col("lang"),
         expr(s"translate(raw, '$src', '$dst')").as("raw"))
-    val tmp = Files.createTempDirectory("graft_st17_w3_")
-    wave3.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).toArray.map(_.toString)
-      .filter(_.endsWith(".parquet")).head
-    val target = Paths.get(s"$root/stage", "wave_03.parquet")
-    Files.move(Paths.get(part), target)
-    Files.setLastModifiedTime(target,
-      java.nio.file.attribute.FileTime.fromMillis(1000000L + 3 * 60000L))
+    Scratch.oneFile(wave3, s"$root/stage/wave_03.parquet", 1000000L + 3 * 60000L)
     root
   }
 

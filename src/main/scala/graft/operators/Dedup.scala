@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.util.Scratch
 
 /** Near-duplicate detection for training-data pipelines, over `documents`
   * and `embeddings`. Four methods, each with the scale-correct Spark shape:
@@ -798,7 +799,7 @@ object Dedup {
   // stored index exactly like it invalidates the schema cache
   private[operators] def neutralLshIndex(spark: SparkSession, dir: String): String =
     neutralIdxCache.computeIfAbsent(Tables.artifactKey(dir, "documents"), _ => {
-      val idx = graft.util.Scratch.dir("graft_lsh_idx_")
+      val idx = Scratch.dir("graft_lsh_idx_")
       // the shingle explode + per-shingle md5 dominates the build; pay it
       // ONCE — all three aggregates below read the materialized rows
       val sh = neutralShingleRows(Tables.documents(spark, dir)).localCheckpoint()
@@ -1829,30 +1830,20 @@ object Dedup {
     * persistent LSH index, and each ingest batch is one bounded probe.
     */
   def streamingIngestDedup(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val stage = Files.createTempDirectory("graft_ingest_src_")
-    for (wv <- 0 until 3) {
-      val tmp = Files.createTempDirectory("graft_ingest_w_")
-      Tables.documents(spark, dir).filter(col("doc_id") % 3 === wv)
-        .select("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      val target = stage.resolve(f"wave_$wv%02d.parquet")
-      Files.move(Paths.get(part), target)
-      Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + wv * 60000L))
-    }
-    val store = Files.createTempDirectory("graft_ingest_store_").toString
-    val acct = Files.createTempDirectory("graft_ingest_acct_").toString
+    val stage = Scratch.dir("graft_ingest_src_")
+    for (wv <- 0 until 3)
+      Scratch.oneFile(Tables.documents(spark, dir).filter(col("doc_id") % 3 === wv)
+        .select("doc_id", "text"), f"$stage/wave_$wv%02d.parquet", 1000000L + wv * 60000L)
+    val store = Scratch.dir("graft_ingest_store_")
+    val acct = Scratch.dir("graft_ingest_acct_")
     def existing(path: String): Option[DataFrame] = {
       val hp = new org.apache.hadoop.fs.Path(path)
       if (hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp))
         Some(spark.read.parquet(s"$path/*")) else None
     }
-    val schema = spark.read.parquet(stage.resolve("wave_00.parquet").toString).schema
+    val schema = spark.read.parquet(s"$stage/wave_00.parquet").schema
     val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage.toString)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
       .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val sh = wordBigramRows(batch).localCheckpoint(true)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.{QueryDef, Tables}
+import graft.util.Overlap
 
 /** Physical-layout and skew tooling — the queries an operator of a
   * 100 TB lake runs to DECIDE how to lay data out and when to salt,
@@ -1030,18 +1031,10 @@ object ScaleDiag {
           if (corruptSummary) col("cents") + when(col("status") === "F", 1L).otherwise(0L)
           else col("cents"))
       // the two staged writes are independent of each other (the txn
-      // only needs both staged before the audit) — run them as
-      // concurrent jobs so one write's task tail back-fills the other
-      // (guide §2.6); l12's three attempts are driver-job-bound at
-      // bench scale, ~10 sequential jobs before this
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        val wf = Future(fact.repartition(2).write.mode("append").parquet(factDir.toString))
-        val ws = Future(summary.coalesce(1).write.mode("append").parquet(sumDir.toString))
-        Await.result(wf, Duration.Inf); Await.result(ws, Duration.Inf)
+      // only needs both staged before the audit; see graft.util.Overlap)
+      Overlap(spark) { o =>
+        o.fork(fact.repartition(2).write.mode("append").parquet(factDir.toString))
+        summary.coalesce(1).write.mode("append").parquet(sumDir.toString)
       }
       val stagedF = (listing(factDir) -- beforeF).toSeq.sorted
       val stagedS = (listing(sumDir) -- beforeS).toSeq.sorted

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.{QueryDef, Tables}
 import graft.util.Exact._
+import graft.util.{Overlap, Scratch}
 
 /** Structured Streaming surface over the `events` table. The reference
   * has no streams (SURVEY §2.5 — "Real-time insights" means interactive
@@ -145,14 +146,7 @@ object EventStream {
     */
   def streamingTumblingCounts(spark: SparkSession, dir: String,
                               queryName: String = "st_tumbling"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the file stream source requires a DIRECTORY; stage the single
-    // events.parquet file into a temp dir via symlink (no data copy)
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_stream_")
-    java.nio.file.Files.createSymbolicLink(
-      stageDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val src = eventsStream(spark, stageDir.toString)
+    val src = eventsStream(spark, Scratch.linked("graft_stream_", dir, "events.parquet"))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), exactSum(col("value")).as("sum_value"))
@@ -179,14 +173,9 @@ object EventStream {
     */
   def streamingStaticJoin(spark: SparkSession, dir: String,
                           queryName: String = "st_enrich"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_enrich_")
-    java.nio.file.Files.createSymbolicLink(
-      stageDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
     val dim = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val src = eventsStream(spark, stageDir.toString)
+    val src = eventsStream(spark, Scratch.linked("graft_enrich_", dir, "events.parquet"))
       .join(dim, col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"), exactSum(col("value")).as("sum_value"))
@@ -216,7 +205,6 @@ object EventStream {
     */
   def streamingUpsertSink(spark: SparkSession, srcDir: String,
                           target: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("us").desc, col("event_id").desc)
@@ -274,12 +262,7 @@ object EventStream {
     */
   def streamingDedupBounded(spark: SparkSession, dir: String,
                             queryName: String = "st_dedup_bounded"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_dedup_")
-    java.nio.file.Files.createSymbolicLink(
-      stageDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val src = eventsStream(spark, stageDir.toString)
+    val src = eventsStream(spark, Scratch.linked("graft_dedup_", dir, "events.parquet"))
       .withColumn("tsc", col("ts"))
       .withWatermark("tsc", "24 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
@@ -339,12 +322,7 @@ object EventStream {
   def statefulUserStats(spark: SparkSession, dir: String,
                         queryName: String = "st_user_state"): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_state_")
-    java.nio.file.Files.createSymbolicLink(
-      stageDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val updates = eventsStream(spark, stageDir.toString)
+    val updates = eventsStream(spark, Scratch.linked("graft_state_", dir, "events.parquet"))
       .selectExpr("user_id", "CAST(round(value * 100) AS BIGINT) AS cents")
       .as[(Long, Long)]
       .groupByKey(_._1)
@@ -394,16 +372,11 @@ object EventStream {
                      gapHours: Int = 6,
                      queryName: String = "st_flat_sessions"): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val gapUs = gapHours * 3600L * 1000000L
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_sess_")
-    java.nio.file.Files.createSymbolicLink(
-      stageDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
     // the watermarked column (`tsc`) must SURVIVE the projection feeding
     // the stateful operator — EventTimeTimeout resolves its event-time
     // attribute from the child plan, and dropping it fails analysis
-    val sessions = eventsStream(spark, stageDir.toString)
+    val sessions = eventsStream(spark, Scratch.linked("graft_sess_", dir, "events.parquet"))
       .withColumn("tsc", col("ts"))
       .withWatermark("tsc", "0 seconds")
       .selectExpr("user_id", "tsc", "unix_micros(tsc) AS us",
@@ -563,12 +536,8 @@ object EventStream {
 
   def streamingFirstTouch(spark: SparkSession, dir: String,
                           queryName: String = "st_first_touch"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_ft_")
-    java.nio.file.Files.createSymbolicLink(
-      stageDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val firsts = firstTouchUpdates(spark, eventsStream(spark, stageDir.toString))
+    val firsts = firstTouchUpdates(spark,
+      eventsStream(spark, Scratch.linked("graft_ft_", dir, "events.parquet")))
     val q = firsts.toDF().writeStream
       .format("memory").queryName(queryName).outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -633,12 +602,8 @@ object EventStream {
     */
   def streamingAttributionJoin(spark: SparkSession, dir: String,
                                queryName: String = "st_attrib"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_stream_")
-    java.nio.file.Files.createSymbolicLink(
-      stageDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    def src() = eventsStream(spark, stageDir.toString)
+    val stageDir = Scratch.linked("graft_stream_", dir, "events.parquet")
+    def src() = eventsStream(spark, stageDir)
       .withColumn("tsc", col("ts"))
     val clicks = src().filter(col("event_type") === "click")
       .select(col("user_id"), col("tsc").as("click_ts"),
@@ -709,16 +674,13 @@ object EventStream {
     * the two sinks.
     */
   def streamingQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_gate_")
-    java.nio.file.Files.createSymbolicLink(
-      stageDir.resolve("documents.parquet"),
-      java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    val out = java.nio.file.Files.createTempDirectory("graft_gate_out_").toString
+    val stageDir = Scratch.linked("graft_gate_", dir, "documents.parquet")
+    val out = Scratch.dir("graft_gate_out_")
     val docsSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val q = gated(spark.readStream.schema(docsSchema).parquet(stageDir.toString))
+    val q = gated(spark.readStream.schema(docsSchema).parquet(stageDir))
       .select(col("doc_id"), col("source"), col("verdict"))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -802,12 +764,8 @@ object EventStream {
     */
   def streamingUnattributedClicks(spark: SparkSession, dir: String,
                                   queryName: String = "st_unattrib"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_stream_")
-    java.nio.file.Files.createSymbolicLink(
-      stageDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    def src() = eventsStream(spark, stageDir.toString)
+    val stageDir = Scratch.linked("graft_stream_", dir, "events.parquet")
+    def src() = eventsStream(spark, stageDir)
       .withColumn("tsc", col("ts"))
     val clicks = src().filter(col("event_type") === "click")
       .select(col("user_id"), col("tsc").as("click_ts"),
@@ -941,24 +899,17 @@ object EventStream {
     */
   def streamingRedeliveryDedup(spark: SparkSession, dir: String,
                                queryName: String = "st_redeliver"): DataFrame = {
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_redeliver_").toString
     val base = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-    base.coalesce(1).write.mode("overwrite").parquet(s"$stageDir/b1")
-    base.filter(col("event_id") % 7 === 0)
-      .coalesce(1).write.mode("overwrite").parquet(s"$stageDir/b2")
     // one flat dir of data files for the file source, original first
-    val flat = java.nio.file.Files.createTempDirectory("graft_redeliver_src_")
-    Seq("b1" -> "0_original.parquet", "b2" -> "1_redelivered.parquet").foreach {
-      case (sub, name) =>
-        val part = new java.io.File(s"$stageDir/$sub").listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.createSymbolicLink(flat.resolve(name), part.toPath)
-    }
+    val flat = Scratch.dir("graft_redeliver_src_")
+    Scratch.oneFile(base, s"$flat/0_original.parquet", 1000000L)
+    Scratch.oneFile(base.filter(col("event_id") % 7 === 0),
+      s"$flat/1_redelivered.parquet", 1060000L)
     val src = spark.readStream.schema(base.schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(flat.toString)
+      .parquet(flat)
       .withWatermark("ts", "48 hours")
       .dropDuplicatesWithinWatermark("event_id")
     val q = src.writeStream
@@ -1011,7 +962,7 @@ object EventStream {
     */
   def streamingStaticEnrich(spark: SparkSession, dir: String,
                             queryName: String = "st_static_enrich"): DataFrame = {
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_enrich_").toString
+    val stageDir = Scratch.dir("graft_enrich_")
     Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       .repartition(4).write.mode("overwrite").parquet(stageDir)
@@ -1102,7 +1053,7 @@ object EventStream {
     */
   private[graft] def stageCdcLog(spark: SparkSession, dir: String,
                                  nFiles: Int = 4): String = {
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_cdc_").toString
+    val stageDir = Scratch.dir("graft_cdc_")
     Tables.events(spark, dir)
       .filter(col("event_type").isin("signup", "purchase", "error"))
       .select(col("user_id"), expr("unix_micros(ts)").as("us"), col("event_id"),
@@ -1181,13 +1132,13 @@ object EventStream {
     * ordinary partial+final sum over the snapshot's file list.
     */
   private[graft] def st14Run(spark: SparkSession, dir: String): String = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_lake_src_").toString
+    val stage = Scratch.dir("graft_lake_src_")
     Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .repartition(4, col("event_id"))
       .write.mode("overwrite").parquet(stage)
-    val table = graft.util.Scratch.dir("graft_lake_tbl_")
+    val table = Scratch.dir("graft_lake_tbl_")
     val q = spark.readStream.schema(spark.read.parquet(stage).schema)
       .option("maxFilesPerTrigger", "1").parquet(stage)
       .writeStream
@@ -1267,19 +1218,12 @@ object EventStream {
     val rawRel = s"raw/b$bid-a$attempt"
     val sumRel = s"sum/b$bid-a$attempt"
     // the two staged writes are independent (the manifest flip below is
-    // the only commit point) — concurrent jobs, guide §2.6; st16 pays
-    // this per micro-batch, so the overlap is ×4 at the contract's file
-    // count
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val wr = Future(batch.write.mode("overwrite").parquet(s"$table/$rawRel"))
-      val ws = Future(batch.groupBy(col("event_type"))
+    // the only commit point; see graft.util.Overlap)
+    Overlap(batch.sparkSession) { o =>
+      o.fork(batch.write.mode("overwrite").parquet(s"$table/$rawRel"))
+      batch.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$table/$sumRel"))
-      Await.result(wr, Duration.Inf); Await.result(ws, Duration.Inf)
+        .coalesce(1).write.mode("overwrite").parquet(s"$table/$sumRel")
     }
     val prev = st14Versions(table).filter(_ < bid).sorted.lastOption
       .map(v => st14Manifest(table, v)).getOrElse(Seq.empty)
@@ -1300,7 +1244,7 @@ object EventStream {
 
   private[graft] def st16Stage(spark: SparkSession, dir: String,
                                nFiles: Int): String = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_dual_src_").toString
+    val stage = Scratch.dir("graft_dual_src_")
     Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
@@ -1312,7 +1256,7 @@ object EventStream {
   private[graft] def st16Run(spark: SparkSession, dir: String,
                              nFiles: Int = 4): String = {
     val stage = st16Stage(spark, dir, nFiles)
-    val table = graft.util.Scratch.dir("graft_dual_tbl_")
+    val table = Scratch.dir("graft_dual_tbl_")
     val q = spark.readStream.schema(spark.read.parquet(stage).schema)
       .option("maxFilesPerTrigger", "1").parquet(stage)
       .writeStream
@@ -1476,8 +1420,6 @@ object EventStream {
     */
   private[graft] def stageTwsSlices(spark: SparkSession, dir: String,
                                     slices: Int): String = {
-    import java.nio.file.{Files, Paths}
-    import java.nio.file.attribute.FileTime
     val us = Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .select(unix_micros(col("ts")).as("us"),
@@ -1487,19 +1429,13 @@ object EventStream {
       (1 until slices).map(_.toDouble / slices).toArray, 0.001)
     val bounds = (Seq(Long.MinValue) ++ tcuts.map(_.toLong) :+ Long.MaxValue)
       .sliding(2).toSeq
-    val stage = Files.createTempDirectory("graft_tws_src_")
+    val stage = Scratch.dir("graft_tws_src_")
     bounds.zipWithIndex.foreach { case (Seq(lo, hi), i) =>
-      val tmp = Files.createTempDirectory("graft_tws_w_")
-      us.filter(col("us") > lo && col("us") <= hi)
-        .select("event_type", "user_id", "cents")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      val target = stage.resolve(f"slice_$i%02d.parquet")
-      Files.move(Paths.get(part), target)
-      Files.setLastModifiedTime(target, FileTime.fromMillis(1000000L + i * 60000L))
+      Scratch.oneFile(us.filter(col("us") > lo && col("us") <= hi)
+        .select("event_type", "user_id", "cents"),
+        f"$stage/slice_$i%02d.parquet", 1000000L + i * 60000L)
     }
-    stage.toString
+    stage
   }
 
   /** The transformWithState dataflow over a staged slice dir: one file

@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftExtensions` or by `GraftSession.ensure`). A main that grows its
   * own `SparkSession.builder()` block, or an operator that registers a
   * function or strategy on the session it is handed, fails here, so the
-  * per-query install calls cannot grow back.
+  * per-query install calls cannot grow back. Likewise concurrent jobs are
+  * started only by `Overlap` (a bare `Future` carries another thread's
+  * job properties and can outlive its caller), and temp directories are
+  * made only by `Scratch` (which deletes them at exit).
   */
 class SessionHygieneSpec extends AnyFunSuite {
 
@@ -20,6 +23,8 @@ class SessionHygieneSpec extends AnyFunSuite {
   private val session = "graft/GraftSession.scala"
   private val table = "graft/functions/GraftFunctions.scala"
   private val extension = "graft/GraftExtensions.scala"
+  private val overlap = "graft/util/Overlap.scala"
+  private val scratch = "graft/util/Scratch.scala"
 
   /** (pattern, files allowed to match it). */
   private val rules: Seq[(String, Set[String])] = {
@@ -30,7 +35,9 @@ class SessionHygieneSpec extends AnyFunSuite {
       """\binjectFunction\b""" -> installers,
       """\bFunctionIdentifier\s*\(""" -> installers,
       """\bextraStrategies\s*(:\+)?=(?!=)""" -> installers,
-      """\bextraOptimizations\s*(:\+)?=(?!=)""" -> installers)
+      """\bextraOptimizations\s*(:\+)?=(?!=)""" -> installers,
+      """\bscala\.concurrent\b.*\bFuture\b|\bAwait\s*\.|\bExecutionContext\b""" -> Set(overlap),
+      """\bcreateTempDirectory\b""" -> Set(scratch))
   }
 
   /** "file: pattern" for every (file, text) that breaks a rule. */
@@ -53,17 +60,25 @@ class SessionHygieneSpec extends AnyFunSuite {
         "spark.sessionState.functionRegistry.registerFunction(id, info, b)",
       "graft/plans/Join.scala" ->
         "spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ S",
-      session -> "SparkSession.builder(); extraStrategies = Nil")
+      session -> "SparkSession.builder(); extraStrategies = Nil",
+      "graft/operators/Writes.scala" ->
+        "val w = scala.concurrent.Future(df.write.parquet(p)); Await.result(w, Duration.Inf)",
+      "graft/streaming/Stage.scala" -> """val d = Files.createTempDirectory("graft_x_")""",
+      overlap -> "implicit val ec = scala.concurrent.ExecutionContext.global",
+      scratch -> """java.nio.file.Files.createTempDirectory(prefix)""")
     assert(offenders(seeded).map(_.takeWhile(_ != ':')).toSet ==
-      Set("graft/Tool.scala", "graft/operators/Ops.scala", "graft/plans/Join.scala"))
+      Set("graft/Tool.scala", "graft/operators/Ops.scala", "graft/plans/Join.scala",
+        "graft/operators/Writes.scala", "graft/streaming/Stage.scala"))
   }
 
   test("sessions are built and functions installed only by GraftSession, the table and the extension") {
-    assert(sources.map(_._1).contains(session), s"no $session under $root")
+    assert(Seq(session, overlap, scratch).forall(sources.map(_._1).contains),
+      s"a ratchet's allowed file is missing under $root")
     val found = offenders(sources)
     assert(found.isEmpty,
       "build sessions with GraftSession.local; add functions to " +
         "GraftFunctions.table and let GraftExtensions / GraftSession.ensure " +
-        s"install them:\n  ${found.mkString("\n  ")}")
+        "install them; run concurrent jobs with graft.util.Overlap; make " +
+        s"temp dirs with graft.util.Scratch.dir:\n  ${found.mkString("\n  ")}")
   }
 }
