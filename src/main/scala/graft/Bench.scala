@@ -1,45 +1,27 @@
 package graft
-import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
+    GraftSession.warmUp(spark, sfDir)
     // Executor TASK time per query (r14 verdict #8): at sf0.1 the walls
     // are dominated by per-query constants (plan/codegen/scheduling), so
     // 8- vs 32-core walls cannot separate compute-bound queries. Sum of
     // task run times CAN — it scales with actual executor work, not with
-    // the driver's fixed costs. Snapshot around each timed query; written
-    // to target/bench.json only (stdout line format unchanged).
-    val taskTimeMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) taskTimeMs.addAndGet(m.executorRunTime)
-      }
-    })
-    GraftSession.warmUp(spark, sfDir)
-    // per-query sum-of-task-time (ms), accumulated across first pass AND
-    // any rerun — the scaling probe reads it as "executor work done"
+    // the driver's fixed costs. Summed per query across first pass AND
+    // any rerun; written to target/bench.json only (stdout line format
+    // unchanged).
     val taskTimes = scala.collection.mutable.Map.empty[String, Long]
     // (wall s, task ms) of one run
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long) = {
-      val k0 = taskTimeMs.get
-      val t0 = System.nanoTime()
-      val ok =
-        // toRdd materializes the query AS PLANNED — df.count() would let
-        // the optimizer prune the very projections/sorts being measured
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-      val w = (System.nanoTime() - t0) / 1e9
-      // outside the timed region: deliver this query's trailing task-end
-      // events now, so they are not charged to the next query
-      GraftPlanBridge.drain(spark.sparkContext)
-      val taskMs = taskTimeMs.get - k0
-      taskTimes(name) = taskTimes.getOrElse(name, 0L) + taskMs
+      // toRdd materializes the query AS PLANNED — df.count() would let
+      // the optimizer prune the very projections/sorts being measured
+      val (out, cost) = QueryMetrics(spark)(fn(spark, sfDir).queryExecution.toRdd.count())
+      out.failed.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+      taskTimes(name) = taskTimes.getOrElse(name, 0L) + cost.taskMs
       // failed query → -1 so a failure is visible, never a fast time
-      (if (ok) w else -1.0, taskMs)
+      (if (out.isSuccess) cost.wallS else -1.0, cost.taskMs)
     }
     val firstRuns = SparkEntry.queries.map { case (name, fn) =>
       name -> timeOne(name, fn)

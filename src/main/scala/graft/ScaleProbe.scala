@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import scala.util.{Failure, Success}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-probe harness: replicate the sf0.1 tables K× (default 10) under
@@ -107,7 +109,25 @@ object ScaleProbe {
     msg != null && (msg.contains("refused: priced candidate volume") ||
       msg.contains("scored pairs exceeds the"))
 
-  private val scaledTables = Set("documents", "embeddings", "lineitem", "orders", "customer", "events")
+  /** One probe's measurement. `jobBytes` is the listener-level
+    * shuffle-write total ([[QueryMetrics]]): EVERY completed stage
+    * while a query constructs and runs — including construction-time
+    * jobs (localCheckpoint materialization, prefix-sum offset
+    * collects, staged index builds) and RDD-level jobs that the
+    * executed-plan walk in `planBytes` cannot see. This closes the g04
+    * blind spot (its recursive-CTE work runs against a checkpointed
+    * RDD, so the final plan reported shuffle 0 for two rounds).
+    * `byTag` splits it by job description (ep02 tags each pipeline
+    * stage). `refused` marks a priced-guard refusal (d16/m10 class) —
+    * an ACTION-FREE by-design outcome the artifact must distinguish
+    * from a crash: the guard firing IS the scale evidence (r13: m10
+    * refuses past its band-space saturation budget instead of
+    * measuring 575x).
+    */
+  private final case class Probe(wallS: Double, planBytes: Long, jobBytes: Long,
+      refused: Boolean, byTag: Map[String, Long])
+  private val failed = Probe(-1.0, -1L, -1L, false, Map.empty)
+
   private val copiedTables = Seq("region", "nation", "supplier", "part")
 
   /** Injective per-copy character substitution for the replicator:
@@ -253,63 +273,32 @@ object ScaleProbe {
       walk(df.queryExecution.executedPlan)
     }
 
-    /** Listener-level shuffle-write bytes: sums EVERY completed stage
-      * while a query constructs and runs — including construction-time
-      * jobs (localCheckpoint materialization, prefix-sum offset
-      * collects, staged index builds) and RDD-level jobs that the
-      * executed-plan metric walk above cannot see. This closes the g04
-      * blind spot (its recursive-CTE work runs against a checkpointed
-      * RDD, so the final plan reported shuffle 0 for two rounds). The
-      * listener bus is async; [[settled]] drains it before reading the
-      * total (a drain timeout throws, and the row records -1).
-      */
-    final class StageByteListener extends org.apache.spark.scheduler.SparkListener {
-      val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-      def settled(): Long = {
-        GraftPlanBridge.drain(spark.sparkContext)
-        bytes.get()
-      }
-    }
-
-    // (wall_s, plan_shuffle_bytes, job_bytes, refused): `refused` marks a
-    // priced-guard refusal (d16/m10 class) — an ACTION-FREE by-design
-    // outcome the artifact must distinguish from a crash: the guard
-    // firing IS the scale evidence (r13: m10 refuses past its band-space
-    // saturation budget instead of measuring 575x)
-    def timeBuild(label: String, build: () => DataFrame): (Double, Long, Long, Boolean) = {
-      val lst = new StageByteListener
-      spark.sparkContext.addSparkListener(lst)
-      val t = System.nanoTime()
-      val df = try {
+    def measure(label: String, build: () => DataFrame): Probe = {
+      val (out, cost) = QueryMetrics(spark) {
         val d = build()
         d.queryExecution.toRdd.count()
         d
-      } catch { case e: Throwable =>
-        val refused = isPricedRefusal(e.getMessage)
-        if (refused)
-          System.err.println(s"[probe] $label REFUSED by priced guard: " +
-            e.getMessage.takeWhile(_ != '\n'))
-        else
-          System.err.println(s"[probe] $label FAILED: ${e.getMessage}")
-        spark.sparkContext.removeSparkListener(lst)
-        return (-1.0, -1L, -1L, refused)
       }
-      val secs = (System.nanoTime() - t) / 1e9
-      val jobBytes = try lst.settled() catch { case _: Throwable => -1L }
-      spark.sparkContext.removeSparkListener(lst)
-      (secs, try shuffleBytes(df) catch { case _: Throwable => -1L }, jobBytes, false)
+      out match {
+        case Success(df) =>
+          Probe(cost.wallS, try shuffleBytes(df) catch { case _: Throwable => -1L },
+            cost.shuffleBytes, false, cost.shuffleBytesByTag)
+        case Failure(e) =>
+          val refused = isPricedRefusal(e.getMessage)
+          if (refused)
+            System.err.println(s"[probe] $label REFUSED by priced guard: " +
+              e.getMessage.takeWhile(_ != '\n'))
+          else
+            System.err.println(s"[probe] $label FAILED: ${e.getMessage}")
+          failed.copy(refused = refused)
+      }
     }
-    def timeAt(name: String, dir: String): (Double, Long, Long, Boolean) =
-      timeBuild(s"$name at $dir", () => Registry.byName(name).fn(spark, dir))
+    def measureAt(name: String, dir: String): Probe =
+      measure(s"$name at $dir", () => Registry.byName(name).fn(spark, dir))
     GraftSession.warmUp(spark, baseDir)
     // Warm the once-per-JVM shared artifact caches (stored LSH index,
     // d19 chooser decision, IVF assignment memo) for BOTH dirs BEFORE
-    // any listener attaches: otherwise whichever probed query first
+    // any probe is measured: otherwise whichever probed query first
     // touches a cache absorbs the build's stages into its job_mb and
     // skews that row's base->scaled ratio (ADVICE r11). The builds are
     // probe-visible on their own terms via d12/d19's rows.
@@ -348,43 +337,48 @@ object ScaleProbe {
       "l13_manifest_pruning", "io15_nested_pruning", "io16_bucket_pruning",
       "st16_atomic_dual_sink", "st17_incremental_stream",
       "d20_retune_migration")
-    def formatRow(name: String, tagOpt: Option[String],
-                  b: (Double, Long, Long, Boolean),
-                  s: (Double, Long, Long, Boolean)): String = {
-      val (base, baseBytes, baseJob, baseRef) = b
-      val (scaled, scaledBytes, scaledJob, scaledRef) = s
-      val ratio = if (base > 0 && scaled > 0) scaled / base else -1.0
+    def js(t: String): String = t.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    }
+    def formatRow(name: String, tagOpt: Option[String], b: Probe, s: Probe): String = {
+      val ratio = if (b.wallS > 0 && s.wallS > 0) s.wallS / b.wallS else -1.0
       val bytesRatio =
-        if (baseBytes > 0 && scaledBytes >= 0) scaledBytes.toDouble / baseBytes
+        if (b.planBytes > 0 && s.planBytes >= 0) s.planBytes.toDouble / b.planBytes
         else -1.0
       val jobRatio =
-        if (baseJob > 0 && scaledJob >= 0) scaledJob.toDouble / baseJob
+        if (b.jobBytes > 0 && s.jobBytes >= 0) s.jobBytes.toDouble / b.jobBytes
         else -1.0
       val tag = tagOpt.fold("")(t => s",\"tag\":\"$t\"")
       val refused =
-        (if (baseRef) ",\"refused_base\":true" else "") +
-          (if (scaledRef) ",\"refused_scaled\":true" else "")
-      System.err.println(f"[probe] $name%-28s base $base%6.1f s  ${factor}x $scaled%7.1f s  ratio ${ratio}%5.1f  shuffleMB ${baseBytes / 1e6}%8.1f -> ${scaledBytes / 1e6}%8.1f (x$bytesRatio%.1f)  jobMB ${baseJob / 1e6}%8.1f -> ${scaledJob / 1e6}%8.1f (x$jobRatio%.1f)${tagOpt.fold("")(t => s"  [$t]")}${if (scaledRef) "  [refused]" else ""}")
-      f"""\"$name\":{\"base_s\":$base%.2f,\"scaled_s\":$scaled%.2f,\"ratio\":$ratio%.2f,\"shuffle_mb_base\":${baseBytes / 1e6}%.1f,\"shuffle_mb_scaled\":${scaledBytes / 1e6}%.1f,\"shuffle_ratio\":$bytesRatio%.2f,\"job_mb_base\":${baseJob / 1e6}%.1f,\"job_mb_scaled\":${scaledJob / 1e6}%.1f,\"job_ratio\":$jobRatio%.2f$tag$refused}"""
+        (if (b.refused) ",\"refused_base\":true" else "") +
+          (if (s.refused) ",\"refused_scaled\":true" else "")
+      System.err.println(f"[probe] $name%-28s base ${b.wallS}%6.1f s  ${factor}x ${s.wallS}%7.1f s  ratio ${ratio}%5.1f  shuffleMB ${b.planBytes / 1e6}%8.1f -> ${s.planBytes / 1e6}%8.1f (x$bytesRatio%.1f)  jobMB ${b.jobBytes / 1e6}%8.1f -> ${s.jobBytes / 1e6}%8.1f (x$jobRatio%.1f)${tagOpt.fold("")(t => s"  [$t]")}${if (s.refused) "  [refused]" else ""}")
+      // per-stage job bytes, when the query tags its stages with job
+      // descriptions (ep02): localizes a bad job_mb ratio to the
+      // pipeline stage that caused it (VERDICT r11 #1)
+      val stages = (b.byTag.keySet ++ s.byTag.keySet).toSeq.sorted
+      val byTag = if (stages.forall(_ == QueryMetrics.untagged)) "" else {
+        def row(stage: String, bb: Long, sb: Long): Unit = System.err.println(
+          f"$stage%-28s ${bb / 1e6}%8.3f ${sb / 1e6}%10.3f ${if (bb > 0) sb.toDouble / bb else -1.0}%6.1f")
+        System.err.println("stage                        base_mb  scaled_mb  ratio")
+        stages.foreach(t => row(t, b.byTag.getOrElse(t, 0L), s.byTag.getOrElse(t, 0L)))
+        row("TOTAL", b.byTag.values.sum, s.byTag.values.sum)
+        stages.map { t =>
+          f"\"${js(t)}\":{\"base\":${b.byTag.getOrElse(t, 0L) / 1e6}%.3f,\"scaled\":${s.byTag.getOrElse(t, 0L) / 1e6}%.3f}"
+        }.mkString(",\"job_mb_by_tag\":{", ",", "}")
+      }
+      f"""\"$name\":{\"base_s\":${b.wallS}%.2f,\"scaled_s\":${s.wallS}%.2f,\"ratio\":$ratio%.2f,\"shuffle_mb_base\":${b.planBytes / 1e6}%.1f,\"shuffle_mb_scaled\":${s.planBytes / 1e6}%.1f,\"shuffle_ratio\":$bytesRatio%.2f,\"job_mb_base\":${b.jobBytes / 1e6}%.1f,\"job_mb_scaled\":${s.jobBytes / 1e6}%.1f,\"job_ratio\":$jobRatio%.2f$tag$refused$byTag}"""
     }
     val rows = probes.filter(keep).map { name =>
       formatRow(name, if (stagingOps(name)) Some("staging") else None,
-        timeAt(name, baseDir), timeAt(name, outDir))
+        measureAt(name, baseDir), measureAt(name, outDir))
     }
     // Routed-fallback evidence: the registered v09/v12 pair bounds trip
     // near sf≈30 for this corpus, far past the probe scale — force the
     // route here so the probe RECORDS what the past-the-bound path costs
     // at the scaled corpus (it should sit near v18's cost, not the flat
     // scan's super-linear one).
-    def timeRouted(label: String,
-                   f: => org.apache.spark.sql.DataFrame): String = {
-      val t = System.nanoTime()
-      val s = try { f.queryExecution.toRdd.count(); (System.nanoTime() - t) / 1e9 }
-              catch { case e: Throwable =>
-                System.err.println(s"[probe] $label FAILED: ${e.getMessage}"); -1.0 }
-      System.err.println(f"[probe] $label%-28s ${factor}x $s%7.1f s (forced past pair bound)")
-      f"""\"$label\":{\"scaled_s\":$s%.2f}"""
-    }
     val routedDefs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       ("v09_pq_rerank_routed",
         () => graft.operators.Similarity.v09PqRerank(spark, outDir, maxPairs = 1L)),
@@ -412,7 +406,11 @@ object ScaleProbe {
           graft.operators.Dedup.d01MinHashLsh(spark, outDir, rowsPerBand = chosen)
         }))
     val routed = routedDefs.filter { case (n, _) => keep(n) }
-      .map { case (n, f) => timeRouted(n, f()) }
+      .map { case (n, f) =>
+        val p = measure(n, f)
+        System.err.println(f"[probe] $n%-28s ${factor}x ${p.wallS}%7.1f s (forced past pair bound)")
+        f"""\"$n\":{\"scaled_s\":${p.wallS}%.2f}"""
+      }
     // Steady-state rows (VERDICT r12 #5): st17's and d20's probed demo
     // rows are staging-tagged — they measure their own store build/
     // rewrite. These rows measure the MARGINAL cadence cost: the prep
@@ -431,11 +429,11 @@ object ScaleProbe {
         () => graft.operators.Dedup.d20RetuneMigration(spark, d)
       }))
     val steady = steadyDefs.filter { case (n, _) => keep(n) }.map { case (name, prep) =>
-      def at(d: String): (Double, Long, Long, Boolean) =
-        try { val thunk = prep(d); timeBuild(s"$name at $d", thunk) }
+      def at(d: String): Probe =
+        try { val thunk = prep(d); measure(s"$name at $d", thunk) }
         catch { case e: Throwable =>
           System.err.println(s"[probe] $name prep at $d FAILED: ${e.getMessage}")
-          (-1.0, -1L, -1L, false)
+          failed
         }
       formatRow(name, Some("steady"), at(baseDir), at(outDir))
     }

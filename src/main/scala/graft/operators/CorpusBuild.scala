@@ -408,14 +408,6 @@ object CorpusBuild {
     *    shuffles on O(|batch|) rows — the one size a daily job is
     *    allowed to shuffle.
     */
-  /** ep02's stage frames, exposed so [[ep02IncrementalBuild]] can
-    * assemble the funnel and the per-stage byte attribution diag
-    * ([[graft.CorpusBuildBytes]]) can force each stage under its own
-    * listener window — the instrument that pinned r11's 70.8× job-byte
-    * ratio to the corpus-sided shuffles this shape no longer has.
-    * Returns the ordered (stage name, frame, token column) list plus the
-    * packed frame.
-    */
   /** The shared clean kernel (t13 NFC/control + t42 strip + token
     * counts) and the ep02 arrival-batch construction (plants included),
     * extracted so the streaming twin [[st17IncrementalStream]] runs the
@@ -464,14 +456,22 @@ object CorpusBuild {
       .withColumn("hit", lit(true))
   }
 
+  /** ep02's stage frames, from which [[ep02IncrementalBuild]] assembles
+    * the funnel. Each stage's construction runs under its own job
+    * description, so [[graft.QueryMetrics]] splits the build's shuffle
+    * bytes by stage (ScaleProbe's ep02 row, `job_mb_by_tag`) — the
+    * instrument that pinned r11's 70.8× job-byte ratio to the
+    * corpus-sided shuffles this shape no longer has. Returns the ordered
+    * (stage name, frame, token column) list plus the packed frame.
+    */
   private[graft] def ep02StageFrames(spark: SparkSession, dir: String,
       packBudget: Long = 512L): (Seq[(String, DataFrame, String)], DataFrame) = {
     // Tag every job a stage's construction submits (under AQE a lazy
     // localCheckpoint still materializes its upstream exchanges at
     // construction, on pool threads that capture this thread-local)
     // with the pipeline stage's name: the Spark UI groups the build by
-    // stage, and [[graft.CorpusBuildBytes]] attributes shuffle bytes
-    // per stage from it.
+    // stage, and [[graft.QueryMetrics]] attributes shuffle bytes per
+    // stage from it.
     def tagged[T](name: String)(f: => T): T = {
       val sc = spark.sparkContext
       val prev = sc.getLocalProperty("spark.job.description")

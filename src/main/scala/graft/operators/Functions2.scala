@@ -345,8 +345,8 @@ object Functions2 {
     * demonstrably fires; the clean corpus reports zero.
     */
   def f12ConfusableAudit(spark: SparkSession, dir: String): DataFrame = {
-    val from = "аеорсхуіѕјοα" // Cyrillic a e o r s h u i dze je; Greek omicron alpha
-    val to = "aeopcxyisjoa"
+    // Cyrillic a e o r s h u i dze je; Greek omicron alpha (Latin "aeopcxyisjoa")
+    val from = "аеорсхуіѕјοα"
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"), col("source"))
     val planted = docs.filter(col("doc_id") < 25)
       .select((col("doc_id") + 300000).as("doc_id"),

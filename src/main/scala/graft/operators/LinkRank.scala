@@ -53,7 +53,6 @@ object LinkRank {
     */
   def g01LinkRank(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n"))
     val edges = rawLinkEdges(spark, dir)
     def step(ranks: DataFrame): DataFrame = {
       val contrib = edges.join(ranks, edges("src") === ranks("node"))
@@ -117,8 +116,6 @@ object LinkRank {
     * exact integer ppm of 3·triangles / wedges.
     */
   def g02TriangleCount(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val nRow = docs.agg(count(lit(1)).as("n"))
     val directed = rawLinkEdges(spark, dir)
     // The edge set feeds FIVE consumers (degrees, two orientation joins,
     // the closure semi-join, the edge count) and Catalyst does not share
@@ -205,7 +202,6 @@ object LinkRank {
     */
   def g05Hits(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n"))
     val edges = rawLinkEdges(spark, dir)
 
     // one normalized update: scores(node, s) × edges summed on `agg` side,
@@ -282,7 +278,6 @@ object LinkRank {
     */
   def g06KCore(spark: SparkSession, dir: String, k: Int = 4): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n"))
     val und = rawLinkEdges(spark, dir)
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
@@ -375,8 +370,6 @@ object LinkRank {
     */
   def g07LinkPredict(spark: SparkSession, dir: String,
                      maxHubDeg: Long = 64L): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n"))
     val directed = rawLinkEdges(spark, dir)
       .filter(col("src") =!= col("dst"))
     val und = directed.select(col("src").as("a"), col("dst").as("b"))
@@ -536,8 +529,6 @@ object LinkRank {
     */
   def g09Assortativity(spark: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 0)
-    val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n"))
     val directed = rawLinkEdges(spark, dir)
       .filter(col("src") =!= col("dst"))
     val und = directed.select(col("src").as("a"), col("dst").as("b"))
@@ -602,7 +593,6 @@ object LinkRank {
     */
   def g10PersonalizedRank(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n"))
     val edges = rawLinkEdges(spark, dir)
     val seedTerm = when(col("doc_id") % 50 === 0, 150000L).otherwise(0L)
     def step(ranks: DataFrame): DataFrame = {
@@ -664,8 +654,6 @@ object LinkRank {
     * broadcast crossJoin (1-row frames).
     */
   def g11Reciprocity(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n"))
     val raw = rawLinkEdges(spark, dir)
     val loops = raw.filter(col("src") === col("dst"))
       .agg(count(lit(1)).as("n_loop_refs"),
@@ -721,7 +709,6 @@ object LinkRank {
     */
   def g12DegreeProfile(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n"))
     val edges = rawLinkEdges(spark, dir)
       .filter(col("src") =!= col("dst")).distinct()
     val indeg = docs.join(
@@ -881,7 +868,6 @@ object LinkRank {
     * feeds both its summary and depth d+1's join.
     */
   def g14NeighborhoodFunction(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val edges = rawLinkEdges(spark, dir)
       .filter(col("src") =!= col("dst")).distinct()
     def pin(df: DataFrame): DataFrame = {

@@ -2103,7 +2103,6 @@ object Windows {
     * frame; a bounded final aggregate. Raw events scanned once.
     */
   def w38Mase(spark: SparkSession, dir: String): DataFrame = {
-    val D = DecimalType(38, 0)
     val hourly = Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"),

@@ -26,11 +26,6 @@ import graft.util.{Overlap, Scratch}
   */
 object EventStream {
 
-  val eventsSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", LongType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
   /** Streaming source over events parquet files whose `ts` encoding
     * varies by driver round (TIMESTAMP(NANOS) → raw int64 under the
     * legacy nanosAsLong flag, vs TIMESTAMP(MICROS) → TIMESTAMP_NTZ; see

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.util.Scratch
+
 /** Independent derivation of the ep01 capstone: the whole ten-stage
   * corpus-build funnel is replayed in pure JVM Scala over the collected
   * sf0.001 documents (java.text.Normalizer, java.util.regex,
@@ -140,7 +142,7 @@ class CorpusBuildSpec extends AnyFunSuite {
     // would split the newline doc into extra (null-id) rows and change
     // BOTH the ingest doc count and the token sums.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ep01_nl_").toString
+    val dir = Scratch.dir("graft_ep01_nl_")
     val tricky = "line one\nline two\twith tab, a \\n literal backslash-n, " +
       "and padding " + Seq.tabulate(50)(i => s"tok$i").mkString(" ")
     val docs = (1L to 60L).map { id =>

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStream
+import graft.util.Scratch
 
 /** The genuine streaming path must replay to byte-identical results vs
   * the batch plan (same windows, same exact decimal sums). */
@@ -31,7 +32,6 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("streaming CDC apply == batch last-writer-wins image on out-of-order replay") {
-    import org.apache.spark.sql.functions._
     val batch = graft.streaming.EventStream.st12CdcApply(spark, sf)
       .collect().map(_.toString)
     assert(batch.nonEmpty)
@@ -63,7 +63,7 @@ class EventStreamSpec extends AnyFunSuite {
     import graft.util.Exact._
     val spark2 = spark
     spark2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_sess_")
+    val stageDir = java.nio.file.Paths.get(Scratch.dir("graft_sess_"))
     java.nio.file.Files.createSymbolicLink(
       stageDir.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$sf/events.parquet"))
@@ -168,9 +168,9 @@ class EventStreamSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_late_")
+    val stageDir = java.nio.file.Paths.get(Scratch.dir("graft_late_"))
     def writeBatch(name: String, rowsUs: Seq[Long]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_late_w_")
+      val tmp = java.nio.file.Paths.get(Scratch.dir("graft_late_w_"))
       rowsUs.toDF("us").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -183,8 +183,8 @@ class EventStreamSpec extends AnyFunSuite {
     // micro-batch boundary (a single drain can batch all files together).
     // The sink must be RECOVERABLE for the second start() to resume from
     // the checkpoint — a file (parquet) sink is; the memory sink is not.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_late_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_late_out_")
+    val ckpt = java.nio.file.Paths.get(Scratch.dir("graft_late_ck_"))
+    val outDir = java.nio.file.Paths.get(Scratch.dir("graft_late_out_"))
     def drain(): Map[Long, Long] = {
       val q = s.readStream
         .schema(org.apache.spark.sql.types.StructType(Seq(
@@ -315,18 +315,18 @@ class EventStreamSpec extends AnyFunSuite {
     // REAL micro-batches through the merge; the raw read preserves the
     // source ts encoding, which eventsStream re-probes on the chunk dir
     val raw = spark.read.parquet(s"$sf/events.parquet")
-    val stage = java.nio.file.Files.createTempDirectory("graft_upsert_src_")
+    val stage = java.nio.file.Paths.get(Scratch.dir("graft_upsert_src_"))
     (0 until 3).foreach { i =>
       raw.filter(col("event_id") % 3 === i).coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/chunk$i")
     }
-    val flat = java.nio.file.Files.createTempDirectory("graft_upsert_flat_")
+    val flat = java.nio.file.Paths.get(Scratch.dir("graft_upsert_flat_"))
     (0 until 3).foreach { i =>
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$stage/chunk$i"))
         .filter(_.toString.endsWith(".parquet")).findFirst().get()
       java.nio.file.Files.copy(part, flat.resolve(s"chunk$i.parquet"))
     }
-    val target = java.nio.file.Files.createTempDirectory("graft_upsert_tgt_")
+    val target = java.nio.file.Paths.get(Scratch.dir("graft_upsert_tgt_"))
       .resolve("state").toString
     val got = EventStream.streamingUpsertSink(spark, flat.toString, target)
       .collect().map(_.toString)

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Formats
+import graft.util.Scratch
 
 class FormatsSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -33,7 +34,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("io04: corrupt rows keep their raw line for quarantine") {
     import org.apache.spark.sql.types._
-    val out = java.nio.file.Files.createTempDirectory("graft_io04spec_").toString
+    val out = Scratch.dir("graft_io04spec_")
     Tables.orders(spark, sf)
       .select(org.apache.spark.sql.functions.concat_ws(",",
         org.apache.spark.sql.functions.when(

@@ -23,7 +23,10 @@ class HealthDigestSpec extends AnyFunSuite {
 
   private val csv = getClass.getResource("/health_dirty_500.csv").getPath
 
-  private lazy val (cleaned, cleanJobs) = JobCount(spark)(HealthEtl.clean(spark, csv))
+  private lazy val (cleaned, cleanJobs) = {
+    val (out, cost) = QueryMetrics(spark)(HealthEtl.clean(spark, csv))
+    (out.get, cost.jobs)
+  }
   private lazy val fitted = MortalityModel.fit(cleaned)
 
   private val cannedInputs = Map(
@@ -62,7 +65,7 @@ class HealthDigestSpec extends AnyFunSuite {
   test("clean submits at most the pinned job count; a repeat predictOne submits none") {
     assert(cleanJobs <= 23, s"clean ran $cleanJobs jobs")
     MortalityModel.predictOne(fitted, cannedInputs)
-    val (_, again) = JobCount(spark)(MortalityModel.predictOne(fitted, cannedInputs))
+    val again = QueryMetrics(spark)(MortalityModel.predictOne(fitted, cannedInputs))._2.jobs
     assert(again == 0, s"second predictOne ran $again jobs")
   }
 }

@@ -233,7 +233,7 @@ class QuantileSpec extends AnyFunSuite {
     import s.implicits._
     def jobs(n: Int): Int = {
       val df = boundaryValues(n).toDF("v").coalesce(1)
-      JobCount(spark)(ScalableQuantile.quantiles(df, Seq("v" -> probs)))._2
+      QueryMetrics(spark)(ScalableQuantile.quantiles(df, Seq("v" -> probs)))._2.jobs
     }
     assert(jobs(cap) == 1)
     assert(jobs(cap + 1) > 1)

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.util.Scratch
+
 /** Round-12 additions: the st17 streaming incremental build's replay
   * discipline and the d16 candidate-volume guard.
   */
@@ -43,7 +45,7 @@ class Round12OpsSpec extends AnyFunSuite {
 
   test("d16: adversarial prefix-token head refuses BEFORE launching the join, naming the priced bound") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_d16_adv_").toString
+    val dir = Scratch.dir("graft_d16_adv_")
     // every doc carries the same bigram set → prefix tokens collide
     // corpus-wide → candidate volume ≈ n²/2, the shape that filled
     // >200 GB of spill at the 100× probe
@@ -68,7 +70,6 @@ class Round12OpsSpec extends AnyFunSuite {
     // definition in-memory from the chooser's own output inputs and
     // asserts both computations agree for every layout on the live
     // corpus
-    import org.apache.spark.sql.functions._
     val d19 = operators.Dedup.d19LshRetune(spark, sf).collect()
       .map(r => r.getInt(0) -> r.getLong(3)).toMap // r -> n_caught
     // independent recomputation: exact >=0.8 pairs touching the sample

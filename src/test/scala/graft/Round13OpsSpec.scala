@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.util.Scratch
+
 /** Round-13 additions: the m10 band-saturation guard (VERDICT r12 #1)
   * and the ADVICE r12 regression pins (IVF assignment cache
   * normalization).
@@ -11,7 +13,7 @@ class Round13OpsSpec extends AnyFunSuite {
 
   test("m10: pigeonhole-saturated media corpus refuses BEFORE the band join, naming the wider-hash route") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_m10_sat_").toString
+    val dir = Scratch.dir("graft_m10_sat_")
     // constant digit payloads: case-flip perturbation is a no-op, every
     // media row lands on the SAME 60-bit average-hash, so all 2n rows
     // share all 6 band keys — candidate volume 6·C(2n,2), the saturated

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.util.Scratch
+
 /** Round-14 additions: the m17 priced band-occupancy guard (VERDICT
   * r13 #1 — the flat-payload degenerate case m17's own docstring named
   * but left to deployments), and the structured refusal marker the
@@ -13,7 +15,7 @@ class Round14OpsSpec extends AnyFunSuite {
 
   test("m17: flat-payload corpus refuses BEFORE the band join, naming the entropy-prefilter route") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_m17_flat_").toString
+    val dir = Scratch.dir("graft_m17_flat_")
     // constant-letter payloads: every neighbor-difference bit is 0, so
     // all six 42-bit gradient words collapse to the all-zero key for
     // base AND both plant families (upper() shifts a level the gradient

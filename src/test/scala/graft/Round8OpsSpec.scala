@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Maintenance, Similarity}
+import graft.util.Scratch
 
 /** Round-8 additions: a50 KS test, v18 corpus-sized nlist. */
 class Round8OpsSpec extends AnyFunSuite {
@@ -125,7 +126,7 @@ class Round8OpsSpec extends AnyFunSuite {
     assert(df.count() > 0)
     // the write path must actually have produced bloom filters: check
     // the parquet footer of a fresh layout written with the same option
-    val out = java.nio.file.Files.createTempDirectory("graft_io09_spec_").toString
+    val out = Scratch.dir("graft_io09_spec_")
     // parquet DROPS the bloom when a chunk is fully dictionary-encoded
     // (the dictionary is already an exact membership filter) — which is
     // the case at sf0.001's tiny key cardinality; disable the dictionary

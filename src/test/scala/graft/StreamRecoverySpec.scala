@@ -10,6 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStream
+import graft.util.Scratch
 
 /** Crash-recovery for the stateful streaming pair (VERDICT r7 #4): kill
   * the query mid-stream, restart from the checkpoint, and assert the
@@ -45,8 +46,8 @@ class StreamRecoverySpec extends AnyFunSuite {
     val s = spark
     // 8 small files so the kill deterministically lands between commits
     val stage = EventStream.stageCdcLog(spark, sf, nFiles = 8)
-    val out = Files.createTempDirectory("graft_cdcrec_out_").toString
-    val ckpt = Files.createTempDirectory("graft_cdcrec_ck_").toString
+    val out = Scratch.dir("graft_cdcrec_out_")
+    val ckpt = Scratch.dir("graft_cdcrec_ck_")
     // foreachBatch + overwrite-per-batchId: the idempotent sink shape —
     // a batch replayed after the kill overwrites its own output instead
     // of appending a duplicate (update-mode stateful output cannot use
@@ -111,9 +112,9 @@ class StreamRecoverySpec extends AnyFunSuite {
       Array(1.0 / 6, 2.0 / 6, 3.0 / 6, 4.0 / 6, 5.0 / 6), 0.001)
     val bounds = (Seq(Long.MinValue) ++ cuts.map(_.toLong) :+ Long.MaxValue)
       .sliding(2).toSeq
-    val stage = Files.createTempDirectory("graft_ftrec_src_")
+    val stage = Paths.get(Scratch.dir("graft_ftrec_src_"))
     bounds.zipWithIndex.foreach { case (Seq(lo, hi), i) =>
-      val tmp = Files.createTempDirectory("graft_ftrec_w_")
+      val tmp = Paths.get(Scratch.dir("graft_ftrec_w_"))
       base.filter(col("us") > lo && col("us") <= hi)
         .select("user_id", "ts")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -123,8 +124,8 @@ class StreamRecoverySpec extends AnyFunSuite {
       Files.move(Paths.get(part), target)
       Files.setLastModifiedTime(target, FileTime.fromMillis(1000000L + i * 60000L))
     }
-    val out = Files.createTempDirectory("graft_ftrec_out_").toString
-    val ckpt = Files.createTempDirectory("graft_ftrec_ck_").toString
+    val out = Scratch.dir("graft_ftrec_out_")
+    val ckpt = Scratch.dir("graft_ftrec_ck_")
     val schema = s.read.parquet(stage.resolve("slice_00.parquet").toString).schema
     def start(drain: Boolean) = {
       val src = s.readStream.schema(schema)
@@ -182,8 +183,8 @@ class StreamRecoverySpec extends AnyFunSuite {
     try {
       // 8 slices so the kill deterministically lands between commits
       val stage = EventStream.stageTwsSlices(spark, sf, slices = 8)
-      val out = Files.createTempDirectory("graft_twsrec_out_").toString
-      val ckpt = Files.createTempDirectory("graft_twsrec_ck_").toString
+      val out = Scratch.dir("graft_twsrec_out_")
+      val ckpt = Scratch.dir("graft_twsrec_ck_")
       def start(drain: Boolean) = {
         val w = EventStream.twsLedgerUpdates(spark, stage).toDF().writeStream
           .outputMode("update")
@@ -246,7 +247,7 @@ class StreamRecoverySpec extends AnyFunSuite {
     // writes to a FRESH attempt directory and atomically re-points the
     // manifest — it never unlinks the superseded attempt's files, so a
     // reader that resolved the earlier manifest keeps reading valid data.
-    val table = Files.createTempDirectory("graft_dualreplay_tbl_").toString
+    val table = Scratch.dir("graft_dualreplay_tbl_")
     val b0 = Tables.events(spark, sf)
       .filter(col("event_id") < 50)
       .select(col("event_id"), col("event_type"),
@@ -281,11 +282,9 @@ class StreamRecoverySpec extends AnyFunSuite {
   }
 
   test("st16 dual sink: kill mid-stream; EVERY published snapshot is cross-table consistent") {
-    val s = spark
-    import s.implicits._
     val stage = EventStream.st16Stage(spark, sf, nFiles = 8)
-    val table = Files.createTempDirectory("graft_dualrec_tbl_").toString
-    val ckpt = Files.createTempDirectory("graft_dualrec_ck_").toString
+    val table = Scratch.dir("graft_dualrec_tbl_")
+    val ckpt = Scratch.dir("graft_dualrec_ck_")
     def start(drain: Boolean) = {
       val w = spark.readStream
         .schema(spark.read.parquet(stage).schema)

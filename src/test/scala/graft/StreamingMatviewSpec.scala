@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ScaleDiag
+import graft.util.Scratch
 
 /** Streaming materialized-view maintenance: chain
   * [[ScaleDiag.applyRetractableDelta]] over CDC micro-batches via
@@ -23,7 +24,7 @@ class StreamingMatviewSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("foreachBatch-chained retractable refresh == from-scratch over the final base") {
-    val root = Files.createTempDirectory("graft_mv_").toString
+    val root = Scratch.dir("graft_mv_")
     val ord = Tables.orders(spark, sf)
       .select(col("o_orderkey").as("k"), col("o_custkey").as("cust"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
