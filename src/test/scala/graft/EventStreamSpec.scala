@@ -183,8 +183,8 @@ class EventStreamSpec extends AnyFunSuite {
     // micro-batch boundary (a single drain can batch all files together).
     // The sink must be RECOVERABLE for the second start() to resume from
     // the checkpoint — a file (parquet) sink is; the memory sink is not.
-    val ckpt = java.nio.file.Paths.get(Scratch.dir("graft_late_ck_"))
-    val outDir = java.nio.file.Paths.get(Scratch.dir("graft_late_out_"))
+    val ckpt = Scratch.dir("graft_late_ck_")
+    val outDir = Scratch.dir("graft_late_out_")
     def drain(): Map[Long, Long] = {
       val q = s.readStream
         .schema(org.apache.spark.sql.types.StructType(Seq(
@@ -196,13 +196,13 @@ class EventStreamSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("n"))
         .select(unix_micros(col("w.start")).as("ws"), col("n"))
         .writeStream.format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", ckpt.toString)
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val rows = s.read.parquet(outDir.toString).collect()
+      val rows = s.read.parquet(outDir).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(rows.map(_._1).distinct.size == rows.size,
         s"a window finalized twice (late data leaked into state): $rows")
@@ -315,7 +315,7 @@ class EventStreamSpec extends AnyFunSuite {
     // REAL micro-batches through the merge; the raw read preserves the
     // source ts encoding, which eventsStream re-probes on the chunk dir
     val raw = spark.read.parquet(s"$sf/events.parquet")
-    val stage = java.nio.file.Paths.get(Scratch.dir("graft_upsert_src_"))
+    val stage = Scratch.dir("graft_upsert_src_")
     (0 until 3).foreach { i =>
       raw.filter(col("event_id") % 3 === i).coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/chunk$i")
@@ -326,8 +326,7 @@ class EventStreamSpec extends AnyFunSuite {
         .filter(_.toString.endsWith(".parquet")).findFirst().get()
       java.nio.file.Files.copy(part, flat.resolve(s"chunk$i.parquet"))
     }
-    val target = java.nio.file.Paths.get(Scratch.dir("graft_upsert_tgt_"))
-      .resolve("state").toString
+    val target = s"${Scratch.dir("graft_upsert_tgt_")}/state"
     val got = EventStream.streamingUpsertSink(spark, flat.toString, target)
       .collect().map(_.toString)
     val w = org.apache.spark.sql.expressions.Window
