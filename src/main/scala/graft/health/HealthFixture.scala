@@ -7,9 +7,13 @@ import org.apache.spark.sql.SparkSession
   * checked into the repo (tools/fixtures/). It is what the EP2 SQL-path
   * contract queries (HealthQueries.defs) and their DuckDB oracles both
   * read — the same artifact on both sides, so the dual-engine check
-  * isolates the SQL semantics. A HealthSpec test keeps the artifact in
-  * sync with the live ETL (bit-exact), and the ETL itself is separately
-  * golden-tested against the reference's own pandas pipeline.
+  * isolates the SQL semantics. It is also the input of the post-ETL
+  * health tests (the A1-A13 query goldens, the model's R² band and ML
+  * expectations, the sinks, the weekly report and the dashboard), which
+  * therefore run without the raw CSV. Wherever that CSV exists, a
+  * HealthSpec test keeps the artifact in sync with the live ETL
+  * (bit-exact), and the ETL itself is separately golden-tested against
+  * the reference's own pandas pipeline.
   *
   * Regenerate after an INTENTIONAL ETL change with:
   *   sbt "runMain graft.health.HealthFixture"

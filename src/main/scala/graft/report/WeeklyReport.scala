@@ -135,17 +135,25 @@ object WeeklyReport {
             .map { case (w, _, d, _) => (s"wave $w", d.toDouble) })))
   }
 
-  /** Run the whole job: ETL → analytics → model → render (plus the
-    * corpus-build funnel when a corpus dir is configured). */
+  /** Render the report from an already-cleaned table (plus the
+    * corpus-build funnel when a corpus dir is configured): analytics →
+    * model → sink. The caller owns the frame, and its caching. */
+  def render(spark: SparkSession, cleaned: DataFrame,
+             sink: ReportSink = new TextReportSink,
+             corpusDir: Option[String] = None): String = {
+    val (cSec, cCharts) = corpusDir.map(corpusSections(spark, _))
+      .getOrElse((Seq.empty, Seq.empty))
+    sink.write("WEEKLY GLOBAL HEALTH REPORT",
+               sections(spark, cleaned) ++ cSec,
+               charts(cleaned) ++ cCharts)
+  }
+
+  /** Run the whole job: ETL on the raw CSV, cached for the render. */
   def run(spark: SparkSession, csvPath: String = HealthEtl.defaultCsvPath,
           sink: ReportSink = new TextReportSink,
           corpusDir: Option[String] = None): String = {
     val cleaned = HealthEtl.clean(spark, csvPath).cache()
-    val (cSec, cCharts) = corpusDir.map(corpusSections(spark, _))
-      .getOrElse((Seq.empty, Seq.empty))
-    try sink.write("WEEKLY GLOBAL HEALTH REPORT",
-                   sections(spark, cleaned) ++ cSec,
-                   charts(cleaned) ++ cCharts)
+    try render(spark, cleaned, sink, corpusDir)
     finally cleaned.unpersist()
   }
 }

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class DashboardSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private lazy val server = new graft.dashboard.DashboardServer(spark)
+  private lazy val server =
+    new graft.dashboard.DashboardServer(spark, CleanedHealth(spark), None)
   private lazy val http = HttpClient.newHttpClient()
 
   private def get(port: Int, path: String): String =
@@ -49,7 +50,7 @@ class DashboardSpec extends AnyFunSuite {
   }
 
   test("dashboard renders the flagship ep01 corpus-build funnel panel (VERDICT r11 #6)") {
-    val s = new graft.dashboard.DashboardServer(spark, corpusDir = Some(sf)).start(0)
+    val s = new graft.dashboard.DashboardServer(spark, CleanedHealth(spark), Some(sf)).start(0)
     try {
       val port = s.getAddress.getPort
       // the home page links to the panel only when a corpus is wired

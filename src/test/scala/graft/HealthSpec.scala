@@ -15,13 +15,11 @@ import graft.health.{HealthEtl, HealthQueries}
 class HealthSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  lazy val cleaned = {
-    val df = HealthEtl.clean(spark, HealthEtl.defaultCsvPath)
-    df.cache()
-    df
-  }
+  lazy val cleaned = CleanedHealth(spark).cache()
 
   test("ETL: shape, countries, diseases, no nulls — SURVEY §5.2 invariants") {
+    // the ETL itself on the reference CSV, not the committed fixture
+    val cleaned = HealthEtl.clean(spark, HealthEtl.defaultCsvPath).cache()
     assert(cleaned.count() == 10006)
     assert(cleaned.columns.length == 35)
     val countries = cleaned.select("Country").distinct().collect().map(_.getString(0)).sorted
@@ -48,6 +46,7 @@ class HealthSpec extends AnyFunSuite {
     val ids = cleaned.agg(min("Record_ID"), max("Record_ID"),
       countDistinct("Record_ID")).head()
     assert(ids.getLong(0) == 1 && ids.getLong(1) == 10006 && ids.getLong(2) == 10006)
+    cleaned.unpersist()
   }
 
   test("A1 topDeadliest matches the reference (Hypertension 0.10804 / 500)") {
@@ -149,8 +148,10 @@ class HealthSpec extends AnyFunSuite {
     // cache (context-cleaner-collectable), and NO InMemoryRelation
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val out = HealthEtl.clean(spark, HealthEtl.defaultCsvPath)
-    assert(out.count() == 10006)
+    // cache hygiene does not depend on the input: the committed seeded CSV
+    // (HealthDigestSpec pins its 498 cleaned rows)
+    val out = HealthEtl.clean(spark, getClass.getResource("/health_dirty_500.csv").getPath)
+    assert(out.count() == 498)
     val fresh = sc.getPersistentRDDs.filterNot { case (id, _) => before(id) }
     // the scrubbed base (InMemoryRelation) must be GONE; only denseIds'
     // arranged RDD may remain, and it is plain-RDD (GC-collectable)

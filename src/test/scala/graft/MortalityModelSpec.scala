@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.health.HealthEtl
 import graft.ml.MortalityModel
 
 /** M1-M8 parity: metric-band assertions (sklearn↔MLlib splits are not
@@ -12,8 +11,7 @@ import graft.ml.MortalityModel
 class MortalityModelSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  lazy val fitted = MortalityModel.fit(
-    HealthEtl.clean(spark, HealthEtl.defaultCsvPath))
+  lazy val fitted = MortalityModel.fit(CleanedHealth(spark))
 
   test("feature encoding matches pandas get_dummies(drop_first) layout") {
     // 20 disease dummies (21 levels − Alzheimer'S), 4 availability
@@ -66,8 +64,7 @@ class MortalityModelSpec extends AnyFunSuite {
     // depth 3 the leak is diluted rather than decisive. The split is now
     // hash-deterministic, so the metric is a stable point, not a band
     // tuned to one lucky randomSplit ordering.
-    val app = MortalityModel.fitAppVariant(
-      graft.health.HealthEtl.clean(spark, graft.health.HealthEtl.defaultCsvPath))
+    val app = MortalityModel.fitAppVariant(CleanedHealth(spark))
     assert(app.featureNames.contains("Severity Score"))
     val r2 = app.testScores.r2
     info(f"app-variant test r2 = $r2%.4f")
@@ -77,7 +74,7 @@ class MortalityModelSpec extends AnyFunSuite {
   }
 
   test("quality report: zero missing, 21-value categoricals, sane metric stats") {
-    val cleaned = graft.health.HealthEtl.clean(spark, graft.health.HealthEtl.defaultCsvPath)
+    val cleaned = CleanedHealth(spark)
     val (missing, topCounts, stats) = graft.health.HealthQueries.qualityReport(cleaned)
     assert(missing.agg(org.apache.spark.sql.functions.sum("n_missing"))
       .head().getLong(0) == 0)
@@ -89,7 +86,7 @@ class MortalityModelSpec extends AnyFunSuite {
   }
 
   test("determinism: same seed, same importances") {
-    val again = MortalityModel.fit(HealthEtl.clean(spark, HealthEtl.defaultCsvPath))
+    val again = MortalityModel.fit(CleanedHealth(spark))
     assert(again.model.featureImportances == fitted.model.featureImportances)
   }
 }

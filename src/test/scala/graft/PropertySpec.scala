@@ -88,12 +88,13 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("weekly report renders every reference section without egress") {
-    val report = graft.report.WeeklyReport.run(spark)
+    val cleaned = CleanedHealth(spark)
+    val report = graft.report.WeeklyReport.render(spark, cleaned)
     Seq("Overview", "Model quality", "Top 5 deadliest", "Top 5 costliest",
         "Feature importances", "Canned mortality prediction").foreach(s =>
       assert(report.contains(s), s"missing section $s"))
     val stub = new graft.report.EmailSinkStub
-    graft.report.WeeklyReport.run(spark, sink = stub)
+    graft.report.WeeklyReport.render(spark, cleaned, stub)
     assert(stub.lastSent.contains("WEEKLY GLOBAL HEALTH REPORT"))
   }
 }

@@ -130,7 +130,7 @@ class ReportSpec extends AnyFunSuite {
 
   test("S8+S9 end-to-end: the real weekly report renders as valid PDF and XLSX") {
     // one pipeline+model run feeds BOTH sinks (sections are sink-agnostic)
-    val cleaned = graft.health.HealthEtl.clean(spark).cache()
+    val cleaned = CleanedHealth(spark).cache()
     val (sections, charts) =
       try (WeeklyReport.sections(spark, cleaned), WeeklyReport.charts(cleaned))
       finally cleaned.unpersist()

@@ -14,7 +14,7 @@ class SourcesSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("S2→S1 round-trip: cleaned CSV re-read reproduces the analytics") {
-    val cleaned = HealthEtl.clean(spark, HealthEtl.defaultCsvPath).cache()
+    val cleaned = CleanedHealth(spark).cache()
     val out = new java.io.File("target/health_csv_roundtrip").getAbsolutePath
     HealthEtl.writeCleanedCsv(cleaned, out)
     // re-read with schema inference, like the reference app does
