@@ -4,9 +4,8 @@ import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.health.{HealthEtl, HealthQueries}
+import graft.health.HealthEtl
 import graft.ml.MortalityModel
 
 /** S6/EP1 — the interactive dashboard shell (Health_Jim.py:780-1273):
@@ -17,10 +16,14 @@ import graft.ml.MortalityModel
   * prediction form (:984-1080) — served by the JDK's built-in
   * `HttpServer`, zero dependencies, no egress (binds 127.0.0.1 only).
   *
-  * The Spark usage is the dashboard contract at any scale: every
-  * request body is a FILTERED aggregate (the filters push into the
-  * cached cleaned frame; only chart-sized result tables are ever
-  * collected), and the model fits lazily once. Run with
+  * The Spark usage is bounded at any scale: building the server runs one
+  * aggregate over the cached cleaned frame, grouped by the two filter
+  * dimensions and the chart key, (Country, Year, Disease Name), and
+  * collects it ([[Rollup]]). That is at most |Country|×|Year|×|Disease|
+  * cells (21×25×21 = 11,025 at the reference schema), whatever the row
+  * count. Every page is then a fold over the selected cells on the
+  * driver, with the same values HealthQueries gives on the filtered
+  * frame, and submits no Spark job. The model fits lazily once. Run with
   * `sbt "runMain graft.dashboard.DashboardMain"` → http://127.0.0.1:8080/.
   *
   * The primary constructor serves an already-cleaned table (the ETL's
@@ -52,12 +55,7 @@ final class DashboardServer(spark: SparkSession,
       graft.operators.CorpusBuild.st17IncrementalStream(spark, d).collect()
         .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
     }
-  // both filter lists from one aggregate; each is bounded by its
-  // category domain
-  private val (years, countries): (Seq[Long], Seq[String]) = {
-    val r = cleaned.agg(collect_set(col("Year")), collect_set(col("Country"))).head()
-    (r.getSeq[Long](0).sorted.toSeq, r.getSeq[String](1).sorted.toSeq)
-  }
+  private val rollup = Rollup(cleaned)
   private lazy val fitted = MortalityModel.fit(cleaned)
 
   // ---------- rendering helpers ----------
@@ -119,42 +117,27 @@ final class DashboardServer(spark: SparkSession,
     svgFrame(title, dots)
   }
 
-  private def table(df: DataFrame, n: Int = 10): String = {
-    val rows = df.limit(n).collect()
-    val head = df.columns.map(c => s"<th>${esc(c)}</th>").mkString
-    val body = rows.map(r => "<tr>" + r.toSeq.map {
-      case d: Double => f"<td>$d%.4f</td>"
-      case x => s"<td>${esc(String.valueOf(x))}</td>"
-    }.mkString + "</tr>").mkString("\n")
-    s"<table border='1' cellspacing='0' cellpadding='3'><tr>$head</tr>$body</table>"
+  private def overviewTable(o: Overview): String = {
+    val head = Seq("total_records", "n_countries", "n_diseases", "avg_mortality",
+      "avg_recovery", "avg_cost").map(c => s"<th>$c</th>").mkString
+    val body = Seq(o.rows, o.countries, o.diseases).map(n => s"<td>$n</td>") ++
+      Seq(o.mortality, o.recovery, o.cost).map(_.fold("<td>null</td>")(d => f"<td>$d%.4f</td>"))
+    s"<table border='1' cellspacing='0' cellpadding='3'><tr>$head</tr><tr>${body.mkString}</tr></table>"
   }
 
   // ---------- pages ----------
 
-  /** The filtered main page — the EP1 contract: params narrow the frame,
-    * every section re-aggregates the narrowed frame. */
-  def page(params: Map[String, String]): String = {
-    val yearSel = params.get("year").flatMap(_.toLongOption).filter(years.contains)
-    val ctySel = params.get("country").filter(countries.contains)
-    var df = cleaned
-    yearSel.foreach(y => df = df.filter(col("Year") === y))
-    ctySel.foreach(c => df = df.filter(col("Country") === c))
+  /** What the main page shows for these params — the EP1 contract: a
+    * year or country in its domain narrows every section (the trend
+    * ignores the year: a one-year trend is a point, the reference's
+    * country_trend_df shape); any other value is ignored. */
+  def view(params: Map[String, String]): PageView =
+    rollup.view(params.get("year").flatMap(_.toLongOption).filter(rollup.years.contains),
+      params.get("country").filter(rollup.countries.contains))
 
-    val deadliest = HealthQueries.topDeadliest(df, 5).collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSeq
-    val cost = HealthQueries.avgCostPerDisease(df, 5).collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSeq
-    // trend ignores the year filter (a one-year trend is a point) but
-    // honors the country filter — the reference's country_trend_df shape
-    val trendBase = ctySel.fold(cleaned)(c => cleaned.filter(col("Country") === c))
-    val trend = HealthQueries.mortalityTrend(trendBase).collect()
-      .map(r => (r.get(0).asInstanceOf[Number].doubleValue, r.getDouble(1))).toSeq
-    val scatter = df.filter(col("Healthcare_Access_Pct").isNotNull &&
-        col("Mortality_Rate_per_100").isNotNull)
-      .groupBy(col("Disease Name"))
-      .agg(avg(col("Healthcare_Access_Pct")).as("x"),
-           avg(col("Mortality_Rate_per_100")).as("y"))
-      .collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq
+  /** The filtered main page, rendered from [[view]]. */
+  def page(params: Map[String, String]): String = {
+    val v = view(params)
 
     def opt(v: String, sel: Boolean) =
       s"""<option value="${esc(v)}"${if (sel) " selected" else ""}>${esc(v)}</option>"""
@@ -164,16 +147,16 @@ final class DashboardServer(spark: SparkSession,
        |<form method="get" action="/">
        |<b>Global Filters</b> &nbsp;
        |Year: <select name="year"><option value="">All</option>
-       |${years.map(y => opt(y.toString, yearSel.contains(y))).mkString}</select>
+       |${rollup.years.map(y => opt(y.toString, v.year.contains(y))).mkString}</select>
        |Country: <select name="country"><option value="">All</option>
-       |${countries.map(c => opt(c, ctySel.contains(c))).mkString}</select>
+       |${rollup.countries.map(c => opt(c, v.country.contains(c))).mkString}</select>
        |<input type="submit" value="Apply"/></form>
-       |<h2>Overview</h2>${table(HealthQueries.overview(df))}
+       |<h2>Overview</h2>${overviewTable(v.overview)}
        |<h2>Top-Level Health Insights</h2>
-       |${svgBar("Top Deadliest Diseases (Average Mortality Rate)", deadliest)}
-       |${svgBar("Average Treatment Cost by Disease", cost)}
-       |${svgLine("Mortality Trend" + ctySel.fold("")(c => s" - $c"), trend)}
-       |${svgScatter("Healthcare Access vs Mortality (by disease)", scatter)}
+       |${svgBar("Top Deadliest Diseases (Average Mortality Rate)", v.deadliest)}
+       |${svgBar("Average Treatment Cost by Disease", v.cost)}
+       |${svgLine("Mortality Trend" + v.country.fold("")(c => s" - $c"), v.trend)}
+       |${svgScatter("Healthcare Access vs Mortality (by disease)", v.scatter)}
        |${corpusDir.fold("")(_ =>
          "<h2>Corpus Engine</h2><a href=\"/corpus\">Flagship corpus-build funnel (ep01)</a>")}
        |<h2>Mortality Prediction</h2>

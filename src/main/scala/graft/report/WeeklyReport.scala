@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.health.{HealthEtl, HealthQueries}
 import graft.ml.MortalityModel
+import graft.util.Exact.stableAvg
 
 /** EP3 — the reference's batch "weekly report" job (nb:cell28
   * `fetch_and_model_health` → `build_health_pdf` → `send_health_email` →
@@ -101,8 +102,8 @@ object WeeklyReport {
       cleaned.filter(col("Healthcare_Access_Pct").isNotNull &&
           col("Mortality_Rate_per_100").isNotNull)
         .groupBy(col("Country"))
-        .agg(avg(col("Healthcare_Access_Pct")).as("x"),
-             avg(col("Mortality_Rate_per_100")).as("y"))
+        .agg(stableAvg(col("Healthcare_Access_Pct")).as("x"),
+             stableAvg(col("Mortality_Rate_per_100")).as("y"))
         .collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq))
 
   /** The flagship corpus-build funnel as a report section + chart

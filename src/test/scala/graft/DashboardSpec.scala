@@ -3,10 +3,14 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** EP1 shell end-to-end: real HTTP server, real filtered Spark
-  * aggregates, real SVG charts in the response body. */
+import graft.health.HealthQueries
+import graft.util.Exact.stableAvg
+
+/** EP1 shell end-to-end: real HTTP server, pages folded from the
+  * build-time rollup, real SVG charts in the response body. */
 class DashboardSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -83,5 +87,80 @@ class DashboardSpec extends AnyFunSuite {
       assert(pred > 0.0 && pred < 100.0, s"implausible mortality prediction $pred")
       assert(body.contains("r2="), "model metrics panel missing")
     } finally s.stop(0)
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  test("every page equals HealthQueries on the filtered frame, bit for bit, and runs no Spark job") {
+    val cleaned = CleanedHealth(spark)
+    val years = cleaned.select("Year").distinct().collect().map(_.getLong(0)).sorted
+    val ys = Seq(years.head, years(years.length / 2), years.last)
+    val cs = Seq("Brazil", "Itl", "Usa")
+    val filters = Map.empty[String, String] +:
+      (ys.map(y => Map("year" -> y.toString)) ++ cs.map(c => Map("country" -> c)) ++
+        ys.zip(cs).map { case (y, c) => Map("year" -> y.toString, "country" -> c) })
+    val s = server
+    filters.foreach { p =>
+      val trendBase = p.get("country").fold(cleaned)(c => cleaned.filter(col("Country") === c))
+      val f = p.get("year").fold(trendBase)(y => trendBase.filter(col("Year") === y.toLong))
+      val v = s.view(p)
+      // Spark orders exactly tied means arbitrarily, the page by disease
+      // name: the five means must match in order, the names once ties
+      // are put in name order
+      def top5(page: Seq[(String, Double)], q: Int => org.apache.spark.sql.DataFrame) = {
+        def pairs(n: Int) = q(n).collect().map(r => (r.getString(0), bits(r.getDouble(1)))).toSeq
+        val byName = pairs(1000).sortWith { case ((da, a), (db, b)) =>
+          java.lang.Double.longBitsToDouble(a) > java.lang.Double.longBitsToDouble(b) ||
+            (a == b && da < db) }
+        val got = page.map { case (d, m) => (d, bits(m)) }
+        assert(got.map(_._2) == pairs(5).map(_._2), p)
+        assert(got == byName.take(5), p)
+      }
+      top5(v.deadliest, HealthQueries.topDeadliest(f, _))
+      top5(v.cost, HealthQueries.avgCostPerDisease(f, _))
+      assert(v.trend.map { case (y, m) => (bits(y), bits(m)) } ==
+        HealthQueries.mortalityTrend(trendBase).collect()
+          .map(r => (bits(r.getLong(0).toDouble), bits(r.getDouble(1)))).toSeq, p)
+      val scatter = f.filter(col("Healthcare_Access_Pct").isNotNull &&
+          col("Mortality_Rate_per_100").isNotNull)
+        .groupBy(col("Disease Name"))
+        .agg(stableAvg(col("Healthcare_Access_Pct")), stableAvg(col("Mortality_Rate_per_100")))
+        .orderBy(col("Disease Name"))
+        .collect().map(r => (bits(r.getDouble(1)), bits(r.getDouble(2)))).toSeq
+      assert(v.scatter.map { case (x, y) => (bits(x), bits(y)) } == scatter, p)
+      val o = HealthQueries.overview(f).head()
+      val ov = v.overview
+      assert(Seq(ov.rows, ov.countries, ov.diseases) == Seq(o.getLong(0), o.getLong(1), o.getLong(2)), p)
+      assert(Seq(ov.mortality, ov.recovery, ov.cost).map(_.map(bits)) ==
+        Seq(3, 4, 5).map(i => Option(o.get(i)).map(x => bits(x.asInstanceOf[Double]))), p)
+
+      val (out, cost) = QueryMetrics(spark)(s.page(p))
+      assert(out.isSuccess && !out.get.contains("error:"), p)
+      assert(cost.jobs == 0, s"page $p submitted ${cost.jobs} Spark jobs")
+    }
+  }
+
+  test("a (year, country) pair with no rows renders empty; values outside the domains are ignored") {
+    val cleaned = CleanedHealth(spark)
+    val years = cleaned.select("Year").distinct().collect().map(_.getLong(0)).sorted
+    val (y1, y2) = (years.head, years.last)
+    // both years and both countries are in the domains; (y1, Usa) holds no row
+    val slice = cleaned.filter(
+      (col("Country") === "Brazil" && col("Year") === y1) ||
+      (col("Country") === "Usa" && col("Year") === y2))
+    val s = new graft.dashboard.DashboardServer(spark, slice, None)
+    val empty = s.page(Map("year" -> y1.toString, "country" -> "Usa"))
+    assert(!empty.contains("error:"), empty.take(400))
+    assert(empty.contains(s"selected>$y1") && empty.contains("selected>Usa"))
+    assert(empty.contains(
+      "<tr><td>0</td><td>0</td><td>0</td><td>null</td><td>null</td><td>null</td></tr>"))
+    assert(!empty.contains("<rect") && !empty.contains("<circle"),
+      "the bar charts and the scatter must be empty")
+
+    val all = s.page(Map.empty)
+    assert(all.contains("<rect"))
+    Seq(Map("year" -> "1800"), Map("country" -> "Atlantis"),
+        Map("year" -> "1800", "country" -> "Atlantis"), Map("year" -> "x"))
+      .foreach(p => assert(s.page(p) == all, p))
   }
 }

@@ -38,6 +38,7 @@ def main():
         text = open(args.suite_log, errors="replace").read()
         total = re.findall(r"Total number of tests run: (\d+)", text)
         succ = re.findall(r"succeeded (\d+)", text)
+        failed = re.findall(r"succeeded \d+, failed (\d+)", text)
         if total:
             # a log holding more than one scalatest summary (per-module
             # sbt builds, an appended retry) must not silently inflate
@@ -49,6 +50,7 @@ def main():
                       file=sys.stderr)
             cert["suite_total"] = int(total[-1])
             cert["suite_succeeded"] = int(succ[-1]) if succ else 0
+            cert["suite_failed"] = int(failed[-1]) if failed else 0
             cert["suite_log_mtime"] = datetime.datetime.fromtimestamp(
                 os.path.getmtime(args.suite_log)).isoformat(timespec="seconds")
         else:

@@ -2,6 +2,13 @@
 # Run a graft main on the compiled classes without sbt (keeps the sbt
 # lock free for tests). Usage: tools/jrun.sh <MainClass> [args...]
 cd "$(dirname "$0")/.." || exit 1
+# a bare `sbt compile` leaves the classes dir without the resources, and a
+# run then cannot find the graft-lines data source
+services=target/scala-2.13/classes/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister
+if [ ! -f "$services" ]; then
+  echo "jrun.sh: $services is missing; run sbt \"Compile / copyResources\" first" >&2
+  exit 1
+fi
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
