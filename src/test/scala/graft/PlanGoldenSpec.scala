@@ -104,7 +104,12 @@ class PlanGoldenSpec extends AnyFunSuite {
     // broadcast into the corpus scan; the only shuffle is the top-k)
     "v34_ivf_serve",
     // r13: the wide perceptual hash (the route m10's guard names)
-    "m17_widehash_pairs")
+    "m17_widehash_pairs",
+    // the rest of the v-family: with these, every query that builds on
+    // the shared embedding-search fragments has its plan pinned
+    "v01_cosine_topk", "v05_ivf_index", "v12_binary_topk", "v13_mrr_eval",
+    "v14_centroid_outliers", "v15_prf_rerank", "v16_dim_variance",
+    "v17_shortlist_sweep")
 
   /** Final-plan operator fingerprint: one op name per tree node in
     * preorder, AQE final-plan only, whole-stage-codegen wrappers and node
