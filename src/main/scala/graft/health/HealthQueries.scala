@@ -9,7 +9,9 @@ import graft.util.Exact.{stableAvg, stableSum}
   * A1–A13) over the cleaned table — each a declarative group-sort-topk
   * plan (partial+final HashAggregate + TakeOrderedAndProject), plus the
   * six notebook SQL texts runnable verbatim (modulo identifier quoting)
-  * through a temp view, reproducing the EP2 path.
+  * through a temp view, reproducing the EP2 path. Every top-n breaks
+  * exact ties on its group keys, ascending, as the sql01–sql06 contracts
+  * do, so which tied groups make the cut does not depend on Spark.
   */
 object HealthQueries {
 
@@ -19,7 +21,7 @@ object HealthQueries {
       .groupBy(col("Disease Name"))
       .agg(stableAvg(col("Mortality_Rate_per_100")).as("avg_mortality"),
            count(lit(1)).as("total_records"))
-      .orderBy(col("avg_mortality").desc)
+      .orderBy(col("avg_mortality").desc, col("Disease Name").asc)
       .limit(n)
 
   /** A2 — recovery trends over time (nb:cell6). */
@@ -27,7 +29,8 @@ object HealthQueries {
     df.groupBy(col("Year"), col("Disease Name"))
       .agg(count(lit(1)).as("cases"),
            stableAvg(col("Recovery_Rate")).as("avg_recovery"))
-      .orderBy(col("avg_recovery").asc, col("cases").desc)
+      .orderBy(col("avg_recovery").asc, col("cases").desc,
+               col("Year").asc, col("Disease Name").asc)
       .limit(n)
 
   /** A3 — healthcare access vs mortality by country (nb:cell10); the
@@ -59,7 +62,7 @@ object HealthQueries {
       .agg(stableAvg(col("Mortality_Rate_per_100")).as("avg_mortality"),
            stableSum(col("Affected_Male")).as("total_male_affected"),
            stableSum(col("Affected_Female")).as("total_female_affected"))
-      .orderBy(col("avg_mortality").desc)
+      .orderBy(col("avg_mortality").desc, col("Disease Name").asc)
       .limit(n)
 
   /** A6 — urban/rural burden level 1 (nb:cell21). */
@@ -82,7 +85,7 @@ object HealthQueries {
            stableAvg(col("avg_affected")).as("avg_affected"),
            stableAvg(col("avg_urban")).as("avg_urban"),
            stableAvg(col("avg_rural")).as("avg_rural"))
-      .orderBy(col("avg_affected").desc)
+      .orderBy(col("avg_affected").desc, col("Disease Name").asc)
       .limit(n)
 
   /** A8 — app: avg treatment cost per disease (Health_Jim.py:450-458). */
@@ -90,7 +93,7 @@ object HealthQueries {
     df.filter(col("Avg_Treatment_Cost_USD").isNotNull)
       .groupBy(col("Disease Name"))
       .agg(stableAvg(col("Avg_Treatment_Cost_USD")).as("avg_cost"))
-      .orderBy(col("avg_cost").desc)
+      .orderBy(col("avg_cost").desc, col("Disease Name").asc)
       .limit(n)
 
   /** A9 — app: mortality trend by year (Health_Jim.py:461-471). */
@@ -115,7 +118,7 @@ object HealthQueries {
            stableAvg(col("Mortality_Rate_per_100")).as("avg_mortality"),
            stableAvg(col("Recovery_Rate")).as("avg_recovery"),
            stableAvg(col("DALYs")).as("avg_dalys"))
-      .orderBy(col("avg_affected").desc)
+      .orderBy(col("avg_affected").desc, col("Disease Name").asc)
       .limit(n)
 
   /** A12 — correlation of every numeric feature with the mortality rate

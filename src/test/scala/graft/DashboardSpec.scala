@@ -98,26 +98,21 @@ class DashboardSpec extends AnyFunSuite {
     val cs = Seq("Brazil", "Itl", "Usa")
     val filters = Map.empty[String, String] +:
       (ys.map(y => Map("year" -> y.toString)) ++ cs.map(c => Map("country" -> c)) ++
-        ys.zip(cs).map { case (y, c) => Map("year" -> y.toString, "country" -> c) })
+        ys.zip(cs).map { case (y, c) => Map("year" -> y.toString, "country" -> c) } :+
+        // a page whose top-5s hold exactly tied means
+        Map("year" -> "2024", "country" -> "Itl"))
     val s = server
     filters.foreach { p =>
       val trendBase = p.get("country").fold(cleaned)(c => cleaned.filter(col("Country") === c))
       val f = p.get("year").fold(trendBase)(y => trendBase.filter(col("Year") === y.toLong))
       val v = s.view(p)
-      // Spark orders exactly tied means arbitrarily, the page by disease
-      // name: the five means must match in order, the names once ties
-      // are put in name order
-      def top5(page: Seq[(String, Double)], q: Int => org.apache.spark.sql.DataFrame) = {
-        def pairs(n: Int) = q(n).collect().map(r => (r.getString(0), bits(r.getDouble(1)))).toSeq
-        val byName = pairs(1000).sortWith { case ((da, a), (db, b)) =>
-          java.lang.Double.longBitsToDouble(a) > java.lang.Double.longBitsToDouble(b) ||
-            (a == b && da < db) }
-        val got = page.map { case (d, m) => (d, bits(m)) }
-        assert(got.map(_._2) == pairs(5).map(_._2), p)
-        assert(got == byName.take(5), p)
+      // exact ties go in disease-name order on both sides
+      def top5(page: Seq[(String, Double)], q: org.apache.spark.sql.DataFrame) = {
+        val want = q.collect().map(r => (r.getString(0), bits(r.getDouble(1)))).toSeq
+        assert(page.map { case (d, m) => (d, bits(m)) } == want, p)
       }
-      top5(v.deadliest, HealthQueries.topDeadliest(f, _))
-      top5(v.cost, HealthQueries.avgCostPerDisease(f, _))
+      top5(v.deadliest, HealthQueries.topDeadliest(f, 5))
+      top5(v.cost, HealthQueries.avgCostPerDisease(f, 5))
       assert(v.trend.map { case (y, m) => (bits(y), bits(m)) } ==
         HealthQueries.mortalityTrend(trendBase).collect()
           .map(r => (bits(r.getLong(0).toDouble), bits(r.getDouble(1)))).toSeq, p)
