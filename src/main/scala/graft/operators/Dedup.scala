@@ -362,16 +362,30 @@ object Dedup {
       |FROM p WHERE jac >= 0.7
       |ORDER BY ida, idb""".stripMargin
 
-  /** Quantized embedding: ×1000, round half-away, exact int64. */
-  private val quantize =
-    "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-  private def dot(a: String, b: String): String = s"vec_dot($a, $b)"
+  import Embeddings.{cellRanks, cos, dot, quantized}
 
-  /** d04 — embedding cosine near-dup at 0.99. The natural table has no
-    * near-identical pairs (max cos ≈ 0.51), so the corpus is augmented
-    * in-query with deterministically perturbed copies of the first 50
-    * vectors (id+100000, first coordinate +0.05) — identically on both
-    * engines — to exercise the operator.
+  /** The quantized embeddings ([[Embeddings]]) with `nrm`, plus planted
+    * near-copies of the first 50 vectors (first coordinate +50 in the
+    * int64 grid, i.e. +0.05), identically on both engines: the natural
+    * table has no near-identical pairs (max cos ≈ 0.51), so d04/d07 add
+    * their own. Planted ids are offset by max(vec_id)+1, derived in-plan
+    * (1-row broadcast) + identically in the oracle: a fixed literal
+    * offset collides with real ids once the corpus outgrows it.
+    */
+  private def withPlantedCopies(spark: SparkSession, dir: String): DataFrame = {
+    val base = quantized(spark, dir)
+    val off = Tables.embeddings(spark, dir)
+      .agg((max(col("vec_id")) + 1L).as("off"))
+    val perturbed = base.filter(col("vec_id") < 50)
+      .crossJoin(broadcast(off))
+      .select((col("vec_id") + col("off")).as("vec_id"), expr(
+        "concat(array(element_at(q, 1) + 50), slice(q, 2, size(q) - 1))").as("q"))
+    base.unionByName(perturbed)
+      .withColumn("nrm", expr(dot("q", "q")))
+  }
+
+  /** d04 — embedding cosine near-dup at 0.99, over the corpus with its
+    * planted near-copies ([[withPlantedCopies]]).
     *
     * Candidate pairs come from IVF cells (the v02 coarse quantizer: the
     * first `nlist` base vectors as centroids, every vector probes its 2
@@ -394,30 +408,9 @@ object Dedup {
     * as d01).
     */
   def d04EmbeddingNearDup(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-    // planted ids offset by max(vec_id)+1, derived in-plan (1-row
-    // broadcast) + identically in the oracle: a fixed literal offset
-    // collides with real ids once the corpus outgrows it
-    val off = Tables.embeddings(spark, dir)
-      .agg((max(col("vec_id")) + 1L).as("off"))
-    val perturbed = base.filter(col("vec_id") < 50)
-      .crossJoin(broadcast(off))
-      .select((col("vec_id") + col("off")).as("vec_id"), expr(
-        "concat(array(element_at(q, 1) + 50), slice(q, 2, size(q) - 1))").as("q"))
-    val all = base.unionByName(perturbed)
-      .withColumn("nrm", expr(dot("q", "q")))
+    val all = withPlantedCopies(spark, dir)
     // IVF probe assignment: per-vector top-2 cells by centroid cosine
-    val centroids = all.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("centroid_id"), col("q").as("cenq"), col("nrm").as("cenn"))
-    val scored = all.crossJoin(broadcast(centroids))
-      .withColumn("ccos", expr(
-        s"CAST(${dot("q", "cenq")} AS DOUBLE) / sqrt(CAST(nrm AS DOUBLE) * CAST(cenn AS DOUBLE))"))
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    val probes = scored
-      .withColumn("crank", org.apache.spark.sql.functions.row_number().over(wAssign))
+    val probes = cellRanks(all, nlist)
       .filter(col("crank") <= 2)
       .select(col("vec_id").as("id"), col("centroid_id").as("cell"))
     // candidates: one shuffle on cell, pairs only within a cell
@@ -429,7 +422,7 @@ object Dedup {
     val a = all.select(col("vec_id").as("ida"), col("q").as("qa"), col("nrm").as("na"))
     val b = all.select(col("vec_id").as("idb"), col("q").as("qb"), col("nrm").as("nb"))
     cand.join(a, "ida").join(b, "idb")
-      .withColumn("cos", expr(s"CAST(${dot("qa", "qb")} AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))"))
+      .withColumn("cos", expr(cos("qa", "qb", "na", "nb")))
       .filter(col("cos") >= 0.99)
       .select(col("ida"), col("idb"), round(col("cos"), 6).as("cosine"))
       .orderBy(col("ida"), col("idb"))
@@ -498,8 +491,8 @@ object Dedup {
     * cells), then inside each cluster drop every vector that has a
     * LOWER-id near-identical neighbour (cos >= 0.99) in the same cell —
     * i.e. keep the min-id representative of each near-dup neighbourhood.
-    * Corpus augmented with d04's planted perturbed copies so the
-    * operator demonstrably drops something.
+    * Corpus augmented with the planted near-copies
+    * ([[withPlantedCopies]]) so the operator demonstrably drops something.
     *
     * This is the within-cell rule, not a transitive closure: a chain
     * a~b, b~c with cos(a,c) < threshold keeps {a, c}. That matches the
@@ -513,26 +506,7 @@ object Dedup {
     * by nlist ~ √n.
     */
   def d07SemanticDedup(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-    // planted-id offset derived from the corpus (the d04 convention)
-    val off = Tables.embeddings(spark, dir)
-      .agg((max(col("vec_id")) + 1L).as("off"))
-    val perturbed = base.filter(col("vec_id") < 50)
-      .crossJoin(broadcast(off))
-      .select((col("vec_id") + col("off")).as("vec_id"), expr(
-        "concat(array(element_at(q, 1) + 50), slice(q, 2, size(q) - 1))").as("q"))
-    val all = base.unionByName(perturbed)
-      .withColumn("nrm", expr(dot("q", "q")))
-    val centroids = all.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("centroid_id"), col("q").as("cenq"), col("nrm").as("cenn"))
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    val members = all.crossJoin(broadcast(centroids))
-      .withColumn("ccos", expr(
-        s"CAST(${dot("q", "cenq")} AS DOUBLE) / sqrt(CAST(nrm AS DOUBLE) * CAST(cenn AS DOUBLE))"))
-      .withColumn("crank", org.apache.spark.sql.functions.row_number().over(wAssign))
+    val members = cellRanks(withPlantedCopies(spark, dir), nlist)
       .filter(col("crank") === 1)
       .select(col("vec_id").as("id"), col("centroid_id").as("cell"),
         col("q"), col("nrm"))
@@ -542,8 +516,7 @@ object Dedup {
       col("q").as("qb"), col("nrm").as("nb"))
     // for each vector, its nearest-by-id lower near-identical cellmate
     val dupOf = x.join(y, col("cell") === col("cellb") && col("idb") < col("ida"))
-      .filter(expr(s"CAST(${dot("qa", "qb")} AS DOUBLE)" +
-        " / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) >= 0.99"))
+      .filter(expr(cos("qa", "qb", "na", "nb") + " >= 0.99"))
       .groupBy(col("ida")).agg(min(col("idb")).as("dup_of"))
     members.join(dupOf, members("id") === dupOf("ida"), "left")
       .select(col("id").as("vec_id"), col("cell"),

@@ -7,13 +7,9 @@ import org.apache.spark.sql.types.LongType
 
 import graft.{QueryDef, Tables}
 
-/** Approximate-nearest-neighbor search over the `embeddings` table.
-  *
-  * Cross-engine determinism: vectors are quantized to int64 (×1000,
-  * round-half-away) so dot products and squared norms are exact integers;
-  * the cosine double derived from them (`dot / sqrt(na·nb)`) is then
-  * bit-identical in every IEEE-754 engine, which makes top-k ORDER
-  * (including which candidates make the cut) engine-independent.
+/** Approximate-nearest-neighbor search over the `embeddings` table, in
+  * the exact-integer vector format of [[Embeddings]], whose fragments
+  * every query here is built from.
   *
   * Scale story:
   *  - v01 is the exact baseline: query side × corpus side brute force.
@@ -29,6 +25,7 @@ import graft.{QueryDef, Tables}
   *    touches nprobe/nlist of the corpus, and nlist sizes ~√n.
   */
 object Similarity {
+  import Embeddings._
 
   /** IVF cell-count sizing for a corpus of `n` vectors: ~√n (the
     * standard IVF heuristic — keeps Σ|cell|² ≈ n·√n for the cell-join
@@ -42,6 +39,32 @@ object Similarity {
     */
   def defaultNlist(n: Long): Int =
     math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
+
+  /** Overflow-safe `multiplier · ⌈n/25⌉ · n ≤ maxPairs`: the raw Long
+    * product wraps negative near n ≈ 1.7·10¹⁰ corpus rows — which would
+    * silently PASS the `<=` check and run the flat O(n²) scan at
+    * exactly the scale the bound exists to refuse. Compared via
+    * division instead (for c > 0, m·q·c ≤ B ⟺ m·q ≤ ⌊B/c⌋; m·q itself
+    * cannot overflow: m ≤ 8 and q ≤ Long.Max/25).
+    */
+  private def pairsFit(nCorpus: Long, multiplier: Long, maxPairs: Long): Boolean = {
+    val nQueries = (nCorpus + 24) / 25
+    nCorpus == 0 || multiplier * nQueries <= maxPairs / nCorpus
+  }
+
+  /** Non-throwing form of the pair pricing: true iff the flat
+    * (queries × corpus) scan fits under `maxPairs`. Footer-metadata
+    * only — no Spark job. v09/v12 use it to ROUTE to the IVF-restricted
+    * path instead of refusing (the eval-family ops keep the hard
+    * `require`, because silently approximating an *evaluation metric*
+    * would corrupt the number being measured, while v09/v12's contract
+    * — top-k ids by exact re-ranked cosine over a heuristic shortlist —
+    * is preserved by a different shortlist generator).
+    */
+  private[graft] def pairsWithinBound(
+      spark: SparkSession, dir: String,
+      maxPairs: Long, multiplier: Long = 1L): Boolean =
+    pairsFit(Tables.footerRowCount(spark, dir, "embeddings"), multiplier, maxPairs)
 
   /** Shared scale guard for the exact all-pairs eval family (v01 / v13 /
     * v15 / v17): each scores every (query, corpus) pair — O(n²/25) work
@@ -58,32 +81,6 @@ object Similarity {
     * joins 3 feedback rows per query against the corpus; v17 makes an
     * exact pass and a Hamming pass).
     */
-  /** Non-throwing form of the pair pricing: true iff the flat
-    * (queries × corpus) scan fits under `maxPairs`. Footer-metadata
-    * only — no Spark job. v09/v12 use it to ROUTE to the IVF-restricted
-    * path instead of refusing (the eval-family ops keep the hard
-    * `require`, because silently approximating an *evaluation metric*
-    * would corrupt the number being measured, while v09/v12's contract
-    * — top-k ids by exact re-ranked cosine over a heuristic shortlist —
-    * is preserved by a different shortlist generator).
-    */
-  /** Overflow-safe `multiplier · ⌈n/25⌉ · n ≤ maxPairs`: the raw Long
-    * product wraps negative near n ≈ 1.7·10¹⁰ corpus rows — which would
-    * silently PASS the `<=` check and run the flat O(n²) scan at
-    * exactly the scale the bound exists to refuse. Compared via
-    * division instead (for c > 0, m·q·c ≤ B ⟺ m·q ≤ ⌊B/c⌋; m·q itself
-    * cannot overflow: m ≤ 8 and q ≤ Long.Max/25).
-    */
-  private def pairsFit(nCorpus: Long, multiplier: Long, maxPairs: Long): Boolean = {
-    val nQueries = (nCorpus + 24) / 25
-    nCorpus == 0 || multiplier * nQueries <= maxPairs / nCorpus
-  }
-
-  private[graft] def pairsWithinBound(
-      spark: SparkSession, dir: String,
-      maxPairs: Long, multiplier: Long = 1L): Boolean =
-    pairsFit(Tables.footerRowCount(spark, dir, "embeddings"), multiplier, maxPairs)
-
   private[graft] def requirePairsBounded(
       spark: SparkSession, dir: String, op: String,
       maxPairs: Long, multiplier: Long = 1L,
@@ -98,12 +95,6 @@ object Similarity {
         s"$nCorpus = $pairs scored pairs exceeds the $maxPairs bound - " +
         s"$routes at this scale, or raise maxPairs deliberately")
   }
-
-  private val quantize =
-    "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-  private def dot(a: String, b: String): String = s"vec_dot($a, $b)"
-  private def cos(qa: String, qb: String, na: String, nb: String): String =
-    s"CAST(${dot(qa, qb)} AS DOUBLE) / sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
 
   /** v01 — exact brute-force cosine top-5 per query (every 25th vector is
     * a query). Self-match excluded; ties broken by neighbor id.
@@ -122,22 +113,7 @@ object Similarity {
   def v01CosineTopK(spark: SparkSession, dir: String,
                     maxPairs: Long = 1L << 28): DataFrame = {
     requirePairsBounded(spark, dir, "v01", maxPairs)
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val corpus = vecs
-      .select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    queries.join(corpus, col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(exactPairs(normed(spark, dir)), 5), Seq(cosine()))
   }
 
   private val v01Sql =
@@ -168,33 +144,26 @@ object Similarity {
     * [[graft.operators.Dedup]].
     */
   def v02IvfTopK(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val centroids = vecs.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("centroid_id"), col("q").as("cenq"), col("nrm").as("cenn"))
-    val scored = vecs.crossJoin(broadcast(centroids))
-      .withColumn("ccos", expr(cos("q", "cenq", "nrm", "cenn")))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    // every vector's home cell (rank 1) and, for queries, the probe cells (rank <= 2)
-    val ranked = scored.withColumn("crank", row_number().over(wAssign))
-    val members = ranked.filter(col("crank") === 1)
+    val ranked = cellRanks(normed(spark, dir), nlist)
+    probeTop3(ranked, cellMembers(ranked))
+  }
+
+  /** Every vector's home cell (rank 1) as the index rows v02 probes and
+    * v05 stores: (`cell`, `cid`, `cq`, `cn`). */
+  private def cellMembers(ranked: DataFrame): DataFrame =
+    ranked.filter(col("crank") === 1)
       .select(col("centroid_id").as("cell"), col("vec_id").as("cid"),
               col("q").as("cq"), col("nrm").as("cn"))
+
+  /** v02/v05's search: each query probes its 2 nearest cells (crank ≤ 2
+    * of `ranked`) and takes the exact-cosine top-3 of those cells'
+    * `members`. */
+  private def probeTop3(ranked: DataFrame, members: DataFrame): DataFrame = {
     val probes = ranked.filter(col("vec_id") % 25 === 0 && col("crank") <= 2)
       .select(col("vec_id").as("qid"), col("q").as("qq"),
               col("nrm").as("qn"), col("centroid_id").as("cell"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    probes.join(members, "cell")
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(probes.join(members, "cell").filter(col("qid") =!= col("cid")), 3),
+      Seq(cosine()))
   }
 
   private val v02Sql =
@@ -242,16 +211,7 @@ object Similarity {
     * data motion beyond the sums.
     */
   def v03KmeansStep(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val centroids = vecs.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("centroid_id"), col("q").as("cenq"), col("nrm").as("cenn"))
-    val scored = vecs.crossJoin(broadcast(centroids))
-      .withColumn("ccos", expr(cos("q", "cenq", "nrm", "cenn")))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    val assigned = scored.withColumn("crank", row_number().over(wAssign))
+    val assigned = cellRanks(normed(spark, dir), nlist)
       .filter(col("crank") === 1)
       .select(col("centroid_id").as("cell"), col("vec_id"), col("q"))
     // element-wise exact sum: explode to (cell, dim) pairs, partial+final
@@ -326,19 +286,7 @@ object Similarity {
       .withColumn("m", expr("array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"))
       .select(col("vec_id"), expr(q8).as("q"))
       .withColumn("nrm", expr(dot("q", "q")))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val corpus = vecs
-      .select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    queries.join(corpus, col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine_q8"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(exactPairs(vecs), 3), Seq(cosine("cosine_q8")))
   }
 
   private val v04Sql =
@@ -379,37 +327,12 @@ object Similarity {
     */
   def v05IvfIndexLifecycle(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
     val idx = graft.util.Scratch.dir("graft_v05_idx_")
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val centroids = vecs.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("centroid_id"), col("q").as("cenq"), col("nrm").as("cenn"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    val ranked = vecs.crossJoin(broadcast(centroids))
-      .withColumn("ccos", expr(cos("q", "cenq", "nrm", "cenn")))
-      .withColumn("crank", row_number().over(wAssign))
+    val ranked = cellRanks(normed(spark, dir), nlist)
     // OFFLINE: persist the cell-partitioned member index
-    ranked.filter(col("crank") === 1)
-      .select(col("centroid_id").as("cell"), col("vec_id").as("cid"),
-        col("q").as("cq"), col("nrm").as("cn"))
-      .write.mode("overwrite").partitionBy("cell").parquet(idx)
+    cellMembers(ranked).write.mode("overwrite").partitionBy("cell").parquet(idx)
     // ONLINE: probe the stored index; the cell equi-join prunes to the
     // probed cells' directories
-    val members = spark.read.parquet(idx)
-    val probes = ranked.filter(col("vec_id") % 25 === 0 && col("crank") <= 2)
-      .select(col("vec_id").as("qid"), col("q").as("qq"),
-        col("nrm").as("qn"), col("centroid_id").as("cell"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    probes.join(members, "cell")
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-        col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    probeTop3(ranked, spark.read.parquet(idx))
   }
 
   /** v06 — exact maximum-inner-product top-5 per query. Retrieval
@@ -424,20 +347,12 @@ object Similarity {
     * which v02/v05's IVF index applies unchanged.
     */
   def v06MipsTopK(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("q").as("qq"))
+    val vecs = quantized(spark, dir)
+    val queries = queryRows(vecs).select(col("vec_id").as("qid"), col("q").as("qq"))
     val corpus = vecs.select(col("vec_id").as("cid"), col("q").as("cq"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dot").desc, col("cid").asc)
-    queries.join(corpus, col("qid") =!= col("cid"))
+    val pairs = queries.join(corpus, col("qid") =!= col("cid"))
       .withColumn("dot", expr(dot("qq", "cq")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), col("dot"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(topK(pairs, col("dot").desc, 5), Seq(col("dot")))
   }
 
   private val v06Sql =
@@ -560,38 +475,10 @@ object Similarity {
     requirePairsBounded(spark, dir, "v08", maxPairs,
       routes = "route through v18 (IVF-PQ: cell-restricted ADC + exact refine) " +
         "or v05 (stored IVF index)")
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    pqScores(spark, dir, nSub, subDim, nCodes)
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), col("score"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(topK(pqScores(spark, dir, nSub, subDim, nCodes), col("score").desc, 3),
+      Seq(col("score")))
   }
 
-  /** The PQ ADC scoring frame shared by v08 (rank on the approximate
-    * score directly) and v09 (shortlist, then exact re-rank): one row per
-    * (query, corpus vector) with the Σ-of-LUT-entries int64 score.
-    *
-    * SHAPE (r14): the per-pair score is computed WITHOUT a per-pair
-    * exchange. The original form exploded nSub subspace rows per pair,
-    * joined the LUT on (s, code) and finished the Σ with
-    * `groupBy(qid, cid)` — whose hash exchange materialized the FULL
-    * O(n²/25) pair set on disk before the consumers' top-k
-    * WindowGroupLimit could drop anything (at the 100× probe that one
-    * exchange was ~40 GB of (qid, cid, partial) rows and killed the
-    * box). Now the nSub codes per corpus vector pack into ONE array
-    * (a corpus-sized, not pair-sized, groupBy) and each query's full
-    * nSub×nCodes LUT packs into one broadcast array; pairs are formed
-    * by a broadcast nested-loop join and scored in place with an
-    * s-indexed aggregate over the two arrays. Pair rows now stream
-    * straight into the consumers' rank windows, whose PARTIAL
-    * WindowGroupLimit keeps top-k per query per partition map-side —
-    * the only pair-bearing exchange ships ≤ k·|queries|·|partitions|
-    * rows. Values are bit-identical: the same int64 LUT partials,
-    * summed in subspace order instead of aggregate order.
-    */
   /** The packed-array PQ frame behind [[pqScores]] and v18's
     * cell-restricted ADC: per corpus vector the nSub codes s-major in
     * ONE array (`cid`, `codes`); per query the full nSub×nCodes LUT
@@ -609,10 +496,8 @@ object Similarity {
   private def pqCodeArrays(spark: SparkSession, dir: String, nSub: Int,
                            subDim: Int, nCodes: Int)
       : (DataFrame, DataFrame, String) = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
     // (vector, subspace) subvectors — slice is 1-based
-    val sub = vecs
+    val sub = quantized(spark, dir)
       .select(col("vec_id"), explode(expr(s"sequence(0, ${nSub - 1})")).as("s"), col("q"))
       .select(col("vec_id"), col("s"), expr(s"slice(q, s * $subDim + 1, $subDim)").as("qs"))
     val codebook = sub.filter(col("vec_id") < nCodes)
@@ -646,6 +531,28 @@ object Similarity {
     (encoded, lut, scoreExpr)
   }
 
+  /** The PQ ADC scoring frame shared by v08 (rank on the approximate
+    * score directly) and v09 (shortlist, then exact re-rank): one row per
+    * (query, corpus vector) with the Σ-of-LUT-entries int64 score.
+    *
+    * SHAPE (r14): the per-pair score is computed WITHOUT a per-pair
+    * exchange. The original form exploded nSub subspace rows per pair,
+    * joined the LUT on (s, code) and finished the Σ with
+    * `groupBy(qid, cid)` — whose hash exchange materialized the FULL
+    * O(n²/25) pair set on disk before the consumers' top-k
+    * WindowGroupLimit could drop anything (at the 100× probe that one
+    * exchange was ~40 GB of (qid, cid, partial) rows and killed the
+    * box). Now the nSub codes per corpus vector pack into ONE array
+    * (a corpus-sized, not pair-sized, groupBy) and each query's full
+    * nSub×nCodes LUT packs into one broadcast array; pairs are formed
+    * by a broadcast nested-loop join and scored in place with an
+    * s-indexed aggregate over the two arrays. Pair rows now stream
+    * straight into the consumers' rank windows, whose PARTIAL
+    * WindowGroupLimit keeps top-k per query per partition map-side —
+    * the only pair-bearing exchange ships ≤ k·|queries|·|partitions|
+    * rows. Values are bit-identical: the same int64 LUT partials,
+    * summed in subspace order instead of aggregate order.
+    */
   private def pqScores(spark: SparkSession, dir: String, nSub: Int, subDim: Int,
                        nCodes: Int): DataFrame = {
     val (encoded, lut, scoreExpr) = pqCodeArrays(spark, dir, nSub, subDim, nCodes)
@@ -665,23 +572,11 @@ object Similarity {
     * other labels.
     */
   def v10FilteredTopK(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("label"), col("q").as("qq"), col("nrm").as("qn"))
-    val corpus = vecs
-      .select(col("vec_id").as("cid"), col("label"), col("q").as("cq"), col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    queries.join(corpus, Seq("label"))
+    val vecs = normed(spark, dir, col("label"))
+    val pairs = asQueries(queryRows(vecs), col("label"))
+      .join(asCorpus(vecs, col("label")), Seq("label"))
       .filter(col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("label"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(pairs, 3), Seq(cosine()), before = Seq(col("label")))
   }
 
   private val v10Sql =
@@ -735,26 +630,9 @@ object Similarity {
         "to the IVF-restricted ADC funnel (v18) at shortlist depth " + shortlist)
       return v18IvfPqRerank(spark, dir, nprobe = 2, shortlist = shortlist)
     }
-    val wShort = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    val short = pqScores(spark, dir, 8, 8, 16)
-      .withColumn("srank", row_number().over(wShort))
-      .filter(col("srank") <= shortlist)
+    val short = topK(pqScores(spark, dir, 8, 8, 16), col("score").desc, shortlist, "srank")
       .select(col("qid"), col("cid"))
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val qside = vecs.select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val cside = vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    short.join(qside, "qid").join(cside, "cid")
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(withVectors(short, normed(spark, dir)), 3), Seq(cosine()))
   }
 
   private val v08Sql =
@@ -866,33 +744,19 @@ object Similarity {
     */
   def v11PrefixRerank(spark: SparkSession, dir: String, prefixDim: Int = 16,
                       shortlist: Int = 32): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
+    val vecs = quantized(spark, dir)
       .withColumn("p", expr(s"slice(q, 1, $prefixDim)"))
       .withColumn("nrm", expr(dot("q", "q")))
       .withColumn("pnrm", expr(dot("p", "p")))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
+    val queries = queryRows(vecs)
       .select(col("vec_id").as("qid"), col("p").as("qp"), col("pnrm").as("qpn"))
     val corpus = vecs
       .select(col("vec_id").as("cid"), col("p").as("cp"), col("pnrm").as("cpn"))
-    val wShort = Window.partitionBy(col("qid"))
-      .orderBy(col("pcos").desc, col("cid").asc)
-    val short = queries.join(corpus, col("qid") =!= col("cid"))
+    val prefixPairs = queries.join(corpus, col("qid") =!= col("cid"))
       .withColumn("pcos", expr(cos("qp", "cp", "qpn", "cpn")))
-      .withColumn("srank", row_number().over(wShort))
-      .filter(col("srank") <= shortlist)
+    val short = topK(prefixPairs, col("pcos").desc, shortlist, "srank")
       .select(col("qid"), col("cid"))
-    val qside = vecs.select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val cside = vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    short.join(qside, "qid").join(cside, "cid")
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(withVectors(short, vecs), 3), Seq(cosine()))
   }
 
   private val v11Sql =
@@ -964,20 +828,10 @@ object Similarity {
     if (!flat)
       System.err.println(s"[v12] pair bound $maxPairs exceeded - restricting " +
         "the Hamming scan to IVF probed-cell members (coarse-quantize-first)")
-    def packWord(w: Int): String =
-      s"aggregate(sequence(0, 31), 0L, (acc, j) -> " +
-        s"acc + IF(element_at(embedding, ${32 * w} + j + 1) > 0, shiftleft(1L, j), 0L))"
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("w0", expr(packWord(0)))
-      .withColumn("w1", expr(packWord(1)))
-      .withColumn("q", expr(quantize))
-      .withColumn("nrm", expr(dot("q", "q")))
+    val vecs = signBitVectors(spark, dir)
     val codes = vecs.select(col("vec_id"), col("w0"), col("w1"))
-    val qcodes = codes.filter(col("vec_id") % 25 === 0)
+    val qcodes = queryRows(codes)
       .select(col("vec_id").as("qid"), col("w0").as("qw0"), col("w1").as("qw1"))
-    val wShort = Window.partitionBy(col("qid"))
-      .orderBy(col("ham").asc, col("cid").asc)
     // candidate (qid, cid) surface: flat all-pairs under the bound,
     // IVF probed-cell members past it (same Hamming + refine after)
     val cand =
@@ -992,25 +846,29 @@ object Similarity {
           .join(qcodes, "qid")
           .join(codes.select(col("vec_id").as("cid"), col("w0"), col("w1")), "cid")
       }
-    val short = cand
-      .withColumn("ham",
-        expr("CAST(bit_count(qw0 ^ w0) + bit_count(qw1 ^ w1) AS BIGINT)"))
-      .withColumn("srank", row_number().over(wShort))
-      .filter(col("srank") <= shortlist)
+    val short = topK(cand.withColumn("ham", expr(hamming)), col("ham").asc, shortlist, "srank")
       .select(col("qid"), col("cid"), col("ham"))
-    val qside = vecs.select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val cside = vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    short.join(qside, "qid").join(cside, "cid")
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), col("ham").as("hamming"),
-              round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(withVectors(short, vecs), 3),
+      Seq(col("ham").as("hamming"), cosine()))
   }
+
+  /** Per vector the sign bits of its embedding packed 32 dims per int64
+    * word (`w0`, `w1`; strictly positive → 1), next to `q` and `nrm`:
+    * the binary codes v12 and v17 rank by [[hamming]] distance. */
+  private def signBitVectors(spark: SparkSession, dir: String): DataFrame = {
+    def packWord(w: Int): String =
+      s"aggregate(sequence(0, 31), 0L, (acc, j) -> " +
+        s"acc + IF(element_at(embedding, ${32 * w} + j + 1) > 0, shiftleft(1L, j), 0L))"
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"))
+      .withColumn("w0", expr(packWord(0)))
+      .withColumn("w1", expr(packWord(1)))
+      .withColumn("q", expr(quantize))
+      .withColumn("nrm", expr(dot("q", "q")))
+  }
+
+  /** Hamming distance of a query's codes (`qw0`, `qw1`) to a vector's. */
+  private val hamming = "CAST(bit_count(qw0 ^ w0) + bit_count(qw1 ^ w1) AS BIGINT)"
 
   private val v12Sql =
     """WITH v AS (
@@ -1050,6 +908,68 @@ object Similarity {
       |FROM r WHERE rank <= 3
       |ORDER BY qid, rank""".stripMargin
 
+  /** IVF coarse assignment shared by v18, v22, v23, v34 and the routed
+    * fallbacks of v12/v20/v28/v30: `homes` = every vector's
+    * nearest-centroid cell (cid → cell), `probes` = each query's `nprobe`
+    * nearest cells (qid → cell), both cut from one checkpointed
+    * [[Embeddings.cellRanks]]. v02/v03/v05/v14/v21 apply the same
+    * builder inline, with no cut or checkpoint, so their plans keep the
+    * assignment subtree.
+    */
+  private val ivfAssignCache = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, Int, Int), (DataFrame, DataFrame)]()
+  private def ivfAssignment(spark: SparkSession, dir: String,
+                            nlist: Int, nprobe: Int)
+      : (DataFrame, DataFrame) =
+    // Memoized per (session, corpus fingerprint, nlist, nprobe) — the
+    // neutralLshIndex convention (ADVICE r11): the eager checkpoint
+    // below runs the full assignment job at construction, so every
+    // fresh construction used to pin ANOTHER checkpointed RDD in
+    // executor storage (PlanGoldenSpec builds fresh per test; ScaleProbe
+    // times construction) and re-pay the job. One assignment per layout
+    // per corpus per JVM is the production contract — consumers share
+    // the stored artifact, exactly like the LSH index.
+    //
+    // ADVICE r12: `np` is normalized ONCE and used for the cache key
+    // and BOTH crank filters — the r12 form keyed on max(nprobe,1) but
+    // filtered probes on the raw nprobe, so nprobe=0 cached an EMPTY
+    // probe set under key 1 and poisoned a later nprobe=1 call. And
+    // entries whose session has stopped are purged on the next lookup:
+    // the cached frames pin eagerly-checkpointed RDDs, which otherwise
+    // outlive their (test) sessions for the JVM lifetime.
+    {
+    ivfAssignCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
+    val np = math.max(nprobe, 1)
+    ivfAssignCache.computeIfAbsent(
+      (spark, Tables.artifactKey(dir, "embeddings"), nlist, np), _ => {
+    // EAGER localCheckpoint: `ranked` feeds BOTH homes and probes — the
+    // d18/w29 multi-consumer class. Left inline, the crossJoin+Window
+    // subtree duplicates per consumer and which copy's exchange AQE
+    // materializes vs reuses is a run-to-run race that flapped v22's
+    // plan golden (suite r11 run 2). Eager (the d18/g04 convention, not
+    // the lazy form): with a lazy checkpoint the two consumers
+    // materialize at different times and AQE's post-materialization
+    // stats still differ run-to-run — eager pins one materialized RDD
+    // with known stats before either consumer plans.
+    // CRITICAL: rank-filter + column-prune BEFORE the checkpoint. The
+    // checkpoint is a pushdown barrier — placed above the raw window it
+    // materialized ALL n×nlist ranked rows with the vector arrays
+    // (probe-measured 0.7 MB → 735 MB at 10×, because the inline form's
+    // crank filters reach WindowGroupLimit and only top rows ever
+    // shuffle). Filtering to crank ≤ nprobe first keeps the WGL
+    // pushdown AND bounds the checkpointed RDD to n×nprobe skinny rows.
+    val ranked = cellRanks(normed(spark, dir), nlist)
+      .filter(col("crank") <= np)
+      .select(col("vec_id"), col("centroid_id"), col("crank"))
+      .localCheckpoint()
+    val homes = ranked.filter(col("crank") === 1)
+      .select(col("vec_id").as("cid"), col("centroid_id").as("cell"))
+    val probes = ranked.filter(col("vec_id") % 25 === 0 && col("crank") <= np)
+      .select(col("vec_id").as("qid"), col("centroid_id").as("cell"), col("crank"))
+    (homes, probes)
+  })
+  }
+
   /** v18 — the fully composed production ANN serving shape (FAISS-style
     * IVF-PQ with refinement): the coarse quantizer (v02's fixed 16-cell
     * IVF, probe-2) restricts the corpus to the probed cells, PQ ADC
@@ -1079,85 +999,10 @@ object Similarity {
     * probe measured 4.9× at the old pinned 16); √n keeps per-query
     * probe cost ~n/√n and is what production IVF deployments size.
     */
-  /** IVF coarse assignment shared by v18 and the v09/v12 routed
-    * fallbacks: `homes` = every vector's nearest-centroid cell (cid →
-    * cell), `probes` = each query's `nprobe` nearest cells (qid →
-    * cell). Centroids are the deterministic first-`nlist` vectors (the
-    * v02/v03 seeding convention); assignment is max exact-int64 cosine,
-    * tie → lower centroid id. One broadcast of the nlist-row centroid
-    * table — map-side at any corpus size.
-    */
-  private val ivfAssignCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), (DataFrame, DataFrame)]()
-  private def ivfAssignment(spark: SparkSession, dir: String,
-                            nlist: Int, nprobe: Int)
-      : (DataFrame, DataFrame) =
-    // Memoized per (session, corpus fingerprint, nlist, nprobe) — the
-    // neutralLshIndex convention (ADVICE r11): the eager checkpoint
-    // below runs the full assignment job at construction, so every
-    // fresh construction used to pin ANOTHER checkpointed RDD in
-    // executor storage (PlanGoldenSpec builds fresh per test; ScaleProbe
-    // times construction) and re-pay the job. One assignment per layout
-    // per corpus per JVM is the production contract — consumers share
-    // the stored artifact, exactly like the LSH index.
-    //
-    // ADVICE r12: `np` is normalized ONCE and used for the cache key
-    // and BOTH crank filters — the r12 form keyed on max(nprobe,1) but
-    // filtered probes on the raw nprobe, so nprobe=0 cached an EMPTY
-    // probe set under key 1 and poisoned a later nprobe=1 call. And
-    // entries whose session has stopped are purged on the next lookup:
-    // the cached frames pin eagerly-checkpointed RDDs, which otherwise
-    // outlive their (test) sessions for the JVM lifetime.
-    {
-    ivfAssignCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val np = math.max(nprobe, 1)
-    ivfAssignCache.computeIfAbsent(
-      (spark, Tables.artifactKey(dir, "embeddings"), nlist, np), _ => {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val cen = vecs.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("centroid_id"), col("q").as("cenq"), col("nrm").as("cenn"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    // EAGER localCheckpoint: `ranked` feeds BOTH homes and probes — the
-    // d18/w29 multi-consumer class. Left inline, the crossJoin+Window
-    // subtree duplicates per consumer and which copy's exchange AQE
-    // materializes vs reuses is a run-to-run race that flapped v22's
-    // plan golden (suite r11 run 2). Eager (the d18/g04 convention, not
-    // the lazy form): with a lazy checkpoint the two consumers
-    // materialize at different times and AQE's post-materialization
-    // stats still differ run-to-run — eager pins one materialized RDD
-    // with known stats before either consumer plans.
-    // CRITICAL: rank-filter + column-prune BEFORE the checkpoint. The
-    // checkpoint is a pushdown barrier — placed above the raw window it
-    // materialized ALL n×nlist ranked rows with the vector arrays
-    // (probe-measured 0.7 MB → 735 MB at 10×, because the inline form's
-    // crank filters reach WindowGroupLimit and only top rows ever
-    // shuffle). Filtering to crank ≤ nprobe first keeps the WGL
-    // pushdown AND bounds the checkpointed RDD to n×nprobe skinny rows.
-    val ranked = vecs.select(col("vec_id"), col("q"), col("nrm"))
-      .crossJoin(broadcast(cen))
-      .withColumn("ccos", expr(cos("q", "cenq", "nrm", "cenn")))
-      .withColumn("crank", row_number().over(wAssign))
-      .filter(col("crank") <= np)
-      .select(col("vec_id"), col("centroid_id"), col("crank"))
-      .localCheckpoint()
-    val homes = ranked.filter(col("crank") === 1)
-      .select(col("vec_id").as("cid"), col("centroid_id").as("cell"))
-    val probes = ranked.filter(col("vec_id") % 25 === 0 && col("crank") <= np)
-      .select(col("vec_id").as("qid"), col("centroid_id").as("cell"), col("crank"))
-    (homes, probes)
-  })
-  }
-
   def v18IvfPqRerank(spark: SparkSession, dir: String, nlist: Int = 0,
                      nprobe: Int = 2, shortlist: Int = 16): DataFrame = {
     val nl = if (nlist > 0) nlist
              else defaultNlist(Tables.footerRowCount(spark, dir, "embeddings"))
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
     val (homes, probes) = ivfAssignment(spark, dir, nl, nprobe)
     // PQ encode + query LUTs — the shared packed-array frame
     // (8 subspaces x 8 dims, 16 codes). The r14 shape: the old
@@ -1170,27 +1015,14 @@ object Similarity {
     // k-bounded top-k are the only exchanges left.
     val (encoded, lut, scoreExpr) = pqCodeArrays(spark, dir, 8, 8, 16)
     // IVF restriction BEFORE the ADC scoring: only probed-cell members
-    val wShort = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    val short = encoded.join(homes, "cid").join(probes, "cell")
+    val cellPairs = encoded.join(homes, "cid").join(probes, "cell")
       .filter(col("qid") =!= col("cid"))
       .join(broadcast(lut), Seq("qid"))
       .withColumn("score", expr(scoreExpr))
-      .withColumn("srank", row_number().over(wShort))
-      .filter(col("srank") <= shortlist)
+    val short = topK(cellPairs, col("score").desc, shortlist, "srank")
       .select(col("qid"), col("cid"))
     // exact refine (the v09 tail)
-    val qside = vecs.select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val cside = vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    short.join(qside, "qid").join(cside, "cid")
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(withVectors(short, normed(spark, dir)), 3), Seq(cosine()))
   }
 
   private val v18Sql =
@@ -1292,22 +1124,12 @@ object Similarity {
     val cands = homes.join(broadcast(fixed), "cell")
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"))
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val qside = vecs.filter(col("vec_id") % 25 === 0 && col("vec_id") < maxQid)
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
+    val vecs = normed(spark, dir)
+    val qside = asQueries(vecs.filter(col("vec_id") % 25 === 0 && col("vec_id") < maxQid))
+    val pairs = asCorpus(vecs)
       .join(broadcast(cands), "cid")
       .join(broadcast(qside), "qid")
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-        col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(pairs, k), Seq(cosine()))
   }
 
   private val v34Sql =
@@ -1364,21 +1186,10 @@ object Similarity {
   def v13MrrEval(spark: SparkSession, dir: String, topK: Int = 10,
                  maxPairs: Long = 1L << 28): DataFrame = {
     requirePairsBounded(spark, dir, "v13", maxPairs)
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("q").as("qq"), col("nrm").as("qn"))
-    val corpus = vecs
-      .select(col("vec_id").as("cid"), col("label").as("clabel"),
-        col("q").as("cq"), col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    queries.join(corpus, col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    val vecs = normed(spark, dir, col("label"))
+    val pairs = asQueries(queryRows(vecs), col("label").as("qlabel"))
+      .join(asCorpus(vecs, col("label").as("clabel")), col("qid") =!= col("cid"))
+    cosineTopK(pairs, topK)
       .groupBy(col("qid"), col("qlabel"))
       .agg(
         min(when(col("clabel") === col("qlabel"), col("rank"))).as("first_rel"),
@@ -1433,17 +1244,7 @@ object Similarity {
     * row_number window), the a24 convention.
     */
   def v14CentroidOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val cen = vecs.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("centroid_id"), col("q").as("cenq"),
-        col("nrm").as("cenn"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    val assigned = vecs.crossJoin(broadcast(cen))
-      .withColumn("ccos", expr(cos("q", "cenq", "nrm", "cenn")))
-      .withColumn("crank", row_number().over(wAssign))
+    val assigned = cellRanks(normed(spark, dir), 16)
       .filter(col("crank") === 1)
       .select(col("vec_id"), col("centroid_id").as("cell"),
         (col("nrm") + col("cenn") - lit(2) * expr(dot("q", "cenq"))).as("dist_sq"))
@@ -1504,19 +1305,9 @@ object Similarity {
   def v15PrfRerank(spark: SparkSession, dir: String,
                    maxPairs: Long = 1L << 28): DataFrame = {
     requirePairsBounded(spark, dir, "v15", maxPairs, multiplier = 3L)
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val corpus = vecs
-      .select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
-    val wFb = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    val fb = queries.join(corpus, col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wFb))
-      .filter(col("rank") <= 3)
+    val vecs = normed(spark, dir)
+    val corpus = asCorpus(vecs)
+    val fb = cosineTopK(exactPairs(vecs), 3)
       .select(col("qid"), col("cid").as("fid"))
     val fbv = fb.join(vecs.select(col("vec_id").as("fid"), col("q").as("fq")), Seq("fid"))
     // ||q'||^2 per query: all 9 pairwise feedback dots
@@ -1524,17 +1315,13 @@ object Similarity {
       .join(fbv.select(col("qid"), col("fq").as("f2")), Seq("qid"))
       .groupBy(col("qid")).agg(sum(expr(dot("f1", "f2"))).as("qn2"))
     // numerator per (query, candidate): sum of feedback-to-candidate dots
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    fbv.crossJoin(corpus) // feedback docs stay candidates: PRF re-retrieves them
+    val scored = fbv.crossJoin(corpus) // feedback docs stay candidates: PRF re-retrieves them
       .groupBy(col("qid"), col("cid"), col("cn"))
       .agg(sum(expr(dot("fq", "cq"))).as("num"), count(lit(1)).as("nfb"))
       .filter(col("nfb") === 3 && col("qid") =!= col("cid"))
       .join(broadcast(qnorm), Seq("qid"))
-      .withColumn("score",
-        expr("CAST(num AS DOUBLE) / sqrt(CAST(qn2 AS DOUBLE) * CAST(cn AS DOUBLE))"))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 5)
+      .withColumn("score", expr(cosOf("num", "qn2", "cn")))
+    topK(scored, col("score").desc, 5)
       .join(fb.select(col("qid"), col("fid").as("cid"), lit(true).as("fbflag")),
             Seq("qid", "cid"), "left")
       .select(col("qid"), col("rank").cast("int").as("rank"),
@@ -1649,32 +1436,15 @@ object Similarity {
                         maxPairs: Long = 1L << 28): DataFrame = {
     // one exact all-pairs pass + one Hamming all-pairs pass
     requirePairsBounded(spark, dir, "v17", maxPairs, multiplier = 2L)
-    def packWord(w: Int): String =
-      s"aggregate(sequence(0, 31), 0L, (acc, j) -> " +
-        s"acc + IF(element_at(embedding, ${32 * w} + j + 1) > 0, shiftleft(1L, j), 0L))"
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("w0", expr(packWord(0)))
-      .withColumn("w1", expr(packWord(1)))
-      .withColumn("q", expr(quantize))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-    val wCos = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    val exact3 = queries
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-      .join(vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn")),
-            col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
+    val vecs = signBitVectors(spark, dir)
+    val queries = queryRows(vecs)
+    val exact3 = cosineTopK(exactPairs(vecs), 3).select(col("qid"), col("cid"))
     val wHam = Window.partitionBy(col("qid")).orderBy(col("ham").asc, col("cid").asc)
     val hamRank = queries
       .select(col("vec_id").as("qid"), col("w0").as("qw0"), col("w1").as("qw1"))
       .join(vecs.select(col("vec_id").as("cid"), col("w0"), col("w1")),
             col("qid") =!= col("cid"))
-      .withColumn("ham",
-        expr("CAST(bit_count(qw0 ^ w0) + bit_count(qw1 ^ w1) AS BIGINT)"))
+      .withColumn("ham", expr(hamming))
       .withColumn("hrank", row_number().over(wHam))
       .select(col("qid"), col("cid"), col("hrank"))
     val nq = queries.agg(count(lit(1)).as("n_queries"))
@@ -1752,24 +1522,16 @@ object Similarity {
     requirePairsBounded(spark, dir, "v19", maxPairs, multiplier = 8,
       routes = "generate candidates with v12 (binary Hamming shortlist) or " +
         "v05 (stored IVF index) and MaxSim-score only the shortlist")
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
+    val vecs = quantized(spark, dir)
       .select(col("vec_id"),
         expr("transform(sequence(0, 7), s -> slice(q, s * 8 + 1, 8))").as("subs"))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("subs").as("qsubs"))
+    val queries = queryRows(vecs).select(col("vec_id").as("qid"), col("subs").as("qsubs"))
     val corpus = vecs.select(col("vec_id").as("cid"), col("subs").as("csubs"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    queries.join(corpus, col("qid") =!= col("cid"))
+    val pairs = queries.join(corpus, col("qid") =!= col("cid"))
       .withColumn("score", expr(
         "aggregate(qsubs, CAST(0 AS BIGINT), (acc, qs) -> " +
           "acc + array_max(transform(csubs, cs -> vec_dot(qs, cs))))"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), col("score").as("maxsim_score"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(topK(pairs, col("score").desc, 3), Seq(col("score").as("maxsim_score")))
   }
 
   private val v19Sql =
@@ -1827,34 +1589,19 @@ object Similarity {
     // probed-cell members, fusion arithmetic unchanged. The flat form
     // is NOT silently approximated under the bound — it stays the
     // contract; only past-the-bound corpora get the funnel.
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val wd = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
+    val vecs = normed(spark, dir)
     val densePairs =
-      if (pairsWithinBound(spark, dir, maxPairs)) {
-        val dq = vecs.filter(col("vec_id") % 25 === 0)
-          .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-        dq.join(
-          vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn")),
-          col("qid") =!= col("cid"))
-      } else {
+      if (pairsWithinBound(spark, dir, maxPairs)) exactPairs(vecs)
+      else {
         System.err.println(s"[v20] pair bound $maxPairs exceeded - dense arm " +
           "routes through the IVF probed-cell restriction (the v18 assignment)")
         val nl = defaultNlist(Tables.footerRowCount(spark, dir, "embeddings"))
         val (homes, probes) = ivfAssignment(spark, dir, nl, nprobe = 2)
-        homes.join(probes, "cell")
+        withVectors(homes.join(probes, "cell")
           .filter(col("qid") =!= col("cid"))
-          .select(col("qid"), col("cid"))
-          .join(vecs.select(col("vec_id").as("qid"),
-            col("q").as("qq"), col("nrm").as("qn")), "qid")
-          .join(vecs.select(col("vec_id").as("cid"),
-            col("q").as("cq"), col("nrm").as("cn")), "cid")
+          .select(col("qid"), col("cid")), vecs)
       }
-    val dense = densePairs
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank_d", row_number().over(wd))
-      .filter(col("rank_d") <= 10)
+    val dense = cosineTopK(densePairs, 10, rank = "rank_d")
       .select(col("qid"), col("cid"), col("rank_d"))
     // lexical: distinct word bigrams ([[Dedup.wordBigramRows]] — the one
     // shared shingle frame with the uniform null contract), sparse
@@ -1863,24 +1610,21 @@ object Similarity {
     val sz = bg.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val qbg = bg.filter(col("doc_id") % 25 === 0)
       .select(col("doc_id").as("qid"), col("s"))
-    val wl = Window.partitionBy(col("qid")).orderBy(col("jac").desc, col("cid").asc)
-    val lexical = bg.select(col("doc_id").as("cid"), col("s"))
+    val overlap = bg.select(col("doc_id").as("cid"), col("s"))
       .join(broadcast(qbg), Seq("s"))
       .filter(col("qid") =!= col("cid"))
       .groupBy(col("qid"), col("cid")).agg(count(lit(1)).as("inter"))
       .join(sz.select(col("doc_id").as("qid"), col("sz").as("sq")), "qid")
       .join(sz.select(col("doc_id").as("cid"), col("sz").as("sc")), "cid")
       .withColumn("jac", expr("(1000000 * inter) div (sq + sc - inter)"))
-      .withColumn("rank_l", row_number().over(wl))
-      .filter(col("rank_l") <= 10)
+    val lexical = topK(overlap, col("jac").desc, 10, "rank_l")
       .select(col("qid"), col("cid"), col("rank_l"))
-    val wf = Window.partitionBy(col("qid")).orderBy(col("rrf_micro").desc, col("cid").asc)
-    dense.join(lexical, Seq("qid", "cid"), "full_outer")
+    val fused = dense.join(lexical, Seq("qid", "cid"), "full_outer")
       .withColumn("rrf_micro",
         expr("coalesce(1000000 div (60 + rank_d), 0) + coalesce(1000000 div (60 + rank_l), 0)"))
-      .withColumn("fused_rank", row_number().over(wf))
-      .filter(col("fused_rank") <= 5)
-      .select(col("qid"), col("fused_rank").cast("int").as("fused_rank"),
+    topK(fused, col("rrf_micro").desc, 5, "fused_rank")
+      .select(
+col("qid"), col("fused_rank").cast("int").as("fused_rank"),
         col("cid").as("neighbor_id"), col("rrf_micro"),
         coalesce(col("rank_d"), lit(-1)).cast(LongType).as("dense_rank"),
         coalesce(col("rank_l"), lit(-1)).cast(LongType).as("lex_rank"))
@@ -1957,17 +1701,9 @@ object Similarity {
     */
   def v21CentroidDrift(spark: SparkSession, dir: String,
                        nlist: Int = 16): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val centroids = vecs.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("centroid_id"), col("q").as("cenq"), col("nrm").as("cenn"))
+    val vecs = normed(spark, dir)
     val n = vecs.agg(count(lit(1)).as("n"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    val assigned = vecs.crossJoin(broadcast(centroids))
-      .withColumn("ccos", expr(cos("q", "cenq", "nrm", "cenn")))
-      .withColumn("crank", row_number().over(wAssign))
+    val assigned = cellRanks(vecs, nlist)
       .filter(col("crank") === 1)
       .crossJoin(broadcast(n))
       .select(col("centroid_id").as("cell"),
@@ -2038,29 +1774,14 @@ object Similarity {
     */
   def v22FilteredIvf(spark: SparkSession, dir: String, nprobe: Int = 2): DataFrame = {
     val nl = defaultNlist(Tables.footerRowCount(spark, dir, "embeddings"))
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
+    val vecs = normed(spark, dir, col("label"))
     val (homes, probes) = ivfAssignment(spark, dir, nl, nprobe)
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-              col("q").as("qq"), col("nrm").as("qn"))
-    val members = vecs
-      .select(col("vec_id").as("cid"), col("label").as("clabel"),
-              col("q").as("cq"), col("nrm").as("cn"))
-      .join(homes, "cid")
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    queries.join(probes, "qid")
+    val members = asCorpus(vecs, col("label").as("clabel")).join(homes, "cid")
+    val pairs = asQueries(queryRows(vecs), col("label").as("qlabel"))
+      .join(probes, "qid")
       .join(members, "cell")
       .filter(col("qlabel") === col("clabel") && col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("qlabel").as("label"),
-              col("rank").cast("int").as("rank"),
-              col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(pairs, 3), Seq(cosine()), before = Seq(col("qlabel").as("label")))
   }
 
   private val v22Sql =
@@ -2117,21 +1838,10 @@ object Similarity {
                      maxPairs: Long = 1L << 28): DataFrame = {
     requirePairsBounded(spark, dir, "v23", maxPairs)
     val nl = defaultNlist(Tables.footerRowCount(spark, dir, "embeddings"))
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
+    val vecs = normed(spark, dir)
     val (homes, probes) = ivfAssignment(spark, dir, nl, 8)
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-    val wCos = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    val exact3 = queries
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-      .join(vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn")),
-            col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
-    val nq = queries.agg(count(lit(1)).as("n_queries"))
+    val exact3 = cosineTopK(exactPairs(vecs), 3).select(col("qid"), col("cid"))
+    val nq = queryRows(vecs).agg(count(lit(1)).as("n_queries"))
     exact3
       .join(homes, "cid")
       .join(probes.select(col("qid"), col("cell"), col("crank")),
@@ -2204,9 +1914,7 @@ object Similarity {
     * corpus-linear, output constant.
     */
   def v24PqDistortion(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-    val sub = vecs
+    val sub = quantized(spark, dir)
       .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("s"), col("q"))
       .select(col("vec_id"), col("s"), expr("slice(q, s * 8 + 1, 8)").as("qs"))
     val codebook = sub.filter(col("vec_id") < 16)
@@ -2286,10 +1994,9 @@ object Similarity {
     val n = Tables.footerRowCount(spark, dir, "embeddings")
     val b = math.max(6, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)))
     val nh = tables * b
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val hyper = vecs.filter(col("vec_id") >= 16 && col("vec_id") < 16 + nh)
+    val vecs = normed(spark, dir)
+    val hyper = vecs
+.filter(col("vec_id") >= 16 && col("vec_id") < 16 + nh)
       .select((col("vec_id") - 16).as("hp"), col("q").as("hq"))
     val buckets = vecs.select(col("vec_id"), col("q"))
       .crossJoin(broadcast(hyper))
@@ -2307,16 +2014,7 @@ object Similarity {
         Seq("t", "bucket"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid")).distinct()
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    cand
-      .join(vecs.select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn")), "qid")
-      .join(vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn")), "cid")
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-        col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(withVectors(cand, vecs), 3), Seq(cosine()))
   }
 
   private val v25Sql =
@@ -2379,16 +2077,7 @@ object Similarity {
       routes = "serve ANN from v25's bucket join and accept its measured " +
         "recall, or audit a bounded sample corpus")
     val (vecs, buckets) = lshSignature(spark, dir, tables)
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val corpus = vecs
-      .select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    val exact = queries.join(corpus, col("qid") =!= col("cid"))
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("cid"))
+    val exact = cosineTopK(exactPairs(vecs), 3).select(col("qid"), col("cid"))
     val qb = buckets.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("qid"), col("t"), col("bucket"))
     val cand = qb.join(buckets.select(col("vec_id").as("cid"), col("t"), col("bucket")),
@@ -2491,8 +2180,7 @@ object Similarity {
                 maxPairs: Long = 1L << 31): DataFrame = {
     requirePairsBounded(spark, dir, "v27", maxPairs,
       routes = "route through v18 (IVF-PQ: cell-restricted ADC + exact refine)")
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
+    val vecs = quantized(spark, dir)
     val cb1 = vecs.filter(col("vec_id") < 16)
       .select(col("vec_id").as("code1"), col("q").as("cw1"))
     val w1 = Window.partitionBy(col("vec_id"))
@@ -2515,23 +2203,18 @@ object Similarity {
         expr("vec_dot(r, r) - 2 * vec_dot(r, cw2) + vec_dot(cw2, cw2)"))
       .withColumn("rn", row_number().over(w2)).filter(col("rn") === 1)
       .select(col("vec_id").as("cid"), col("code1"), col("code2"))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
+    val queries = queryRows(vecs)
     val lut1 = queries.crossJoin(broadcast(cb1))
       .select(col("vec_id").as("qid"), col("code1"),
         expr("vec_dot(q, cw1)").as("p1"))
     val lut2 = queries.crossJoin(broadcast(cb2))
       .select(col("vec_id").as("qid"), col("code2"),
         expr("vec_dot(q, cw2)").as("p2"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    enc2.join(broadcast(lut1), Seq("code1"))
+    val pairs = enc2.join(broadcast(lut1), Seq("code1"))
       .join(broadcast(lut2), Seq("qid", "code2"))
       .filter(col("qid") =!= col("cid"))
       .withColumn("score", col("p1") + col("p2"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-        col("cid").as("neighbor_id"), col("score"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(topK(pairs, col("score").desc, 3), Seq(col("score")))
   }
 
   private val v27Sql =
@@ -2613,15 +2296,9 @@ object Similarity {
     */
   def v28MmrDiversify(spark: SparkSession, dir: String,
                       maxPairs: Long = 1L << 28): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"))
-    val corpus = vecs
-      .select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("rel").desc, col("cid").asc)
+    val vecs = normed(spark, dir)
+    val queries = asQueries(queryRows(vecs))
+    val corpus = asCorpus(vecs)
     // shortlist generator: exact all-pairs under the pair bound (the
     // contract the sf0.01 oracle prices); past it the candidates ROUTE
     // through the shared IVF assignment (the v20 dense-arm convention —
@@ -2643,10 +2320,7 @@ object Similarity {
           .select(col("qid"), col("cid"))
           .join(queries, "qid").join(corpus, "cid")
       }
-    val cand = candPairs
-      .withColumn("rel", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 10)
+    val cand = cosineTopK(candPairs, 10, rank = "rn", score = "rel")
       .select(col("qid"), col("cid"), col("rel"), col("rn"),
         col("cq"), col("cn"))
     val sims = cand
@@ -2774,9 +2448,7 @@ object Similarity {
     * apply because the join side is k, never the corpus.
     */
   def v29FarthestInit(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
+    val vecs = normed(spark, dir)
     val s1 = vecs.orderBy(col("vec_id").asc).limit(1)
     // argmax of min-d² against the current seed set; 1 row out. The
     // result is localCheckpoint'd (it IS one row): without it, pick k's
@@ -2877,18 +2549,10 @@ object Similarity {
       "333333L, 315465L, 301030L, 289065L)"
     val prefix = "array(1000000L, 1630930L, 2130930L, 2561607L, 2948460L, " +
       "3304667L, 3638000L, 3953465L, 4254495L, 4543560L)"
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
+    val vecs = normed(spark, dir, col("label"))
     val labelCounts = vecs.groupBy(col("label")).agg(count(lit(1)).as("n_label"))
-    val queries = vecs.filter(col("vec_id") % 25 === 0)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("q").as("qq"), col("nrm").as("qn"))
-    val corpus = vecs
-      .select(col("vec_id").as("cid"), col("label").as("clabel"),
-        col("q").as("cq"), col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
+    val queries = asQueries(queryRows(vecs), col("label").as("qlabel"))
+    val corpus = asCorpus(vecs, col("label").as("clabel"))
     val scoredPairs =
       if (!evalIvfFunnel) queries.join(corpus, col("qid") =!= col("cid"))
       else {
@@ -2899,10 +2563,7 @@ object Similarity {
           .select(col("qid"), col("cid"))
           .join(queries, "qid").join(corpus, "cid")
       }
-    scoredPairs
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
+    cosineTopK(scoredPairs, 10)
       .groupBy(col("qid"), col("qlabel"))
       .agg(sum(when(col("clabel") === col("qlabel"),
         expr(s"element_at($disc, CAST(rank AS INT))")).otherwise(0L)).as("dcg_micro"))
@@ -2972,9 +2633,7 @@ object Similarity {
     * funnel with a data-dependent probe set, never a flat scan.
     */
   def v31AdaptiveProbe(spark: SparkSession, dir: String, nlist: Int = 16): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), expr(quantize).as("q"))
-      .withColumn("nrm", expr(dot("q", "q")))
+    val vecs = normed(spark, dir)
     val cents = vecs.filter(col("vec_id") < nlist)
       .select(col("vec_id").as("cell"), col("q").as("cq"), col("nrm").as("cn"))
     val scored = vecs.crossJoin(broadcast(cents))
@@ -2987,22 +2646,17 @@ object Similarity {
       .select(col("cell"), col("vec_id").as("cid"), col("q").as("cq2"),
         col("nrm").as("cn2"))
     // adaptive probe set: best cell + every cell within the 2x margin, cap 4
-    val probes = ranked.filter(col("vec_id") % 25 === 0)
+    val probes = queryRows(ranked)
       .filter(col("crank") <= 4 && (col("crank") === 1 || col("d2") <= lit(2L) * col("dbest")))
       .select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn"),
         col("cell"))
       .withColumn("probe_depth",
         count(lit(1)).over(Window.partitionBy(col("qid"))).cast("int"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("nd2").asc, col("cid").asc)
-    probes.join(members, "cell")
+    val pairs = probes.join(members, "cell")
       .filter(col("qid") =!= col("cid"))
       .withColumn("nd2", col("qn") + col("cn2") - lit(2L) * expr(dot("qq", "cq2")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("probe_depth"), col("rank").cast("int").as("rank"),
-        col("cid").as("neighbor_id"), col("nd2").as("dist2"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(topK(pairs, col("nd2").asc, 3), Seq(col("nd2").as("dist2")),
+      before = Seq(col("probe_depth")))
   }
 
   private val v31Sql = {
@@ -3080,16 +2734,8 @@ object Similarity {
       .select(col("qid"), col("cid")).distinct()
       .withColumn("n_cand",
         count(lit(1)).over(Window.partitionBy(col("qid"))).cast("long"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    cand
-      .join(vecs.select(col("vec_id").as("qid"), col("q").as("qq"), col("nrm").as("qn")), "qid")
-      .join(vecs.select(col("vec_id").as("cid"), col("q").as("cq"), col("nrm").as("cn")), "cid")
-      .withColumn("cos", expr(cos("qq", "cq", "qn", "cn")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .select(col("qid"), col("n_cand"), col("rank").cast("int").as("rank"),
-        col("cid").as("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy(col("qid"), col("rank"))
+    neighbors(cosineTopK(withVectors(cand, vecs), 3), Seq(cosine()),
+      before = Seq(col("n_cand")))
   }
 
   private val v32Sql =
