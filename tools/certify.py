@@ -1,9 +1,12 @@
 #!/usr/bin/env python3
 """Write CERTIFY.json: generated (never hand-typed) certification counts.
 
-Counts come from two places:
+Counts come from three places:
   - `tools/jrun.sh graft.Certify` — registry size, oracle coverage, and
     plan-golden count, computed from the compiled tree at snapshot time;
+  - the source tree — `src_main_loc`, the line count of every .scala
+    file under src/main (what `find src/main -name '*.scala' | xargs cat
+    | wc -l` prints);
   - the most recent full-suite log (pass a path containing scalatest's
     "Total number of tests run: N" / "succeeded N" lines via --suite-log)
     for the suite size, recorded with the log's mtime so a stale log is
@@ -22,6 +25,17 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def src_main_loc():
+    """Newlines in every src/main .scala file, as `cat | wc -l` counts them."""
+    n = 0
+    for d, _, files in os.walk(os.path.join(ROOT, "src", "main")):
+        for f in files:
+            if f.endswith(".scala"):
+                with open(os.path.join(d, f), "rb") as fh:
+                    n += fh.read().count(b"\n")
+    return n
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--suite-log", default=None)
@@ -33,6 +47,7 @@ def main():
         capture_output=True, text=True, cwd=ROOT, check=True).stdout
     line = next(l for l in raw.splitlines() if l.startswith("{"))
     cert = json.loads(line)
+    cert["src_main_loc"] = src_main_loc()
 
     if args.suite_log:
         text = open(args.suite_log, errors="replace").read()
