@@ -1,8 +1,5 @@
 package graft
 
-import java.security.MessageDigest
-
-import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.health.HealthEtl
@@ -37,20 +34,8 @@ class HealthDigestSpec extends AnyFunSuite {
   private def bits(d: Double): String =
     java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
 
-  /** Doubles by their raw bits, rows sorted, schema as the first line. */
-  private def digest(schema: String, rows: Seq[Row]): String = {
-    val lines = rows.map(_.toSeq.map {
-      case null => "∅"
-      case d: Double => "d" + bits(d)
-      case x => x.toString
-    }.mkString("\u0001")).sorted
-    MessageDigest.getInstance("SHA-256")
-      .digest((schema +: lines).mkString("\n").getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x").mkString
-  }
-
   test("cleaned rows match the pinned digest") {
-    val got = digest(cleaned.schema.simpleString, cleaned.collect().toSeq)
+    val got = HealthDigest.rows(cleaned)
     assert(cleaned.count() == 498)
     assert(got == "4efd989d0dfcc40ffb0d0f8bbcaa014b7b726031f2a531676ed04c4c42fba70f", s"digest $got")
   }
@@ -67,5 +52,10 @@ class HealthDigestSpec extends AnyFunSuite {
     MortalityModel.predictOne(fitted, cannedInputs)
     val again = QueryMetrics(spark)(MortalityModel.predictOne(fitted, cannedInputs))._2.jobs
     assert(again == 0, s"second predictOne ran $again jobs")
+  }
+
+  test("weekly report sections and chart series match the pinned digest") {
+    val got = HealthDigest.report(spark, cleaned)
+    assert(got == "b290d9a47786e51a0ec893ddcd8c841a059a96ed67ed15b63758649ad2ebb828", s"digest $got")
   }
 }

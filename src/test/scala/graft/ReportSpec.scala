@@ -134,6 +134,9 @@ class ReportSpec extends AnyFunSuite {
     val (sections, charts) =
       try (WeeklyReport.sections(spark, cleaned), WeeklyReport.charts(cleaned))
       finally cleaned.unpersist()
+    // sections text and chart series, bit-exact
+    val digest = HealthDigest.report(sections, charts)
+    assert(digest == "c50f2d0dddb7ccaa4c2c7d8b2379f2579985fb59c08cfd58d6e0b5e6013fadf3", s"report digest $digest")
     val out = "target/weekly_report_spec.pdf"
     val path = new PdfReportSink(out)
       .write("WEEKLY GLOBAL HEALTH REPORT", sections, charts)
