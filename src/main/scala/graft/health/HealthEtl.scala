@@ -4,8 +4,9 @@ import java.nio.charset.{Charset, CodingErrorAction}
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Greatest, Least, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.functions.PyText
 
@@ -32,7 +33,10 @@ import graft.functions.PyText
   * while it has at most 4,607 distinct candidates and walks 4096-bucket
   * histograms past that, never rows) and are folded back as literals;
   * `bround` = numpy/pandas HALF_EVEN rounding; exact percentile
-  * semantics, never approx.
+  * semantics, never approx. There are three such passes (year median; pop
+  * and rate medians; IQR quantiles with every sweep median, the capped
+  * columns' valued through the cap on the driver), over two persisted
+  * frames that `clean` releases itself. Each stage is one projection.
   */
 object HealthEtl {
 
@@ -186,132 +190,148 @@ object HealthEtl {
     expr(s"percentile(`$c`, 0.5)").over(
       org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*))
 
+  /** One stage as one projection: each (name, column) replaces the column
+    * of that name in place, or is appended, in order, when it is new. */
+  private def project(df: DataFrame, updates: Seq[(String, Column)]): DataFrame = {
+    val byName = updates.toMap
+    df.select(df.columns.toSeq.map(c => byName.get(c).fold(col(c))(_.as(c))) ++
+      updates.collect { case (c, e) if !df.columns.contains(c) => e.as(c) }: _*)
+  }
+
+  /** The 2h IQR cap, as the projection applies it: Catalyst's own
+    * `greatest`/`least`, so NaN and ±0.0 follow Spark's ordering. */
+  private def cap(c: Column, lo: Double, hi: Double): Column =
+    greatest(lit(lo), least(lit(hi), c))
+
+  /** [[cap]] evaluated on the driver, for one value. */
+  private[graft] def capValue(lo: Double, hi: Double)(v: Double): Double =
+    Greatest(Seq(Literal(lo), Least(Seq(Literal(hi), Literal(v))))).eval()
+      .asInstanceOf[Double]
+
   /** The full pipeline: raw string frame → cleaned 35-column frame. */
   def clean(spark: SparkSession, path: String = defaultCsvPath): DataFrame = {
     graft.GraftSession.ensure(spark)
-    var df = readRaw(spark, path)
+    val raw = readRaw(spark, path)
+
+    // The pipeline makes three scalar-quantile calls: the year median;
+    // the pop and rate medians; the IQR quantiles together with every
+    // sweep median. Each is one pass while every column it reads has at
+    // most 4,607 distinct values, and up to six past that. Two persisted
+    // frames keep a pass from re-running its upstream: the scrubbed base
+    // (one CSV scan and parse, not one per pass) and the window-imputed
+    // frame (the 2f window shuffles run once). Both are released
+    // EXPLICITLY, on the persisted frames themselves (unpersisting a
+    // derived frame is a no-op): the CacheManager pins a DataFrame
+    // persist until then (the context cleaner never collects
+    // InMemoryRelations).
+    val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     // 2a/2b — names
-    df = df.withColumn("Country", cleanCountry(col("Country")))
-      .withColumn("Disease Name", cleanDisease(col("Disease Name")))
-
-    // the pipeline makes five scalar-quantile calls (year median, pop
-    // median, rate medians, IQR quantiles, sweep medians). Each is one
-    // pass while every column it reads has at most 4,607 distinct
-    // values, and up to six past that; every pass re-reads its upstream.
-    // Persist the scrubbed base once so every pass (and the final
-    // result) reads the cached columns instead of re-scanning +
-    // re-parsing the CSV — at 100 TB this is the difference between one
-    // source scan and a dozen
-    val scrubbed = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df = scrubbed
+    val scrubbed = project(raw, Seq(
+      "Country" -> cleanCountry(col("Country")),
+      "Disease Name" -> cleanDisease(col("Disease Name")))).persist(storage)
 
     // 2c — Year: to_numeric(coerce) → fillna(median) → astype(int) → range filter
     // All global medians/quantiles below use ScalableQuantile — exact
     // `percentile` values via bounded-state radix selection, never a
     // single-reducer value buffer (see graft.util.ScalableQuantile).
-    df = df.withColumn("__yd", expr("try_cast(`Year` AS DOUBLE)"))
-    val yearMed = graft.util.ScalableQuantile.medians(df, Seq("__yd"))("__yd")
-    df = df
-      .withColumn("Year", coalesce(col("__yd"), lit(yearMed.orNull)).cast(LongType))
-      .drop("__yd")
+    val yearD = expr("try_cast(`Year` AS DOUBLE)")
+    val yearMed = graft.util.ScalableQuantile
+      .medians(scrubbed.select(yearD.as("__yd")), Seq("__yd"))("__yd")
+    val years = project(scrubbed, Seq(
+        "Year" -> coalesce(yearD, lit(yearMed.orNull)).cast(LongType)))
       .filter(col("Year") >= 1900 && col("Year") <= 2100)
 
-    // 2d — numeric cleaning
-    df = df.select(df.columns.map { c =>
-      if (numericColumns.contains(c)) cleanNumeric(col(c)).as(c) else col(c)
-    }: _*)
-
-    // 2e — categoricals
-    df = df.withColumn("Treatment type",
-        when(col("Treatment type").isNull, "Unknown")
-          .otherwise(PyText.pyCapitalize(col("Treatment type"))))
-      .withColumn("Availability of Vaccines/Treatment",
-        cleanAvailability(col("Availability of Vaccines/Treatment")))
+    // 2d — numeric cleaning; 2e — categoricals; Row_num as an integer
+    // (the reference converts it after the rename; no step reads it between)
+    val typed = project(years, numericColumns.map(c => c -> cleanNumeric(col(c))) ++ Seq(
+      "Treatment type" -> when(col("Treatment type").isNull, "Unknown")
+        .otherwise(PyText.pyCapitalize(col("Treatment type"))),
+      "Availability of Vaccines/Treatment" ->
+        cleanAvailability(col("Availability of Vaccines/Treatment")),
+      "Row_num" -> expr("try_cast(Row_num AS BIGINT)")))
 
     // 2f — imputation: country-year median pop, constant age fill,
-    // disease-country median rates (each + global-median fallback)
-    df = df.withColumn("Country_pop",
-      coalesce(col("Country_pop"), wMedian("Country_pop", Seq("Country", "Year"))))
-    val popMed = graft.util.ScalableQuantile
-      .medians(df, Seq("Country_pop"))("Country_pop")
-    df = df.withColumn("Country_pop",
-        coalesce(col("Country_pop"), lit(popMed.orNull)).cast(LongType))
-
+    // disease-country median rates (each + global-median fallback). The
+    // global medians read only the window fills, so all four resolve in
+    // one pass, which also fills the persisted frame.
     val ageCols = Seq("Ages 0-18 (%)", "Ages 19-35 (%)", "Ages 36-60 (%)", "Ages 61+ (%)")
-    df = ageCols.foldLeft(df)((d, c) => d.withColumn(c, coalesce(col(c), lit(25.0))))
-
     val rateCols = Seq("Incidence Rate mn (%)", "Prevalence rate (%)",
       "Mortality Rate per 100 people (%)")
-    df = rateCols.foldLeft(df)((d, c) =>
-      d.withColumn(c, coalesce(col(c), wMedian(c, Seq("Disease Name", "Country")))))
-    // all three rate medians resolve in the same shared radix passes
-    val rateMeds = graft.util.ScalableQuantile.medians(df, rateCols)
-    df = rateCols.foldLeft(df) { case (d, c) =>
-      d.withColumn(c, coalesce(col(c), lit(rateMeds(c).orNull)))
-    }
+    val windowed = project(typed,
+      ("Country_pop" -> coalesce(col("Country_pop"), wMedian("Country_pop", Seq("Country", "Year")))) +:
+        (ageCols.map(c => c -> coalesce(col(c), lit(25.0))) ++
+         rateCols.map(c => c -> coalesce(col(c), wMedian(c, Seq("Disease Name", "Country"))))))
+      .persist(storage)
+    val meds = graft.util.ScalableQuantile.medians(windowed, "Country_pop" +: rateCols)
+    // every later pass reads `windowed`, filled by the pass above
+    scrubbed.unpersist(blocking = false)
+    val imputed = project(windowed,
+      ("Country_pop" -> coalesce(col("Country_pop"), lit(meds("Country_pop").orNull)).cast(LongType)) +:
+        rateCols.map(c => c -> coalesce(col(c), lit(meds(c).orNull))))
 
     // 2g — derived columns, FIRST versions (pre-IQR-cap inputs; Severity
     // and Urban_Rural survive to the output — SURVEY §2.7 Q4)
-    df = df
-      .withColumn("Population Coverage (%)", clipUpper(
-        npRound(col("Population affected") / col("Country_pop") * 100, 2), 100))
-      .withColumn("Gender Ratio (M:F)", clipNull(infToNull(nanToNull(
-        npRound(col("Pop_affected(Male)") / col("Pop_affected(Female)"), 2))), 0.1, 10))
-      .withColumn("Urban_Rural_Ratio", clipNull(infToNull(nanToNull(
-        npRound(col("Pop_affected_U (%)") / col("Pop_affected_R (%)"), 2))), 0.1, 10))
-      .withColumn("Severity Score", npRound(
+    val derived = project(imputed, Seq(
+      "Population Coverage (%)" -> clipUpper(
+        npRound(col("Population affected") / col("Country_pop") * 100, 2), 100),
+      "Gender Ratio (M:F)" -> clipNull(infToNull(nanToNull(
+        npRound(col("Pop_affected(Male)") / col("Pop_affected(Female)"), 2))), 0.1, 10),
+      "Urban_Rural_Ratio" -> clipNull(infToNull(nanToNull(
+        npRound(col("Pop_affected_U (%)") / col("Pop_affected_R (%)"), 2))), 0.1, 10),
+      "Severity Score" -> npRound(
         coalesce(nanToNull(col("Mortality Rate per 100 people (%)")), lit(0.0)) * 0.7 +
-        log1p(coalesce(nanToNull(col("DALYs")), lit(0.0))) * 0.3, 2))
+        log1p(coalesce(nanToNull(col("DALYs")), lit(0.0))) * 0.3, 2)))
 
-    // 2h — IQR outlier capping (3×IQR, cap not drop) on 4 metrics
+    // 2h — IQR outlier capping (3×IQR, cap not drop) on 4 metrics, and
+    // the final NaN sweep's medians, in ONE pass. The sweep reads the
+    // capped columns, but a cap is a monotone clamp and order statistics
+    // commute with it: a capped column's median is its uncapped Parts
+    // valued through the cap. Every other sweep column is unchanged by
+    // 2h/2i, so its median over `derived` is the sweep's.
     val outlierCols = Seq("Average Annual Treatment Cost (USD)",
       "Per Capita Income (USD)", "DALYs", "Country_pop")
-    // all eight quantiles (4 cols × Q1/Q3) resolve in the same shared
-    // radix passes; the cap is then a pure projection over literals
-    val quants = graft.util.ScalableQuantile
-      .quantiles(df, outlierCols.map(c => c -> Seq(0.25, 0.75)))
-    df = outlierCols.foldLeft(df) { case (d, c) =>
-      val q1 = lit(quants((c, 0.25)).get)
-      val q3 = lit(quants((c, 0.75)).get)
+    val numeric = derived.schema.fields.collect {
+      case f if f.dataType == DoubleType || f.dataType == LongType => f.name
+    }.toSeq
+    val sweepCols = numeric.filterNot(rateCols.contains)
+    val parts = graft.util.ScalableQuantile.parts(derived, sweepCols.map(c =>
+      c -> (if (outlierCols.contains(c)) Seq(0.25, 0.75, 0.5) else Seq(0.5))))
+    val bounds: Map[String, (Double, Double)] = outlierCols.map { c =>
+      val q1 = parts((c, 0.25)).get.value
+      val q3 = parts((c, 0.75)).get.value
       val iqr = q3 - q1
-      val lo = q1 - iqr * 3
-      val hi = q3 + iqr * 3
-      d.withColumn(c, when(col(c).isNull, lit(null).cast(DoubleType))
-        .otherwise(greatest(lo, least(hi, col(c).cast(DoubleType)))))
-    }
+      c -> ((q1 - iqr * 3, q3 + iqr * 3))
+    }.toMap
 
-    // 2i — rename
-    df = renameMap.foldLeft(df) { case (d, (from, to)) => d.withColumnRenamed(from, to) }
-    df = df.withColumn("Row_num", expr("try_cast(Row_num AS BIGINT)"))
-
-    // final NaN sweep: 3 rate cols → 0; other numerics → column median
-    // (median itself null → 0); strings → 'Unknown'
-    val rateRenamed = Seq("Mortality_Rate_per_100", "Prevalence_Rate", "Incidence_Rate_per_million")
-    val numericNow = df.schema.fields.filter(f =>
-      f.dataType == DoubleType || f.dataType == LongType).map(_.name).toSeq
-    val sweepCols = numericNow.filterNot(rateRenamed.contains)
-    // ~25 column medians, all in the same shared radix passes (one job
-    // per pass regardless of column count)
-    val sweepMeds = graft.util.ScalableQuantile.medians(df, sweepCols)
-    df = rateRenamed.foldLeft(df)((d, c) =>
-      d.withColumn(c, coalesce(nanToNull(col(c)), lit(0.0))))
-    df = sweepCols.foldLeft(df) { case (d, c) =>
-      if (df.schema(c).dataType == LongType)
-        d.withColumn(c, coalesce(col(c), lit(sweepMeds(c).orNull).cast(LongType)))
-      else
-        d.withColumn(c, coalesce(nanToNull(col(c)), lit(sweepMeds(c).orNull), lit(0.0)))
-    }
-    val stringCols = df.schema.fields.filter(_.dataType == org.apache.spark.sql.types.StringType).map(_.name)
-    df = stringCols.foldLeft(df)((d, c) => d.withColumn(c, coalesce(col(c), lit("Unknown"))))
+    // 2h cap, 2i rename and the sweep: 3 rate cols → 0; other numerics →
+    // column median (median itself null → 0); strings → 'Unknown'
+    val renamed = renameMap.toMap
+    val swept = derived.select(derived.schema.fields.toSeq.map { f =>
+      val c = f.name
+      val med = parts.get((c, 0.5)).flatten
+      val out =
+        if (rateCols.contains(c)) coalesce(nanToNull(col(c)), lit(0.0))
+        else if (bounds.contains(c)) {
+          val (lo, hi) = bounds(c)
+          val capped = when(col(c).isNull, lit(null).cast(DoubleType))
+            .otherwise(cap(col(c).cast(DoubleType), lo, hi))
+          coalesce(nanToNull(capped), lit(med.map(_.value(capValue(lo, hi))).orNull), lit(0.0))
+        }
+        else if (f.dataType == LongType) coalesce(col(c), lit(med.map(_.value).orNull).cast(LongType))
+        else if (f.dataType == DoubleType) coalesce(nanToNull(col(c)), lit(med.map(_.value).orNull), lit(0.0))
+        else if (f.dataType == StringType) coalesce(col(c), lit("Unknown"))
+        else col(c)
+      out.as(renamed.getOrElse(c, c))
+    }: _*)
 
     // recompute derived (post-rename; only these two fire — Q4):
-    df = df
-      .withColumn("Population Coverage (%)", clipNull(npRound(
-        col("Population_Affected") / col("Country_Population") * 100, 2), 0, 100))
-      .withColumn("Gender Ratio (M:F)", clipNull(npRound(
+    val recomputed = project(swept, Seq(
+      "Population Coverage (%)" -> clipNull(npRound(
+        col("Population_Affected") / col("Country_Population") * 100, 2), 0, 100),
+      "Gender Ratio (M:F)" -> clipNull(npRound(
         col("Affected_Male") /
-          greatest(lit(0.1), col("Affected_Female").cast(DoubleType)), 2), 0.1, 10))
+          greatest(lit(0.1), col("Affected_Female").cast(DoubleType)), 2), 0.1, 10)))
 
     // 2j — dedupe, sort, Record_ID (Row_num is the deterministic
     // tie-break inside equal (Country, Year, Disease) groups; pandas'
@@ -320,16 +340,11 @@ object HealthEtl {
     // graft.operators.ScaleOps) — no single-partition global window, so
     // this same pipeline runs at 100 TB; proven equal to
     // row_number() OVER (ORDER BY keys) in EventStreamSpec.
-    df = df.dropDuplicates()
-    val result = graft.operators.ScaleOps
-      .denseIds(df, Seq("Country", "Year", "Disease Name", "Row_num"), "Record_ID")
-    // denseIds has materialized its own (RDD-level) sorted copy — every
-    // scalar pass above already ran — so the scrubbed base's cache has
-    // served all its readers. Release it EXPLICITLY (on the persisted
-    // frame itself — unpersisting a derived frame is a no-op): a
-    // DataFrame persist is pinned by the CacheManager forever otherwise
-    // (the context cleaner never collects InMemoryRelations).
-    scrubbed.unpersist(blocking = false)
+    val result = graft.operators.ScaleOps.denseIds(recomputed.dropDuplicates(),
+      Seq("Country", "Year", "Disease Name", "Row_num"), "Record_ID")
+    // denseIds has materialized its own (RDD-level) sorted copy, so the
+    // window-imputed cache has served all its readers
+    windowed.unpersist(blocking = false)
     result
   }
 

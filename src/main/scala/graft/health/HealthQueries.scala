@@ -1,6 +1,6 @@
 package graft.health
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.util.Exact.{stableAvg, stableSum}
@@ -161,30 +161,27 @@ object HealthQueries {
   /** Data-quality report (nb:cell0:342-403): missing values per column,
     * top-10 value counts for the key categoricals, min/mean/median/max
     * for the key metrics — the reference's post-ETL smoke surface, as
-    * three small DataFrames.
+    * three small lazy DataFrames. `missing` and `metricStats` are each
+    * one aggregate, unpivoted to a row per column or metric.
     */
   def qualityReport(df: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val spark = df.sparkSession
-    import spark.implicits._
     // One agg pass for all columns — a per-column filter+count would scan
     // the table once per column (35 scans at this schema). count(when)
     // (not sum(when)) so an EMPTY input yields 0, never null.
-    val missingRow = df.select(df.columns.map(c =>
-      count(when(col(s"`$c`").isNull, lit(1))).as(c)): _*).head()
-    val missing = df.columns.zipWithIndex.map { case (c, i) =>
-      (c, missingRow.getLong(i))
-    }.toSeq.toDF("column", "n_missing")
+    val missing = df.select(df.columns.toSeq.map(c =>
+        count(when(col(s"`$c`").isNull, lit(1))).as(c)): _*)
+      .unpivot(Array.empty[Column], "column", "n_missing")
     val topCounts = df.groupBy(lit("Country").as("dim"), col("Country").as("value"))
       .agg(count(lit(1)).as("n"))
       .unionByName(df.groupBy(lit("Disease Name").as("dim"),
         col("Disease Name").as("value")).agg(count(lit(1)).as("n")))
       .orderBy(col("dim"), col("n").desc, col("value"))
-    val metricStats = Seq("Mortality_Rate_per_100", "Recovery_Rate",
+    val metricStats = df.agg(array(Seq("Mortality_Rate_per_100", "Recovery_Rate",
         "Avg_Treatment_Cost_USD", "DALYs").map { c =>
-      df.agg(lit(c).as("metric"), min(col(c)).as("min"),
+      struct(lit(c).as("metric"), min(col(c)).as("min"),
         stableAvg(col(c)).as("mean"), expr(s"percentile(`$c`, 0.5)").as("median"),
         max(col(c)).as("max"))
-    }.reduce(_ unionByName _)
+    }: _*).as("stats")).select(inline(col("stats")))
     (missing, topCounts, metricStats)
   }
 

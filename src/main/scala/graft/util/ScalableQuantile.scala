@@ -34,6 +34,13 @@ import graft.functions.BitHistAgg
   * every round is a full map-side-combined tree aggregate. Ranks needing
   * interpolation (fractional position) resolve as two selections.
   *
+  * [[parts]] returns each quantile's position and the two order
+  * statistics it interpolates between; [[quantiles]] is that valued with
+  * `percentile`'s arithmetic. Order statistics commute with a monotone
+  * map, so the same parts also give the quantile of a clamped column
+  * without a pass over it (the health ETL's IQR cap, see
+  * [[Parts.value]]).
+  *
   * Nulls are ignored and NaN sorts above +Inf — `percentile` semantics
   * exactly (see [[graft.functions.BitHistAgg.keyOf]]).
   */
@@ -90,14 +97,40 @@ object ScalableQuantile {
     if (BitHistAgg.isExact(h)) (0 until BitHistAgg.exactSize(h)).map(i => h(2 + 2 * i)).sum
     else h.take(NBuckets).sum
 
-  /** Exact interpolated quantiles for many (column, probs) pairs in ≤6
-    * shared aggregate passes. Returns (column, prob) → value; None when
-    * the column has no non-null rows (as `percentile` returns null).
-    * Columns are cast to double first — identical to `percentile`'s
-    * result for any value exactly representable as a double.
+  /** Where one quantile falls among a column's n sorted non-null values:
+    * its position p·(n−1) and the order statistics at the position's
+    * floor and ceiling, the two that Spark's `percentile` interpolates
+    * between. */
+  final case class Parts(pos: Double, lower: Double, higher: Double) {
+
+    /** The quantile of `f(column)`, for an `f` that is monotone
+      * non-decreasing in `percentile`'s order (NaN above +Inf): order
+      * statistics commute with such a map, so this repeats
+      * `PercentileBase.getPercentile`'s arithmetic, early returns
+      * included, on `f(lower)` and `f(higher)`. Bit-identical to
+      * `percentile` over the mapped column. */
+    def value(f: Double => Double): Double = {
+      val lo = pos.floor.toLong
+      val hi = pos.ceil.toLong
+      val lowerVal = f(lower)
+      if (lo == hi) return lowerVal
+      val higherVal = f(higher)
+      if (higherVal == lowerVal) lowerVal
+      else (hi - pos) * lowerVal + (pos - lo) * higherVal
+    }
+
+    /** The quantile itself: `percentile`'s value, bit for bit. */
+    def value: Double = value(identity[Double] _)
+  }
+
+  /** The [[Parts]] of many (column, probs) pairs, resolved in ≤6 shared
+    * aggregate passes. Returns (column, prob) → parts; None when the
+    * column has no non-null rows (as `percentile` returns null). Columns
+    * are cast to double first — identical to `percentile`'s result for
+    * any value exactly representable as a double.
     */
-  def quantiles(df: DataFrame, specs: Seq[(String, Seq[Double])])
-      : Map[(String, Double), Option[Double]] = {
+  def parts(df: DataFrame, specs: Seq[(String, Seq[Double])])
+      : Map[(String, Double), Option[Parts]] = {
     val cols = specs.map(_._1)
 
     // Round 1: unconditional histogram per column; its total weight is
@@ -107,28 +140,18 @@ object ScalableQuantile {
     })
     val counts: Map[Int, Long] = first.map { case ((i, _, _), h) => i -> total(h) }
 
-    // Target positions and the order-statistic ranks they need.
-    val positions: Seq[((String, Double), Int, Option[(Double, Long, Long)])] =
+    // Target positions; one selection per (colIdx, rank), shared across
+    // probs
+    val positions: Seq[((String, Double), Int, Option[Double])] =
       specs.zipWithIndex.flatMap { case ((c, ps), i) =>
-        ps.map { p =>
-          val n = counts(i)
-          if (n == 0) ((c, p), i, None)
-          else {
-            val pos = p * (n - 1)
-            ((c, p), i, Some((pos, pos.floor.toLong, pos.ceil.toLong)))
-          }
-        }
+        val n = counts(i)
+        ps.map(p => ((c, p), i, if (n == 0) None else Some(p * (n - 1))))
       }
-    // selections keyed by (colIdx, rank), deduplicated across probs
     val selMap = scala.collection.mutable.LinkedHashMap[(Int, Long), Sel]()
-    specs.zipWithIndex.foreach { case ((c, ps), i) =>
-      val n = counts(i)
-      if (n > 0) ps.foreach { p =>
-        val pos = p * (n - 1)
-        Seq(pos.floor.toLong, pos.ceil.toLong).foreach { r =>
-          selMap.getOrElseUpdate((i, r), new Sel(i, r))
-        }
-      }
+    positions.foreach { case (_, i, pos) =>
+      pos.foreach(p => Seq(p.floor.toLong, p.ceil.toLong).foreach { r =>
+        selMap.getOrElseUpdate((i, r), new Sel(i, r))
+      })
     }
 
     // Resolve round 1 from the already-computed histograms, then iterate.
@@ -142,22 +165,16 @@ object ScalableQuantile {
       advance(running, histPass(df, needs), cols)
     }
 
-    val values: Map[(Int, Long), Double] = selMap.map { case (k, s) =>
-      k -> BitHistAgg.keyToDouble(s.done.get)
-    }.toMap
-    positions.map {
-      case (key, _, None) => key -> None
-      case (key, i, Some((pos, lo, hi))) =>
-        val lowerVal = values((i, lo))
-        val higherVal = values((i, hi))
-        // interpolation arithmetic mirrors Percentile.getPercentile so the
-        // result is bit-identical to Spark's exact percentile
-        val v =
-          if (lo == hi || higherVal == lowerVal) lowerVal
-          else (hi - pos) * lowerVal + (pos - lo) * higherVal
-        key -> Some(v)
+    def stat(i: Int, rank: Long) = BitHistAgg.keyToDouble(selMap((i, rank)).done.get)
+    positions.map { case (key, i, pos) =>
+      key -> pos.map(p => Parts(p, stat(i, p.floor.toLong), stat(i, p.ceil.toLong)))
     }.toMap
   }
+
+  /** Exact interpolated quantiles: the [[Parts]] of each pair, valued. */
+  def quantiles(df: DataFrame, specs: Seq[(String, Seq[Double])])
+      : Map[(String, Double), Option[Double]] =
+    parts(df, specs).map { case (k, p) => k -> p.map(_.value) }
 
   /** Single convenience median over several columns. */
   def medians(df: DataFrame, cols: Seq[String]): Map[String, Option[Double]] =

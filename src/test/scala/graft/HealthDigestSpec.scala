@@ -48,7 +48,7 @@ class HealthDigestSpec extends AnyFunSuite {
   }
 
   test("clean submits at most the pinned job count; a repeat predictOne submits none") {
-    assert(cleanJobs <= 23, s"clean ran $cleanJobs jobs")
+    assert(cleanJobs <= 15, s"clean ran $cleanJobs jobs")
     MortalityModel.predictOne(fitted, cannedInputs)
     val again = QueryMetrics(spark)(MortalityModel.predictOne(fitted, cannedInputs))._2.jobs
     assert(again == 0, s"second predictOne ran $again jobs")

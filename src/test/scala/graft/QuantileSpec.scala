@@ -8,8 +8,9 @@ import graft.util.ScalableQuantile
 
 /** ScalableQuantile must reproduce Spark's exact `percentile` BIT-FOR-BIT
   * — it replaces it on every global-quantile path (a12, a13, the health
-  * ETL's five passes), so any deviation breaks the DuckDB oracles and the
-  * pandas bit-exact ETL diff.
+  * ETL's three passes), so any deviation breaks the DuckDB oracles and the
+  * pandas bit-exact ETL diff. The ETL also values a column's order
+  * statistics through its IQR cap, so that path is held to the same bits.
   */
 class QuantileSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -225,6 +226,53 @@ class QuantileSpec extends AnyFunSuite {
       }
       assert(got("all") == Some(brute(_ => true)), s"n=$n all")
       assert(got("heavy") == Some(brute(_ >= 3)), s"n=$n heavy")
+    }
+  }
+
+  test("Parts valued through a cap == percentile over the capped column, bit for bit") {
+    val s = spark
+    import s.implicits._
+    val specials: Seq[java.lang.Double] = Seq(null, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, -0.0, 0.0, -2.5, 1.0, 3.0, 3.0, 7.25)
+    val finite: Seq[java.lang.Double] = Seq(-0.0, 0.0, 1.0, 2.0, 2.0, 5.5, null)
+    val datasets = Seq(
+      "specials, even n" -> specials,
+      "specials, odd n" -> (specials :+ Double.box(1e300)),
+      "finite, even n" -> finite,
+      "finite, odd n" -> finite.drop(1),
+      "all null" -> Seq[java.lang.Double](null, null, null),
+      "dense" -> (boundaryValues(2 * cap) ++ specials))
+    // below, at and inside the data, above the finite sets, and NaN
+    val bounds = Seq(Double.NegativeInfinity, -1e308, -2.5, -0.0, 0.0, 2.0, 3.0, 1e308,
+      Double.PositiveInfinity, Double.NaN)
+    val pairs = for (lo <- bounds; hi <- bounds) yield (lo, hi)
+    val ps = Seq(0.0, 0.1, 0.25, 0.5, 0.75, 1.0)
+    for ((name, vs) <- datasets) {
+      val df = vs.toDF("v").repartition(3)
+      val v = col("v")
+      // the ETL's cap: null stays null (greatest/least skip nulls)
+      val want = df.agg(pairs.map { case (lo, hi) =>
+        call_function("percentile", when(v.isNull, lit(null).cast("double"))
+          .otherwise(greatest(lit(lo), least(lit(hi), v))), typedLit(ps.toArray))
+      }.head, pairs.tail.map { case (lo, hi) =>
+        call_function("percentile", when(v.isNull, lit(null).cast("double"))
+          .otherwise(greatest(lit(lo), least(lit(hi), v))), typedLit(ps.toArray))
+      }: _*).head()
+      val got = ScalableQuantile.parts(df, Seq("v" -> ps))
+      pairs.zipWithIndex.foreach { case ((lo, hi), j) =>
+        val w = if (want.isNullAt(j)) ps.map(_ => None) else want.getSeq[Double](j).map(Some(_))
+        ps.zip(w).foreach { case (p, wp) =>
+          val g = got(("v", p)).map(_.value(graft.health.HealthEtl.capValue(lo, hi)))
+          assert(g.map(java.lang.Double.doubleToRawLongBits) ==
+            wp.map(java.lang.Double.doubleToRawLongBits),
+            s"$name, cap [$lo, $hi] @ $p: $g vs $wp")
+        }
+      }
+      // unclamped, the parts value to percentile itself
+      ps.foreach { p =>
+        assert(got(("v", p)).map(pp => java.lang.Double.doubleToRawLongBits(pp.value)) ==
+          sparkPercentile(df, "v", p).map(java.lang.Double.doubleToRawLongBits), s"$name @ $p")
+      }
     }
   }
 

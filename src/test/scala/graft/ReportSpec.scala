@@ -175,6 +175,16 @@ class ReportSpec extends AnyFunSuite {
       "per-country scatter points not drawn")
   }
 
+  test("sections on a frame without the model's split key rethrows and leaves no job running") {
+    // the model branch fails at analysis (no Record_ID) while the caller's
+    // thread runs the aggregates that do not need it
+    val noId = CleanedHealth(spark).drop("Record_ID")
+    val e = intercept[org.apache.spark.sql.AnalysisException](WeeklyReport.sections(spark, noId))
+    assert(e.getMessage.contains("Record_ID"), e.getMessage)
+    org.apache.spark.sql.GraftPlanBridge.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+  }
+
   private def PdfEscape(t: String): String =
     t.flatMap {
       case '(' => "\\("
