@@ -198,12 +198,9 @@ object HealthEtl {
       updates.collect { case (c, e) if !df.columns.contains(c) => e.as(c) }: _*)
   }
 
-  /** The 2h IQR cap, as the projection applies it: Catalyst's own
-    * `greatest`/`least`, so NaN and ±0.0 follow Spark's ordering. */
-  private def cap(c: Column, lo: Double, hi: Double): Column =
-    greatest(lit(lo), least(lit(hi), c))
-
-  /** [[cap]] evaluated on the driver, for one value. */
+  /** [[clipNull]] evaluated on the driver, for one non-null value, with
+    * Catalyst's own `Greatest`/`Least`, so NaN and ±0.0 follow Spark's
+    * ordering exactly as in the projection. */
   private[graft] def capValue(lo: Double, hi: Double)(v: Double): Double =
     Greatest(Seq(Literal(lo), Least(Seq(Literal(hi), Literal(v))))).eval()
       .asInstanceOf[Double]
@@ -314,9 +311,8 @@ object HealthEtl {
         if (rateCols.contains(c)) coalesce(nanToNull(col(c)), lit(0.0))
         else if (bounds.contains(c)) {
           val (lo, hi) = bounds(c)
-          val capped = when(col(c).isNull, lit(null).cast(DoubleType))
-            .otherwise(cap(col(c).cast(DoubleType), lo, hi))
-          coalesce(nanToNull(capped), lit(med.map(_.value(capValue(lo, hi))).orNull), lit(0.0))
+          coalesce(nanToNull(clipNull(col(c).cast(DoubleType), lo, hi)),
+            lit(med.map(_.value(capValue(lo, hi))).orNull), lit(0.0))
         }
         else if (f.dataType == LongType) coalesce(col(c), lit(med.map(_.value).orNull).cast(LongType))
         else if (f.dataType == DoubleType) coalesce(nanToNull(col(c)), lit(med.map(_.value).orNull), lit(0.0))
