@@ -2,7 +2,7 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.health.HealthEtl
 import graft.report.{BarChart, LineChart, PdfChart, ScatterChart, WeeklyReport}
@@ -30,14 +30,12 @@ object HealthDigest {
       .map(b => f"${b & 0xff}%02x").mkString
 
   /** Doubles by their raw bits, rows sorted, schema as the first line. */
-  def rows(schema: String, rows: Seq[Row]): String =
-    sha256(schema +: rows.map(_.toSeq.map {
+  def rows(df: DataFrame): String =
+    sha256(df.schema.simpleString +: df.collect().toSeq.map(_.toSeq.map {
       case null => "∅"
       case d: Double => "d" + bits(d)
       case x => x.toString
     }.mkString("\u0001")).sorted)
-
-  def rows(df: DataFrame): String = rows(df.schema.simpleString, df.collect().toSeq)
 
   /** The sections text as rendered, then every chart's kind, title and
     * series in raw double bits. A scatter's points go sorted: their

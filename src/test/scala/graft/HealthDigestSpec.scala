@@ -13,7 +13,8 @@ import graft.ml.MortalityModel
   * evaluate` passes, so they also hold the exact-form state and the
   * one-pass `getMetrics` scores to bit-identical results. Any change to
   * the cleaned rows, the model metrics or the what-if prediction shows
-  * up here bit-for-bit.
+  * up here bit-for-bit, and so does any change to the weekly report's
+  * sections text or chart series.
   */
 class HealthDigestSpec extends AnyFunSuite {
   import SparkTestSession._
