@@ -5,8 +5,9 @@ import java.net.InetSocketAddress
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.health.HealthEtl
+import graft.health.{HealthEtl, Overview, PageView, Rollup}
 import graft.ml.MortalityModel
+import graft.report.{CorpusFunnel, WeeklyReport}
 
 /** S6/EP1 — the interactive dashboard shell (Health_Jim.py:780-1273):
   * sidebar Year/Country filters (:865-889) re-querying every section,
@@ -19,12 +20,15 @@ import graft.ml.MortalityModel
   * The Spark usage is bounded at any scale: building the server runs one
   * aggregate over the cached cleaned frame, grouped by the two filter
   * dimensions and the chart key, (Country, Year, Disease Name), and
-  * collects it ([[Rollup]]). That is at most |Country|×|Year|×|Disease|
-  * cells (21×25×21 = 11,025 at the reference schema), whatever the row
-  * count. Every page is then a fold over the selected cells on the
-  * driver, with the same values HealthQueries gives on the filtered
-  * frame, and submits no Spark job. The model fits lazily once. Run with
-  * `sbt "runMain graft.dashboard.DashboardMain"` → http://127.0.0.1:8080/.
+  * collects it ([[graft.health.Rollup]], the aggregate the weekly
+  * report's overview, top-5s and charts read too). That is at most
+  * |Country|×|Year|×|Disease| cells (21×25×21 = 11,025 at the reference
+  * schema), whatever the row count. Every page is then a fold over the
+  * selected cells on the driver, with the same values HealthQueries
+  * gives on the filtered frame, and submits no Spark job. The model and
+  * the corpus funnels ([[graft.report.CorpusFunnel]]) load lazily once.
+  * Run with `sbt "runMain graft.dashboard.DashboardMain"` →
+  * http://127.0.0.1:8080/.
   *
   * The primary constructor serves an already-cleaned table (the ETL's
   * output, e.g. the committed fixture or a frame the caller also hands
@@ -41,20 +45,7 @@ final class DashboardServer(spark: SparkSession,
     this(spark, HealthEtl.clean(spark, csvPath), corpusDir)
 
   private val cleaned: DataFrame = cleanedInput.cache()
-  // the flagship ep01 funnel (10 rows) — collected lazily once; no
-  // corpus-scale data ever reaches the driver (VERDICT r11 #6)
-  private lazy val corpusFunnel: Option[Seq[(String, Long, Long)]] =
-    corpusDir.map { d =>
-      graft.operators.CorpusBuild.ep01CorpusBuild(spark, d).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    }
-  // the streaming twin (VERDICT r12 #7): st17's 30-row per-(wave, stage)
-  // funnel — the production arrival-cadence view of the same pipeline
-  private lazy val streamFunnel: Option[Seq[(Int, String, Long, Long)]] =
-    corpusDir.map { d =>
-      graft.operators.CorpusBuild.st17IncrementalStream(spark, d).collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    }
+  private lazy val corpusFunnel = corpusDir.map(CorpusFunnel.read(spark, _))
   private val rollup = Rollup(cleaned)
   private lazy val fitted = MortalityModel.fit(cleaned)
 
@@ -118,12 +109,22 @@ final class DashboardServer(spark: SparkSession,
   }
 
   private def overviewTable(o: Overview): String = {
-    val head = Seq("total_records", "n_countries", "n_diseases", "avg_mortality",
-      "avg_recovery", "avg_cost").map(c => s"<th>$c</th>").mkString
-    val body = Seq(o.rows, o.countries, o.diseases).map(n => s"<td>$n</td>") ++
-      Seq(o.mortality, o.recovery, o.cost).map(_.fold("<td>null</td>")(d => f"<td>$d%.4f</td>"))
-    s"<table border='1' cellspacing='0' cellpadding='3'><tr>$head</tr><tr>${body.mkString}</tr></table>"
+    val (head, row) = o.fields.unzip
+    s"<table border='1' cellspacing='0' cellpadding='3'><tr>${head.map(c => s"<th>$c</th>").mkString}" +
+      s"</tr><tr>${row.map(v => s"<td>${WeeklyReport.cell(v)}</td>").mkString}</tr></table>"
   }
+
+  // the what-if form: (query parameter, label, feature), each defaulting
+  // to the report's canned input
+  private val predictFields = Seq(
+    ("access", "Access %", "Healthcare_Access_Pct"),
+    ("doctors", "Doctors/1000", "Doctors_per_1000"),
+    ("beds", "Beds/1000", "Hospital_Beds_per_1000"),
+    ("cost", "Cost USD", "Avg_Treatment_Cost_USD"),
+    ("income", "Income USD", "Per_Capita_Income_USD"))
+  private val predictForm = predictFields.map { case (k, label, f) =>
+    s"""$label: <input name="$k" value="${MortalityModel.cannedInputs(f)}" size="8"/>"""
+  }.mkString("\n")
 
   // ---------- pages ----------
 
@@ -153,19 +154,15 @@ final class DashboardServer(spark: SparkSession,
        |<input type="submit" value="Apply"/></form>
        |<h2>Overview</h2>${overviewTable(v.overview)}
        |<h2>Top-Level Health Insights</h2>
-       |${svgBar("Top Deadliest Diseases (Average Mortality Rate)", v.deadliest)}
-       |${svgBar("Average Treatment Cost by Disease", v.cost)}
+       |${svgBar("Top Deadliest Diseases (Average Mortality Rate)", v.deadliest.map(t => (t._1, t._2)))}
+       |${svgBar("Average Treatment Cost by Disease", v.cost.map(t => (t._1, t._2)))}
        |${svgLine("Mortality Trend" + v.country.fold("")(c => s" - $c"), v.trend)}
        |${svgScatter("Healthcare Access vs Mortality (by disease)", v.scatter)}
        |${corpusDir.fold("")(_ =>
          "<h2>Corpus Engine</h2><a href=\"/corpus\">Flagship corpus-build funnel (ep01)</a>")}
        |<h2>Mortality Prediction</h2>
        |<form method="get" action="/predict">
-       |Access %: <input name="access" value="0.5" size="6"/>
-       |Doctors/1000: <input name="doctors" value="1.0" size="6"/>
-       |Beds/1000: <input name="beds" value="2.0" size="6"/>
-       |Cost USD: <input name="cost" value="500" size="8"/>
-       |Income USD: <input name="income" value="1000" size="8"/>
+       |$predictForm
        |<input type="submit" value="Predict"/></form>
        |</body></html>""".stripMargin
   }
@@ -181,25 +178,21 @@ final class DashboardServer(spark: SparkSession,
         |no corpus directory configured — start the dashboard with a
         |corpus dir to enable this panel</body></html>""".stripMargin
     case Some(funnel) =>
-      val bars = funnel.map { case (st, docs, _) => (st, docs.toDouble) }
-      val rows = funnel.map { case (st, docs, toks) =>
+      val rows = funnel.stages.map { case (st, docs, toks) =>
         s"<tr><td>${esc(st)}</td><td>$docs</td><td>$toks</td></tr>"
       }.mkString("\n")
-      val stream = streamFunnel.getOrElse(Seq.empty)
-      val sBars = stream.filter(_._2 == "8_quality")
-        .map { case (w, _, d, _) => (s"wave $w", d.toDouble) }
-      val sRows = stream.map { case (w, st, docs, toks) =>
+      val sRows = funnel.waves.map { case (w, st, docs, toks) =>
         s"<tr><td>$w</td><td>${esc(st)}</td><td>$docs</td><td>$toks</td></tr>"
       }.mkString("\n")
       s"""<!DOCTYPE html><html><head><title>Corpus Build Funnel</title></head>
          |<body style="font-family:sans-serif">
          |<h1>Flagship Corpus Build (ep01) — Stage Funnel</h1>
-         |${svgBar("Surviving documents per stage", bars)}
+         |${svgBar("Surviving documents per stage", funnel.stageBars)}
          |<table border='1' cellspacing='0' cellpadding='3'>
          |<tr><th>stage</th><th>n_docs</th><th>n_tokens</th></tr>
          |$rows</table>
          |<h1>Streaming Ingest (st17) — Per-Wave Funnel</h1>
-         |${svgBar("Accepted documents per wave (8_quality)", sBars)}
+         |${svgBar("Accepted documents per wave (8_quality)", funnel.waveBars)}
          |<table border='1' cellspacing='0' cellpadding='3'>
          |<tr><th>wave</th><th>stage</th><th>n_docs</th><th>n_tokens</th></tr>
          |$sRows</table>
@@ -208,13 +201,9 @@ final class DashboardServer(spark: SparkSession,
 
   /** The what-if scorer (tab 3): model metrics + one prediction. */
   def predictPage(params: Map[String, String]): String = {
-    def p(k: String, d: Double) = params.get(k).flatMap(_.toDoubleOption).getOrElse(d)
-    val pred = MortalityModel.predictOne(fitted, Map(
-      "Healthcare_Access_Pct" -> p("access", 0.5),
-      "Doctors_per_1000" -> p("doctors", 1.0),
-      "Hospital_Beds_per_1000" -> p("beds", 2.0),
-      "Avg_Treatment_Cost_USD" -> p("cost", 500.0),
-      "Per_Capita_Income_USD" -> p("income", 1000.0)))
+    val pred = MortalityModel.predictOne(fitted, predictFields.map { case (k, _, f) =>
+      f -> params.get(k).flatMap(_.toDoubleOption).getOrElse(MortalityModel.cannedInputs(f))
+    }.toMap)
     val m = fitted.testScores
     f"""<!DOCTYPE html><html><body style="font-family:sans-serif">
        |<h1>Mortality Prediction</h1>

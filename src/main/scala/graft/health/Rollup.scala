@@ -1,4 +1,4 @@
-package graft.dashboard
+package graft.health
 
 import java.math.{BigDecimal => JBigDecimal}
 
@@ -31,23 +31,32 @@ final case class Cell(country: String, year: Long, disease: String, rows: Long,
     mortality: MeanTerms, cost: MeanTerms, recovery: MeanTerms,
     scatterAccess: MeanTerms, scatterMortality: MeanTerms)
 
-/** A13's row as the page prints it: the means already rounded by Spark's
-  * `Round` (4, 2 and 2 places). */
+/** A13's row: the means already rounded by Spark's `Round` (4, 2 and 2
+  * places). */
 final case class Overview(rows: Long, countries: Long, diseases: Long,
-    mortality: Option[Double], recovery: Option[Double], cost: Option[Double])
+    mortality: Option[Double], recovery: Option[Double], cost: Option[Double]) {
+  /** (column, value) in [[HealthQueries.overview]]'s order; a mean with no
+    * value is null. */
+  def fields: Seq[(String, Any)] = Seq("total_records", "n_countries", "n_diseases",
+    "avg_mortality", "avg_recovery", "avg_cost").zip(
+    Seq(rows, countries, diseases) ++ Seq(mortality, recovery, cost).map(_.getOrElse(null)))
+}
 
 /** Everything one dashboard page shows: the selection it applied, then
-  * each section in display order. */
+  * each section in display order. A top-5 row is (disease, mean, the
+  * non-null count the mean divides). */
 final case class PageView(year: Option[Long], country: Option[String],
-    deadliest: Seq[(String, Double)], cost: Seq[(String, Double)],
+    deadliest: Seq[(String, Double, Long)], cost: Seq[(String, Double, Long)],
     trend: Seq[(Double, Double)], scatter: Seq[(Double, Double)], overview: Overview)
 
-/** The dashboard's only two filter dimensions, Country and Year, folded
-  * once: the cleaned table grouped by (Country, Year, Disease Name) and
-  * collected. Its size is bounded by |Country|×|Year|×|Disease|, whatever
-  * the row count. A page is then a fold over the selected cells on the
-  * driver that reproduces the HealthQueries answers (A1, A8, A9, A13) on
-  * the filtered frame, so it submits no Spark job.
+/** The health app's summaries from one aggregate: the cleaned table
+  * grouped by (Country, Year, Disease Name), the dashboard's two filter
+  * dimensions and the chart key, and collected. Its size is bounded by
+  * |Country|×|Year|×|Disease|, whatever the row count. The dashboard's
+  * pages and the weekly report's overview, top-5s and charts are folds
+  * over its cells on the driver that reproduce the HealthQueries answers
+  * (A1, A8, A9, A13) and the `stableAvg` scatter on the filtered frame,
+  * so none of them submits a Spark job.
   */
 final class Rollup(cells: Seq[Cell]) {
 
@@ -59,28 +68,33 @@ final class Rollup(cells: Seq[Cell]) {
   def view(year: Option[Long], country: Option[String]): PageView = {
     val inCountry = cells.filter(c => country.forall(_ == c.country))
     val selected = inCountry.filter(c => year.forall(_ == c.year))
-    def byDisease(f: Cell => MeanTerms) = selected.groupMapReduce(_.disease)(f)(_ + _)
     def top5(f: Cell => MeanTerms) =
-      byDisease(f).toSeq.flatMap { case (d, t) => t.mean.map(d -> _) }
-        .sortWith { case ((da, a), (db, b)) => a > b || (a == b && da < db) }
+      selected.groupMapReduce(_.disease)(f)(_ + _).toSeq
+        .flatMap { case (d, t) => t.mean.map((d, _, t.n)) }
+        .sortWith { case ((da, a, _), (db, b, _)) => a > b || (a == b && da < db) }
         .take(5)
     val trend = inCountry.groupMapReduce(_.year)(_.mortality)(_ + _).toSeq
       .sortBy(_._1).flatMap { case (y, t) => t.mean.map(y.toDouble -> _) }
-    val scatter = selected.filter(_.scatterAccess.n > 0)
-      .groupMapReduce(_.disease)(c => (c.scatterAccess, c.scatterMortality)) {
-        case ((xa, ya), (xb, yb)) => (xa + xb, ya + yb)
-      }.toSeq.sortBy(_._1)
-      .flatMap { case (_, (x, y)) => x.mean.zip(y.mean) }
     def total(f: Cell => MeanTerms) = selected.map(f).foldLeft(Rollup.noTerms)(_ + _)
     def rounded(t: MeanTerms, scale: Int) =
       t.mean.map(d => Round(Literal(d), Literal(scale)).eval().asInstanceOf[Double])
-    PageView(year, country, top5(_.mortality), top5(_.cost), trend, scatter,
+    PageView(year, country, top5(_.mortality), top5(_.cost), trend, scatter(_.disease, selected),
       Overview(selected.map(_.rows).sum,
         selected.map(_.country).distinct.size.toLong,
         selected.map(_.disease).distinct.size.toLong,
         rounded(total(_.mortality), 4), rounded(total(_.recovery), 2),
         rounded(total(_.cost), 2)))
   }
+
+  /** The access-vs-mortality scatter: mean access and mean mortality of
+    * each `key` group of `of` that has a row with both values, in key
+    * order (the page's is per disease, the report's per country). */
+  def scatter(key: Cell => String, of: Seq[Cell] = cells): Seq[(Double, Double)] =
+    of.filter(_.scatterAccess.n > 0)
+      .groupMapReduce(key)(c => (c.scatterAccess, c.scatterMortality)) {
+        case ((xa, ya), (xb, yb)) => (xa + xb, ya + yb)
+      }.toSeq.sortBy(_._1)
+      .flatMap { case (_, (x, y)) => x.mean.zip(y.mean) }
 }
 
 object Rollup {

@@ -33,6 +33,13 @@ object MortalityModel {
   val catCols: Seq[String] = Seq(
     "Disease Name", "Vaccine_Treatment_Availability", "Treatment_Type")
 
+  /** The weekly report's canned what-if input, also the dashboard form's
+    * defaults; every other feature takes its training median. */
+  val cannedInputs: Map[String, Double] = Map(
+    "Healthcare_Access_Pct" -> 0.5, "Doctors_per_1000" -> 1.0,
+    "Hospital_Beds_per_1000" -> 2.0, "Avg_Treatment_Cost_USD" -> 500.0,
+    "Per_Capita_Income_USD" -> 1000.0)
+
   /** r2 / mse / mae of the model on one split. */
   final case class Scores(r2: Double, mse: Double, mae: Double)
 
@@ -83,15 +90,12 @@ object MortalityModel {
     val levelsByCol = catCols.zipWithIndex.map { case (c, i) =>
       c -> levelRow.getSeq[String](i).sorted.drop(1) // drop_first
     }
-    var out = df.drop(dropCols.filterNot(_ == "Record_ID"): _*)
-    val dummyNames = levelsByCol.flatMap { case (c, levels) =>
-      levels.map { lvl =>
-        val name = s"${c}_$lvl"
-        out = out.withColumn(name, when(col(s"`$c`") === lvl, 1.0).otherwise(0.0))
-        name
-      }
+    val dummies = levelsByCol.flatMap { case (c, levels) =>
+      levels.map(lvl => s"${c}_$lvl" -> when(col(s"`$c`") === lvl, 1.0).otherwise(0.0))
     }
-    (out.drop(catCols: _*), dummyNames)
+    val dropped = (dropCols.filterNot(_ == "Record_ID") ++ catCols).toSet
+    val kept = df.columns.toSeq.filterNot(dropped).map(c => col(s"`$c`"))
+    (df.select(kept ++ dummies.map { case (name, e) => e.as(name) }: _*), dummies.map(_._1))
   }
 
   /** Deterministic train/test split: hash the stable row id, not the row
@@ -117,13 +121,18 @@ object MortalityModel {
       .filter(f => f.dataType == DoubleType || f.dataType == LongType)
       .map(_.name)
       .filterNot((Seq(label, "Record_ID") ++ leakyCols ++ dummies).contains)
-    val featureNames = numericFeatures.toSeq ++ dummies
+    fitOn(encoded, numericFeatures.toSeq ++ dummies, 76)
+  }
+
+  /** Assemble `featureNames` as doubles, split `trainPct`/rest on the row
+    * id, fit RF 300×3×leaf5 seed 42 on the train side. */
+  private def fitOn(df: DataFrame, featureNames: Seq[String], trainPct: Int): Fitted = {
     val assembled = new VectorAssembler()
       .setInputCols(featureNames.toArray).setOutputCol("features")
-      .transform(encoded.select(
+      .transform(df.select(
         (featureNames.map(c => col(s"`$c`").cast(DoubleType).as(c)) :+
           col(s"`$label`").as("label") :+ col("Record_ID").as("__rid")): _*))
-    val (train, test) = hashSplit(assembled, 76)
+    val (train, test) = hashSplit(assembled, trainPct)
     val rf = new RandomForestRegressor()
       .setNumTrees(300).setMaxDepth(3).setMinInstancesPerNode(5)
       .setFeatureSubsetStrategy("all").setSeed(42)
@@ -144,20 +153,8 @@ object MortalityModel {
     "Health_Index", "Per_Capita_Income_USD", "Education_Index",
     "Urban_Population_Pct", "Rural_Population_Pct", "Urbanization_Rate")
 
-  def fitAppVariant(df: DataFrame): Fitted = {
-    val names = appFeatures.filter(df.columns.contains)
-    val assembled = new VectorAssembler()
-      .setInputCols(names.toArray).setOutputCol("features")
-      .transform(df.select(
-        (names.map(c => col(s"`$c`").cast(DoubleType).as(c)) :+
-          col(s"`$label`").as("label") :+ col("Record_ID").as("__rid")): _*))
-    val (train, test) = hashSplit(assembled, 80)
-    val rf = new RandomForestRegressor()
-      .setNumTrees(300).setMaxDepth(3).setMinInstancesPerNode(5)
-      .setFeatureSubsetStrategy("all").setSeed(42)
-      .setLabelCol("label").setFeaturesCol("features")
-    Fitted(rf.fit(train), names, train, test)
-  }
+  def fitAppVariant(df: DataFrame): Fitted =
+    fitOn(df, appFeatures.filter(df.columns.contains), 80)
 
   /** M6 — feature importances, sorted desc (Health_Jim.py:713-722). */
   def featureImportances(fitted: Fitted): DataFrame = {

@@ -1,11 +1,10 @@
 package graft.report
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.health.{HealthEtl, HealthQueries}
+import graft.health.{HealthEtl, HealthQueries, Rollup}
 import graft.ml.MortalityModel
-import graft.util.Exact.stableAvg
+import graft.operators.CorpusBuild
 import graft.util.Overlap
 
 /** EP3 — the reference's batch "weekly report" job (nb:cell28
@@ -54,110 +53,107 @@ final class EmailSinkStub extends ReportSink {
   }
 }
 
-/** The weekly report's sections, charts and render. Its Spark work is a
-  * chain of small jobs on one cleaned frame: the model's dependent jobs
-  * and a handful of independent aggregates. [[graft.util.Overlap]] runs
-  * the independent ones side by side, so cores a single tiny job leaves
-  * idle take the next one; every result is the same as run in sequence.
+/** The flagship corpus pipeline's funnels as the weekly report and the
+  * dashboard's corpus panel render them: ep01's ten (stage, n_docs,
+  * n_tokens) rows and st17's thirty (wave, stage, n_docs, n_tokens). */
+final case class CorpusFunnel(stages: Seq[(String, Long, Long)],
+                              waves: Seq[(Int, String, Long, Long)]) {
+  /** Surviving documents per ep01 stage. */
+  def stageBars: Seq[(String, Double)] = stages.map { case (st, d, _) => (st, d.toDouble) }
+
+  /** Documents each st17 wave accepted at the quality gate. */
+  def waveBars: Seq[(String, Double)] =
+    waves.collect { case (w, "8_quality", d, _) => (s"wave $w", d.toDouble) }
+}
+
+object CorpusFunnel {
+  def read(spark: SparkSession, corpusDir: String): CorpusFunnel = CorpusFunnel(
+    CorpusBuild.ep01CorpusBuild(spark, corpusDir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq,
+    CorpusBuild.st17IncrementalStream(spark, corpusDir).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq)
+}
+
+/** The weekly report's sections, charts and render. The overview, the
+  * top-5s and the charts are folds over one [[graft.health.Rollup]], the
+  * aggregate the dashboard's pages read too; the model's dependent jobs
+  * run on a [[graft.util.Overlap]] branch beside the rollup and the
+  * data-quality aggregate. Every result is the same as run in sequence.
   */
 object WeeklyReport {
 
-  private def fmt(df: DataFrame, n: Int = 10): String = {
-    val rows = df.limit(n).collect()
-    val header = df.columns.mkString(" | ")
-    (header +: rows.map(_.toSeq.map {
-      case d: Double => f"$d%.4f"
-      case x => String.valueOf(x)
-    }.mkString(" | "))).mkString("\n")
+  /** One value as the report prints it: doubles to 4 places. */
+  private[graft] def cell(v: Any): String = v match {
+    case d: Double => f"$d%.4f"
+    case x => String.valueOf(x)
   }
 
+  private def table(header: Seq[String], rows: Seq[Seq[Any]]): String =
+    (header.mkString(" | ") +: rows.map(_.map(cell).mkString(" | "))).mkString("\n")
+
+  private def fmt(df: DataFrame, n: Int = 10): String =
+    table(df.columns.toSeq, df.limit(n).collect().toSeq.map(_.toSeq))
+
   /** Build the report sections from the cleaned table (collects only
-    * aggregate results — every input to `fmt` is ≤ a few dozen rows).
-    * The model chain (fit → test scores → canned prediction → feature
-    * importances) is one run of dependent jobs; it runs on a forked
-    * branch while the caller's thread computes the aggregates that do
-    * not depend on it. */
+    * aggregate results, each at most a few dozen rows or the rollup's
+    * cells). The model chain (fit → test scores → canned prediction →
+    * feature importances) is one run of dependent jobs; it runs on a
+    * forked branch while the caller's thread builds the rollup and the
+    * key metrics' ranges. */
   def sections(spark: SparkSession, cleaned: DataFrame): Seq[(String, String)] =
     Overlap(spark) { o =>
       val model = o.fork {
         val fitted = MortalityModel.fit(cleaned)
         val m = fitted.testScores
-        val prediction = MortalityModel.predictOne(fitted, Map(
-          "Healthcare_Access_Pct" -> 0.5, "Doctors_per_1000" -> 1.0,
-          "Hospital_Beds_per_1000" -> 2.0, "Avg_Treatment_Cost_USD" -> 500.0,
-          "Per_Capita_Income_USD" -> 1000.0))
+        val prediction = MortalityModel.predictOne(fitted, MortalityModel.cannedInputs)
         (f"r2=${m.r2}%.4f mse=${m.mse}%.6f mae=${m.mae}%.6f",
          fmt(MortalityModel.featureImportances(fitted), 10),
          f"predicted rate = $prediction%.6f")
       }
+      val view = Rollup(cleaned).view(None, None)
       val (_, _, metricStats) = HealthQueries.qualityReport(cleaned)
-      val overview = fmt(HealthQueries.overview(cleaned))
       val stats = fmt(metricStats)
-      val deadliest = fmt(HealthQueries.topDeadliest(cleaned, 5))
-      val costliest = fmt(HealthQueries.avgCostPerDisease(cleaned, 5))
       val (scores, importances, prediction) = model.join()
       Seq(
-        "Overview" -> overview,
+        "Overview" -> { val (h, r) = view.overview.fields.unzip; table(h, Seq(r)) },
         "Data quality (key metric ranges)" -> stats,
         "Model quality (RandomForest 300x3, seed 42)" -> scores,
-        "Top 5 deadliest diseases" -> deadliest,
-        "Top 5 costliest diseases" -> costliest,
+        "Top 5 deadliest diseases" -> table(Seq("Disease Name", "avg_mortality", "total_records"),
+          view.deadliest.map(_.productIterator.toSeq)),
+        "Top 5 costliest diseases" -> table(Seq("Disease Name", "avg_cost"),
+          view.cost.map { case (d, c, _) => Seq(d, c) }),
         "Feature importances (top 10)" -> importances,
         "Canned mortality prediction" -> prediction)
     }
 
   /** The reference's figure inventory (mortality trend line, top-disease
     * bars — Health_Jim.py:1095-1116 — and the access-vs-mortality
-    * scatter, Health_Jim.py:474-483), as vector chart specs from
-    * collected aggregates. The scatter aggregates per country first so
-    * the collect stays bounded (≤ countries, not ≤ rows) at any input
-    * scale. The trend and the scatter run on forked branches beside the
-    * bars. */
-  def charts(cleaned: DataFrame): Seq[PdfChart] = Overlap(cleaned.sparkSession) { o =>
-    val trend = o.fork(LineChart("Average Mortality Rate by Year",
-      HealthQueries.mortalityTrend(cleaned).collect()
-        .map(r => (r.get(0).asInstanceOf[Number].doubleValue, r.getDouble(1))).toSeq))
-    val scatter = o.fork(ScatterChart("Healthcare Access vs Mortality (per country)",
-      cleaned.filter(col("Healthcare_Access_Pct").isNotNull &&
-          col("Mortality_Rate_per_100").isNotNull)
-        .groupBy(col("Country"))
-        .agg(stableAvg(col("Healthcare_Access_Pct")).as("x"),
-             stableAvg(col("Mortality_Rate_per_100")).as("y"))
-        .collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq))
-    val bars = BarChart("Top 5 Deadliest Diseases (avg mortality)",
-      HealthQueries.topDeadliest(cleaned, 5).collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toSeq)
-    Seq(trend.join(), bars, scatter.join())
+    * scatter, Health_Jim.py:474-483), as vector chart specs folded from
+    * one [[graft.health.Rollup]]. The scatter has one point per country,
+    * so the collect stays bounded at any input scale. */
+  def charts(cleaned: DataFrame): Seq[PdfChart] = {
+    val rollup = Rollup(cleaned)
+    val view = rollup.view(None, None)
+    Seq(LineChart("Average Mortality Rate by Year", view.trend),
+      BarChart("Top 5 Deadliest Diseases (avg mortality)",
+        view.deadliest.map { case (d, m, _) => (d, m) }),
+      ScatterChart("Healthcare Access vs Mortality (per country)", rollup.scatter(_.country)))
   }
 
-  /** The flagship corpus-build funnel as a report section + chart
+  /** The flagship corpus-build funnel as report sections + charts
     * (VERDICT r11 #6): the reference's weekly report renders its job's
     * aggregates (nb:cell28:135-179); the engine's flagship job renders
-    * its ten-stage funnel the same way — from the 10-row ep01 output
-    * only. */
+    * its ten-stage funnel the same way, and st17's per-(wave, stage)
+    * funnel beside it (VERDICT r12 #7). */
   def corpusSections(spark: SparkSession, corpusDir: String)
       : (Seq[(String, String)], Seq[PdfChart]) = {
-    val funnel = graft.operators.CorpusBuild.ep01CorpusBuild(spark, corpusDir)
-    val rows = funnel.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val text = ("stage | n_docs | n_tokens" +:
-      rows.map { case (st, d, t) => s"$st | $d | $t" }).mkString("\n")
-    // the streaming twin (VERDICT r12 #7): st17's per-(wave, stage)
-    // funnel is the PRODUCTION view of the same pipeline — what each
-    // arrival wave survived against the growing store. 30 bounded rows
-    // only; the chart shows the per-wave accepted mass at the quality
-    // gate.
-    val stream = graft.operators.CorpusBuild.st17IncrementalStream(spark, corpusDir)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    val streamText = ("wave | stage | n_docs | n_tokens" +:
-      stream.map { case (w, st, d, t) => s"$w | $st | $d | $t" }).mkString("\n")
-    (Seq("Corpus build funnel (ep01 flagship)" -> text,
-         "Streaming ingest funnel per wave (st17)" -> streamText),
-      Seq(BarChart("Corpus build: surviving documents per stage",
-        rows.map { case (st, d, _) => (st, d.toDouble) }),
-        BarChart("Streaming ingest: accepted documents per wave",
-          stream.filter(_._2 == "8_quality")
-            .map { case (w, _, d, _) => (s"wave $w", d.toDouble) })))
+    val f = CorpusFunnel.read(spark, corpusDir)
+    (Seq("Corpus build funnel (ep01 flagship)" -> table(Seq("stage", "n_docs", "n_tokens"),
+          f.stages.map(_.productIterator.toSeq)),
+         "Streaming ingest funnel per wave (st17)" -> table(Seq("wave", "stage", "n_docs", "n_tokens"),
+          f.waves.map(_.productIterator.toSeq))),
+      Seq(BarChart("Corpus build: surviving documents per stage", f.stageBars),
+        BarChart("Streaming ingest: accepted documents per wave", f.waveBars)))
   }
 
   /** Render the report from an already-cleaned table (plus the

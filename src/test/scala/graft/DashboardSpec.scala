@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.health.HealthQueries
+import graft.report.{ScatterChart, WeeklyReport}
 import graft.util.Exact.stableAvg
 
 /** EP1 shell end-to-end: real HTTP server, pages folded from the
@@ -107,22 +108,32 @@ class DashboardSpec extends AnyFunSuite {
       val f = p.get("year").fold(trendBase)(y => trendBase.filter(col("Year") === y.toLong))
       val v = s.view(p)
       // exact ties go in disease-name order on both sides
-      def top5(page: Seq[(String, Double)], q: org.apache.spark.sql.DataFrame) = {
+      def top5(page: Seq[(String, Double, Long)], q: org.apache.spark.sql.DataFrame) = {
         val want = q.collect().map(r => (r.getString(0), bits(r.getDouble(1)))).toSeq
-        assert(page.map { case (d, m) => (d, bits(m)) } == want, p)
+        assert(page.map { case (d, m, _) => (d, bits(m)) } == want, p)
       }
       top5(v.deadliest, HealthQueries.topDeadliest(f, 5))
       top5(v.cost, HealthQueries.avgCostPerDisease(f, 5))
+      // A1's total_records is the count the deadliest mean divides
+      assert(v.deadliest.map(_._3) ==
+        HealthQueries.topDeadliest(f, 5).collect().map(_.getLong(2)).toSeq, p)
       assert(v.trend.map { case (y, m) => (bits(y), bits(m)) } ==
         HealthQueries.mortalityTrend(trendBase).collect()
           .map(r => (bits(r.getLong(0).toDouble), bits(r.getDouble(1)))).toSeq, p)
-      val scatter = f.filter(col("Healthcare_Access_Pct").isNotNull &&
-          col("Mortality_Rate_per_100").isNotNull)
-        .groupBy(col("Disease Name"))
-        .agg(stableAvg(col("Healthcare_Access_Pct")), stableAvg(col("Mortality_Rate_per_100")))
-        .orderBy(col("Disease Name"))
-        .collect().map(r => (bits(r.getDouble(1)), bits(r.getDouble(2)))).toSeq
-      assert(v.scatter.map { case (x, y) => (bits(x), bits(y)) } == scatter, p)
+      // the stableAvg scatter per `key` group, in key order
+      def scatter(frame: org.apache.spark.sql.DataFrame, key: String) =
+        frame.filter(col("Healthcare_Access_Pct").isNotNull && col("Mortality_Rate_per_100").isNotNull)
+          .groupBy(col(key))
+          .agg(stableAvg(col("Healthcare_Access_Pct")), stableAvg(col("Mortality_Rate_per_100")))
+          .orderBy(col(key))
+          .collect().map(r => (bits(r.getDouble(1)), bits(r.getDouble(2)))).toSeq
+      def pointBits(ps: Seq[(Double, Double)]) = ps.map { case (x, y) => (bits(x), bits(y)) }
+      assert(pointBits(v.scatter) == scatter(f, "Disease Name"), p)
+      if (p.isEmpty) {
+        // the weekly report's per-country scatter, folded from its rollup
+        val report = WeeklyReport.charts(cleaned).collectFirst { case ScatterChart(_, ps) => ps }.get
+        assert(pointBits(report) == scatter(cleaned, "Country"))
+      }
       val o = HealthQueries.overview(f).head()
       val ov = v.overview
       assert(Seq(ov.rows, ov.countries, ov.diseases) == Seq(o.getLong(0), o.getLong(1), o.getLong(2)), p)

@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.health.HealthEtl
 import graft.ml.MortalityModel
+import graft.ml.MortalityModel.cannedInputs
+import graft.report.WeeklyReport
 
 /** Pins the health ETL and the mortality model on a committed seeded CSV
   * (`health_dirty_500.csv`: 500 dirty rows written by
@@ -27,10 +29,14 @@ class HealthDigestSpec extends AnyFunSuite {
   }
   private lazy val fitted = MortalityModel.fit(cleaned)
 
-  private val cannedInputs = Map(
-    "Healthcare_Access_Pct" -> 0.5, "Doctors_per_1000" -> 1.0,
-    "Hospital_Beds_per_1000" -> 2.0, "Avg_Treatment_Cost_USD" -> 500.0,
-    "Per_Capita_Income_USD" -> 1000.0)
+  private lazy val (sections, sectionsJobs) = {
+    val (out, cost) = QueryMetrics(spark)(WeeklyReport.sections(spark, cleaned))
+    (out.get, cost.jobs)
+  }
+  private lazy val (charts, chartsJobs) = {
+    val (out, cost) = QueryMetrics(spark)(WeeklyReport.charts(cleaned))
+    (out.get, cost.jobs)
+  }
 
   private def bits(d: Double): String =
     java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
@@ -56,7 +62,14 @@ class HealthDigestSpec extends AnyFunSuite {
   }
 
   test("weekly report sections and chart series match the pinned digest") {
-    val got = HealthDigest.report(spark, cleaned)
+    val got = HealthDigest.report(sections, charts)
     assert(got == "b290d9a47786e51a0ec893ddcd8c841a059a96ed67ed15b63758649ad2ebb828", s"digest $got")
+  }
+
+  test("weekly report sections submit at most 16 jobs and charts at most 2") {
+    // charts is one rollup aggregate; sections adds the model chain and
+    // the key metrics' ranges
+    assert(sectionsJobs <= 16, s"sections ran $sectionsJobs jobs")
+    assert(chartsJobs <= 2, s"charts ran $chartsJobs jobs")
   }
 }
