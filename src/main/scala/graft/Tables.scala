@@ -109,10 +109,7 @@ object Tables {
     val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val fs = root.getFileSystem(conf)
     val bytes =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map(_.getLen).sum
+      if (fs.getFileStatus(root).isDirectory) graft.util.Lake.statuses(fs, root).map(_.getLen).sum
       else fs.getFileStatus(root).getLen
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     math.max(1L, (bytes + maxSplit - 1) / maxSplit).toInt
@@ -144,9 +141,7 @@ object Tables {
     val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val fs = root.getFileSystem(conf)
     val files =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).toSeq.filter(st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet"))
+      if (fs.getFileStatus(root).isDirectory) graft.util.Lake.statuses(fs, root)
       else Seq(fs.getFileStatus(root))
     files.map { st =>
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(

@@ -58,9 +58,7 @@ object HealthFixture {
       .coalesce(1)
       .sortWithinPartitions("Record_ID")
       .write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .findFirst().orElseThrow()
+    val part = java.nio.file.Paths.get(tmp, graft.util.Lake.files(tmp).head)
     val dest = java.nio.file.Paths.get(outFile)
     java.nio.file.Files.createDirectories(dest.getParent)
     java.nio.file.Files.copy(part, dest,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.{QueryDef, Tables}
-import graft.util.{Overlap, Scratch}
+import graft.util.{Lake, Overlap, Scratch}
 
 /** The capstone: ONE orchestrated corpus-build job composing the engine's
   * already-proven stage families end-to-end — the deliverable the solo
@@ -863,7 +863,7 @@ object CorpusBuild {
     }
 
     val schema = spark.read.parquet(s"$stage/wave_00.parquet").schema
-    val q = spark.readStream.schema(schema)
+    Lake.drain(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(stage)
       .writeStream
       .option("checkpointLocation",
@@ -1055,10 +1055,7 @@ object CorpusBuild {
           s8.agg(coalesce(sum(col("n_tok")), lit(0L)).as("mass"))
             .write.mode("overwrite").parquet(s"$store/wave_mass/b$bid")
         }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     (spark.read.parquet(s"$acct/*")
       .select(col("wave").cast("int").as("wave"), col("stage"),
         col("n_docs"), col("n_tokens"))

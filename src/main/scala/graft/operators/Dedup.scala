@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
-import graft.util.Scratch
+import graft.util.{Lake, Scratch}
 
 /** Near-duplicate detection for training-data pipelines, over `documents`
   * and `embeddings`. Four methods, each with the scale-correct Spark shape:
@@ -1164,25 +1164,19 @@ object Dedup {
   def d20RetuneMigration(spark: SparkSession, dir: String): DataFrame = {
     val idx = neutralLshIndex(spark, dir)
     val chosenR = chosenRowsPerBand(spark, dir)
-    val manifest = migratedCache.computeIfAbsent(
-        Tables.artifactKey(dir, "documents"), _ => {
+    migratedCache.computeIfAbsent(Tables.artifactKey(dir, "documents"), _ => {
       val path = s"$idx/bands_r$chosenR"
       sigBandsAt(spark, dir, chosenR)
         .select(col("doc_id"),
           posexplode(col("bands")).as(Seq("band_no", "bk")))
         .withColumn("bucket", pmod(xxhash64(col("bk")), lit(64)))
         .write.mode("overwrite").partitionBy("bucket").parquet(path)
-      val mf = s"$idx/band_manifest_v2"
-      java.nio.file.Files.write(java.nio.file.Paths.get(mf),
-        s"r=$chosenR\npath=$path\n".getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-      mf
+      Lake.publish(idx, 2, Seq(s"r=$chosenR", s"path=$path"))
+      idx
     })
     // resolve the live store THROUGH the manifest (the read path
     // production probes use once the swap is published)
-    val lines = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(manifest)),
-      java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq
+    val lines = Lake.read(idx, 2)
     val liveR = lines.find(_.startsWith("r=")).get.stripPrefix("r=").toInt
     val livePath = lines.find(_.startsWith("path=")).get.stripPrefix("path=")
     def storeRow(name: String, r: Int, bandsPath: String): DataFrame = {
@@ -1815,7 +1809,7 @@ object Dedup {
         Some(spark.read.parquet(s"$path/*")) else None
     }
     val schema = spark.read.parquet(s"$stage/wave_00.parquet").schema
-    val q = spark.readStream.schema(schema)
+    Lake.drain(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(stage)
       .writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
@@ -1854,10 +1848,7 @@ object Dedup {
         bands.write.mode("overwrite").parquet(s"$store/bands/b$bid")
         sets.write.mode("overwrite").parquet(s"$store/sets/b$bid")
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     ingestAccounting(spark.read.parquet(s"$acct/*"))
   }
 

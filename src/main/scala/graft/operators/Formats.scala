@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{QueryDef, Tables}
+import graft.util.Lake
 
 /** Interchange-format sources/sinks beyond parquet: JSON-lines and ORC
   * round trips, each proven by writing a table out, reading it back, and
@@ -332,8 +333,7 @@ object Formats {
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
     val codecs = Seq("none", "snappy", "gzip", "zstd", "lz4")
-    def bytes(p: String): Long = new java.io.File(p).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    def bytes(p: String): Long = Lake.files(p).map(new java.io.File(p, _).length()).sum
     // parallel multi-file writes: the contract row is layout-independent
     // content checksums, so nothing needs the old coalesce(1) (which
     // serialized each codec write and made the 10x probe I/O-bound)
@@ -404,8 +404,7 @@ object Formats {
       .select(col("l_orderkey")).distinct()
       .orderBy(col("l_orderkey")).limit(8)
       .collect().map(_.getLong(0))
-    val files = new java.io.File(s"$out/data").listFiles()
-      .filter(_.getName.endsWith(".parquet"))
+    val files = Lake.files(s"$out/data").map(new java.io.File(s"$out/data", _))
     System.err.println(s"[io09] files=${files.length} bytes=${files.map(_.length()).sum} keys=${keys.mkString(",")}")
     spark.read.parquet(s"$out/data")
       .filter(col("l_orderkey").isin(keys.map(Long.box): _*))
@@ -765,8 +764,7 @@ object Formats {
     val fs = root.getFileSystem(conf)
     val leaves = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("g="))
-      .flatMap(d => fs.listStatus(d.getPath))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .flatMap(d => Lake.statuses(fs, d.getPath))
     val perFile = leaves.map { st =>
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))

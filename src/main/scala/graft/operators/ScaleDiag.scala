@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.{QueryDef, Tables}
-import graft.util.Overlap
+import graft.util.{Lake, Overlap}
 
 /** Physical-layout and skew tooling — the queries an operator of a
   * 100 TB lake runs to DECIDE how to lay data out and when to salt,
@@ -292,9 +292,7 @@ object ScaleDiag {
       .write.mode("overwrite").parquet(frag)
     spark.read.parquet(frag).repartition(4)
       .write.mode("overwrite").parquet(comp)
-    def files(p: String): Long = new java.io.File(p).listFiles()
-      .count(f => f.getName.endsWith(".parquet")).toLong
-    val (before, after) = (files(frag), files(comp))
+    val (before, after) = (Lake.files(frag).size.toLong, Lake.files(comp).size.toLong)
     spark.read.parquet(comp)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_rows"), sum(col("o_orderkey")).as("key_sum"))
@@ -310,13 +308,13 @@ object ScaleDiag {
       |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin
 
   /** l05 — manifest-based retention vacuum: the snapshot/orphan
-    * lifecycle every table format (Iceberg/Delta-style) runs. A rewrite
-    * APPENDS new data files and flips the manifest — it never deletes in
-    * place, because readers may still hold the old snapshot — so the
-    * directory accumulates orphans that only an explicit vacuum
-    * reclaims. Here: gen-1 writes 8 files (manifest v1), a compaction
-    * rewrite appends 2 files holding the full data (manifest v2 = those
-    * 2 only), vacuum = FS listing MINUS live manifest → delete; the
+    * lifecycle every table format (Iceberg/Delta-style) runs. Under the
+    * [[graft.util.Lake]] protocol a rewrite appends and flips the
+    * manifest, never deleting in place, so the directory accumulates
+    * orphans that only an explicit vacuum reclaims. Here: gen-1 writes
+    * 8 files (manifest v1), a compaction rewrite appends 2 files holding
+    * the full data (manifest v2 = those 2 only), vacuum = listing MINUS
+    * manifest v2 → delete; the
     * contract emits the file arithmetic (10 listed, 8 orphans, 2 after)
     * AND the post-vacuum data aggregate read through manifest v2, so
     * the oracle proves reclamation lost nothing.
@@ -326,23 +324,18 @@ object ScaleDiag {
     * file-metadata tables); data files are never read during vacuum.
     */
   def l05RetentionVacuum(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = graft.util.Scratch.dir("l05_vacuum_")
-    val data = new java.io.File(s"$scratch/data")
-    def listing(): Set[String] =
-      Option(data.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    Tables.orders(spark, dir).repartition(8)
-      .write.mode("overwrite").parquet(data.toString)
-    val gen1 = listing()
-    spark.read.parquet(data.toString).repartition(2)
-      .write.mode("append").parquet(data.toString)
-    val manifestV2 = listing() -- gen1 // the rewrite's own files
+    val table = graft.util.Scratch.dir("l05_vacuum_")
+    def listing(): Seq[String] = Lake.files(s"$table/data").map(f => s"data/$f")
+    Lake.publish(table, 1, Lake.append(Tables.orders(spark, dir).repartition(8), table, "data"))
+    Lake.publish(table, 2, // the rewrite's own files
+      Lake.append(spark.read.parquet(s"$table/data").repartition(2), table, "data"))
+    val live = Lake.read(table, 2)
     val before = listing()
-    val orphans = before -- manifestV2
-    orphans.foreach(n => new java.io.File(data, n).delete())
+    val orphans = before.filterNot(live.toSet)
+    orphans.foreach(p => new java.io.File(s"$table/$p").delete())
     val after = listing()
-    require(after == manifestV2, "vacuum must leave exactly the live snapshot")
-    spark.read.parquet(manifestV2.toSeq.sorted.map(n => s"$data/$n"): _*)
+    require(after == live, "vacuum must leave exactly the live snapshot")
+    spark.read.parquet(Lake.paths(table, live): _*)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_rows"), sum(col("o_orderkey")).as("key_sum"))
       .withColumn("files_listed", lit(before.size.toLong))
@@ -361,7 +354,7 @@ object ScaleDiag {
   /** l07 — snapshot time travel: the manifest-versioned read path every
     * modern table format (Iceberg snapshot / Delta version) builds on,
     * and the one lake primitive the l01–l06 family hadn't exercised.
-    * Writers only ever APPEND data files and publish a new manifest —
+    * Writers append and publish through [[graft.util.Lake]] —
     * v1 = the day-one load (8 files, keys ≢ 0 mod 3), v2 = v1 plus an
     * appended delta (4 files, the ≡ 0 keys), v3 = a compaction REWRITE
     * (2 files holding exactly v2's rows — a new manifest, zero new
@@ -378,32 +371,18 @@ object ScaleDiag {
     * copied; the aggregates are ordinary partial+final sums.
     */
   def l07TimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val scratch = graft.util.Scratch.dir("l07_travel_")
-    val data = new java.io.File(s"$scratch/data")
-    def listing(): Set[String] =
-      Option(data.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    def writeManifest(v: Int, files: Set[String]): Unit =
-      Files.write(Paths.get(s"$scratch/manifest-v$v.txt"),
-        files.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    def readManifest(v: Int): Seq[String] =
-      new String(Files.readAllBytes(Paths.get(s"$scratch/manifest-v$v.txt")),
-        "UTF-8").split("\n").toSeq
+    val table = graft.util.Scratch.dir("l07_travel_")
     val orders = Tables.orders(spark, dir)
-    orders.filter(col("o_orderkey") % 3 =!= 0).repartition(8)
-      .write.mode("append").parquet(data.toString)
-    writeManifest(1, listing())
-    orders.filter(col("o_orderkey") % 3 === 0).repartition(4)
-      .write.mode("append").parquet(data.toString)
-    val gen2 = listing()
-    writeManifest(2, gen2)
-    spark.read.parquet(readManifest(2).map(n => s"$data/$n"): _*)
-      .repartition(2).write.mode("append").parquet(data.toString)
-    writeManifest(3, listing() -- gen2)
+    Lake.publish(table, 1,
+      Lake.append(orders.filter(col("o_orderkey") % 3 =!= 0).repartition(8), table, "data"))
+    Lake.publish(table, 2, Lake.read(table, 1) ++
+      Lake.append(orders.filter(col("o_orderkey") % 3 === 0).repartition(4), table, "data"))
+    Lake.publish(table, 3, Lake.append(
+      spark.read.parquet(Lake.paths(table, Lake.read(table, 2)): _*).repartition(2),
+      table, "data"))
     (1 to 3).map { v =>
-      val files = readManifest(v)
-      spark.read.parquet(files.map(n => s"$data/$n"): _*)
+      val files = Lake.paths(table, Lake.read(table, v))
+      spark.read.parquet(files: _*)
         .agg(count(lit(1)).as("n_rows"), sum(col("o_orderkey")).as("key_sum"))
         .select(lit(v).as("version"), lit(files.size.toLong).as("n_files"),
           col("n_rows"), col("key_sum"))
@@ -428,10 +407,11 @@ object ScaleDiag {
     * staged files back — a data-contract pass in the
     * [[Maintenance.a53ContractAudit]] spirit: positive price cents and
     * primary-key uniqueness against the already-published snapshot —
-    * and (3) PUBLISHED by appending the staged file names to the
-    * manifest ONLY if the audit is clean; a failing batch's files stay
-    * on disk as unreferenced orphans ([[l05RetentionVacuum]]'s domain)
-    * and the table read through the manifest is provably unchanged.
+    * and (3) PUBLISHED: batch b publishes version b of the table
+    * ([[graft.util.Lake]]), the previous version plus the staged files
+    * ONLY if the audit is clean. A failing batch's files stay on disk as
+    * unreferenced orphans ([[l05RetentionVacuum]]'s domain), and the
+    * table read back through its version b is provably unchanged.
     *
     * Four deterministic batches exercise both rules and both verdicts:
     * b1 (keys ≡ 1 mod 3) is clean and publishes; b2 (≡ 2 mod 3) plants
@@ -449,12 +429,7 @@ object ScaleDiag {
     * manifest flip, data files are never rewritten or copied.
     */
   def l08WriteAuditPublish(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val scratch = graft.util.Scratch.dir("l08_wap_")
-    val data = new java.io.File(s"$scratch/data")
-    def listing(): Set[String] =
-      Option(data.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    val table = graft.util.Scratch.dir("l08_wap_")
     val orders = Tables.orders(spark, dir)
       .select(col("o_orderkey").as("k"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -465,32 +440,30 @@ object ScaleDiag {
           .otherwise(col("cents"))),
       orders.filter(col("k") % 15 === 10),
       orders.filter(col("k") % 3 === 0))
-    var manifest = Vector.empty[String]
-    def snapshot(): DataFrame =
-      if (manifest.isEmpty) spark.range(0).select(col("id").as("k"), col("id").as("cents"))
-      else spark.read.parquet(manifest.map(n => s"$data/$n"): _*)
+    def snapshot(lines: Seq[String]): DataFrame =
+      if (lines.isEmpty) spark.range(0).select(col("id").as("k"), col("id").as("cents"))
+      else spark.read.parquet(Lake.paths(table, lines): _*)
     val out = batches.zipWithIndex.map { case (b, i) =>
-      val before = listing()
-      b.repartition(2).write.mode("append").parquet(data.toString)
-      val stagedFiles = (listing() -- before).toSeq.sorted
-      val staged = spark.read.parquet(stagedFiles.map(n => s"$data/$n"): _*)
+      val v = i + 1
+      val published = Lake.prior(table, v)
+      val stagedFiles = Lake.append(b.repartition(2), table, "data")
+      val staged = spark.read.parquet(Lake.paths(table, stagedFiles): _*)
       // r15 (guide §2.4): the row/price audit and the duplicate-pk
       // probe are both 1-row aggregates over the staged files — cross
       // joined they evaluate in ONE driver job instead of two per batch
       val audit = staged.agg(count(lit(1)).as("staged_rows"),
         coalesce(sum(when(col("cents") <= 0, 1L).otherwise(0L)), lit(0L))
           .as("bad_price"))
-        .crossJoin(staged.join(snapshot().select(col("k")), Seq("k"), "left_semi")
+        .crossJoin(staged.join(snapshot(published).select(col("k")), Seq("k"), "left_semi")
           .agg(count(lit(1)).as("dup_pk")))
         .head()
       val (stagedRows, badPrice, dupPk) =
         (audit.getLong(0), audit.getLong(1), audit.getLong(2))
       val publish = badPrice == 0 && dupPk == 0
-      if (publish) manifest ++= stagedFiles
-      Files.write(Paths.get(s"$scratch/manifest-v${i + 1}.txt"),
-        manifest.sorted.mkString("\n").getBytes("UTF-8"))
-      val t = snapshot().agg(count(lit(1)).as("n"), sum(col("k")).as("s")).head()
-      (i + 1, stagedRows, badPrice, dupPk, publish, t.getLong(0), t.getLong(1))
+      Lake.publish(table, v, if (publish) published ++ stagedFiles else published)
+      val t = snapshot(Lake.read(table, v))
+        .agg(count(lit(1)).as("n"), sum(col("k")).as("s")).head()
+      (v, stagedRows, badPrice, dupPk, publish, t.getLong(0), t.getLong(1))
     }
     import spark.implicits._
     out.toDF("batch", "staged_rows", "bad_price", "dup_pk", "published",
@@ -635,11 +608,7 @@ object ScaleDiag {
       .withColumn("pos", row_number().over(w).cast("long"))
       .write.partitionBy("file_id").mode("overwrite").parquet(s"$scratch/data")
     def files(): Map[String, Set[String]] =
-      (0 to 3).map { g =>
-        val d = new java.io.File(s"$scratch/data/file_id=$g")
-        s"file_id=$g" -> Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-      }.toMap
+      (0 to 3).map(g => s"file_id=$g" -> Lake.files(s"$scratch/data/file_id=$g").toSet).toMap
     val base = spark.read.parquet(s"$scratch/data")
     val before = files()
     // DELETE COMMIT: keys ≡ 0 (mod 7) become (file_id, pos) pairs only
@@ -893,21 +862,15 @@ object ScaleDiag {
     * rewritten file groups, classification and sums partial-aggregate.
     */
   def l11SnapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = graft.util.Scratch.dir("l11_cdf_")
-    val data = new java.io.File(s"$scratch/data")
-    def listing(): Set[String] =
-      Option(data.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    val table = graft.util.Scratch.dir("l11_cdf_")
     val base = Tables.orders(spark, dir)
       .select(col("o_orderkey").as("k"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
     // v1: even-key group A + odd-key group B (4 files each)
-    base.filter(col("k") % 3 =!= 0 && col("k") % 2 === 0)
-      .repartition(4).write.mode("append").parquet(data.toString)
-    val fA = listing()
-    base.filter(col("k") % 3 =!= 0 && col("k") % 2 === 1)
-      .repartition(4).write.mode("append").parquet(data.toString)
-    val fB = listing() -- fA
+    val fA = Lake.append(base.filter(col("k") % 3 =!= 0 && col("k") % 2 === 0)
+      .repartition(4), table, "data").toSet
+    val fB = Lake.append(base.filter(col("k") % 3 =!= 0 && col("k") % 2 === 1)
+      .repartition(4), table, "data").toSet
     val manifest1 = fA ++ fB
     // v2: reuse A verbatim; rewrite B with deletes+updates, plus inserts
     val bPrime = base
@@ -915,8 +878,7 @@ object ScaleDiag {
       .withColumn("cents",
         when(col("k") % 14 === 7, col("cents") + 1000L).otherwise(col("cents")))
       .unionByName(base.filter(col("k") % 3 === 0 && col("k") % 2 === 1))
-    bPrime.repartition(4).write.mode("append").parquet(data.toString)
-    val fB2 = listing() -- manifest1
+    val fB2 = Lake.append(bPrime.repartition(4), table, "data").toSet
     val manifest2 = fA ++ fB2
     // The oracle pins files_v1/v2/shared/scanned to the 8/8/4/8 layout;
     // Spark writes NO file for an empty partition, so a scale factor
@@ -927,8 +889,8 @@ object ScaleDiag {
         s"|A|=${fA.size} |B|=${fB.size} |B'|=${fB2.size} — a " +
         s"repartition(4) group wrote fewer files (empty partitions?)")
     // CDF: open ONLY the manifest delta
-    val v1only = (manifest1 -- manifest2).toSeq.sorted.map(n => s"$data/$n")
-    val v2only = (manifest2 -- manifest1).toSeq.sorted.map(n => s"$data/$n")
+    val v1only = Lake.paths(table, (manifest1 -- manifest2).toSeq.sorted)
+    val v2only = Lake.paths(table, (manifest2 -- manifest1).toSeq.sorted)
     val pre = spark.read.parquet(v1only: _*)
       .select(col("k"), col("cents").as("cents_pre"))
     val post = spark.read.parquet(v2only: _*)
@@ -994,9 +956,11 @@ object ScaleDiag {
     * (summary == re-aggregated staged∪published facts) fails and
     * NEITHER table advances, the staged files of BOTH tables stay
     * orphans; v3 re-stages batch-2 with the correct summary and
-    * publishes. Each emitted row reads the table THROUGH the manifest
-    * after the attempt: v2's row equals v1's row on every fact AND
-    * summary column — that equality is the atomicity proof.
+    * publishes. Attempt v publishes version v of one
+    * [[graft.util.Lake]] manifest with a `fact|` and a `summary|`
+    * section, and each emitted row reads both tables back THROUGH it:
+    * v2's row equals v1's row on every fact AND summary column — that
+    * equality is the atomicity proof.
     *
     * Scale shape: audits read only staged files plus the
     * status-bounded published summary; publishes are metadata-only
@@ -1004,27 +968,19 @@ object ScaleDiag {
     * consistency re-check per version is one bounded aggregate join.
     */
   def l12AtomicMultiTable(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val scratch = graft.util.Scratch.dir("l12_txn_")
-    val factDir = new java.io.File(s"$scratch/fact")
-    val sumDir = new java.io.File(s"$scratch/summary")
-    def listing(d: java.io.File): Set[String] =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    val table = graft.util.Scratch.dir("l12_txn_")
     val base = Tables.orders(spark, dir)
       .select(col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
     val batch1 = base.filter(col("k") % 2 === 0)
     val batch2 = base.filter(col("k") % 2 === 1)
-    var factManifest = Vector.empty[String]
-    var sumManifest = Vector.empty[String]
-    def readTable(d: java.io.File, names: Seq[String]): DataFrame =
-      if (names.isEmpty)
+    def readTable(paths: Seq[String]): DataFrame =
+      if (paths.isEmpty)
         spark.range(0).select(col("id").as("status").cast("string"),
           col("id").as("cents"))
-      else spark.read.parquet(names.map(n => s"$d/$n"): _*)
+      else spark.read.parquet(paths: _*)
     def attempt(v: Int, fact: DataFrame, corruptSummary: Boolean): (Int, Long, Long, Long, Boolean, Long) = {
-      val beforeF = listing(factDir); val beforeS = listing(sumDir)
+      val published = Lake.prior(table, v)
       val summary = fact.groupBy(col("status"))
         .agg(sum(col("cents")).as("cents"))
         .withColumn("cents",
@@ -1032,35 +988,33 @@ object ScaleDiag {
           else col("cents"))
       // the two staged writes are independent of each other (the txn
       // only needs both staged before the audit; see graft.util.Overlap)
-      Overlap(spark) { o =>
-        o.fork(fact.repartition(2).write.mode("append").parquet(factDir.toString))
-        summary.coalesce(1).write.mode("append").parquet(sumDir.toString)
+      val (stagedF, stagedS) = Overlap(spark) { o =>
+        val f = o.fork(Lake.append(fact.repartition(2), table, "fact"))
+        val s = Lake.append(summary.coalesce(1), table, "summary")
+        (f.join(), s)
       }
-      val stagedF = (listing(factDir) -- beforeF).toSeq.sorted
-      val stagedS = (listing(sumDir) -- beforeS).toSeq.sorted
       // cross-table audit: staged summary must equal the re-aggregated
       // union of published+staged facts MINUS the published summary
-      val factAll = readTable(factDir, factManifest ++ stagedF)
+      val factAll = readTable(Lake.paths(table, published, "fact") ++ Lake.paths(table, stagedF))
         .groupBy(col("status")).agg(sum(col("cents")).as("expect"))
-      val sumAll = readTable(sumDir, sumManifest ++ stagedS)
+      val sumAll = readTable(Lake.paths(table, published, "summary") ++ Lake.paths(table, stagedS))
         .groupBy(col("status")).agg(sum(col("cents")).as("got"))
       val bad = factAll.join(sumAll, Seq("status"), "full_outer")
         .filter(coalesce(col("expect"), lit(0L)) =!= coalesce(col("got"), lit(0L)))
         .count()
       val publish = bad == 0
-      if (publish) { factManifest ++= stagedF; sumManifest ++= stagedS }
-      Files.write(Paths.get(s"$scratch/manifest-v$v.txt"),
-        (factManifest.sorted.map("fact|" + _) ++ sumManifest.sorted.map("summary|" + _))
-          .mkString("\n").getBytes("UTF-8"))
+      Lake.publish(table, v,
+        if (publish) published ++ stagedF.map("fact|" + _) ++ stagedS.map("summary|" + _)
+        else published)
       // read back THROUGH the manifest — both 1-row aggregates in ONE
       // job (a cross join of two scalar aggs evaluates both subtrees in
       // the same collect), halving the per-attempt read-back job count
-      val fs = readTable(factDir, factManifest)
+      val lines = Lake.read(table, v)
+      val fs = readTable(Lake.paths(table, lines, "fact"))
         .agg(count(lit(1)).as("n"), coalesce(sum(col("cents")), lit(0L)).as("s"))
-        .crossJoin(readTable(sumDir, sumManifest)
+        .crossJoin(readTable(Lake.paths(table, lines, "summary"))
           .agg(coalesce(sum(col("cents")), lit(0L)).as("s2"))).head()
-      (v, fs.getLong(0), fs.getLong(1), fs.getLong(2), publish,
-        (factManifest.size + sumManifest.size).toLong)
+      (v, fs.getLong(0), fs.getLong(1), fs.getLong(2), publish, lines.size.toLong)
     }
     val out = Seq(
       attempt(1, batch1, corruptSummary = false),

@@ -101,6 +101,12 @@ object WeeklyReport {
     * forked branch while the caller's thread builds the rollup and the
     * key metrics' ranges. */
   def sections(spark: SparkSession, cleaned: DataFrame): Seq[(String, String)] =
+    summarize(spark, cleaned)._1
+
+  /** [[sections]] and the rollup they were folded from, which [[render]]
+    * reuses for the charts. */
+  private def summarize(spark: SparkSession, cleaned: DataFrame)
+      : (Seq[(String, String)], Rollup) =
     Overlap(spark) { o =>
       val model = o.fork {
         val fitted = MortalityModel.fit(cleaned)
@@ -110,11 +116,12 @@ object WeeklyReport {
          fmt(MortalityModel.featureImportances(fitted), 10),
          f"predicted rate = $prediction%.6f")
       }
-      val view = Rollup(cleaned).view(None, None)
+      val rollup = Rollup(cleaned)
+      val view = rollup.view(None, None)
       val (_, _, metricStats) = HealthQueries.qualityReport(cleaned)
       val stats = fmt(metricStats)
       val (scores, importances, prediction) = model.join()
-      Seq(
+      (Seq(
         "Overview" -> { val (h, r) = view.overview.fields.unzip; table(h, Seq(r)) },
         "Data quality (key metric ranges)" -> stats,
         "Model quality (RandomForest 300x3, seed 42)" -> scores,
@@ -123,7 +130,7 @@ object WeeklyReport {
         "Top 5 costliest diseases" -> table(Seq("Disease Name", "avg_cost"),
           view.cost.map { case (d, c, _) => Seq(d, c) }),
         "Feature importances (top 10)" -> importances,
-        "Canned mortality prediction" -> prediction)
+        "Canned mortality prediction" -> prediction), rollup)
     }
 
   /** The reference's figure inventory (mortality trend line, top-disease
@@ -131,8 +138,9 @@ object WeeklyReport {
     * scatter, Health_Jim.py:474-483), as vector chart specs folded from
     * one [[graft.health.Rollup]]. The scatter has one point per country,
     * so the collect stays bounded at any input scale. */
-  def charts(cleaned: DataFrame): Seq[PdfChart] = {
-    val rollup = Rollup(cleaned)
+  def charts(cleaned: DataFrame): Seq[PdfChart] = chartsOf(Rollup(cleaned))
+
+  private def chartsOf(rollup: Rollup): Seq[PdfChart] = {
     val view = rollup.view(None, None)
     Seq(LineChart("Average Mortality Rate by Year", view.trend),
       BarChart("Top 5 Deadliest Diseases (avg mortality)",
@@ -164,9 +172,8 @@ object WeeklyReport {
              corpusDir: Option[String] = None): String = {
     val (cSec, cCharts) = corpusDir.map(corpusSections(spark, _))
       .getOrElse((Seq.empty, Seq.empty))
-    sink.write("WEEKLY GLOBAL HEALTH REPORT",
-               sections(spark, cleaned) ++ cSec,
-               charts(cleaned) ++ cCharts)
+    val (secs, rollup) = summarize(spark, cleaned)
+    sink.write("WEEKLY GLOBAL HEALTH REPORT", secs ++ cSec, chartsOf(rollup) ++ cCharts)
   }
 
   /** Run the whole job: ETL on the raw CSV, cached for the render. */

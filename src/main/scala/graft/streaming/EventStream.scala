@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.{QueryDef, Tables}
 import graft.util.Exact._
-import graft.util.{Overlap, Scratch}
+import graft.util.{Lake, Overlap, Scratch}
 
 /** Structured Streaming surface over the `events` table. The reference
   * has no streams (SURVEY §2.5 — "Real-time insights" means interactive
@@ -147,13 +147,10 @@ object EventStream {
       .agg(count(lit(1)).as("n"), exactSum(col("value")).as("sum_value"))
       .select(unix_micros(col("w.start")).as("window_start_us"),
               col("event_type"), col("n"), col("sum_value"))
-    val q = src.writeStream
+    Lake.drain(src.writeStream
       .format("memory")
       .queryName(queryName)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode("complete"))
     spark.table(queryName)
       .orderBy(col("window_start_us"), col("event_type"))
   }
@@ -174,11 +171,8 @@ object EventStream {
       .join(dim, col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"), exactSum(col("value")).as("sum_value"))
-    val q = src.writeStream
-      .format("memory").queryName(queryName).outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(src.writeStream
+      .format("memory").queryName(queryName).outputMode("complete"))
     spark.table(queryName).orderBy(col("c_mktsegment"))
   }
 
@@ -203,7 +197,7 @@ object EventStream {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("us").desc, col("event_id").desc)
-    val q = eventsStream(spark, srcDir, Map("maxFilesPerTrigger" -> "1"))
+    Lake.drain(eventsStream(spark, srcDir, Map("maxFilesPerTrigger" -> "1"))
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
         col("event_type"), col("value"))
       .writeStream
@@ -238,10 +232,7 @@ object EventStream {
         }
         if (hadOld) fs.delete(retired, true)
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     spark.read.parquet(target).orderBy(col("user_id"))
   }
 
@@ -262,11 +253,8 @@ object EventStream {
       .withWatermark("tsc", "24 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"), col("event_id"))
-    val q = src.writeStream
-      .format("memory").queryName(queryName).outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(src.writeStream
+      .format("memory").queryName(queryName).outputMode("append"))
     spark.table(queryName).orderBy(col("user_id"), col("event_type"))
   }
 
@@ -332,11 +320,8 @@ object EventStream {
           state.update(next)
           UserUpdate(uid, next.n, next.sumCents / 100.0)
       }
-    val q = updates.toDF().writeStream
-      .format("memory").queryName(queryName).outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(updates.toDF().writeStream
+      .format("memory").queryName(queryName).outputMode("update"))
     // keep each user's LAST update = final state
     val t = spark.table(queryName)
     val w = org.apache.spark.sql.expressions.Window
@@ -418,11 +403,8 @@ object EventStream {
             closed.result().map(emit).iterator
           }
       }
-    val q = sessions.toDF().writeStream
-      .format("memory").queryName(queryName).outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(sessions.toDF().writeStream
+      .format("memory").queryName(queryName).outputMode("append"))
     spark.table(queryName)
       .orderBy(col("user_id"), col("session_start_us"))
   }
@@ -533,11 +515,8 @@ object EventStream {
                           queryName: String = "st_first_touch"): DataFrame = {
     val firsts = firstTouchUpdates(spark,
       eventsStream(spark, Scratch.linked("graft_ft_", dir, "events.parquet")))
-    val q = firsts.toDF().writeStream
-      .format("memory").queryName(queryName).outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(firsts.toDF().writeStream
+      .format("memory").queryName(queryName).outputMode("append"))
     spark.table(queryName).orderBy(col("user_id"))
   }
 
@@ -615,11 +594,8 @@ object EventStream {
       .select(col("user_id"), col("click_id"),
         unix_micros(col("click_ts")).as("click_us"),
         unix_micros(col("p_ts")).as("p_us"), col("p_cents"))
-    val q = pairs.writeStream
-      .format("memory").queryName(queryName).outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(pairs.writeStream
+      .format("memory").queryName(queryName).outputMode("append"))
     spark.table(queryName)
       .orderBy(col("user_id"), col("click_id"), col("p_us"))
   }
@@ -675,7 +651,7 @@ object EventStream {
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val q = gated(spark.readStream.schema(docsSchema).parquet(stageDir))
+    Lake.drain(gated(spark.readStream.schema(docsSchema).parquet(stageDir))
       .select(col("doc_id"), col("source"), col("verdict"))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -684,10 +660,7 @@ object EventStream {
         batch.filter(col("verdict") === "quarantine")
           .write.mode("append").parquet(s"$out/quarantine")
         ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     // a sink directory only exists if some batch wrote that verdict —
     // an all-pass corpus must yield the correct accounting, not a
     // PATH_NOT_FOUND from the empty quarantine side
@@ -776,11 +749,8 @@ object EventStream {
       .select(col("user_id"), col("click_id"),
         unix_micros(col("click_ts")).as("click_us"),
         unix_micros(col("p_ts")).as("p_us"))
-    val q = joined.writeStream
-      .format("memory").queryName(queryName).outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(joined.writeStream
+      .format("memory").queryName(queryName).outputMode("append"))
     spark.table(queryName)
       .orderBy(col("user_id"), col("click_id"), col("p_us"))
   }
@@ -907,11 +877,8 @@ object EventStream {
       .parquet(flat)
       .withWatermark("ts", "48 hours")
       .dropDuplicatesWithinWatermark("event_id")
-    val q = src.writeStream
-      .format("memory").queryName(queryName).outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(src.writeStream
+      .format("memory").queryName(queryName).outputMode("append"))
     spark.table(queryName)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"), sum(col("cents")).as("sum_cents"))
@@ -971,11 +938,8 @@ object EventStream {
       .join(broadcast(dim), col("nk") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-    val q = src.writeStream
-      .format("memory").queryName(queryName).outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(src.writeStream
+      .format("memory").queryName(queryName).outputMode("complete"))
     spark.table(queryName).orderBy(col("n_name"))
   }
 
@@ -1092,11 +1056,8 @@ object EventStream {
   def streamingCdcApply(spark: SparkSession, dir: String,
                         queryName: String = "st_cdc_apply"): DataFrame = {
     val updates = cdcUpdates(spark, stageCdcLog(spark, dir))
-    val q = updates.toDF().writeStream
-      .format("memory").queryName(queryName).outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Lake.drain(updates.toDF().writeStream
+      .format("memory").queryName(queryName).outputMode("update"))
     val t = spark.table(queryName)
     val w = Window.partitionBy(col("user_id")).orderBy(col("n_ops").desc)
     t.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -1105,76 +1066,59 @@ object EventStream {
       .orderBy(col("user_id"))
   }
 
-  /** st14 — exactly-once lake commit from a stream: the manifest-flip
-    * write protocol whose READ side is
-    * [[graft.operators.ScaleDiag.l07TimeTravel]]. Each micro-batch (a)
-    * writes its rows to a per-batch data directory (overwrite — a
-    * replayed batch rewrites the same bytes), then (b) publishes
-    * `manifest-v<batchId>` as the PREVIOUS manifest (highest version
-    * strictly below this batch id — never its own possibly-half-written
-    * prior attempt) plus its own files, via write-to-temp + atomic
-    * rename. The manifest flip IS the commit: a reader only ever sees a
-    * fully-published snapshot, a crash between data write and manifest
-    * rename leaves invisible orphans (l05's vacuum reclaims those), and
-    * a replay after such a crash reconstructs the identical manifest —
-    * idempotence by construction, asserted by literally re-running the
-    * last commit in Round8OpsSpec. This is how Structured Streaming
-    * achieves exactly-once onto Iceberg/Delta-style tables without any
-    * sink-side dedup state (contrast st13, whose state is the point).
+  /** Stages the events' (event_id, event_type, cents) as `nFiles`
+    * event-id hash slices, the input of the lake sinks st14 and st16. */
+  private[graft] def st16Stage(spark: SparkSession, dir: String,
+                               nFiles: Int): String = {
+    val stage = Scratch.dir("graft_lake_src_")
+    Tables.events(spark, dir)
+      .select(col("event_id"), col("event_type"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+      .repartition(nFiles, col("event_id"))
+      .write.mode("overwrite").parquet(stage)
+    stage
+  }
+
+  /** Streams 4 staged slices of `dir`'s events, one per micro-batch, into
+    * a fresh table that `commit` publishes each batch to; returns the
+    * table directory. */
+  private[graft] def lakeRun(spark: SparkSession, dir: String,
+                             commit: (String, DataFrame, Long) => Unit): String = {
+    val stage = st16Stage(spark, dir, 4)
+    val table = Scratch.dir("graft_lake_tbl_")
+    Lake.drain(spark.readStream.schema(spark.read.parquet(stage).schema)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
+      .writeStream
+      .foreachBatch { (b: DataFrame, bid: Long) => commit(table, b, bid) })
+    table
+  }
+
+  /** st14 — exactly-once lake commit from a stream, the write side of
+    * [[graft.operators.ScaleDiag.l07TimeTravel]]'s snapshot reads. Each
+    * micro-batch overwrites its own data directory `data/b<batchId>` (a
+    * replayed batch rewrites the same rows) and publishes version
+    * <batchId> through [[graft.util.Lake]], whose scaladoc holds the
+    * commit protocol and why a replay is idempotent; Round8OpsSpec
+    * re-runs the last commit to check it. This is how Structured
+    * Streaming achieves exactly-once onto Iceberg/Delta-style tables
+    * without any sink-side dedup state (contrast st13, whose state is
+    * the point).
     *
     * Scale shape: commit cost is one metadata file per batch,
     * independent of data volume; the final contract aggregate is an
     * ordinary partial+final sum over the snapshot's file list.
     */
-  private[graft] def st14Run(spark: SparkSession, dir: String): String = {
-    val stage = Scratch.dir("graft_lake_src_")
-    Tables.events(spark, dir)
-      .select(col("event_id"), col("event_type"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      .repartition(4, col("event_id"))
-      .write.mode("overwrite").parquet(stage)
-    val table = Scratch.dir("graft_lake_tbl_")
-    val q = spark.readStream.schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream
-      .foreachBatch { (b: DataFrame, bid: Long) => st14Commit(table, b, bid); () }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    table
-  }
-
-  /** One manifest-flip commit; replay-idempotent (see [[st14Run]]). */
   private[graft] def st14Commit(table: String, batch: DataFrame, bid: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val rel = s"data/b$bid"
     batch.write.mode("overwrite").parquet(s"$table/$rel")
-    val files = new java.io.File(s"$table/$rel").listFiles
-      .filter(_.getName.endsWith(".parquet")).map(f => s"$rel/${f.getName}").sorted
-    val prev = st14Versions(table).filter(_ < bid).sorted.lastOption
-      .map(v => st14Manifest(table, v)).getOrElse(Seq.empty)
-    val tmp = Paths.get(s"$table/.manifest-v$bid.tmp")
-    Files.write(tmp, (prev ++ files).mkString("\n").getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(s"$table/manifest-v$bid.txt"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private[graft] def st14Versions(table: String): Seq[Long] =
-    Option(new java.io.File(table).listFiles).getOrElse(Array.empty)
-      .map(_.getName).filter(n => n.startsWith("manifest-v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("manifest-v").stripSuffix(".txt").toLong).toSeq
-
-  private[graft] def st14Manifest(table: String, v: Long): Seq[String] = {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$table/manifest-v$v.txt")), "UTF-8")
-    if (s.isEmpty) Seq.empty else s.split("\n").toSeq
+    Lake.publish(table, bid,
+      Lake.prior(table, bid) ++ Lake.files(s"$table/$rel").map(f => s"$rel/$f"))
   }
 
   def st14ManifestSink(spark: SparkSession, dir: String): DataFrame = {
-    val table = st14Run(spark, dir)
-    val versions = st14Versions(table)
-    val files = st14Manifest(table, versions.max).map(f => s"$table/$f")
-    spark.read.parquet(files: _*)
+    val table = lakeRun(spark, dir, st14Commit)
+    val versions = Lake.versions(table)
+    spark.read.parquet(Lake.paths(table, Lake.read(table, versions.max)): _*)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
       .withColumn("n_snapshots", lit(versions.size.toLong))
@@ -1187,89 +1131,37 @@ object EventStream {
       |  CAST(4 AS BIGINT) n_snapshots
       |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin
 
-  /** One dual-table manifest-flip commit: batch bid writes its raw rows
-    * AND its per-type summary to per-batch directories, then publishes
-    * ONE manifest listing both tables' surviving files (tagged lines,
-    * the l12 convention) via atomic rename. Replay-idempotent like
-    * [[st14Commit]] — and replay-SAFE for concurrent readers: a
-    * recovered batch writes to a FRESH attempt-numbered directory
-    * (`raw/b<bid>-a<n>`), so the files a previously-published
-    * `manifest-v<bid>` references are never deleted out from under a
-    * reader mid-recovery; the manifest rename atomically switches to
-    * the new attempt's paths, and the superseded attempt's files become
-    * unreferenced orphans reclaimed by the l05-style vacuum (exactly
-    * the fate of a crash's half-written data under st14).
+  /** One dual-table commit: batch bid writes its raw rows and its
+    * per-type summary to a fresh attempt directory `b<bid>-a<n>`, then
+    * publishes ONE manifest listing both tables' files in the `raw|` and
+    * `sum|` sections ([[graft.util.Lake]] holds the protocol). A replay
+    * of the batch writes the next attempt, so the files an earlier
+    * `manifest-v<bid>` names are never deleted under a reader; the
+    * superseded attempt's files become orphans for the l05-style vacuum.
     */
   private[graft] def st16Commit(table: String, batch: DataFrame, bid: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    def files(rel: String): Seq[String] =
-      new java.io.File(s"$table/$rel").listFiles
-        .filter(_.getName.endsWith(".parquet")).map(f => s"$rel/${f.getName}")
-        .sorted.toSeq
-    // first attempt lands at b<bid>-a0; a replay of the same batch id
-    // picks the next free slot rather than overwriting published files
-    val attempt = Iterator.from(0)
-      .find(n => !Files.exists(Paths.get(s"$table/raw/b$bid-a$n"))).get
-    val rawRel = s"raw/b$bid-a$attempt"
-    val sumRel = s"sum/b$bid-a$attempt"
+    val at = Lake.attempt(table, s"b$bid")
     // the two staged writes are independent (the manifest flip below is
     // the only commit point; see graft.util.Overlap)
-    Overlap(batch.sparkSession) { o =>
-      o.fork(batch.write.mode("overwrite").parquet(s"$table/$rawRel"))
-      batch.groupBy(col("event_type"))
+    val (rawFiles, sumFiles) = Overlap(batch.sparkSession) { o =>
+      val raw = o.fork(Lake.append(batch, table, s"$at/raw"))
+      val summary = Lake.append(batch.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$table/$sumRel")
+        .coalesce(1), table, s"$at/sum")
+      (raw.join(), summary)
     }
-    val prev = st14Versions(table).filter(_ < bid).sorted.lastOption
-      .map(v => st14Manifest(table, v)).getOrElse(Seq.empty)
-    val lines = prev ++ files(rawRel).map("raw|" + _) ++ files(sumRel).map("sum|" + _)
-    val tmp = Paths.get(s"$table/.manifest-v$bid.tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(s"$table/manifest-v$bid.txt"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Read ONE side ("raw" or "sum") of a dual-sink snapshot v. */
-  private[graft] def st16Side(spark: SparkSession, table: String, v: Long,
-                              side: String): DataFrame = {
-    val files = st14Manifest(table, v)
-      .filter(_.startsWith(side + "|")).map(l => s"$table/${l.split("\\|")(1)}")
-    spark.read.parquet(files: _*)
-  }
-
-  private[graft] def st16Stage(spark: SparkSession, dir: String,
-                               nFiles: Int): String = {
-    val stage = Scratch.dir("graft_dual_src_")
-    Tables.events(spark, dir)
-      .select(col("event_id"), col("event_type"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      .repartition(nFiles, col("event_id"))
-      .write.mode("overwrite").parquet(stage)
-    stage
-  }
-
-  private[graft] def st16Run(spark: SparkSession, dir: String,
-                             nFiles: Int = 4): String = {
-    val stage = st16Stage(spark, dir, nFiles)
-    val table = Scratch.dir("graft_dual_tbl_")
-    val q = spark.readStream.schema(spark.read.parquet(stage).schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream
-      .foreachBatch { (b: DataFrame, bid: Long) => st16Commit(table, b, bid); () }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    table
+    Lake.publish(table, bid,
+      Lake.prior(table, bid) ++ rawFiles.map("raw|" + _) ++ sumFiles.map("sum|" + _))
   }
 
   /** st16 — ATOMIC dual-table commit from a stream: one micro-batch
     * updates a raw table AND its per-type summary under a SINGLE
-    * manifest flip, so no reader can ever observe the raw table at
-    * batch N with the summary at batch N−1 — the streaming form of
-    * [[graft.operators.ScaleDiag.l12AtomicMultiTable]]'s transaction,
-    * and the property every medallion (bronze+silver) pipeline needs
-    * when downstream joins both layers. [[st14ManifestSink]] owns the
-    * single-table exactly-once protocol; this op owns CROSS-TABLE
+    * manifest flip ([[graft.util.Lake]]), so no reader can ever observe
+    * the raw table at batch N with the summary at batch N−1 — the
+    * streaming form of [[graft.operators.ScaleDiag.l12AtomicMultiTable]]'s
+    * transaction, and the property every medallion (bronze+silver)
+    * pipeline needs when downstream joins both layers. [[st14ManifestSink]]
+    * owns the single-table exactly-once sink; this op owns CROSS-TABLE
     * snapshot consistency: the contract reads both sides through the
     * final manifest and emits their per-type agreement alongside the
     * rollup. StreamRecoverySpec kills the stream between commits,
@@ -1280,12 +1172,13 @@ object EventStream {
     * commit; the read is manifest-pruned like every lakehouse scan.
     */
   def st16AtomicDualSink(spark: SparkSession, dir: String): DataFrame = {
-    val table = st16Run(spark, dir)
-    val vMax = st14Versions(table).max
-    val raw = st16Side(spark, table, vMax, "raw")
+    val table = lakeRun(spark, dir, st16Commit)
+    val versions = Lake.versions(table)
+    val lines = Lake.read(table, versions.max)
+    val raw = spark.read.parquet(Lake.paths(table, lines, "raw"): _*)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("raw_cents"))
-    val sum2 = st16Side(spark, table, vMax, "sum")
+    val sum2 = spark.read.parquet(Lake.paths(table, lines, "sum"): _*)
       .groupBy(col("event_type"))
       .agg(sum(col("n_events")).as("sum_n"), sum(col("sum_cents")).as("summary_cents"))
     raw.join(sum2, Seq("event_type"))
@@ -1295,7 +1188,7 @@ object EventStream {
         (col("n_events") === col("sum_n") &&
           coalesce(col("raw_cents"), lit(0L)) ===
             coalesce(col("summary_cents"), lit(0L))).as("consistent"),
-        lit(st14Versions(table).size.toLong).as("n_snapshots"))
+        lit(versions.size.toLong).as("n_snapshots"))
       .orderBy(col("event_type"))
   }
 
@@ -1460,11 +1353,8 @@ object EventStream {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val q = twsLedgerUpdates(spark, stage).toDF().writeStream
-        .format("memory").queryName(queryName).outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Lake.drain(twsLedgerUpdates(spark, stage).toDF().writeStream
+        .format("memory").queryName(queryName).outputMode("update"))
       val w = Window.partitionBy(col("event_type"), col("user_id"))
         .orderBy(col("n").desc)
       spark.table(queryName)

@@ -42,9 +42,7 @@ object Scratch {
   def oneFile(df: DataFrame, target: String, mtimeMs: Long): Unit = {
     val tmp = dir("graft_onefile_")
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles().map(_.toPath)
-      .filter(_.toString.endsWith(".parquet")).head
-    Files.move(part, Paths.get(target))
+    Files.move(Paths.get(tmp, Lake.files(tmp).head), Paths.get(target))
     Files.setLastModifiedTime(Paths.get(target), FileTime.fromMillis(mtimeMs))
   }
 }

@@ -37,6 +37,8 @@ class HealthDigestSpec extends AnyFunSuite {
     val (out, cost) = QueryMetrics(spark)(WeeklyReport.charts(cleaned))
     (out.get, cost.jobs)
   }
+  private lazy val renderJobs =
+    QueryMetrics(spark)(WeeklyReport.render(spark, cleaned))._2.jobs
 
   private def bits(d: Double): String =
     java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
@@ -68,8 +70,10 @@ class HealthDigestSpec extends AnyFunSuite {
 
   test("weekly report sections submit at most 16 jobs and charts at most 2") {
     // charts is one rollup aggregate; sections adds the model chain and
-    // the key metrics' ranges
+    // the key metrics' ranges. render folds its charts from the rollup
+    // that sections builds, so it costs no more than sections
     assert(sectionsJobs <= 16, s"sections ran $sectionsJobs jobs")
     assert(chartsJobs <= 2, s"charts ran $chartsJobs jobs")
+    assert(renderJobs <= 16, s"render ran $renderJobs jobs")
   }
 }

@@ -884,11 +884,12 @@ class Round8OpsSpec extends AnyFunSuite {
 
   test("st14: manifest commits are replay-idempotent and snapshots are isolated") {
     import graft.streaming.EventStream
-    val table = EventStream.st14Run(spark, sf)
-    val versions = EventStream.st14Versions(table).sorted
+    import graft.util.Lake
+    val table = EventStream.lakeRun(spark, sf, EventStream.st14Commit)
+    val versions = Lake.versions(table).sorted
     assert(versions == Seq(0L, 1L, 2L, 3L))
     def snapshot(v: Long) = spark.read.parquet(
-      EventStream.st14Manifest(table, v).map(f => s"$table/$f"): _*)
+      Lake.read(table, v).map(f => s"$table/$f"): _*)
     val all = Tables.events(spark, sf).select(col("event_id"))
       .collect().map(_.getLong(0)).sorted.toSeq
     // the final snapshot holds every event exactly once (batch dual)
@@ -898,8 +899,8 @@ class Round8OpsSpec extends AnyFunSuite {
     val sizes = versions.map(v => snapshot(v).count())
     assert(sizes == sizes.sorted && sizes.head < sizes.last
       && sizes.last == all.length.toLong)
-    assert(EventStream.st14Manifest(table, 0).toSet.subsetOf(
-      EventStream.st14Manifest(table, 3).toSet))
+    assert(Lake.read(table, 0).toSet.subsetOf(
+      Lake.read(table, 3).toSet))
     // replay the LAST commit (crash between data write and checkpoint):
     // the rewritten batch must yield the same rows, exactly once -
     // idempotence is row-level (rewritten files get fresh names)
@@ -909,8 +910,8 @@ class Round8OpsSpec extends AnyFunSuite {
     // and the republished manifest is exactly manifest(v2) + b3's files
     def b3Files(): Set[String] = new java.io.File(s"$table/data/b3").listFiles
       .filter(_.getName.endsWith(".parquet")).map(f => s"data/b3/${f.getName}").toSet
-    assert(EventStream.st14Manifest(table, 3).toSet ==
-      EventStream.st14Manifest(table, 2).toSet ++ b3Files())
+    assert(Lake.read(table, 3).toSet ==
+      Lake.read(table, 2).toSet ++ b3Files())
   }
 
   test("t41: DSIR weights equal a driver recompute; bucket micro-nats round safely") {

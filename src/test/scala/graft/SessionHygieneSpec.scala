@@ -30,6 +30,7 @@ class SessionHygieneSpec extends AnyFunSuite {
   private val overlap = inMain("util/Overlap.scala")
   private val scratch = inMain("util/Scratch.scala")
   private val metrics = inMain("QueryMetrics.scala")
+  private val lake = inMain("util/Lake.scala")
   private val mainTree = "main/"
 
   /** (pattern, the part of `src` it covers, files there allowed to match it). */
@@ -44,6 +45,11 @@ class SessionHygieneSpec extends AnyFunSuite {
       ("""\bextraOptimizations\s*(:\+)?=(?!=)""", mainTree, installers),
       ("""\bscala\.concurrent\b.*\bFuture\b|\bAwait\s*\.|\bExecutionContext\b""", mainTree, Set(overlap)),
       ("""SparkListener""", mainTree, Set(metrics)),
+      // the lake protocol: manifest naming and the atomic flip, the
+      // stream drain, and which files of a directory are a table's
+      ("""manifest-v(\$|"\s*\+)|\bATOMIC_MOVE\b""", mainTree, Set(lake)),
+      ("""\bTrigger\s*\.\s*AvailableNow\s*\(""", mainTree, Set(lake)),
+      ("""endsWith\s*\(\s*"\.parquet"\s*\)""", mainTree, Set(lake)),
       // ScratchSpec makes a link target that Scratch must not delete
       ("""\bcreateTempDirectory\b""", "",
         Set(scratch, inTest("ScratchSpec.scala"), inTest("SessionHygieneSpec.scala"))))
@@ -79,15 +85,28 @@ class SessionHygieneSpec extends AnyFunSuite {
       inTest("BuilderSpec.scala") -> "SparkSession.builder().getOrCreate()",
       overlap -> "implicit val ec = scala.concurrent.ExecutionContext.global",
       scratch -> """java.nio.file.Files.createTempDirectory(prefix)""",
-      metrics -> "sc.addSparkListener(ledger)")
+      metrics -> "sc.addSparkListener(ledger)",
+      inMain("operators/Snapshots.scala") ->
+        "Files.write(Paths.get(s\"$dir/manifest-v$v.txt\"), lines.mkString(\"\\n\").getBytes)",
+      inMain("operators/Commit.scala") -> "Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)",
+      inMain("streaming/Sink.scala") ->
+        "df.writeStream.format(\"memory\").trigger(Trigger.AvailableNow()).start()",
+      inMain("operators/Vacuum.scala") ->
+        "new File(d).listFiles().filter(_.getName.endsWith(\".parquet\"))",
+      inTest("LakeSpec.scala") -> "w.trigger(Trigger.AvailableNow()).start()",
+      inMain("streaming/Docs.scala") ->
+        "/** replayed with Trigger.AvailableNow; publishes `manifest-v<batchId>` */",
+      lake -> "Files.move(tmp, manifest(table, v), ATOMIC_MOVE); Trigger.AvailableNow()")
     assert(offenders(seeded).map(_.takeWhile(_ != ':')).toSet ==
       Set(inMain("Tool.scala"), inMain("operators/Ops.scala"), inMain("plans/Join.scala"),
         inMain("operators/Writes.scala"), inMain("streaming/Stage.scala"),
-        inTest("StreamSpec.scala"), inMain("Probe.scala")))
+        inTest("StreamSpec.scala"), inMain("Probe.scala"), inMain("operators/Snapshots.scala"),
+        inMain("operators/Commit.scala"), inMain("streaming/Sink.scala"),
+        inMain("operators/Vacuum.scala")))
   }
 
   test("sessions are built and functions installed only by GraftSession, the table and the extension") {
-    assert(Seq(session, overlap, scratch, metrics).forall(sources.map(_._1).contains),
+    assert(Seq(session, overlap, scratch, metrics, lake).forall(sources.map(_._1).contains),
       s"a ratchet's allowed file is missing under $root")
     val found = offenders(sources)
     assert(found.isEmpty,
@@ -95,6 +114,7 @@ class SessionHygieneSpec extends AnyFunSuite {
         "GraftFunctions.table and let GraftExtensions / GraftSession.ensure " +
         "install them; run concurrent jobs with graft.util.Overlap; make " +
         "temp dirs with graft.util.Scratch.dir; measure jobs with " +
-        s"graft.QueryMetrics:\n  ${found.mkString("\n  ")}")
+        "graft.QueryMetrics; list, publish and drain lake tables with " +
+        s"graft.util.Lake:\n  ${found.mkString("\n  ")}")
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStream
-import graft.util.Scratch
+import graft.util.{Lake, Scratch}
 
 /** Crash-recovery for the stateful streaming pair (VERDICT r7 #4): kill
   * the query mid-stream, restart from the checkpoint, and assert the
@@ -253,12 +253,12 @@ class StreamRecoverySpec extends AnyFunSuite {
       .select(col("event_id"), col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
     EventStream.st16Commit(table, b0, 0L)
-    val before = EventStream.st14Manifest(table, 0L)
+    val before = Lake.read(table, 0L)
     assert(before.nonEmpty && before.forall(_.contains("b0-a0/")),
       s"first commit must land at attempt 0: $before")
     // simulate the recovery replay of the SAME batch id
     EventStream.st16Commit(table, b0, 0L)
-    val after = EventStream.st14Manifest(table, 0L)
+    val after = Lake.read(table, 0L)
     // (1) every file the superseded manifest referenced still exists
     before.foreach { l =>
       val p = l.split("\\|")(1)
@@ -308,17 +308,19 @@ class StreamRecoverySpec extends AnyFunSuite {
       "all batches finished before the kill - nothing mid-stream to recover")
     val q2 = start(drain = true)
     q2.awaitTermination()
+    def side(v: Long, tag: String) =
+      spark.read.parquet(Lake.paths(table, Lake.read(table, v), tag): _*)
     // (1) the cross-table invariant held at EVERY published version —
     // including any version rewritten by a replayed batch across the
     // kill: raw re-aggregation == stored summary, per type, per snapshot
-    val versions = EventStream.st14Versions(table).sorted
+    val versions = Lake.versions(table).sorted
     assert(versions.size >= 8, s"expected >=8 snapshots, got $versions")
     versions.foreach { v =>
-      val raw = EventStream.st16Side(spark, table, v, "raw")
+      val raw = side(v, "raw")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), coalesce(sum(col("cents")), lit(0L)).as("c"))
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val sm = EventStream.st16Side(spark, table, v, "sum")
+      val sm = side(v, "sum")
         .groupBy(col("event_type"))
         .agg(sum(col("n_events")).as("n"), coalesce(sum(col("sum_cents")), lit(0L)).as("c"))
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -326,7 +328,7 @@ class StreamRecoverySpec extends AnyFunSuite {
     }
     // (2) exactly-once across the kill: the final snapshot equals the
     // batch ground truth of the staged corpus
-    val fin = EventStream.st16Side(spark, table, versions.max, "raw")
+    val fin = side(versions.max, "raw")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), coalesce(sum(col("cents")), lit(0L)).as("c"))
       .orderBy(col("event_type")).collect().map(_.toString).toSeq
