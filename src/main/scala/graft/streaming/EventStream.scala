@@ -1095,11 +1095,11 @@ object EventStream {
 
   /** st14 — exactly-once lake commit from a stream, the write side of
     * [[graft.operators.ScaleDiag.l07TimeTravel]]'s snapshot reads. Each
-    * micro-batch overwrites its own data directory `data/b<batchId>` (a
-    * replayed batch rewrites the same rows) and publishes version
-    * <batchId> through [[graft.util.Lake]], whose scaladoc holds the
-    * commit protocol and why a replay is idempotent; Round8OpsSpec
-    * re-runs the last commit to check it. This is how Structured
+    * micro-batch writes a fresh attempt directory `data/b<batchId>-a<n>`
+    * (a replayed batch rewrites the same rows next to the superseded
+    * attempt) and publishes version <batchId> through [[graft.util.Lake]],
+    * whose scaladoc holds the commit protocol and why a replay is
+    * idempotent; Round8OpsSpec re-runs the last commit to check it. This is how Structured
     * Streaming achieves exactly-once onto Iceberg/Delta-style tables
     * without any sink-side dedup state (contrast st13, whose state is
     * the point).
@@ -1109,10 +1109,8 @@ object EventStream {
     * ordinary partial+final sum over the snapshot's file list.
     */
   private[graft] def st14Commit(table: String, batch: DataFrame, bid: Long): Unit = {
-    val rel = s"data/b$bid"
-    batch.write.mode("overwrite").parquet(s"$table/$rel")
     Lake.publish(table, bid,
-      Lake.prior(table, bid) ++ Lake.files(s"$table/$rel").map(f => s"$rel/$f"))
+      Lake.prior(table, bid) ++ Lake.append(batch, table, Lake.attempt(table, s"data/b$bid")))
   }
 
   def st14ManifestSink(spark: SparkSession, dir: String): DataFrame = {

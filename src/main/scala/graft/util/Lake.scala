@@ -98,8 +98,11 @@ object Lake {
   /** The files that `lines` list in section `tag` (the untagged lines
     * when `tag` is empty), as paths `spark.read` can open. */
   def paths(table: String, lines: Seq[String], tag: String = ""): Seq[String] = {
-    val p = if (tag.isEmpty) "" else s"$tag|"
-    lines.collect { case l if l.startsWith(p) => s"$table/${l.stripPrefix(p)}" }
+    val p = s"$tag|"
+    lines.collect {
+      case l if tag.isEmpty && !l.contains('|') => s"$table/$l"
+      case l if tag.nonEmpty && l.startsWith(p) => s"$table/${l.stripPrefix(p)}"
+    }
   }
 
   /** Runs the stream `writer` describes until it has processed all input

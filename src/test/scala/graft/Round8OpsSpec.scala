@@ -904,14 +904,17 @@ class Round8OpsSpec extends AnyFunSuite {
     // replay the LAST commit (crash between data write and checkpoint):
     // the rewritten batch must yield the same rows, exactly once -
     // idempotence is row-level (rewritten files get fresh names)
-    val lastBatch = spark.read.parquet(s"$table/data/b3").localCheckpoint(true)
+    val lastBatch = spark.read.parquet(s"$table/data/b3-a0").localCheckpoint(true)
+    val superseded = Lake.read(table, 3)
     EventStream.st14Commit(table, lastBatch, 3)
     assert(snapshot(3).collect().map(_.getLong(0)).sorted.toSeq == all)
     // and the republished manifest is exactly manifest(v2) + b3's files
-    def b3Files(): Set[String] = new java.io.File(s"$table/data/b3").listFiles
-      .filter(_.getName.endsWith(".parquet")).map(f => s"data/b3/${f.getName}").toSet
+    def b3Files(): Set[String] = new java.io.File(s"$table/data/b3-a1").listFiles
+      .filter(_.getName.endsWith(".parquet")).map(f => s"data/b3-a1/${f.getName}").toSet
     assert(Lake.read(table, 3).toSet ==
       Lake.read(table, 2).toSet ++ b3Files())
+    // the replay left every file the superseded manifest named in place
+    assert(superseded.forall(f => new java.io.File(s"$table/$f").isFile))
   }
 
   test("t41: DSIR weights equal a driver recompute; bucket micro-nats round safely") {

@@ -256,6 +256,8 @@ class StreamRecoverySpec extends AnyFunSuite {
     val before = Lake.read(table, 0L)
     assert(before.nonEmpty && before.forall(_.contains("b0-a0/")),
       s"first commit must land at attempt 0: $before")
+    // every line of a two-table manifest is tagged: no untagged paths
+    assert(Lake.paths(table, before).isEmpty && Lake.paths(table, before, "raw").nonEmpty)
     // simulate the recovery replay of the SAME batch id
     EventStream.st16Commit(table, b0, 0L)
     val after = Lake.read(table, 0L)

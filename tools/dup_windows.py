@@ -11,20 +11,17 @@ number of positions where a repeated window starts, so a block of
 n >= k lines pasted twice adds n - k + 1 to each copy's file.
 
 Usage:
-    python3 tools/dup_windows.py                 # src/main, k = 6
-    python3 tools/dup_windows.py -k 8 --top 10
-    python3 tools/dup_windows.py --json          # {"k", "total", "files"}
+    python3 tools/dup_windows.py    # scans src/main with k = 6
 
 Standard library only.
 """
-import argparse
 import collections
-import json
 import os
 import re
-import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SRC = os.path.join(ROOT, "src", "main")
+K = 6
 
 
 def code_lines(text):
@@ -86,29 +83,14 @@ def scan(paths, k):
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("-k", type=int, default=6, help="window length in code lines")
-    ap.add_argument("--dir", default=os.path.join(ROOT, "src", "main"),
-                    help="tree to scan (default src/main)")
-    ap.add_argument("--top", type=int, default=0, help="print only the N largest")
-    ap.add_argument("--json", action="store_true", help="one JSON object on stdout")
-    args = ap.parse_args()
-    paths = sorted(os.path.join(d, f) for d, _, fs in os.walk(args.dir)
+    paths = sorted(os.path.join(d, f) for d, _, fs in os.walk(SRC)
                    for f in fs if f.endswith(".scala"))
-    counts = scan(paths, args.k)
-    rows = sorted(((c, os.path.relpath(p, args.dir)) for p, c in counts.items() if c),
+    counts = scan(paths, K)
+    rows = sorted(((c, os.path.relpath(p, SRC)) for p, c in counts.items() if c),
                   key=lambda r: (-r[0], r[1]))
-    if args.top:
-        rows = rows[:args.top]
-    total = sum(counts.values())
-    if args.json:
-        json.dump({"k": args.k, "total": total,
-                   "files": {name: c for c, name in rows}}, sys.stdout, indent=1)
-        print()
-    else:
-        for c, name in rows:
-            print(f"{c:6d}  {name}")
-        print(f"{total:6d}  total ({args.k}-line windows)")
+    for c, name in rows:
+        print(f"{c:6d}  {name}")
+    print(f"{sum(counts.values()):6d}  total ({K}-line windows)")
 
 
 if __name__ == "__main__":
